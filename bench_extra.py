@@ -110,12 +110,8 @@ def main() -> None:
             idx.blocks = idx.blocks.cache(); idx.doclens = idx.doclens.cache()
             idx.dictionary = idx.dictionary.cache(); idx.stats = idx.stats.cache()
             idx.blocks.count(); idx.doclens.count(); idx.dictionary.count(); idx.stats.count()
-            if "idx" in idx_holder:
-                pass
             idx_holder["idx"] = idx
             return None
-
-        prev = [None]
 
         def build_and_swap():
             if idx_holder.get("idx") is not None:
@@ -145,7 +141,8 @@ def main() -> None:
 
         # ---- build phase breakdown (last build's lineage re-run piecewise)
         from spcht_spark.index.build import (
-            build_blocks, build_dictionary, build_doclens, build_stats, build_tokens,
+            build_blocks, build_doclens, build_stats, build_tokens,
+            dictionary_from_blocks,
         )
 
         phases = {}
@@ -158,11 +155,11 @@ def main() -> None:
         srow = stats.collect()[0]
         phases["stats_collect"] = time.perf_counter() - t0
         t0 = time.perf_counter()
-        build_dictionary(tokens).write.format("noop").mode("overwrite").save()
-        phases["dictionary_noop"] = time.perf_counter() - t0
+        blocks = build_blocks(tokens, float(srow["avgdl"])).localCheckpoint()
+        phases["blocks_ckpt"] = time.perf_counter() - t0
         t0 = time.perf_counter()
-        build_blocks(tokens, float(srow["avgdl"])).write.format("noop").mode("overwrite").save()
-        phases["blocks_noop"] = time.perf_counter() - t0
+        dictionary_from_blocks(blocks).write.format("noop").mode("overwrite").save()
+        phases["dictionary_noop"] = time.perf_counter() - t0
         t0 = time.perf_counter()
         doclens.write.format("noop").mode("overwrite").save()
         phases["doclens_noop"] = time.perf_counter() - t0

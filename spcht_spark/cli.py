@@ -30,6 +30,7 @@ import sys
 
 from spcht_spark.corpus import generate_corpus
 from spcht_spark.index.query import exact_topk
+from spcht_spark.index.tokenize import TOKENIZERS
 from spcht_spark.index.wand import wand_topk
 from spcht_spark.plans import workorder as wo
 from spcht_spark.plans.indexer import index_order, load_index, run_index_order
@@ -93,7 +94,7 @@ def main(argv: list[str] | None = None) -> int:
                         help="existing corpus table; default: synthesize")
         sp.add_argument("--n-docs", type=int, default=2000)
         sp.add_argument("--partitions", type=int, default=None)
-        sp.add_argument("--tokenizer", choices=["arrow", "jvm"], default="arrow")
+        sp.add_argument("--tokenizer", choices=TOKENIZERS, default="arrow")
         sp.add_argument("--shard-span", type=int, default=1 << 17)
         sp.add_argument("--no-verify-sha256", action="store_true")
         sp.add_argument("--analyzer", default=None,

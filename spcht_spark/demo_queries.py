@@ -40,7 +40,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, term, tf, dl) over documents.text — whitespace tokens.
 
-    One Arrow map pass (index.tokenize.tokens_ws_arrow): tf and dl come
+    One Arrow map pass (index.tokenize.tokens, rule 'ws'): tf and dl come
     out of the same per-batch inversion with zero exchanges, where the
     previous explode→groupBy shape shuffled every token row and left dl
     to a separate corpus-wide aggregation+join in each consumer (guide
@@ -58,7 +58,7 @@ def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     than the ~0.4 s serial tokenize saved (interleaved A/B,
     OPTIMIZATION_r06.md), so the guard stays off. The gate reads the
     file size from the filesystem — no Spark job."""
-    from spcht_spark.index.tokenize import tokens_ws_arrow
+    from spcht_spark.index.tokenize import tokens
 
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").alias("content")
@@ -75,7 +75,7 @@ def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
             docs = docs.repartition(
                 min(par * 4, max(par, nbytes // (16 << 20)))
             )
-    return tokens_ws_arrow(docs)
+    return tokens(docs, "ws")
 
 
 # Parquet compresses the text ~3-4x, so 32 MB of file ≈ 100+ MB of

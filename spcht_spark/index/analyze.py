@@ -166,7 +166,7 @@ def fold_token_py(term: str, spec: str | None) -> str | None:
 
 def fold_tokens_col(c: Column, spec: str | None) -> Column:
     """Catalyst twin over a ``term`` column: NULL for removed tokens
-    (callers filter isNotNull). Used by the ws/jvm token pipelines."""
+    (callers filter isNotNull). Used by the percolator."""
     for step in token_steps(spec):
         if step == "stop":
             c = F.when(c.isin(*STOPWORDS), F.lit(None)).otherwise(c)

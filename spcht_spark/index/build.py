@@ -49,7 +49,7 @@ from spcht_spark.index.compress import (
     BLOCK_SIZE,
     varbyte_encode_segments,
 )
-from spcht_spark.index.tokenize import tokens_arrow, tokens_jvm, tokens_ws
+from spcht_spark.index.tokenize import tokens
 from spcht_spark.oracle import B, K1
 
 DEFAULT_SHARD_SPAN = 1 << 17  # 131072 docs / shard; override per scale
@@ -90,7 +90,7 @@ class IndexTables:
     # query-time parsing MUST fold with the SAME analyzer.
     shard_span: int | None = None
     analyzer: str | None = None
-    # tokenizer spec ('arrow' | 'jvm' | 'ws') — term vectors re-analyze
+    # tokenizer spec ('arrow' | 'ws') — term vectors re-analyze
     # stored content and must tokenize exactly as the build did
     tokenizer: str | None = None
 
@@ -129,14 +129,7 @@ def build_tokens(
         par = n_in = None
     if n_in is not None and n_in < par:
         corpus = corpus.repartition(par * 2)
-    corpus = apply_analyzer(corpus, analyzer)
-    if tokenizer == "arrow":
-        return tokens_arrow(corpus, analyzer)
-    if tokenizer == "jvm":
-        return tokens_jvm(corpus, analyzer)
-    if tokenizer == "ws":
-        return tokens_ws(corpus, analyzer)
-    raise ValueError(f"unknown tokenizer {tokenizer!r}")
+    return tokens(apply_analyzer(corpus, analyzer), tokenizer, analyzer)
 
 
 def build_doclens(tokens: DataFrame) -> DataFrame:
@@ -145,18 +138,13 @@ def build_doclens(tokens: DataFrame) -> DataFrame:
     return tokens.groupBy("doc_id").agg(F.max("dl").alias("dl"))
 
 
-def build_dictionary(tokens: DataFrame) -> DataFrame:
-    return tokens.groupBy("term").agg(
-        F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf")
-    ).withColumn("term_hash", F.xxhash64("term"))
-
-
 def dictionary_from_blocks(blocks: DataFrame) -> DataFrame:
     """(term, df, cf, term_hash) aggregated from the posting blocks.
 
-    Value-identical to :func:`build_dictionary` (exact integer sums:
-    every doc appears in exactly one (term, shard) group, so Σ n_docs
-    over a term's blocks IS its df, and the cf lane sums the same tfs),
+    Value-identical to a (count, Σtf) groupBy over the token rows (exact
+    integer sums: every doc appears in exactly one (term, shard) group,
+    so Σ n_docs over a term's blocks IS its df, and the cf lane sums the
+    same tfs),
     but the input is the blocks table — |postings|/128 rows — instead
     of a second full shuffle of every token row."""
     return blocks.groupBy("term").agg(

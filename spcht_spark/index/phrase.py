@@ -41,7 +41,9 @@ from spcht_spark.index.build import (
     BLOCKS_SCHEMA,
     DEFAULT_SHARD_SPAN,
     IndexTables,
+    build_doclens,
     build_stats,
+    dictionary_from_blocks,
 )
 from spcht_spark.index.compress import (
     BLOCK_SIZE,
@@ -149,13 +151,15 @@ def build_positional_index(
         )
     corpus = apply_analyzer(corpus, analyzer)
     tokens = tokens_positional(corpus, mode).localCheckpoint()
-    doclens = tokens.groupBy("doc_id").agg(F.max("dl").alias("dl"))
-    dictionary = tokens.groupBy("term").agg(
-        F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf")
-    ).withColumn("term_hash", F.xxhash64("term"))
+    doclens = build_doclens(tokens)
     stats = build_stats(doclens)
     avgdl = float(stats.collect()[0]["avgdl"])
-    blocks = build_positional_blocks(tokens, avgdl, shard_span=shard_span)
+    # materialized once, as in build_index: the dictionary aggregates the
+    # blocks instead of re-running the encode shuffle
+    blocks = build_positional_blocks(
+        tokens, avgdl, shard_span=shard_span
+    ).localCheckpoint(eager=False)
+    dictionary = dictionary_from_blocks(blocks)
     return IndexTables(
         tokens, doclens, dictionary, stats, blocks,
         shard_span=shard_span, analyzer=analyzer,

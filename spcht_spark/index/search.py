@@ -346,7 +346,7 @@ def search(
         tokenizer = getattr(index, "tokenizer", None)
         if tokenizer is None:
             # Pre-round-4 index manifests lack the tokenizer key; a
-            # silent 'arrow' guess re-analyzes a ws/jvm-built index
+            # silent 'arrow' guess re-analyzes a ws-built index
             # with the wrong tokenizer and tf diverges from the
             # postings (ADVICE r4) — be loud about the assumption.
             import warnings
@@ -355,7 +355,7 @@ def search(
             warnings.warn(
                 "index manifest has no tokenizer; term vectors assume "
                 "'arrow' — rebuild or backfill manifest params if the "
-                "index was built with --tokenizer ws/jvm",
+                "index was built with --tokenizer ws",
                 stacklevel=2,
             )
         tv_df = _term_vectors(

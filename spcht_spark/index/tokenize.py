@@ -1,34 +1,32 @@
-"""Content tokenization.
+"""Content tokenization: one split rule, one Arrow batch inversion.
 
-Two equivalent implementations (tested for equality):
-
-* :func:`tokens_arrow` — vectorized pandas/Arrow UDF (`mapInPandas`), the
-  north-rule canonical path ("tokenizes content via vectorized
-  pandas/Arrow UDFs, no per-row Python"). Regex runs inside pandas
-  ``str`` ops; tf aggregation is a pandas groupby, so each input
-  partition emits pre-aggregated ``(doc_id, term, tf)`` — this is the
-  map-side half of SPIMI (in-memory per-partition inversion).
-* :func:`tokens_jvm` — pure Catalyst (`regexp_extract_all` + `explode`),
-  whole-stage-codegen'd, zero Python. Kept as a cross-check and a
-  fallback fast path.
+:func:`split` turns content strings into token lists inside Arrow C++
+(RE2) under rule ``"arrow"`` (TOKEN_REGEX, the code tokenizer) or
+``"ws"`` (single-space split, the SQL-portable token definition the
+DuckDB oracles reproduce). :func:`tokens` inverts each ``mapInPandas``
+batch into (doc_id, term, tf, dl) and :func:`tokens_positional` adds
+occurrence positions — "tokenizes content via vectorized pandas/Arrow
+UDFs, no per-row Python". The Catalyst shapes (``regexp_extract_all``,
+``split(' ')``) live in the tests as the independent cross-check.
 
 The reference's model for "parse binary payload once in a batch UDF,
 then pure column ops" is its MARC21 parse
-(/root/reference/Spcht/Core/SpchtUtility.py:404-475).
+(Spcht/Core/SpchtUtility.py:404-475).
 """
 
 from __future__ import annotations
 
-import re
-
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # Identifiers, integers, and single-char code punctuation.  Must stay in
 # sync with spcht_spark.oracle.tokenize_py (rank-identity contract).
 TOKEN_REGEX = r"[A-Za-z_][A-Za-z0-9_]*|[0-9]+|[{}()\[\];:=,.<>+\-*/]"
+TOKENIZERS = ("arrow", "ws")
 
 # Tokens carry the doc length (dl = Σtf over the doc) computed in the
 # same map-side pass: every downstream consumer that needs BM25 length
@@ -43,152 +41,99 @@ TOKENS_SCHEMA = T.StructType(
         T.StructField("dl", T.LongType(), False),
     ]
 )
+POS_TOKENS_SCHEMA = T.StructType(
+    TOKENS_SCHEMA.fields + [T.StructField("pos_bin", T.BinaryType(), False)]
+)
 
 
-def tokens_arrow(corpus: DataFrame, analyzer: str | None = None) -> DataFrame:
-    """(doc_id, term, tf) via Arrow-batched UDF — SPIMI map side.
+def split(content: pa.Array, rule: str = "arrow") -> pa.ListArray:
+    """One token list per content string; lists may hold ``""`` at string
+    boundaries and between repeated separators (callers drop them).
 
-    The whole inversion stays INSIDE Arrow C++ (mimalloc pool):
-    tokenization is three RE2 passes + a split (normalize → pad
-    punctuation → digit/identifier boundary), counting is an Arrow hash
-    group_by on (doc_id, term). No per-row Python, and — critical on
-    memcg-accounted VMs — no multi-hundred-MB numpy temporaries: a
-    previous composite-key numpy.unique version allocated ~600 MB of
-    fresh glibc pages per batch, and at ~1 ms/first-touch-fault that was
-    75 s/batch vs 2.5 s for this version (see BENCH.md). A pandas
-    str.findall version was worse still (per-row PyObjects).
+    ``rule="arrow"`` equals ``re.findall(TOKEN_REGEX)`` via three RE2
+    passes and a split (normalize → pad punctuation → digit/identifier
+    boundary) — no per-row Python and no numpy temporaries, which on
+    memcg-accounted VMs cost ~75 s/batch in first-touch faults (BENCH.md).
+    ``rule="ws"`` is ``content.split(" ")``."""
+    if rule == "ws":
+        return pc.split_pattern(content, pattern=" ")
+    if rule != "arrow":
+        raise ValueError(f"unknown tokenizer {rule!r}")
+    # 1. anything that is not word-char / whitespace / code punct → space
+    s = pc.replace_substring_regex(
+        content, pattern=rf"[^A-Za-z0-9_\s{{}}()\[\];:=,.<>+\-*/]", replacement=" "
+    )
+    # 2. pad code punctuation into standalone tokens
+    s = pc.replace_substring_regex(
+        s, pattern=r"([{}()\[\];:=,.<>+\-*/])", replacement=r" \1 "
+    )
+    # 3. '9abc' → '9 abc' (identifiers cannot start with a digit);
+    #    RE2 has no lookbehind, so anchor on (start | non-word-char)
+    s = pc.replace_substring_regex(
+        s, pattern=r"(^|[^A-Za-z0-9_])([0-9]+)([A-Za-z_])", replacement=r"\1\2 \3"
+    )
+    return pc.split_pattern_regex(s, pattern=r"\s+")
 
-    Token definition is TOKEN_REGEX, verified equivalent in tests
-    against both the JVM regexp path and the pure-Python oracle.
 
-    ``analyzer`` token-level steps (stop/sstem) run per batch — stop
-    as an Arrow is_in filter, sstem via the vectorized pandas twin
-    (spcht_spark.index.analyze.fold_tokens_pd); the pure-Arrow fast
-    path is untouched when no token steps are configured."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
+def tokens(
+    corpus: DataFrame, tokenizer: str = "arrow", analyzer: str | None = None
+) -> DataFrame:
+    """(doc_id, term, tf, dl) — the SPIMI map side, zero exchanges.
 
+    Counting is an Arrow hash group_by on (doc_id, term); dl sums the
+    doc's tf in the same batch, which is its global dl because docs
+    never span batches. ``analyzer`` token steps (stop/sstem) run per
+    batch via the pandas twin (spcht_spark.index.analyze.fold_tokens_pd);
+    with none configured the batch stays pure Arrow."""
     from spcht_spark.index.analyze import fold_tokens_pd, token_steps
 
+    if tokenizer not in TOKENIZERS:  # fail on the driver, not in a task
+        raise ValueError(f"unknown tokenizer {tokenizer!r}")
     tok_steps = token_steps(analyzer)
-    punct = r"[{}()\[\];:=,.<>+\-*/]"
-
-    def tokenize_lists(content: pa.Array) -> pa.Array:
-        # 1. anything that is not word-char / whitespace / code punct → space
-        s = pc.replace_substring_regex(
-            content, pattern=rf"[^A-Za-z0-9_\s{{}}()\[\];:=,.<>+\-*/]", replacement=" "
-        )
-        # 2. pad code punctuation into standalone tokens
-        s = pc.replace_substring_regex(s, pattern=f"({punct})", replacement=r" \1 ")
-        # 3. '9abc' → '9 abc' (identifiers cannot start with a digit);
-        #    RE2 has no lookbehind, so anchor on (start | non-word-char)
-        s = pc.replace_substring_regex(
-            s, pattern=r"(^|[^A-Za-z0-9_])([0-9]+)([A-Za-z_])", replacement=r"\1\2 \3"
-        )
-        return pc.split_pattern_regex(s, pattern=r"\s+")
 
     def invert(batches):
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            lists = tokenize_lists(pa.array(pdf["content"], type=pa.string()))
-            flat = pc.list_flatten(lists)
-            if len(flat) == 0:
-                continue
+            lists = split(pa.array(pdf["content"], type=pa.string()), tokenizer)
             parents = pc.list_parent_indices(lists)
             doc_ids = pc.take(pa.array(pdf["doc_id"], type=pa.int64()), parents)
-            tbl = pa.table({"doc_id": doc_ids, "term": flat})
-            # split leaves "" tokens at string boundaries — drop them
+            tbl = pa.table({"doc_id": doc_ids, "term": pc.list_flatten(lists)})
             tbl = tbl.filter(pc.not_equal(tbl["term"], ""))
             if tok_steps:
                 folded = fold_tokens_pd(tbl["term"].to_pandas(), analyzer)
-                keep = pa.array(folded.notna().to_numpy())
-                tbl = pa.table(
-                    {
-                        "doc_id": tbl["doc_id"].filter(keep),
-                        "term": pa.array(
-                            folded[folded.notna()], type=pa.string()
-                        ),
-                    }
-                )
-                if len(tbl) == 0:
-                    continue
+                keep = folded.notna()
+                tbl = pa.table({
+                    "doc_id": tbl["doc_id"].filter(keep.to_numpy()),
+                    "term": pa.array(folded[keep], type=pa.string()),
+                })
+            if len(tbl) == 0:
+                continue
             out = tbl.group_by(["doc_id", "term"]).aggregate([([], "count_all")])
             out = out.rename_columns(["doc_id", "term", "tf"])
-            # per-doc length in the same pass (docs never span batches,
-            # so the map-side dl is already the global dl)
             dl = out.group_by("doc_id").aggregate([("tf", "sum")])
             dl = dl.rename_columns(["doc_id", "dl"])
-            yield (
-                out.join(dl, keys="doc_id")
-                .select(["doc_id", "term", "tf", "dl"])
-                .to_pandas()
-            )
+            yield out.join(dl, keys="doc_id").select(TOKENS_SCHEMA.names).to_pandas()
 
     return corpus.select("doc_id", "content").mapInPandas(invert, schema=TOKENS_SCHEMA)
-
-
-POS_TOKENS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("term", T.StringType(), False),
-        T.StructField("tf", T.LongType(), False),
-        T.StructField("dl", T.LongType(), False),
-        T.StructField("pos_bin", T.BinaryType(), False),
-    ]
-)
 
 
 def tokens_positional(corpus: DataFrame, mode: str = "arrow") -> DataFrame:
     """(doc_id, term, tf, dl, pos_bin) — the positional SPIMI map side.
 
-    ``pos_bin`` holds the term's occurrence positions in the doc
-    (0-based indices into the doc's token sequence), delta-gapped and
-    varbyte-encoded — the layout phrase queries decode
-    (spcht_spark.index.phrase). Position extraction, grouping, gap
-    encoding are all numpy over the Arrow batch (no per-row Python).
-    ``mode='arrow'`` uses TOKEN_REGEX (the code tokenizer);
-    ``mode='ws'`` splits on single spaces (the SQL-oracle-portable
-    token definition — positions then index the split sequence).
-
-    Solr stores positions for the same reason (phrase `q`,
-    /root/reference/Spcht/Core/WorkOrder.py:693 passes queries through
-    verbatim, phrases included)."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
+    ``pos_bin`` holds the term's 0-based positions in the doc's
+    non-empty :func:`split` sequence, delta-gapped and varbyte-encoded —
+    the layout phrase queries decode (spcht_spark.index.phrase); all
+    numpy over the Arrow batch. Solr stores positions for the same
+    reason (phrase `q`, Spcht/Core/WorkOrder.py:693 passes queries
+    through verbatim, phrases included)."""
     from spcht_spark.index.compress import varbyte_encode_segments
-
-    punct = r"[{}()\[\];:=,.<>+\-*/]"
-
-    def tokenize_lists_regex(content: pa.Array) -> pa.Array:
-        s = pc.replace_substring_regex(
-            content, pattern=rf"[^A-Za-z0-9_\s{{}}()\[\];:=,.<>+\-*/]", replacement=" "
-        )
-        s = pc.replace_substring_regex(s, pattern=f"({punct})", replacement=r" \1 ")
-        s = pc.replace_substring_regex(
-            s, pattern=r"(^|[^A-Za-z0-9_])([0-9]+)([A-Za-z_])", replacement=r"\1\2 \3"
-        )
-        return pc.split_pattern_regex(s, pattern=r"\s+")
-
-    def tokenize_lists_ws(content: pa.Array) -> pa.Array:
-        return pc.split_pattern(content, pattern=" ")
-
-    tok = tokenize_lists_regex if mode == "arrow" else tokenize_lists_ws
 
     def invert(batches):
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            lists = tok(pa.array(pdf["content"], type=pa.string()))
+            lists = split(pa.array(pdf["content"], type=pa.string()), mode)
             flat = pc.list_flatten(lists)
-            if len(flat) == 0:
-                continue
-            parents = pc.list_parent_indices(lists)
             keep = pc.not_equal(flat, "")
             terms = flat.filter(keep).to_numpy(zero_copy_only=False)
-            par = parents.filter(keep).to_numpy(zero_copy_only=False)
+            par = pc.list_parent_indices(lists).filter(keep).to_numpy(zero_copy_only=False)
             if len(terms) == 0:
                 continue
             # positions index the FILTERED token sequence per doc
@@ -200,7 +145,6 @@ def tokens_positional(corpus: DataFrame, mode: str = "arrow") -> DataFrame:
             pos = np.arange(n, dtype=np.int64) - np.repeat(seg_starts, seg_lens)
             doc_ids = pdf["doc_id"].to_numpy()[par]
             dl_per_doc = np.repeat(seg_lens.astype(np.int64), seg_lens)
-
             df = pd.DataFrame(
                 {"doc_id": doc_ids, "term": terms, "pos": pos, "dl": dl_per_doc}
             ).sort_values(["doc_id", "term", "pos"], kind="stable")
@@ -225,119 +169,3 @@ def tokens_positional(corpus: DataFrame, mode: str = "arrow") -> DataFrame:
             )
 
     return corpus.select("doc_id", "content").mapInPandas(invert, schema=POS_TOKENS_SCHEMA)
-
-
-def _token_filtered(exploded: DataFrame, analyzer: str | None) -> DataFrame:
-    """Apply token-level analyzer steps (stop/sstem) between explode
-    and the tf aggregation — pure Catalyst, removed tokens filtered as
-    NULL so they contribute neither postings nor doc length."""
-    from spcht_spark.index.analyze import fold_tokens_col, token_steps
-
-    if not token_steps(analyzer):
-        return exploded
-    return exploded.withColumn(
-        "term", fold_tokens_col(F.col("term"), analyzer)
-    ).filter(F.col("term").isNotNull())
-
-
-def tokens_ws(corpus: DataFrame, analyzer: str | None = None) -> DataFrame:
-    """Whitespace tokens (single-space split).
-
-    Exists so the full index engine (build → compress → exact/WAND query)
-    can be DuckDB-oracled by the driver: ``split(content, ' ')`` filtered
-    non-empty is exactly ``string_split(text, ' ') ... WHERE term <> ''``
-    in ANSI SQL, whereas TOKEN_REGEX is not SQL-portable.
-
-    With no token-level analyzer steps this routes to the Arrow map pass
-    (:func:`tokens_ws_arrow`): same rows, but tf AND dl come out of one
-    per-batch inversion with ZERO exchanges, where the Catalyst shape
-    pays a corpus-wide groupBy exchange plus a doc-partitioned window
-    exchange (guide §2.4 — both removable because docs never span
-    batches). The Catalyst twin (:func:`tokens_ws_jvm`) remains the
-    analyzer path and the equivalence cross-check."""
-    if not _has_token_steps(analyzer):
-        return tokens_ws_arrow(corpus)
-    return tokens_ws_jvm(corpus, analyzer)
-
-
-def _has_token_steps(analyzer: str | None) -> bool:
-    from spcht_spark.index.analyze import token_steps
-
-    return bool(token_steps(analyzer))
-
-
-def tokens_ws_jvm(corpus: DataFrame, analyzer: str | None = None) -> DataFrame:
-    """Whitespace tokens, pure Catalyst (explode → groupBy → dl window)."""
-    exploded = (
-        corpus.select(
-            "doc_id", F.explode(F.split("content", " ")).alias("term")
-        )
-        .filter(F.col("term") != "")
-    )
-    return _with_dl(
-        _token_filtered(exploded, analyzer)
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-
-
-def tokens_ws_arrow(corpus: DataFrame) -> DataFrame:
-    """Whitespace tokens via the Arrow batch inversion (SPIMI map side):
-    single-space split, empties dropped, tf = per-(doc, term) count and
-    dl = per-doc Σtf computed in the same batch — no shuffle at all.
-    Row-identical to :func:`tokens_ws_jvm` (pinned in
-    tests/test_tokenizer_unit.py)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    def invert(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            lists = pc.split_pattern(
-                pa.array(pdf["content"], type=pa.string()), pattern=" "
-            )
-            flat = pc.list_flatten(lists)
-            if len(flat) == 0:
-                continue
-            parents = pc.list_parent_indices(lists)
-            doc_ids = pc.take(pa.array(pdf["doc_id"], type=pa.int64()), parents)
-            tbl = pa.table({"doc_id": doc_ids, "term": flat})
-            tbl = tbl.filter(pc.not_equal(tbl["term"], ""))
-            if len(tbl) == 0:
-                continue
-            out = tbl.group_by(["doc_id", "term"]).aggregate([([], "count_all")])
-            out = out.rename_columns(["doc_id", "term", "tf"])
-            dl = out.group_by("doc_id").aggregate([("tf", "sum")])
-            dl = dl.rename_columns(["doc_id", "dl"])
-            yield (
-                out.join(dl, keys="doc_id")
-                .select(["doc_id", "term", "tf", "dl"])
-                .to_pandas()
-            )
-
-    return corpus.select("doc_id", "content").mapInPandas(invert, schema=TOKENS_SCHEMA)
-
-
-def tokens_jvm(corpus: DataFrame, analyzer: str | None = None) -> DataFrame:
-    """Same output, pure Catalyst expressions (no Python at all)."""
-    # regexp_extract_all needs the pattern escaped into a SQL literal.
-    pat = TOKEN_REGEX.replace("\\", "\\\\")
-    exploded = corpus.select(
-        "doc_id",
-        F.explode(F.expr(f"regexp_extract_all(content, '{pat}', 0)")).alias("term"),
-    )
-    return _with_dl(
-        _token_filtered(exploded, analyzer)
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-
-
-def _with_dl(tf: DataFrame) -> DataFrame:
-    """dl = Σtf per doc, as a window over the already-shuffled (doc_id,
-    term) grouping (JVM paths only; the Arrow path computes dl map-side
-    in the same batch)."""
-    from pyspark.sql import Window
-
-    return tf.withColumn("dl", F.sum("tf").over(Window.partitionBy("doc_id")))

@@ -30,9 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spcht_spark.index.tokenize import tokens_arrow, tokens_jvm, tokens_ws
-
-_TOKENIZERS = {"arrow": tokens_arrow, "jvm": tokens_jvm, "ws": tokens_ws}
+from spcht_spark.index.tokenize import tokens
 
 
 def term_vectors(
@@ -53,7 +51,7 @@ def term_vectors(
     docs = doc_store.select("doc_id", "content").where(
         f"doc_id IN ({', '.join(str(i) for i in ids)})"
     )
-    toks = _TOKENIZERS[tokenizer](docs, analyzer=analyzer).select(
+    toks = tokens(docs, tokenizer, analyzer).select(
         "doc_id", "term", "tf"
     )
     # Page frame is k docs → broadcast; dictionary scan prunes to the

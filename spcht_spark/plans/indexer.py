@@ -151,6 +151,9 @@ def load_index(spark: SparkSession, workdir: str) -> IndexTables:
         with open(mpath) as fh:
             params = json.load(fh).get("params", {})
     tokens_dir = os.path.join(workdir, "tokens")
+    # 'jvm' named the Catalyst twin of 'arrow' (row-identical), now a
+    # test oracle only: manifests that record it read as 'arrow'
+    tokenizer = params.get("tokenizer")
     return IndexTables(
         tokens=rd("tokens") if os.path.exists(tokens_dir) else None,
         doclens=rd("doclens"),
@@ -159,5 +162,5 @@ def load_index(spark: SparkSession, workdir: str) -> IndexTables:
         blocks=rd("blocks"),
         shard_span=params.get("shard_span"),
         analyzer=params.get("analyzer"),
-        tokenizer=params.get("tokenizer"),
+        tokenizer="arrow" if tokenizer == "jvm" else tokenizer,
     )

@@ -129,11 +129,34 @@ def test_positional_rejects_token_steps(spark):
 def test_arrow_and_jvm_tokenizers_agree_with_analyzer(spark, small_corpus):
     """The Arrow (pandas-twin) and Catalyst (Column-twin) token-filter
     paths must produce identical (doc_id, term, tf, dl) streams."""
-    from spcht_spark.index.tokenize import tokens_arrow, tokens_jvm
+    from catalyst_tokens import tokens_catalyst
+    from spcht_spark.index.tokenize import tokens
 
     corpus = small_corpus.limit(60).select(
         "doc_id", F.lower("content").alias("content")
     )
-    a = tokens_arrow(corpus, SPEC).orderBy("doc_id", "term").toPandas()
-    j = tokens_jvm(corpus, SPEC).orderBy("doc_id", "term").toPandas()
+    a = tokens(corpus, "arrow", SPEC).orderBy("doc_id", "term").toPandas()
+    j = tokens_catalyst(corpus, "arrow", SPEC).orderBy("doc_id", "term").toPandas()
     assert a.equals(j)
+
+
+def test_ws_tokens_with_analyzer_match_catalyst(spark, small_corpus):
+    """The ws + stop/sstem route runs the Arrow batch inversion; it must
+    equal the Catalyst split(' ') shape row for row — including a doc
+    whose tokens are all stopwords (no rows, hence no doclens row) and
+    the token 's', which stems to the empty string and is kept."""
+    from catalyst_tokens import tokens_catalyst
+    from spcht_spark.index.tokenize import tokens
+
+    edge = spark.createDataFrame(
+        [(10**6, "the and of a"), (10**6 + 1, "s  goes s's flies x")],
+        "doc_id long, content string",
+    )
+    corpus = small_corpus.limit(60).select(
+        "doc_id", F.lower("content").alias("content")
+    ).unionByName(edge)
+    a = tokens(corpus, "ws", SPEC).orderBy("doc_id", "term").toPandas()
+    j = tokens_catalyst(corpus, "ws", SPEC).orderBy("doc_id", "term").toPandas()
+    assert a.equals(j)
+    assert 10**6 not in set(a["doc_id"])
+    assert ((a["doc_id"] == 10**6 + 1) & (a["term"] == "")).any()

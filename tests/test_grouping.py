@@ -129,7 +129,9 @@ def test_pivot_facets_vs_pandas(spark, small_index, small_corpus):
     assert got_s[key].values.tolist() == exp_s[key].values.tolist()
 
 
-def test_facet_query_counts_vs_eval_ast(spark, small_index, small_corpus):
+def test_facet_query_counts_vs_eval_ast(
+    spark, small_index, small_corpus, small_corpus_pd
+):
     """Independent oracle: pure-Python eval_ast per (doc, facet query)
     over the base universe — including a term-free NOT query, a pure
     range, and docs MISSING from the attrs table (predicate must treat
@@ -137,7 +139,7 @@ def test_facet_query_counts_vs_eval_ast(spark, small_index, small_corpus):
     from spcht_spark.index.boolean import eval_ast, parse_query
     from spcht_spark.index.facets import matching_docs
     from spcht_spark.index.grouping import facet_query_counts
-    from spcht_spark.index.tokenize import tokens_jvm
+    from spcht_spark.oracle import tokenize_py
 
     facet_queries = {
         "fq_term": "return AND def",
@@ -157,11 +159,10 @@ def test_facet_query_counts_vs_eval_ast(spark, small_index, small_corpus):
     ).toPandas()
 
     base = matching_docs(spark, small_index.blocks, queries).toPandas()
-    toks = (
-        tokens_jvm(small_corpus.select("doc_id", "content"))
-        .select("doc_id", "term").toPandas()
-    )
-    doc_terms = toks.groupby("doc_id")["term"].apply(frozenset).to_dict()
+    doc_terms = {
+        int(d): frozenset(tokenize_py(c))
+        for d, c in zip(small_corpus_pd["doc_id"], small_corpus_pd["content"])
+    }
     attrs_pd = attrs.toPandas().set_index("doc_id").to_dict("index")
     parsed = {
         n: parse_query(s, require_positive=False)

@@ -13,8 +13,10 @@ from spcht_spark.index.compress import (
     varbyte_encode,
 )
 from spcht_spark.index.query import decode_blocks
-from spcht_spark.index.tokenize import tokens_arrow, tokens_jvm
+from spcht_spark.index.tokenize import tokens
 from spcht_spark.oracle import Bm25Oracle
+
+from catalyst_tokens import tokens_catalyst
 
 
 def test_varbyte_roundtrip():
@@ -36,14 +38,15 @@ def test_postings_block_roundtrip():
 
 
 def test_tokenizers_agree(spark, small_corpus):
-    a = tokens_arrow(small_corpus).orderBy("doc_id", "term").toPandas()
-    j = tokens_jvm(small_corpus).orderBy("doc_id", "term").toPandas()
-    assert a.equals(j)
+    for rule in ("arrow", "ws"):
+        a = tokens(small_corpus, rule).orderBy("doc_id", "term").toPandas()
+        j = tokens_catalyst(small_corpus, rule).orderBy("doc_id", "term").toPandas()
+        assert a.equals(j), rule
 
 
 def test_tokens_match_oracle(spark, small_corpus, small_corpus_pd):
     oracle = Bm25Oracle(small_corpus_pd)
-    got = tokens_arrow(small_corpus).toPandas()
+    got = tokens(small_corpus).toPandas()
     tf_map = {(int(r.doc_id), r.term): int(r.tf) for r in got.itertuples()}
     want = {
         (doc, t): tf for doc, c in oracle.tf.items() for t, tf in c.items()

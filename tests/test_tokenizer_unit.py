@@ -1,28 +1,21 @@
-"""Spark-free unit equivalence: the pyarrow RE2 tokenizer pipeline must
-produce exactly re.findall(TOKEN_REGEX) on adversarial inputs (the
+"""Spark-free unit equivalence: the shipped split kernel
+(spcht_spark.index.tokenize.split) must produce exactly
+re.findall(TOKEN_REGEX) under rule 'arrow' and the non-empty
+str.split(' ') pieces under rule 'ws', on adversarial inputs (the
 Spark-level agreement test is test_index_build.test_tokenizers_agree)."""
 
 from __future__ import annotations
 
 import pyarrow as pa
-import pyarrow.compute as pc
+import pytest
 
 from spcht_spark.corpus import generate_corpus_local
+from spcht_spark.index.tokenize import split
 from spcht_spark.oracle import tokenize_py
 
-PUNCT = r"[{}()\[\];:=,.<>+\-*/]"
 
-
-def _tok_arrow(texts: list[str]) -> list[list[str]]:
-    content = pa.array(texts, type=pa.string())
-    s = pc.replace_substring_regex(
-        content, pattern=rf"[^A-Za-z0-9_\s{{}}()\[\];:=,.<>+\-*/]", replacement=" "
-    )
-    s = pc.replace_substring_regex(s, pattern=f"({PUNCT})", replacement=r" \1 ")
-    s = pc.replace_substring_regex(
-        s, pattern=r"(^|[^A-Za-z0-9_])([0-9]+)([A-Za-z_])", replacement=r"\1\2 \3"
-    )
-    lists = pc.split_pattern_regex(s, pattern=r"\s+")
+def _tok(texts: list[str], rule: str = "arrow") -> list[list[str]]:
+    lists = split(pa.array(texts, type=pa.string()), rule)
     return [[t for t in lst if t != ""] for lst in lists.to_pylist()]
 
 
@@ -41,17 +34,33 @@ ADVERSARIAL = [
     "trailing space ",
     " leading",
     "012leading0zeros",
+    "C:\\dir C:\\Program Files\\x",
+    "foo\\",
+    "it's don't 'quoted'",
+    "{}{}{} {{{}}} a{}b",
+    "  double  space  ",
 ]
 
 
 def test_arrow_tokenizer_equals_findall_adversarial():
-    got = _tok_arrow(ADVERSARIAL)
+    got = _tok(ADVERSARIAL)
     for text, g in zip(ADVERSARIAL, got):
         assert g == tokenize_py(text), repr(text)
 
 
 def test_arrow_tokenizer_equals_findall_corpus():
     texts = generate_corpus_local(50, 2, 30)["content"].tolist()
-    got = _tok_arrow(texts)
+    got = _tok(texts)
     for text, g in zip(texts, got):
         assert g == tokenize_py(text)
+
+
+def test_ws_split_equals_str_split_adversarial():
+    got = _tok(ADVERSARIAL, "ws")
+    for text, g in zip(ADVERSARIAL, got):
+        assert g == [t for t in text.split(" ") if t], repr(text)
+
+
+def test_split_rejects_unknown_rule():
+    with pytest.raises(ValueError, match="unknown tokenizer"):
+        split(pa.array(["a"], type=pa.string()), "jvm")
