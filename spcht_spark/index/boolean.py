@@ -50,6 +50,7 @@ from spcht_spark.index.query import (
     values_df,
 )
 from spcht_spark.oracle import B, K1
+from spcht_spark.session import shuffle_parallelism
 
 Ast = tuple
 
@@ -812,7 +813,7 @@ def boolean_matches_ast(
         # top-k window share ONE exchange (see index.query.score_postings
         # — the same SALT_MIN_DOCS gate; large corpora keep the salted
         # two-exchange shape that prevents hot-query stragglers)
-        n = int(postings.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        n = shuffle_parallelism(postings.sparkSession)
         inner = f"SELECT /*+ REPARTITION({n}, query_id) */ * FROM ({inner})"
     g_sql = (
         "SELECT query_id, doc_id, "

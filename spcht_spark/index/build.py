@@ -51,6 +51,7 @@ from spcht_spark.index.compress import (
 )
 from spcht_spark.index.tokenize import tokens
 from spcht_spark.oracle import B, K1
+from spcht_spark.session import shuffle_parallelism
 
 DEFAULT_SHARD_SPAN = 1 << 17  # 131072 docs / shard; override per scale
 
@@ -292,7 +293,7 @@ def build_blocks(
     # partition by (term, shard, doc) so the map pass sees every group
     # contiguous and doc-ordered — the same grouping the applyInPandas
     # exchange provided, minus the per-group Python dispatch.
-    n_shuffle = int(tokens.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n_shuffle = shuffle_parallelism(tokens.sparkSession)
     blocks = (
         with_dl.repartition(n_shuffle, "term", "shard")
         .sortWithinPartitions("term", "shard", "doc_id")

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from spcht_spark.oracle import B, K1, idf as idf_py
+from spcht_spark.session import shuffle_parallelism
 
 POSTINGS_SCHEMA = T.StructType(
     [
@@ -54,7 +55,7 @@ def values_df(spark: SparkSession, rows: list[tuple], cols: list[str]) -> DataFr
     storm-amplified. An inline VALUES table resolves to a LocalRelation
     — the broadcast build reads it driver-side with zero tasks (guide
     §4: keep the JVM↔Python boundary out of paths that carry no data).
-    Strings are SQL-escaped; bool/int/float map to
+    Strings go through :func:`sql_str`; bool/int/float map to
     BOOLEAN/BIGINT/DOUBLE (the same types createDataFrame inferred)."""
 
     def lit(v) -> str:
@@ -66,8 +67,7 @@ def values_df(spark: SparkSession, rows: list[tuple], cols: list[str]) -> DataFr
             return f"CAST({v} AS BIGINT)"
         if isinstance(v, float):
             return f"CAST('{v!r}' AS DOUBLE)"
-        s = str(v).replace("'", "''")
-        return f"'{s}'"
+        return sql_str(v)
 
     if not rows:
         raise ValueError("values_df needs at least one row")
@@ -310,8 +310,10 @@ def stats_and_idfs(
 
 
 def sql_str(s: str) -> str:
-    """SQL string literal (single-quote escaped)."""
-    return "'" + str(s).replace("'", "''") + "'"
+    """Spark SQL string literal. Spark's parser reads ``\\`` as an
+    escape character inside literals, so backslashes are doubled before
+    quotes are; the literal evaluates to exactly ``s``."""
+    return "'" + str(s).replace("\\", "\\\\").replace("'", "''") + "'"
 
 
 def sql_esc(s: str) -> str:
@@ -389,7 +391,7 @@ def score_postings(
         # would funnel a hot query's candidates through one partition —
         # exactly the straggler the salted two-stage top-k exists to
         # avoid — so large corpora keep the standard shape.
-        n = int(postings.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        n = shuffle_parallelism(postings.sparkSession)
         inner = f"SELECT /*+ REPARTITION({n}, query_id) */ * FROM ({inner})"
     return postings.sparkSession.sql(
         "SELECT query_id, doc_id, "

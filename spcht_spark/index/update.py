@@ -18,9 +18,16 @@ Scale design (the 100 TB case — a full rebuild per delta is not viable):
 * Untouched groups keep their compressed postings byte-for-byte; only
   the ``max_part`` block-max column is refreshed, because BM25's
   length normalization depends on the corpus-wide avgdl, which the
-  delta shifts. The refresh is a map-only pass (decode tf/dl varbyte,
-  recompute the max — no shuffle, no docs_bin work) and is skipped
-  entirely when avgdl is unchanged.
+  delta shifts. The refresh is a map-only pass (decode tf/dl varbyte
+  once per Arrow batch, take each block's max with one reduceat — no
+  shuffle, no docs_bin work) and is skipped entirely when avgdl is
+  unchanged.
+* The commit (:func:`apply_update`) computes the new blocks ONCE: the
+  ``blocks.new`` write runs the lazy plan (touched-group decode, encode
+  shuffle, max_part refresh) and the ``skew`` histogram is aggregated
+  from the written ``blocks.new`` parquet — the same column-pruned
+  aggregate the build ladder's skew stage runs over its committed
+  blocks — instead of evaluating that plan a second time.
 * The dictionary merges df/cf deltas (exact integer arithmetic) instead
   of re-aggregating the full token table; stats re-aggregate doclens
   (one narrow map-side-partial agg).
@@ -63,23 +70,30 @@ def _shard(col, shard_span: int):
 def refresh_max_part(blocks: DataFrame, avgdl: float) -> DataFrame:
     """Recompute the block-max upper bound for a new corpus avgdl.
 
-    Map-only (no shuffle): per block, decode the tf/dl varbyte lanes and
-    take max(tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl))). Bit-identical to the
-    value build_blocks would compute — same int64 decode, same float64
-    expression — so a refreshed untouched block equals its full-rebuild
-    twin exactly."""
+    Map-only (no shuffle), one numpy pass per Arrow batch: the batch's
+    tf and dl lanes are each decoded with ONE varbyte call over the
+    concatenated buffers (varbyte values self-terminate, so the joined
+    decode is the concatenation of the per-block decodes), the
+    per-posting part tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl)) is evaluated
+    over the whole batch, and ``np.maximum.reduceat`` at the ``n_docs``
+    offsets takes each block's max. Bit-identical to the value
+    build_blocks would compute — same int64 decode, same float64
+    expression, and max is exact — so a refreshed untouched block
+    equals its full-rebuild twin exactly."""
     k1, b = K1, B
 
     def refresh(batches):
         for pdf in batches:
-            mp = np.empty(len(pdf), dtype=np.float64)
-            for i, (tbin, dbin) in enumerate(zip(pdf["tfs_bin"], pdf["dls_bin"])):
-                tfs = varbyte_decode(tbin).astype(np.int64)
-                dls = varbyte_decode(dbin).astype(np.int64)
-                parts = (tfs * (k1 + 1.0)) / (tfs + k1 * (1.0 - b + b * (dls / avgdl)))
-                mp[i] = parts.max()
+            if len(pdf) == 0:
+                yield pdf
+                continue
+            tfs = varbyte_decode(b"".join(pdf["tfs_bin"])).astype(np.int64)
+            dls = varbyte_decode(b"".join(pdf["dls_bin"])).astype(np.int64)
+            parts = (tfs * (k1 + 1.0)) / (tfs + k1 * (1.0 - b + b * (dls / avgdl)))
+            ends = np.cumsum(pdf["n_docs"].to_numpy(np.int64))
+            starts = np.concatenate(([0], ends[:-1]))
             pdf = pdf.copy()
-            pdf["max_part"] = mp
+            pdf["max_part"] = np.maximum.reduceat(parts, starts)
             yield pdf
 
     return blocks.mapInPandas(refresh, schema=BLOCKS_SCHEMA)
@@ -246,8 +260,9 @@ def apply_update(
     """Update a COMMITTED index in place (atomic per stage).
 
     Every updated stage is written to ``<stage>.new`` first — while the
-    old files still back the lazy update plan — then the directories are
-    swapped only after all writes succeed, and the swap is recorded in
+    old files still back the lazy update plan; ``skew.new`` last, from
+    the written ``blocks.new`` — then the directories are swapped only
+    after all writes succeed, and the swap is recorded in
     the work-order manifest (lineage: the updates list carries run_id
     and delta sizes). A crash mid-write leaves the committed index
     intact; a crash mid-swap is repaired by re-running the same update
@@ -274,10 +289,15 @@ def apply_update(
     }
     if new.tokens is not None:  # tokens is an optional retained stage
         stages["tokens"] = new.tokens
-    stages["skew"] = skew_table(new.blocks).repartition(1)
     for name, df in stages.items():
         df.write.mode("overwrite").parquet(os.path.join(workdir, f"{name}.new"))
-    for name in stages:
+    # skew from the WRITTEN blocks, not a second run of the lazy
+    # new-blocks plan (decode, encode shuffle, max_part refresh)
+    skew = skew_table(spark.read.parquet(os.path.join(workdir, "blocks.new")))
+    skew.repartition(1).write.mode("overwrite").parquet(
+        os.path.join(workdir, "skew.new")
+    )
+    for name in [*stages, "skew"]:
         old_dir = os.path.join(workdir, name)
         if os.path.exists(old_dir):
             shutil.rmtree(old_dir)

@@ -46,6 +46,7 @@ from spcht_spark.index.query import (
     values_df,
 )
 from spcht_spark.oracle import B, K1
+from spcht_spark.session import shuffle_parallelism
 
 # θ-cascade pays its two extra driver barriers only when the batch
 # actually decodes many blocks; below this it runs single-phase.
@@ -75,7 +76,7 @@ def _pin_groups(df: DataFrame) -> DataFrame:
     clustering requirement — no second exchange — and AQE honors the
     user-specified partition count (guide §2.5: compute-heavy, not
     byte-heavy, partitions)."""
-    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n = shuffle_parallelism(df.sparkSession)
     return df.repartition(n, "query_id", "shard")
 
 
@@ -404,7 +405,7 @@ def and_topk(
     # the REPARTITION hint is the same AQE-honored REPARTITION_BY_NUM
     # shape _pin_groups produced (see that docstring for why the
     # compute-heavy Python stage must not be byte-coalesced)
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_shuffle = shuffle_parallelism(spark)
     from spcht_spark.index.query import sql_esc
 
     pinned = spark.sql(
@@ -580,7 +581,7 @@ def wand_topk(
         # is the AQE-honored REPARTITION_BY_NUM shape _pin_groups used)
         from spcht_spark.index.query import sql_esc
 
-        n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        n_shuffle = shuffle_parallelism(spark)
         pinned = spark.sql(
             f"SELECT /*+ REPARTITION({n_shuffle}, query_id, shard), "
             "BROADCAST(q) */ "

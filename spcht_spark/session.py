@@ -13,6 +13,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def shuffle_parallelism(spark: SparkSession) -> int:
+    """``spark.sql.shuffle.partitions`` as an int, for the explicit
+    keyed repartitions that pin compute-heavy Python stages.
+
+    Some deployments set the conf to a non-integer such as ``"auto"``
+    (AQE picks the count at runtime); an explicit ``REPARTITION(n, ...)``
+    needs a number, so those fall back to the scheduler's
+    ``defaultParallelism``."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        return int(spark.sparkContext.defaultParallelism)
+
+
 def get_spark(
     app_name: str = "spcht_spark",
     cores: int | None = None,

@@ -197,6 +197,69 @@ def test_apply_update_persisted(spark, small_corpus, delta_setup, tmp_path):
     assert not any(p.endswith(".new") for p in os.listdir(workdir))
 
 
+def test_apply_update_skew_equals_rebuild(spark, small_corpus, delta_setup, tmp_path):
+    """The committed skew stage after a delta (aggregated from the
+    written blocks.new) equals the skew stage of a from-scratch ladder
+    build of the final corpus, row for row, and stays bounded."""
+    from spcht_spark.index.update import apply_update
+    from spcht_spark.plans.indexer import index_order, run_index_order, skew_report
+
+    base, changed, deleted = delta_setup
+    workdir = str(tmp_path / "idx_skew")
+    run_index_order(spark, index_order(
+        workdir, "t-base", lambda s: base, shard_span=SPAN, verify_sha256=False
+    ))
+    apply_update(spark, workdir, changed, deleted, shard_span=SPAN, run_id="t-delta")
+    fulldir = str(tmp_path / "idx_skew_full")
+    run_index_order(spark, index_order(
+        fulldir, "t-full", lambda s: small_corpus, shard_span=SPAN,
+        verify_sha256=False,
+    ))
+    got = _canon(spark.read.parquet(f"{workdir}/skew"), ["log2_bucket"])
+    want = _canon(spark.read.parquet(f"{fulldir}/skew"), ["log2_bucket"])
+    assert len(want) > 1
+    pd.testing.assert_frame_equal(got, want)
+    assert skew_report(spark, workdir, SPAN)["bounded"]
+
+
+def test_refresh_max_part_bit_identical_to_per_block(spark, small_index):
+    """The batched refresh (one varbyte decode per lane per Arrow batch,
+    reduceat at the n_docs offsets) equals a per-block decode + max,
+    bit for bit. Tiny Arrow batches put several blocks — 1-posting
+    blocks among them — into every batch and many batches into every
+    partition."""
+    import numpy as np
+
+    from spcht_spark.index.compress import varbyte_decode
+    from spcht_spark.index.update import refresh_max_part
+    from spcht_spark.oracle import B, K1
+
+    avgdl = float(small_index.stats.collect()[0]["avgdl"]) * 1.37
+    keys = ["term", "shard", "block_seq"]
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        got = _canon(refresh_max_part(small_index.blocks, avgdl), keys)
+        empty = refresh_max_part(small_index.blocks.filter("false"), avgdl).toPandas()
+    finally:
+        spark.conf.set(key, prev)
+    old = _canon(small_index.blocks, keys)
+    assert (old["n_docs"] == 1).any() and (old["n_docs"] > 1).any()
+    want = np.empty(len(old), dtype=np.float64)
+    for i, (tbin, dbin) in enumerate(zip(old["tfs_bin"], old["dls_bin"])):
+        tfs = varbyte_decode(tbin).astype(np.int64)
+        dls = varbyte_decode(dbin).astype(np.int64)
+        want[i] = ((tfs * (K1 + 1.0)) / (tfs + K1 * (1.0 - B + B * (dls / avgdl)))).max()
+    assert len(got) == len(old)
+    assert (got["max_part"].to_numpy().view(np.int64) == want.view(np.int64)).all()
+    assert not (got["max_part"] == old["max_part"]).all()  # avgdl moved it
+    for col in old.columns:
+        if col != "max_part":
+            assert got[col].equals(old[col]), col
+    assert len(empty) == 0
+
+
 def test_delete_by_query_equals_rebuild(spark, small_corpus, small_index):
     """delete_by_query('return AND import') must leave every index
     table equal to a from-scratch build over the surviving docs —
