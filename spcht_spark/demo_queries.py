@@ -65,12 +65,8 @@ def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nbytes = _path_bytes(f"{sf_dir}/documents.parquet")
     if nbytes >= _TOKENIZE_SPLIT_MIN_BYTES:
-        try:
-            par = spark.sparkContext.defaultParallelism
-            n_in = docs.rdd.getNumPartitions()
-        except Exception:  # Spark Connect: no sparkContext/rdd — skip
-            par = n_in = None
-        if n_in is not None and n_in < par:
+        par = spark.sparkContext.defaultParallelism
+        if docs.rdd.getNumPartitions() < par:
             # ~16 MB of input text per task, at least one wave of cores
             docs = docs.repartition(
                 min(par * 4, max(par, nbytes // (16 << 20)))

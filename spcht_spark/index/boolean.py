@@ -43,7 +43,6 @@ from pyspark.sql import functions as F
 
 from spcht_spark.index.query import (
     decode_blocks,
-    query_idfs,
     sql_in,
     stats_and_idfs,
     topk,
@@ -762,15 +761,7 @@ def boolean_matches_ast(
             "columns — rename them in the attrs table and query"
         )
     all_terms = sorted({t for _, ast, _ in parsed for t in ast_terms(ast)})
-    if stats_row is None and idfs is None:
-        stats_row, idfs = stats_and_idfs(dictionary, stats, all_terms)
-    elif stats_row is None:
-        stats_row = stats.collect()[0]
-        idfs = {t: idfs[t] for t in all_terms if t in idfs}
-    elif idfs is None:
-        idfs = query_idfs(dictionary, stats_row, all_terms)
-    else:
-        idfs = {t: idfs[t] for t in all_terms if t in idfs}
+    stats_row, idfs = stats_and_idfs(dictionary, stats, all_terms, stats_row, idfs)
     avgdl = float(stats_row["avgdl"])
     if not idfs:
         return spark.createDataFrame(

@@ -123,12 +123,8 @@ def build_tokens(
     # has >> cores splits and this guard never fires; the repartition
     # only pays (one corpus shuffle) when the input would otherwise
     # idle most of the cluster.
-    try:
-        par = corpus.sparkSession.sparkContext.defaultParallelism
-        n_in = corpus.rdd.getNumPartitions()
-    except Exception:  # Spark Connect: no sparkContext/rdd — skip the guard
-        par = n_in = None
-    if n_in is not None and n_in < par:
+    par = corpus.sparkSession.sparkContext.defaultParallelism
+    if corpus.rdd.getNumPartitions() < par:
         corpus = corpus.repartition(par * 2)
     return tokens(apply_analyzer(corpus, analyzer), tokenizer, analyzer)
 

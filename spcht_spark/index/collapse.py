@@ -21,14 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from spcht_spark.index.query import (
-    decode_blocks,
-    query_idfs,
-    score_postings,
-    sql_in,
-    stats_and_idfs,
-    values_df,
-)
+from spcht_spark.index.query import exact_scores, stats_and_idfs
 
 
 def collapse_topk(
@@ -46,16 +39,10 @@ def collapse_topk(
     doc."""
     all_terms = sorted({t for _, ts, _ in queries for t in ts})
     stats_row, idfs = stats_and_idfs(dictionary, stats, all_terms)
-    avgdl = float(stats_row["avgdl"])
     schema = "query_id string, rank int, doc_id long, score double, grp string"
     if not idfs:
         return spark.createDataFrame([], schema=schema)
-    qrows = [
-        (qid, t) for qid, ts, _ in queries for t in sorted(set(ts)) if t in idfs
-    ]
-    query_terms = values_df(spark, qrows, ["query_id", "term"])
-    postings = decode_blocks(blocks.where(f"term IN ({sql_in(sorted(idfs))})"))
-    scores = score_postings(postings, idfs, avgdl, query_terms)
+    scores = exact_scores(spark, blocks, queries, stats_row, idfs)
     j = scores.join(
         attrs.select("doc_id", F.col(group_col).cast("string").alias("grp")),
         "doc_id",

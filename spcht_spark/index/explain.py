@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from spcht_spark.index.query import decode_blocks, sql_in, stats_and_idfs
+from spcht_spark.index.query import decode_blocks, sql_in, sql_in_pred, stats_and_idfs
 from spcht_spark.oracle import B, K1
 
 
@@ -50,10 +50,10 @@ def explain_scores(
     shards = sorted({d // shard_span for d in ids})
     hit = blocks.where(
         f"term IN ({sql_in(sorted(idfs))}) AND "
-        f"shard IN ({', '.join(str(s) for s in shards)})"
+        f"{sql_in_pred('shard', (str(s) for s in shards))}"
     )
     postings = decode_blocks(hit).where(
-        f"doc_id IN ({', '.join(str(i) for i in ids)})"
+        sql_in_pred("doc_id", (str(i) for i in ids))
     )
     idf_map = F.create_map(
         *[x for t, v in sorted(idfs.items()) for x in (F.lit(t), F.lit(v))]

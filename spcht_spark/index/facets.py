@@ -482,13 +482,14 @@ def range_facets(
     if others == ("all",) or "all" in others:
         others = ("before", "after", "between")
     specs: list[tuple[str, str]] = []  # (bucket label, interval spec)
-    lo = start
-    while lo < end:
-        hi = lo + gap
-        if hardend:
-            hi = min(hi, end)
+    # bucket i spans [start + i·gap, start + (i+1)·gap): computed, not
+    # accumulated, so float gaps add no rounding drift (0.1 · 10 steps
+    # must stop at 1.0, not emit an 11th bucket at 0.9999999999999999)
+    i = 0
+    while (lo := start + i * gap) < end:
+        i += 1
+        hi = min(start + i * gap, end) if hardend else start + i * gap
         specs.append((_num(lo), f"[{_num(lo)},{_num(hi)})"))
-        lo += gap
     end_actual = end if hardend else lo
     for o in others:
         if o == "before":

@@ -24,15 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spcht_spark.index.build import IndexTables, build_index
-from spcht_spark.index.query import (
-    TOPK_SCHEMA,
-    decode_blocks,
-    score_postings,
-    sql_in,
-    stats_and_idfs,
-    topk,
-    values_df,
-)
+from spcht_spark.index.query import TOPK_SCHEMA, exact_scores, stats_and_idfs, topk
 
 
 def build_fielded_index(
@@ -79,17 +71,9 @@ def fielded_topk(
         idx = indexes[field]
         all_terms = sorted({t for _, ts, _ in queries for t in ts})
         stats_row, idfs = stats_and_idfs(idx.dictionary, idx.stats, all_terms)
-        avgdl = float(stats_row["avgdl"])
         if not idfs:
             continue
-        qrows = [
-            (qid, t) for qid, ts, _ in queries for t in sorted(set(ts)) if t in idfs
-        ]
-        query_terms = values_df(spark, qrows, ["query_id", "term"])
-        postings = decode_blocks(
-            idx.blocks.where(f"term IN ({sql_in(sorted(idfs))})")
-        )
-        scores = score_postings(postings, idfs, avgdl, query_terms)
+        scores = exact_scores(spark, idx.blocks, queries, stats_row, idfs)
         parts.append(
             scores.select(
                 "query_id",

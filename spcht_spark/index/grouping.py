@@ -40,8 +40,7 @@ from pyspark.sql import functions as F
 from spcht_spark.index.facets import matching_docs
 from spcht_spark.index.query import (
     decode_blocks,
-    query_idfs,
-    score_postings,
+    exact_scores,
     sql_in,
     stats_and_idfs,
     values_df,
@@ -83,19 +82,13 @@ def group_topk(
     """
     all_terms = sorted({t for _, ts, _ in queries for t in ts})
     stats_row, idfs = stats_and_idfs(dictionary, stats, all_terms)
-    avgdl = float(stats_row["avgdl"])
     schema = (
         "query_id string, grp_rank int, grp string, grp_n long, "
         "doc_rank int, doc_id long, score double"
     )
     if not idfs:
         return spark.createDataFrame([], schema=schema)
-    qrows = [
-        (qid, t) for qid, ts, _ in queries for t in sorted(set(ts)) if t in idfs
-    ]
-    query_terms = values_df(spark, qrows, ["query_id", "term"])
-    postings = decode_blocks(blocks.where(f"term IN ({sql_in(sorted(idfs))})"))
-    scores = score_postings(postings, idfs, avgdl, query_terms)
+    scores = exact_scores(spark, blocks, queries, stats_row, idfs)
     return group_scored(
         scores, attrs, group_col, {qid: k for qid, _, k in queries},
         group_limit, ngroups=ngroups, group_sort=group_sort,

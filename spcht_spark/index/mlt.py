@@ -29,7 +29,7 @@ from collections import Counter
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from spcht_spark.index.query import exact_topk, sql_in
+from spcht_spark.index.query import exact_topk, sql_in, sql_in_pred
 from spcht_spark.oracle import idf as idf_py
 from spcht_spark.oracle import tokenize_py
 
@@ -50,7 +50,7 @@ def interesting_terms(
     split / ``'arrow'`` code-token regex)."""
     rows = (
         doc_store.where(
-            f"`{id_col}` IN ({', '.join(str(int(s)) for s in seed_ids)})"
+            sql_in_pred(f"`{id_col}`", (str(int(s)) for s in seed_ids))
         )
         .selectExpr(f"`{id_col}` AS doc_id", f"`{content_col}` AS content")
         .collect()
@@ -99,7 +99,7 @@ def interesting_terms_detail(
     chosen terms with their boosts when details is requested)."""
     rows = (
         doc_store.where(
-            f"`{id_col}` IN ({', '.join(str(int(s)) for s in seed_ids)})"
+            sql_in_pred(f"`{id_col}`", (str(int(s)) for s in seed_ids))
         )
         .selectExpr(f"`{id_col}` AS doc_id", f"`{content_col}` AS content")
         .collect()

@@ -20,9 +20,10 @@ aggregate-fold, tie-break (score desc, doc_id asc).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.util import PythonEvalType
 
 from spcht_spark.oracle import B, K1, idf as idf_py
 from spcht_spark.session import shuffle_parallelism
@@ -121,94 +122,67 @@ def _decode_batches(batches):
         )
 
 
-# app_id → the one registered decode UDF (see decode_blocks)
-_DECODE_UDF_MEMO: dict[str, object] = {}
+# (app_id, func module, func qualname) → the registered pandas UDF
+_UDF_MEMO: dict[tuple[str, str, str], object] = {}
 
-# (app_id, name) → registered grouped-map UDF (see apply_grouped_cached)
-_GROUPED_UDF_MEMO: dict[tuple[str, str], object] = {}
+
+def _cached_udf(spark: SparkSession, func, schema, eval_type: int):
+    """The pandas UDF over ``func``, built once per session.
+
+    pyspark's ``mapInPandas``/``applyInPandas`` mixins build a fresh
+    pandas UDF on every call: a re-pickle of ``func`` plus ~55-65 py4j
+    round-trips (~40 ms of driver wall on a 4-core VM at ~0.75 ms per
+    round-trip) per query. The UDF object (whose ``_judf`` caches the JVM
+    registration) is memoized per (session, function) instead, and the
+    callers apply it through the same JVM entry points the mixins use —
+    identical plan, one-time setup. ``func`` MUST be module-level and
+    closure-free: any per-call parameters have to ride the data as
+    columns, because the function bytes are serialized exactly once per
+    session."""
+    app_id = spark.sparkContext.applicationId
+    memo_key = (app_id, func.__module__, func.__qualname__)
+    udf = _UDF_MEMO.get(memo_key)
+    if udf is None:
+        from pyspark.sql.pandas.functions import pandas_udf
+
+        udf = pandas_udf(func, returnType=schema, functionType=eval_type)
+        for k in [k for k in _UDF_MEMO if k[0] != app_id]:
+            del _UDF_MEMO[k]  # dead sessions' judf refs
+        _UDF_MEMO[memo_key] = udf
+    return udf
 
 
 def apply_grouped_cached(
-    df: DataFrame, group_cols: list[str], func, schema, name: str
+    df: DataFrame, group_cols: list[str], func, schema
 ) -> DataFrame:
     """``df.groupBy(*group_cols).applyInPandas(func, schema)`` with the
-    pandas UDF built once per (session, name) instead of per call.
-
-    ``GroupedData.applyInPandas`` re-pickles ``func`` and re-registers
-    a fresh UDF on every invocation (~65 py4j round-trips per call,
-    measured). ``func`` MUST be module-level and closure-free — any
-    per-call parameters have to ride the data as columns, because the
-    function bytes are serialized exactly once per session. The JVM
-    entry point (``flatMapGroupsInPandas``) and eval type are the same
-    ones the mixin uses — identical plan."""
-    spark = df.sparkSession
-    try:
-        app_id = spark.sparkContext.applicationId
-    except Exception:  # Spark Connect: no sparkContext — mixin path
-        return df.groupBy(*group_cols).applyInPandas(func, schema)
-    memo_key = (app_id, name)
-    udf = _GROUPED_UDF_MEMO.get(memo_key)
-    if udf is None:
-        from pyspark.sql.pandas.functions import pandas_udf
-        from pyspark.util import PythonEvalType
-
-        udf = pandas_udf(
-            func,
-            returnType=schema,
-            functionType=PythonEvalType.SQL_GROUPED_MAP_PANDAS_UDF,
-        )
-        for k in [k for k in _GROUPED_UDF_MEMO if k[0] != app_id]:
-            del _GROUPED_UDF_MEMO[k]  # dead sessions' judf refs
-        _GROUPED_UDF_MEMO[memo_key] = udf
+    pandas UDF built once per session (:func:`_cached_udf`) and applied
+    through the mixin's JVM entry point, ``flatMapGroupsInPandas``."""
+    udf = _cached_udf(
+        df.sparkSession, func, schema, PythonEvalType.SQL_GROUPED_MAP_PANDAS_UDF
+    )
     gd = df.groupBy(*group_cols)
-    udf_column = udf(*[df[c] for c in df.columns])
-    jdf = gd._jgd.flatMapGroupsInPandas(udf_column._jc)
-    return df.__class__(jdf, spark)
+    jdf = gd._jgd.flatMapGroupsInPandas(udf(*[df[c] for c in df.columns])._jc)
+    return df.__class__(jdf, df.sparkSession)
 
 
 def apply_cogrouped_cached(
-    left: DataFrame,
-    right: DataFrame,
-    group_cols: list[str],
-    func,
-    schema,
-    name: str,
+    left: DataFrame, right: DataFrame, group_cols: list[str], func, schema
 ) -> DataFrame:
     """``left.groupBy(...).cogroup(right.groupBy(...)).applyInPandas``
-    with the pandas UDF built once per (session, name) — the cogrouped
-    twin of :func:`apply_grouped_cached`. Same JVM entry point
-    (``flatMapCoGroupsInPandas``), identical plan; ``func`` must be
-    module-level and closure-free."""
-    spark = left.sparkSession
-    try:
-        app_id = spark.sparkContext.applicationId
-    except Exception:  # Spark Connect — mixin path
-        return (
-            left.groupBy(*group_cols)
-            .cogroup(right.groupBy(*group_cols))
-            .applyInPandas(func, schema)
-        )
-    memo_key = (app_id, name)
-    udf = _GROUPED_UDF_MEMO.get(memo_key)
-    if udf is None:
-        from pyspark.sql.pandas.functions import pandas_udf
-        from pyspark.util import PythonEvalType
-
-        udf = pandas_udf(
-            func,
-            returnType=schema,
-            functionType=PythonEvalType.SQL_COGROUPED_MAP_PANDAS_UDF,
-        )
-        for k in [k for k in _GROUPED_UDF_MEMO if k[0] != app_id]:
-            del _GROUPED_UDF_MEMO[k]
-        _GROUPED_UDF_MEMO[memo_key] = udf
+    with the pandas UDF built once per session (:func:`_cached_udf`) and
+    applied through the mixin's JVM entry point,
+    ``flatMapCoGroupsInPandas``."""
+    udf = _cached_udf(
+        left.sparkSession, func, schema, PythonEvalType.SQL_COGROUPED_MAP_PANDAS_UDF
+    )
     gd1 = left.groupBy(*group_cols)
     gd2 = right.groupBy(*group_cols)
     udf_column = udf(
         *[left[c] for c in left.columns], *[right[c] for c in right.columns]
     )
     jdf = gd1._jgd.flatMapCoGroupsInPandas(gd2._jgd, udf_column._jc)
-    return left.__class__(jdf, spark)
+    return left.__class__(jdf, left.sparkSession)
 
 
 def decode_blocks(blocks: DataFrame) -> DataFrame:
@@ -220,55 +194,25 @@ def decode_blocks(blocks: DataFrame) -> DataFrame:
     that join was an Exchange of the full decoded posting stream
     (round-3 VERDICT "What's wrong" #3).
 
-    ``DataFrame.mapInPandas`` builds a fresh pandas UDF per call —
-    ~55 py4j round-trips plus a re-pickle of the function (~40 ms of
-    driver wall at this host's round-trip latency) on EVERY query.
-    The decode function is static, so the UDF object (whose ``_judf``
-    caches the JVM registration) is memoized per session and applied
-    through the same ``mapInPandas`` JVM entry point the mixin uses —
-    identical plan, one-time setup."""
+    ``mapInPandas`` with the decode UDF built once per session
+    (:func:`_cached_udf`), through the mixin's JVM entry point."""
     df = blocks.selectExpr("term", "docs_bin", "tfs_bin", "dls_bin")
-    spark = df.sparkSession
-    try:
-        app_id = spark.sparkContext.applicationId
-    except Exception:  # Spark Connect: no sparkContext — use the mixin path
-        return df.mapInPandas(_decode_batches, schema=POSTINGS_SCHEMA)
-    udf = _DECODE_UDF_MEMO.get(app_id)
-    if udf is None:
-        from pyspark.sql.pandas.functions import pandas_udf
-        from pyspark.util import PythonEvalType
-
-        udf = pandas_udf(
-            _decode_batches,
-            returnType=POSTINGS_SCHEMA,
-            functionType=PythonEvalType.SQL_MAP_PANDAS_ITER_UDF,
-        )
-        _DECODE_UDF_MEMO.clear()  # a dead session's judf is useless
-        _DECODE_UDF_MEMO[app_id] = udf
-    udf_column = udf(*[df[c] for c in df.columns])
-    jdf = df._jdf.mapInPandas(
-        udf_column._jc, False, df._build_java_profile(None)
+    udf = _cached_udf(
+        df.sparkSession, _decode_batches, POSTINGS_SCHEMA,
+        PythonEvalType.SQL_MAP_PANDAS_ITER_UDF,
     )
-    return df.__class__(jdf, spark)
-
-
-def query_idfs(
-    dictionary: DataFrame, stats_row, terms: list[str]
-) -> dict[str, float]:
-    """Driver-side idf for the query terms — bit-identical to the oracle
-    (math.log in Python; N and df are exact ints)."""
-    n_docs = int(stats_row["n_docs"])
-    dfs = {
-        r["term"]: int(r["df"])
-        for r in dictionary.where(f"term IN ({sql_in(terms)})")
-        .select("term", "df")
-        .collect()
-    } if terms else {}
-    return {t: idf_py(n_docs, dfs[t]) for t in terms if t in dfs}
+    jdf = df._jdf.mapInPandas(
+        udf(*[df[c] for c in df.columns])._jc, False, df._build_java_profile(None)
+    )
+    return df.__class__(jdf, df.sparkSession)
 
 
 def stats_and_idfs(
-    dictionary: DataFrame, stats: DataFrame, terms: list[str]
+    dictionary: DataFrame,
+    stats: DataFrame,
+    terms: list[str],
+    stats_row=None,
+    idfs: dict[str, float] | None = None,
 ) -> tuple[dict, dict[str, float]]:
     """(stats_row, idfs) in ONE driver job.
 
@@ -276,10 +220,15 @@ def stats_and_idfs(
     dfs; collecting them separately is two serial driver barriers per
     batch (each a job + an AQE/py4j gap — at page-of-10 scale the
     barriers, not the scoring, dominate). A union of the two tiny
-    projections collects both in one job. Values are identical to
-    ``stats.collect()[0]`` + :func:`query_idfs` (exact ints in, same
-    math.log); the returned stats row is a plain dict supporting the
-    same ``row["n_docs"]`` subscripting."""
+    projections collects both in one job. idf is math.log in Python
+    over exact ints, bit-identical to the oracle; the returned stats
+    row is a plain dict supporting ``row["n_docs"]`` subscripting.
+
+    Batch callers (boolean_topk's router) pass the ``stats_row`` and
+    ``idfs`` they already collected for a superset of ``terms``; then
+    no job runs and the idf map is subset to ``terms``."""
+    if stats_row is not None:
+        return stats_row, {t: idfs[t] for t in terms if t in idfs}
     # where/selectExpr SQL strings, not per-Column ops: the Column build
     # of this same plan was ~280 py4j round-trips per batch (isin alone
     # pays one trip per literal; measured via a send_command counter),
@@ -298,7 +247,7 @@ def stats_and_idfs(
             "CAST(NULL AS DOUBLE) AS avgdl",
         )
         s = s.unionByName(d)
-    stats_row: dict = {}
+    stats_row = {}
     dfs: dict[str, int] = {}
     for r in s.collect():
         if r["term"] is None:
@@ -330,6 +279,14 @@ def sql_in(values) -> str:
     element becomes a java object via _to_seq); a rendered IN-list is
     part of one ``where`` string — same Catalyst predicate, one trip."""
     return ", ".join(sql_str(v) for v in values)
+
+
+def sql_in_pred(col: str, literals) -> str:
+    """``col IN (...)`` over rendered SQL literals. An empty list renders
+    the always-false ``1 = 0``: Spark's parser rejects ``IN ()``, and an
+    empty id list asks for nothing."""
+    lits = list(literals)
+    return f"{col} IN ({', '.join(lits)})" if lits else "1 = 0"
 
 
 def sql_double(v: float) -> str:
@@ -400,6 +357,29 @@ def score_postings(
         f"count(1) AS n_matched FROM ({inner}) GROUP BY query_id, doc_id",
         postings=postings,
         qt=query_terms,
+    )
+
+
+def exact_scores(
+    spark: SparkSession,
+    blocks: DataFrame,
+    queries: list[tuple[str, list[str], int]],
+    stats_row,
+    idfs: dict[str, float],
+    pre_partition: bool = False,
+) -> DataFrame:
+    """(query_id, doc_id, score, n_matched) of every doc matching a
+    query term — the exact path's front half: the query-term rows as a
+    VALUES table, the term-pruned block scan (``term IN (...)`` before
+    decode, so parquet row-group stats on the sorted term column prune
+    it), :func:`decode_blocks` and :func:`score_postings`. ``idfs``
+    must be non-empty; ``pre_partition`` is passed through."""
+    qrows = [(qid, t) for qid, ts, _ in queries for t in sorted(set(ts)) if t in idfs]
+    query_terms = values_df(spark, qrows, ["query_id", "term"])
+    postings = decode_blocks(blocks.where(f"term IN ({sql_in(sorted(idfs))})"))
+    return score_postings(
+        postings, idfs, float(stats_row["avgdl"]), query_terms,
+        pre_partition=pre_partition,
     )
 
 
@@ -482,16 +462,12 @@ def exact_topk(
     The semi-join shuffles only (query_id, doc_id, score) candidate
     rows, never postings, so it stays narrow at 10^12 docs.
 
-    ``term IN (...)`` is applied before decode so parquet row-group
-    min/max stats on the sorted term column prune the block scan.
-
     ``doclens`` is accepted for API symmetry with IndexTables but no
     longer joined: blocks carry the dl lane and decode_blocks surfaces
     it, removing the postings-wide Exchange.
     """
     all_terms = sorted({t for _, ts, _ in queries for t in ts})
     stats_row, idfs = stats_and_idfs(dictionary, stats, all_terms)
-    avgdl = float(stats_row["avgdl"])
     if not idfs:
         # No query term occurs in the corpus → empty result, stable schema.
         return spark.createDataFrame([], schema=TOPK_SCHEMA)
@@ -502,13 +478,8 @@ def exact_topk(
         if not queries:
             return spark.createDataFrame([], schema=TOPK_SCHEMA)
 
-    qrows = [(qid, t) for qid, ts, _ in queries for t in sorted(set(ts)) if t in idfs]
-    query_terms = values_df(spark, qrows, ["query_id", "term"])
-
-    hit_blocks = blocks.where(f"term IN ({sql_in(sorted(idfs))})")
-    postings = decode_blocks(hit_blocks)
-    scores = score_postings(
-        postings, idfs, avgdl, query_terms,
+    scores = exact_scores(
+        spark, blocks, queries, stats_row, idfs,
         pre_partition=int(stats_row["n_docs"]) < SALT_MIN_DOCS,
     )
     if doc_filter is not None:
@@ -557,14 +528,10 @@ def boosted_topk(
         return exact_topk(spark, blocks, doclens, dictionary, stats, queries)
     all_terms = sorted({t for _, ts, _ in queries for t in ts})
     stats_row, idfs = stats_and_idfs(dictionary, stats, all_terms)
-    avgdl = float(stats_row["avgdl"])
     if not idfs:
         return spark.createDataFrame([], schema=TOPK_SCHEMA)
-    qrows = [(qid, t) for qid, ts, _ in queries for t in sorted(set(ts)) if t in idfs]
-    query_terms = values_df(spark, qrows, ["query_id", "term"])
-    postings = decode_blocks(blocks.where(f"term IN ({sql_in(sorted(idfs))})"))
-    scores = score_postings(
-        postings, idfs, avgdl, query_terms,
+    scores = exact_scores(
+        spark, blocks, queries, stats_row, idfs,
         pre_partition=int(stats_row["n_docs"]) < SALT_MIN_DOCS,
     )
     need = sorted(

@@ -466,18 +466,18 @@ def realtime_get(
     Reference capability: the reference re-fetches individual records
     by id between work-order stages (WorkOrder.py:875-942 delete/
     re-insert loop addresses docs by id the same way)."""
-    from spcht_spark.index.query import sql_str
+    from spcht_spark.index.query import sql_in_pred, sql_str
 
     def id_lit(v) -> str:
         return str(int(v)) if isinstance(v, int) else sql_str(v)
 
+    # duplicate ids: one row each, at the first request position (the
+    # order map below is a create_map, which rejects duplicate keys)
+    ids = list(dict.fromkeys(ids))
     cols = [id_col, *(fl or [])]
-    pred = (
-        f"`{id_col}` IN ({', '.join(id_lit(i) for i in ids)})"
-        if ids
-        else "1 = 0"  # empty request → empty page (old isin([]) shape)
+    out = doc_store.select(*dict.fromkeys(cols)).where(
+        sql_in_pred(f"`{id_col}`", (id_lit(i) for i in ids))
     )
-    out = doc_store.select(*dict.fromkeys(cols)).where(pred)
     # request-order rank without a global sort: the id list is
     # page-sized (Solr client contract), so the order map broadcasts
     order_map = F.create_map(

@@ -81,6 +81,10 @@ def spellcheck_collate(
     and the top-1 suggestion per missing term); hit counting decodes
     only the collated terms' pruned blocks and partial-aggs per
     (query, doc) — no full-corpus structure ever reaches the driver."""
+    if not queries:
+        return spark.createDataFrame(
+            [], schema="query_id string, collation string, hits long"
+        )
     all_terms = sorted({t for _, ts in queries for t in ts})
     known = {
         r["term"]
@@ -104,6 +108,8 @@ def spellcheck_collate(
     qrows = [
         (qid, t) for qid, ts in coll.items() for t in sorted(set(ts))
     ]
+    if not qrows:  # every term list is empty: no collation matches a doc
+        return base.selectExpr("query_id", "collation", "CAST(0 AS BIGINT) AS hits")
     n_terms = {qid: len(set(ts)) for qid, ts in coll.items()}
     query_terms = values_df(spark, qrows, ["query_id", "term"])
     need = sorted({t for _, t in qrows})

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spcht_spark.index.query import sql_in_pred
 from spcht_spark.index.tokenize import tokens
 
 
@@ -49,7 +50,7 @@ def term_vectors(
     tf_idf = tf / df, Solr TermVectorComponent's definition."""
     ids = sorted({int(d) for d in doc_ids})
     docs = doc_store.select("doc_id", "content").where(
-        f"doc_id IN ({', '.join(str(i) for i in ids)})"
+        sql_in_pred("doc_id", (str(i) for i in ids))
     )
     toks = tokens(docs, tokenizer, analyzer).select(
         "doc_id", "term", "tf"

@@ -39,7 +39,7 @@ from spcht_spark.index.query import (
     TOPK_SCHEMA,
     apply_cogrouped_cached,
     apply_grouped_cached,
-    query_idfs,
+    sql_esc,
     sql_in,
     stats_and_idfs,
     topk,
@@ -78,6 +78,33 @@ def _pin_groups(df: DataFrame) -> DataFrame:
     byte-heavy, partitions)."""
     n = shuffle_parallelism(df.sparkSession)
     return df.repartition(n, "query_id", "shard")
+
+
+def _pinned_scan(
+    spark: SparkSession,
+    blocks: DataFrame,
+    query_terms: DataFrame,
+    idfs: dict[str, float],
+    param: str,
+) -> DataFrame:
+    """The runner input of the single-phase WAND and AND paths: the
+    ``term IN`` pruned block scan, broadcast-joined to the query-term
+    table, pruned to the runner's columns (term_hash/n_docs/cf never
+    reach it; ``param`` names the per-query column, ``k`` or
+    ``n_terms``) and pinned as :func:`_pin_groups` pins — as ONE
+    parametrized statement, one plan analysis instead of four. The
+    REPARTITION hint is the same AQE-honored REPARTITION_BY_NUM shape
+    ``_pin_groups`` produces."""
+    n_shuffle = shuffle_parallelism(spark)
+    return spark.sql(
+        f"SELECT /*+ REPARTITION({n_shuffle}, query_id, shard), BROADCAST(q) */ "
+        "term, shard, block_seq, first_doc, last_doc, docs_bin, tfs_bin, "
+        f"dls_bin, max_part, query_id, idf, {param}, avgdl "
+        "FROM {blocks} AS p JOIN {qt} AS q USING (term) "
+        f"WHERE term IN ({sql_esc(sql_in(sorted(idfs)))})",
+        blocks=blocks,
+        qt=query_terms,
+    )
 
 
 class _TermCursor:
@@ -294,6 +321,14 @@ def _and_one_group(
     return list(zip(cand.tolist(), total.tolist()))
 
 
+def _cand_frame(query_id: str, res: list[tuple[int, float]]) -> pd.DataFrame:
+    """The (query_id, doc_id, score) frame every group runner returns."""
+    return pd.DataFrame(
+        {"query_id": query_id, "doc_id": [d for d, _ in res],
+         "score": [s for _, s in res]}
+    )
+
+
 def _wand_run_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
     """Single-phase WAND group runner — module-level and closure-free
     (per-query k / per-term idf / avgdl ride the joined query_terms
@@ -304,11 +339,7 @@ def _wand_run_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
     k = int(pdf["k"].iloc[0])
     avgdl = float(pdf["avgdl"].iloc[0])
     idfs = dict(zip(pdf["term"], (float(x) for x in pdf["idf"])))
-    res = _wand_one_group(pdf, k, idfs, avgdl)
-    return pd.DataFrame(
-        {"query_id": query_id, "doc_id": [d for d, _ in res],
-         "score": [s for _, s in res]}
-    )
+    return _cand_frame(query_id, _wand_one_group(pdf, k, idfs, avgdl))
 
 
 def _wand_run_filtered(key, blocks_pdf: pd.DataFrame, allowed_pdf: pd.DataFrame) -> pd.DataFrame:
@@ -316,21 +347,13 @@ def _wand_run_filtered(key, blocks_pdf: pd.DataFrame, allowed_pdf: pd.DataFrame)
     k/idf/avgdl ride the blocks side's joined query_terms columns)."""
     query_id = key[0]
     if len(blocks_pdf) == 0 or len(allowed_pdf) == 0:
-        return pd.DataFrame(
-            {
-                "query_id": pd.Series(dtype="object"),
-                "doc_id": pd.Series(dtype="int64"),
-                "score": pd.Series(dtype="float64"),
-            }
-        )  # no postings here, or nothing admissible
+        return _cand_frame(query_id, [])  # no postings here, or nothing admissible
     k = int(blocks_pdf["k"].iloc[0])
     avgdl = float(blocks_pdf["avgdl"].iloc[0])
     idfs = dict(zip(blocks_pdf["term"], (float(x) for x in blocks_pdf["idf"])))
     allowed = np.asarray(allowed_pdf["allowed"].iat[0], dtype=np.int64)
-    res = _wand_one_group(blocks_pdf, k, idfs, avgdl, allowed=allowed)
-    return pd.DataFrame(
-        {"query_id": query_id, "doc_id": [d for d, _ in res],
-         "score": [s for _, s in res]}
+    return _cand_frame(
+        query_id, _wand_one_group(blocks_pdf, k, idfs, avgdl, allowed=allowed)
     )
 
 
@@ -340,11 +363,7 @@ def _and_run_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
     n_terms = int(pdf["n_terms"].iloc[0])
     avgdl = float(pdf["avgdl"].iloc[0])
     idfs = dict(zip(pdf["term"], (float(x) for x in pdf["idf"])))
-    res = _and_one_group(pdf, idfs, avgdl, n_terms)
-    return pd.DataFrame(
-        {"query_id": query_id, "doc_id": [d for d, _ in res],
-         "score": [s for _, s in res]}
-    )
+    return _cand_frame(query_id, _and_one_group(pdf, idfs, avgdl, n_terms))
 
 
 def and_topk(
@@ -370,15 +389,7 @@ def and_topk(
     ``stats_row``/``idfs``: see :func:`wand_topk` — shared batch
     precompute from the boolean router."""
     all_terms = sorted({t for _, ts, _ in queries for t in ts})
-    if stats_row is None and idfs is None:
-        stats_row, idfs = stats_and_idfs(dictionary, stats, all_terms)
-    elif stats_row is None:
-        stats_row = stats.collect()[0]
-        idfs = {t: idfs[t] for t in all_terms if t in idfs}
-    elif idfs is None:
-        idfs = query_idfs(dictionary, stats_row, all_terms)
-    else:
-        idfs = {t: idfs[t] for t in all_terms if t in idfs}
+    stats_row, idfs = stats_and_idfs(dictionary, stats, all_terms, stats_row, idfs)
     avgdl = float(stats_row["avgdl"])
     queries = [q for q in queries if all(t in idfs for t in q[1])]
     if not queries or not idfs:
@@ -399,26 +410,9 @@ def and_topk(
     query_terms = values_df(
         spark, qrows, ["query_id", "term", "idf", "n_terms", "avgdl"]
     )
-    # pruned scan + broadcast join + column prune (term_hash/n_docs/cf
-    # never reach the runner) + the pinned grouping repartition as ONE
-    # parametrized statement — one plan analysis instead of four, and
-    # the REPARTITION hint is the same AQE-honored REPARTITION_BY_NUM
-    # shape _pin_groups produced (see that docstring for why the
-    # compute-heavy Python stage must not be byte-coalesced)
-    n_shuffle = shuffle_parallelism(spark)
-    from spcht_spark.index.query import sql_esc
-
-    pinned = spark.sql(
-        f"SELECT /*+ REPARTITION({n_shuffle}, query_id, shard), BROADCAST(q) */ "
-        "term, shard, block_seq, first_doc, last_doc, docs_bin, tfs_bin, "
-        "dls_bin, max_part, query_id, idf, n_terms, avgdl "
-        "FROM {blocks} AS p JOIN {qt} AS q USING (term) "
-        f"WHERE term IN ({sql_esc(sql_in(sorted(idfs)))})",
-        blocks=blocks,
-        qt=query_terms,
-    )
     cand = apply_grouped_cached(
-        pinned, ["query_id", "shard"], _and_run_group, _CAND_SCHEMA, "and_run",
+        _pinned_scan(spark, blocks, query_terms, idfs, "n_terms"),
+        ["query_id", "shard"], _and_run_group, _CAND_SCHEMA,
     )
     if doc_filter is not None:
         cand = cand.join(doc_filter.select("doc_id"), "doc_id", "semi")
@@ -460,20 +454,12 @@ def wand_topk(
     (see _wand_one_group) and rank-identity-tested in tests/test_wand.
 
     ``stats_row``/``idfs``: batch callers (boolean_topk's router) pass
-    the already-collected corpus stats and a term→idf map covering this
-    batch's terms, so the routed sub-engines don't each re-run the
-    stats/dictionary driver jobs — at page-of-10 scale those serial
-    collects, not the scoring, dominate the wall clock."""
+    both — the already-collected corpus stats and a term→idf map
+    covering this batch's terms — or neither, so the routed sub-engines
+    don't each re-run the stats/dictionary driver job (see
+    :func:`~spcht_spark.index.query.stats_and_idfs`)."""
     all_terms = sorted({t for _, ts, _ in queries for t in ts})
-    if stats_row is None and idfs is None:
-        stats_row, idfs = stats_and_idfs(dictionary, stats, all_terms)
-    elif stats_row is None:
-        stats_row = stats.collect()[0]
-        idfs = {t: idfs[t] for t in all_terms if t in idfs}
-    elif idfs is None:
-        idfs = query_idfs(dictionary, stats_row, all_terms)
-    else:
-        idfs = {t: idfs[t] for t in all_terms if t in idfs}
+    stats_row, idfs = stats_and_idfs(dictionary, stats, all_terms, stats_row, idfs)
     avgdl = float(stats_row["avgdl"])
     if not idfs:
         return spark.createDataFrame([], schema=TOPK_SCHEMA)
@@ -505,14 +491,10 @@ def wand_topk(
             key: tuple[str, int], pdf: pd.DataFrame
         ) -> pd.DataFrame:
             query_id = key[0]
-            res = _wand_one_group(
+            return _cand_frame(query_id, _wand_one_group(
                 pdf, ks[query_id], idfs, avgdl,
                 theta0=theta0s.get(query_id, -math.inf),
-            )
-            return pd.DataFrame(
-                {"query_id": query_id, "doc_id": [d for d, _ in res],
-                 "score": [s for _, s in res]}
-            )
+            ))
 
         return run
 
@@ -535,7 +517,6 @@ def wand_topk(
         cand = apply_cogrouped_cached(
             make_hit().drop("term_hash", "n_docs", "cf"), ga,
             ["query_id", "shard"], _wand_run_filtered, _CAND_SCHEMA,
-            "wand_run_filtered",
         )
         return topk(cand, ks, n_docs=int(stats_row["n_docs"]))
 
@@ -575,26 +556,9 @@ def wand_topk(
                 and int(probe["n_blocks"]) >= _CASCADE_MIN_BLOCKS
             )
     if not theta_cascade:
-        # pruned scan + broadcast join + column prune + the pinned
-        # grouping repartition as ONE parametrized statement (one plan
-        # analysis instead of four; see and_topk — the REPARTITION hint
-        # is the AQE-honored REPARTITION_BY_NUM shape _pin_groups used)
-        from spcht_spark.index.query import sql_esc
-
-        n_shuffle = shuffle_parallelism(spark)
-        pinned = spark.sql(
-            f"SELECT /*+ REPARTITION({n_shuffle}, query_id, shard), "
-            "BROADCAST(q) */ "
-            "term, shard, block_seq, first_doc, last_doc, docs_bin, "
-            "tfs_bin, dls_bin, max_part, query_id, idf, k, avgdl "
-            "FROM {blocks} AS p JOIN {qt} AS q USING (term) "
-            f"WHERE term IN ({sql_esc(sql_in(sorted(idfs)))})",
-            blocks=blocks,
-            qt=query_terms,
-        )
         cand = apply_grouped_cached(
-            pinned, ["query_id", "shard"], _wand_run_group, _CAND_SCHEMA,
-            "wand_run",
+            _pinned_scan(spark, blocks, query_terms, idfs, "k"),
+            ["query_id", "shard"], _wand_run_group, _CAND_SCHEMA,
         )
         return topk(cand, ks, n_docs=int(stats_row["n_docs"]))
 
@@ -621,7 +585,7 @@ def wand_topk(
             hit.join(F.broadcast(seeds), ["query_id", "shard"])
             .drop("term_hash", "n_docs", "cf")
         ),
-        ["query_id", "shard"], _wand_run_group, _CAND_SCHEMA, "wand_run",
+        ["query_id", "shard"], _wand_run_group, _CAND_SCHEMA,
     ).localCheckpoint()  # collected once for θ, reused in the union
     theta0s: dict[str, float] = {}
     for r in seed_cand.groupBy("query_id").agg(

@@ -44,14 +44,16 @@ def term_score(tf: int, dl: int, avgdl: float, idf_val: float) -> float:
 
 
 class Bm25Oracle:
-    """Exact scorer over a pandas corpus (doc_id, content)."""
+    """Exact scorer over a pandas corpus (doc_id, content). ``tokenize``
+    must split content the way the index under test did (default: the
+    ``arrow`` code-token rule)."""
 
-    def __init__(self, corpus: pd.DataFrame):
+    def __init__(self, corpus: pd.DataFrame, tokenize=tokenize_py):
         self.tf: dict[int, Counter] = {}
         self.dl: dict[int, int] = {}
         self.df: Counter = Counter()
         for doc_id, content in zip(corpus["doc_id"], corpus["content"]):
-            c = Counter(tokenize_py(content))
+            c = Counter(tokenize(content))
             self.tf[int(doc_id)] = c
             self.dl[int(doc_id)] = sum(c.values())
             self.df.update(c.keys())

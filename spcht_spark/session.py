@@ -27,6 +27,23 @@ def shuffle_parallelism(spark: SparkSession) -> int:
         return int(spark.sparkContext.defaultParallelism)
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half of the host's MemTotal as a ``spark.driver.memory`` value
+    (whole GiB, at least 1g). In local mode the driver heap is all the
+    executor memory there is; the other half stays with the Python
+    workers and the OS. Where ``meminfo`` cannot be read (no procfs),
+    Spark's own default, 1g."""
+    try:
+        with open(meminfo) as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    kib = int(line.split()[1])
+                    return f"{max(1, kib // 2 // (1 << 20))}g"
+    except OSError:
+        pass
+    return "1g"
+
+
 def get_spark(
     app_name: str = "spcht_spark",
     cores: int | None = None,
@@ -78,7 +95,10 @@ def get_spark(
         # local mode: driver heap IS executor memory; undersizing it
         # turns cached/checkpointed intermediates into GC storms (a 24g
         # heap made a 48k-doc build 3x slower at 8 cores than at 2)
-        .config("spark.driver.memory", os.environ.get("SPCHT_SPARK_DRIVER_MEM", "64g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPCHT_SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # 2048, not the 10000 default-ish value used previously: large

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from collections import Counter, defaultdict
 
+import pytest
 from pyspark.sql import functions as F
 
 from spcht_spark.index.facets import facet_counts, json_subfacets
@@ -277,3 +278,19 @@ def test_range_facets_hardend_and_others(spark, small_corpus, small_index):
     with _pytest.raises(ValueError):
         range_facets(spark, small_index.blocks, [("q", ["return"])],
                      store, "n_lines", 10.0, 5.0, 10.0)
+
+
+def test_range_facets_float_gap_has_no_drift(spark, small_corpus, small_index):
+    """Bucket i starts at start + i·gap: a 0.1 gap over [0, 1) gives
+    exactly 10 buckets (accumulating the gap gave an 11th, keyed
+    0.9999999999999999)."""
+    from spcht_spark.index.facets import range_facets
+
+    store = small_corpus.select("doc_id", (F.col("doc_id") % 10 / 10.0).alias("v"))
+    rows = range_facets(
+        spark, small_index.blocks, [("q", ["return"])], store, "v",
+        start=0.0, end=1.0, gap=0.1,
+    ).collect()
+    buckets = sorted({r["bucket"] for r in rows}, key=float)
+    assert len(buckets) == 10
+    assert buckets[0] == "0" and float(buckets[-1]) == pytest.approx(0.9)

@@ -326,3 +326,12 @@ def test_realtime_get_order_and_absent(spark, small_corpus):
     ).collect()
     assert [r["doc_id"] for r in out] == [5, 2, 11]
     assert out[0].asDict().keys() == {"doc_id", "repo"}
+
+
+def test_realtime_get_duplicate_ids(spark, small_corpus):
+    """Repeated ids return each doc once, at its first request position
+    (create_map would reject the duplicate keys)."""
+    from spcht_spark.index.search import realtime_get
+
+    out = realtime_get(small_corpus, [3, 1, 3]).collect()
+    assert [r["doc_id"] for r in out] == [3, 1]

@@ -1,8 +1,9 @@
-"""Tooling checks: the shuffle-parallelism helper, and the private
-pyspark calls the memoized pandas-UDF paths rely on.
+"""Tooling checks: the shuffle-parallelism and driver-memory helpers,
+and the private pyspark calls the memoized pandas-UDF paths rely on.
 
-:func:`~spcht_spark.index.query.decode_blocks` and
-:func:`~spcht_spark.index.query.apply_grouped_cached` build their pandas
+:func:`~spcht_spark.index.query.decode_blocks`,
+:func:`~spcht_spark.index.query.apply_grouped_cached` and
+:func:`~spcht_spark.index.query.apply_cogrouped_cached` build their pandas
 UDF once per session and then call the same JVM entry points pyspark's
 own mixins call (``_jdf.mapInPandas(col, bool, profile)``,
 ``_build_java_profile`` and ``_jgd.flatMapGroupsInPandas``). Those are
@@ -16,8 +17,10 @@ import inspect
 from types import SimpleNamespace
 
 import pyspark
+import pytest
 
-from spcht_spark.session import shuffle_parallelism
+from spcht_spark.index import query, wand
+from spcht_spark.session import default_driver_memory, shuffle_parallelism
 
 PINNED = "4.1.2"
 
@@ -92,3 +95,65 @@ def test_mixins_still_make_the_mirrored_calls():
     assert "self._jgd.flatMapGroupsInPandas(udf_column._jc)" in src, _drift(
         "applyInPandas no longer calls _jgd.flatMapGroupsInPandas(col)"
     )
+
+
+def test_default_driver_memory_is_half_of_memtotal(tmp_path):
+    meminfo = tmp_path / "meminfo"
+    meminfo.write_text("MemTotal:       16084412 kB\nMemFree:  1 kB\n")
+    assert default_driver_memory(str(meminfo)) == "7g"  # 15.3 GiB / 2
+    meminfo.write_text("MemTotal:       134217728 kB\n")
+    assert default_driver_memory(str(meminfo)) == "64g"
+    meminfo.write_text("MemTotal:       1048576 kB\n")
+    assert default_driver_memory(str(meminfo)) == "1g"  # never 0g
+    assert default_driver_memory(str(tmp_path / "absent")) == "1g"
+
+
+def test_appliers_reuse_one_registered_udf(spark, small_index):
+    """Each applier registers its UDF once per session: a second call
+    adds no memo entry and reuses the same UDF object. The grouped and
+    cogrouped appliers are driven through the AND and filtered-WAND
+    paths that use them."""
+    idx = small_index
+    q = [("q", ["return", "if"], 10)]
+    allowed = spark.range(0, 400, 3).withColumnRenamed("id", "doc_id")
+    calls = [
+        (query._decode_batches, lambda: query.decode_blocks(idx.blocks)),
+        (wand._and_run_group, lambda: wand.and_topk(
+            spark, idx.blocks, idx.dictionary, idx.stats, q)),
+        (wand._wand_run_filtered, lambda: wand.wand_topk(
+            spark, idx.blocks, idx.dictionary, idx.stats, q,
+            doc_filter=allowed, shard_span=64)),
+    ]
+    app_id = spark.sparkContext.applicationId
+    for func, call in calls:
+        call()
+        key = (app_id, func.__module__, func.__qualname__)
+        udf = query._UDF_MEMO[key]
+        size = len(query._UDF_MEMO)
+        out = call()
+        assert len(query._UDF_MEMO) == size, func.__qualname__
+        assert query._UDF_MEMO[key] is udf, func.__qualname__
+        assert out.count() > 0
+
+
+@pytest.mark.parametrize(
+    "runner, make",
+    [
+        ("_decode_batches", lambda s, idx, q: query.exact_topk(
+            s, idx.blocks, idx.doclens, idx.dictionary, idx.stats, q)),
+        ("_wand_run_group", lambda s, idx, q: wand.wand_topk(
+            s, idx.blocks, idx.dictionary, idx.stats, q)),
+        ("_wand_run_filtered", lambda s, idx, q: wand.wand_topk(
+            s, idx.blocks, idx.dictionary, idx.stats, q,
+            doc_filter=s.range(0, 400, 3).withColumnRenamed("id", "doc_id"),
+            shard_span=64)),
+        ("_and_run_group", lambda s, idx, q: wand.and_topk(
+            s, idx.blocks, idx.dictionary, idx.stats, q)),
+    ],
+)
+def test_analyzed_plans_name_the_runner(spark, small_index, runner, make):
+    """Route detection reads the runner's name from the analyzed plan
+    (``<name>(`` — the memoized UDF keeps the function's name)."""
+    df = make(spark, small_index, [("q", ["return", "if"], 10)])
+    plan = df._jdf.queryExecution().analyzed().toString()
+    assert f"{runner}(" in plan
