@@ -582,6 +582,16 @@ def ast_predicate(ast: Ast, terms_col: Column) -> Column:
     kind = ast[0]
     if kind == "term":
         return F.array_contains(terms_col, ast[1])
+    if kind == "fuzzy":
+        # per-doc evaluation (the percolator) matches against the doc's
+        # own terms: no dictionary, so no maxExpansions cap
+        _, base, dist = ast
+        return F.exists(terms_col, lambda t: F.levenshtein(t, F.lit(base)) <= dist)
+    if kind == "wild":
+        from spcht_spark.index.prefix import wildcard_regex
+
+        rx = F.lit(wildcard_regex(ast[1]))
+        return F.exists(terms_col, lambda t: F.regexp_like(t, rx))
     if kind == "eq":
         return F.coalesce(F.col(ast[1]).cast("string") == ast[2], F.lit(False))
     if kind == "range":

@@ -10,7 +10,8 @@ Stages (each a checkpointable parquet table, see spcht_spark.plans):
   dictionary  (term, term_hash, df, cf)— groupBy(term)         [shuffle on term]
   stats       (n_docs, avgdl, total_tokens) — global agg
   blocks      (term, term_hash, shard, block_seq, first_doc, last_doc,
-               n_docs, docs_bin, tfs_bin, dls_bin, max_part)
+               n_docs, docs_bin, tfs_bin, dls_bin, max_part, cf
+               [, pos_bin on the positional layout])
 
 Skew strategy — doc-range sharding. Zipfian code tokens ('{', 'return',
 …) hold a huge share of all postings; a plain groupBy(term) would give
@@ -74,6 +75,13 @@ BLOCKS_SCHEMA = T.StructType(
         # sees each token once; guide §2.4 "remove shuffles outright")
         T.StructField("cf", T.LongType(), False),
     ]
+)
+
+# The positional layout: BLOCKS_SCHEMA plus per-block position bytes —
+# per posting, the term's positions in the doc, delta-gapped with the
+# chain reset per posting, varbyte-encoded, concatenated in doc order.
+POS_BLOCKS_SCHEMA = T.StructType(
+    BLOCKS_SCHEMA.fields + [T.StructField("pos_bin", T.BinaryType(), False)]
 )
 
 
@@ -162,19 +170,25 @@ def build_blocks(
     tokens: DataFrame,
     avgdl: float,
     shard_span: int = DEFAULT_SHARD_SPAN,
-    block_size: int = BLOCK_SIZE,
 ) -> DataFrame:
     """Compressed posting blocks keyed by (term, doc-range shard).
 
     ONE wide shuffle on (term, shard) and nothing else: tokens carry dl
     from the tokenize pass, so the former doclens equi-join (the build's
-    second-largest exchange at scale) no longer exists."""
+    second-largest exchange at scale) no longer exists.
+
+    Positional tokens (a per-posting ``pos_bin`` column, see
+    :func:`~spcht_spark.index.tokenize.tokens_positional`) ride the same
+    pass: each block's ``pos_bin`` is the concatenation of its
+    postings' position bytes, and the output gains that column
+    (:data:`POS_BLOCKS_SCHEMA`)."""
     with_dl = tokens.withColumn(
         "shard", (F.col("doc_id") / F.lit(shard_span)).cast("long")
     )
 
     k1, b = K1, B
-    bs = block_size
+    bs = BLOCK_SIZE
+    positional = "pos_bin" in tokens.columns
 
     def encode_rows(pdf: pd.DataFrame) -> pd.DataFrame:
         # One numpy pass over a run of COMPLETE (term, shard) groups,
@@ -214,7 +228,7 @@ def build_blocks(
         dls_bins = varbyte_encode_segments(dls.astype(np.uint64), blk_starts)
         seq = np.arange(len(blk_starts), dtype=np.int64)
         first_blk = np.concatenate(([0], np.cumsum(np.bincount(blk_group))))
-        return pd.DataFrame(
+        out = pd.DataFrame(
             {
                 "term": terms[blk_starts],
                 "term_hash": np.int64(0),
@@ -230,6 +244,14 @@ def build_blocks(
                 "cf": np.add.reduceat(tfs, blk_starts),
             }
         )
+        if positional:
+            # tf is each posting's implicit length prefix, so the block
+            # slice needs no extra framing
+            pbins = pdf["pos_bin"].to_numpy()
+            out["pos_bin"] = [
+                b"".join(pbins[s:e]) for s, e in zip(blk_starts, blk_ends)
+            ]
+        return out
 
     def encode_partition(batches):
         # Arrow hands a partition over as MANY small record batches
@@ -293,7 +315,10 @@ def build_blocks(
     blocks = (
         with_dl.repartition(n_shuffle, "term", "shard")
         .sortWithinPartitions("term", "shard", "doc_id")
-        .mapInPandas(encode_partition, schema=BLOCKS_SCHEMA)
+        .mapInPandas(
+            encode_partition,
+            schema=POS_BLOCKS_SCHEMA if positional else BLOCKS_SCHEMA,
+        )
     )
     # term_hash recomputed column-side (cheap, avoids carrying it through
     # the pandas group).

@@ -24,7 +24,13 @@ Spark-first shape — NO index, NO shuffle, NO per-row Python:
 
 Because evaluation is per-document, pure-negative queries (``NOT x``)
 are legal here (``require_positive=False``): percolation has the doc
-in hand and does not retrieve from postings.
+in hand and does not retrieve from postings. For the same reason fuzzy
+(``retrn~1``) and wildcard (``ret*``) clauses match against the doc's
+own terms instead of a dictionary expansion: ``base~d`` holds iff some
+term is within Levenshtein distance d of ``base`` (insert, delete,
+substitute; the JVM ``levenshtein`` the index's fuzzy expansion also
+uses, so a swap costs 2), a wildcard iff some term matches the whole
+pattern — with no ``max_expansions`` cap.
 
 At 10^12 docs/day this is exactly a streaming map: the same function
 applied inside ``foreachBatch`` (or directly on a streaming frame —

@@ -3,13 +3,21 @@
 Closes the round-2 VERDICT query-surface gap #4: the reference's
 upstream Solr answers phrase queries (``q`` passes through verbatim,
 /root/reference/Spcht/Core/WorkOrder.py:693), but the engine's default
-blocks carry no positions. This module is the OPT-IN positional layout:
+blocks carry no positions. The positional layout is OPT-IN and runs
+through the default code end to end:
 
-* blocks gain one ``pos_bin`` column — per posting, the term's
-  occurrence positions in the doc, delta-gapped with the chain reset per
-  posting, varbyte-encoded, concatenated in doc order and sliced at the
-  same 128-posting block boundaries as docs/tfs. ``tf`` is the implicit
-  length prefix, so decode needs no extra framing.
+* build: :func:`~spcht_spark.index.build.build_blocks` over positional
+  tokens — the same encode pass, plus one ``pos_bin`` lane per block
+  (per posting, the term's occurrence positions in the doc,
+  delta-gapped with the chain reset per posting, varbyte-encoded,
+  concatenated in doc order and sliced at the same 128-posting block
+  boundaries as docs/tfs; ``tf`` is the implicit length prefix, so
+  decode needs no extra framing). Minus ``pos_bin`` the blocks equal
+  the default layout's row for row.
+* query: the AND path's intersection
+  (:func:`spcht_spark.index.wand._and_one_group`) yields candidates,
+  their conjunctive scores and warm cursors; positions decode ONLY for
+  the surviving docs (``_TermCursor.positions``) and gate them.
 * the default (non-positional) layout is untouched — positions cost
   ~dl bytes/doc, and most queries never need them (Lucene makes the
   same positional/non-positional distinction per field).
@@ -21,12 +29,8 @@ contribution (idf·tf-part) — i.e. the conjunctive AND score gated by
 adjacency. Rank-identity vs a pure-Python content-scan oracle is pinned
 in tests/test_phrase.py.
 
-Scale shape mirrors the AND path (spcht_spark.index.wand._and_one_group):
-per-(query, doc-range shard) groups, candidate docs from the
-fewest-blocks driver term, other terms decode only blocks overlapping
-the shrinking candidate set, positions decoded ONLY for docs that
-survive the intersection. Docs are disjoint across shards → exact
-global merge.
+Scale shape is the AND path's: per-(query, doc-range shard) groups;
+docs are disjoint across shards → exact global merge.
 """
 
 from __future__ import annotations
@@ -35,22 +39,14 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from spcht_spark.index.build import (
-    BLOCKS_SCHEMA,
     DEFAULT_SHARD_SPAN,
     IndexTables,
+    build_blocks,
     build_doclens,
     build_stats,
     dictionary_from_blocks,
-)
-from spcht_spark.index.compress import (
-    BLOCK_SIZE,
-    delta_gaps_blocked,
-    segmented_positions,
-    varbyte_decode,
-    varbyte_encode_blocks,
 )
 from spcht_spark.index.query import (
     TOPK_SCHEMA,
@@ -60,76 +56,7 @@ from spcht_spark.index.query import (
     values_df,
 )
 from spcht_spark.index.tokenize import tokens_positional
-from spcht_spark.oracle import B, K1
-
-POS_BLOCKS_SCHEMA = T.StructType(
-    BLOCKS_SCHEMA.fields + [T.StructField("pos_bin", T.BinaryType(), False)]
-)
-
-_CAND_SCHEMA = T.StructType(
-    [
-        T.StructField("query_id", T.StringType(), False),
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("score", T.DoubleType(), False),
-    ]
-)
-
-
-def build_positional_blocks(
-    tokens: DataFrame,
-    avgdl: float,
-    shard_span: int = DEFAULT_SHARD_SPAN,
-    block_size: int = BLOCK_SIZE,
-) -> DataFrame:
-    """build_blocks + the pos_bin column (same single (term, shard)
-    shuffle; the per-posting position bytes ride along and are
-    re-concatenated per block slice)."""
-    k1, b = K1, B
-    bs = block_size
-    with_shard = tokens.withColumn(
-        "shard", (F.col("doc_id") / F.lit(shard_span)).cast("long")
-    )
-
-    def make_blocks(pdf: pd.DataFrame) -> pd.DataFrame:
-        term = pdf["term"].iat[0]
-        shard = int(pdf["shard"].iat[0])
-        order = np.argsort(pdf["doc_id"].to_numpy(np.int64), kind="stable")
-        docs = pdf["doc_id"].to_numpy(np.int64)[order]
-        tfs = pdf["tf"].to_numpy(np.int64)[order]
-        dls = pdf["dl"].to_numpy(np.int64)[order]
-        pbins = pdf["pos_bin"].to_numpy()[order]
-        parts = (tfs * (k1 + 1.0)) / (tfs + k1 * (1.0 - b + b * (dls / avgdl)))
-
-        n = len(docs)
-        starts = np.arange(0, n, bs)
-        ends = np.minimum(starts + bs, n)
-        docs_bins = varbyte_encode_blocks(delta_gaps_blocked(docs, bs), bs)
-        tfs_bins = varbyte_encode_blocks(tfs.astype(np.uint64), bs)
-        dls_bins = varbyte_encode_blocks(dls.astype(np.uint64), bs)
-        pos_bins = [b"".join(pbins[s:e]) for s, e in zip(starts, ends)]
-        max_parts = np.maximum.reduceat(parts, starts)
-        return pd.DataFrame(
-            {
-                "term": term,
-                "term_hash": 0,
-                "shard": shard,
-                "block_seq": np.arange(len(starts), dtype=np.int32),
-                "first_doc": docs[starts],
-                "last_doc": docs[ends - 1],
-                "n_docs": (ends - starts).astype(np.int32),
-                "docs_bin": docs_bins,
-                "tfs_bin": tfs_bins,
-                "dls_bin": dls_bins,
-                "max_part": max_parts,
-                "cf": np.add.reduceat(tfs, starts),
-                "pos_bin": pos_bins,
-            }
-        )
-
-    blocks = with_shard.groupBy("term", "shard").applyInPandas(
-        make_blocks, schema=POS_BLOCKS_SCHEMA
-    )
-    return blocks.withColumn("term_hash", F.xxhash64("term"))
+from spcht_spark.index.wand import _CAND_SCHEMA, _and_one_group, _cand_frame
 
 
 def build_positional_index(
@@ -139,8 +66,10 @@ def build_positional_index(
     shard_span: int = DEFAULT_SHARD_SPAN,
     analyzer: str | None = None,
 ) -> IndexTables:
-    """In-memory positional build (tokens → stats → positional blocks).
-    Dictionary/doclens are derived exactly as the default build."""
+    """In-memory positional build (tokens → stats → positional blocks):
+    :func:`~spcht_spark.index.build.build_blocks` over tokens that carry
+    ``pos_bin``. Dictionary/doclens are derived exactly as the default
+    build."""
     from spcht_spark.index.analyze import token_steps
     from spcht_spark.index.build import apply_analyzer
 
@@ -156,70 +85,14 @@ def build_positional_index(
     avgdl = float(stats.collect()[0]["avgdl"])
     # materialized once, as in build_index: the dictionary aggregates the
     # blocks instead of re-running the encode shuffle
-    blocks = build_positional_blocks(
+    blocks = build_blocks(
         tokens, avgdl, shard_span=shard_span
     ).localCheckpoint(eager=False)
     dictionary = dictionary_from_blocks(blocks)
     return IndexTables(
         tokens, doclens, dictionary, stats, blocks,
-        shard_span=shard_span, analyzer=analyzer,
+        shard_span=shard_span, analyzer=analyzer, tokenizer=mode,
     )
-
-
-class _PosCursor:
-    """Decoded-on-demand positional postings of one term in one shard."""
-
-    __slots__ = ("firsts", "lasts", "docs_bins", "tfs_bins", "dls_bins",
-                 "pos_bins", "cache")
-
-    def __init__(self, grp: pd.DataFrame):
-        grp = grp.sort_values("block_seq")
-        self.firsts = grp["first_doc"].to_numpy(np.int64)
-        self.lasts = grp["last_doc"].to_numpy(np.int64)
-        self.docs_bins = grp["docs_bin"].tolist()
-        self.tfs_bins = grp["tfs_bin"].tolist()
-        self.dls_bins = grp["dls_bin"].tolist()
-        self.pos_bins = grp["pos_bin"].tolist()
-        self.cache: dict[int, tuple] = {}
-
-    def n_blocks(self) -> int:
-        return len(self.firsts)
-
-    def decode(self, i: int):
-        """(docs, tfs, dls, positions, pos_offsets) of block i; positions
-        of posting j are positions[pos_offsets[j] : pos_offsets[j + 1]]."""
-        hit = self.cache.get(i)
-        if hit is not None:
-            return hit
-        gaps = varbyte_decode(self.docs_bins[i])
-        docs = np.cumsum(gaps, dtype=np.uint64).astype(np.int64)
-        tfs = varbyte_decode(self.tfs_bins[i]).astype(np.int64)
-        dls = varbyte_decode(self.dls_bins[i]).astype(np.int64)
-        pgaps = varbyte_decode(self.pos_bins[i])
-        positions = segmented_positions(pgaps, tfs)
-        pos_offsets = np.concatenate(([0], np.cumsum(tfs)))
-        out = (docs, tfs, dls, positions, pos_offsets)
-        self.cache[i] = out
-        return out
-
-    def gather(self, cand: np.ndarray):
-        """Decode blocks overlapping ``cand`` (sorted); returns stacked
-        (docs, tfs, dls, positions, pos_offsets) for those blocks."""
-        idxs = []
-        for i in range(len(self.firsts)):
-            lo = np.searchsorted(cand, self.firsts[i], side="left")
-            if lo < len(cand) and cand[lo] <= self.lasts[i]:
-                idxs.append(i)
-        if not idxs:
-            z = np.zeros(0, dtype=np.int64)
-            return z, z, z, z, np.zeros(1, dtype=np.int64)
-        parts = [self.decode(i) for i in idxs]
-        docs = np.concatenate([p[0] for p in parts])
-        tfs = np.concatenate([p[1] for p in parts])
-        dls = np.concatenate([p[2] for p in parts])
-        positions = np.concatenate([p[3] for p in parts])
-        pos_offsets = np.concatenate(([0], np.cumsum(tfs)))
-        return docs, tfs, dls, positions, pos_offsets
 
 
 def _slop_window_match(lists: list[np.ndarray], slop: int) -> bool:
@@ -250,81 +123,31 @@ def _phrase_one_group(
     """Docs of one shard matching the phrase, with conjunctive scores.
     ``slop`` is Lucene/Solr phrase slop (``"a b"~2``): terms must admit
     positions whose adjusted spread is ≤ slop (0 = exact adjacency)."""
-    uniq_terms = sorted(set(phrase))
-    cursors = {t: _PosCursor(g) for t, g in pdf.groupby("term")}
-    if any(t not in cursors for t in uniq_terms):
-        return []
+    cand, scores, cursors = _and_one_group(pdf, idfs, avgdl, len(set(phrase)))
 
-    # Pass 1 — conjunctive candidates, driven by the fewest-blocks term.
-    drive = min(uniq_terms, key=lambda t: cursors[t].n_blocks())
-    dc = cursors[drive]
-    cand = (
-        np.concatenate([dc.decode(i)[0] for i in range(dc.n_blocks())])
-        if dc.n_blocks()
-        else np.zeros(0, dtype=np.int64)
-    )
-    for t in uniq_terms:
-        if t == drive or not len(cand):
-            continue
-        docs = cursors[t].gather(cand)[0]
-        cand = cand[np.isin(cand, docs)]
-    if not len(cand):
-        return []
-
-    # Pass 2 — adjacency check over candidate docs only (gather hits the
-    # pass-1 cache), plus per-term (tf, dl) for scoring.
-    gathered = {t: cursors[t].gather(cand) for t in uniq_terms}
-    per_doc_pos: dict[str, dict[int, np.ndarray]] = {}
-    per_doc_tf: dict[str, dict[int, int]] = {}
-    doc_dl: dict[int, int] = {}
-    for t in uniq_terms:
-        docs, tfs, dls, positions, offs = gathered[t]
-        sel = np.searchsorted(docs, cand)
-        pos_map, tf_map = {}, {}
-        for ci, di in enumerate(sel):
-            d = int(cand[ci])
-            if di >= len(docs) or docs[di] != d:
-                continue  # can't happen post-intersection, kept defensive
-            pos_map[d] = positions[offs[di] : offs[di + 1]]
-            tf_map[d] = int(tfs[di])
-            doc_dl[d] = int(dls[di])
-        per_doc_pos[t] = pos_map
-        per_doc_tf[t] = tf_map
+    # Positions of the candidate docs only, from the blocks the
+    # intersection already decoded (doc ids hit the cursor cache).
+    doc_pos: dict[str, dict[int, np.ndarray]] = {}
+    for c in cursors:
+        pos_map = doc_pos[c.term] = {}
+        for i in c.overlapping(cand):
+            docs = c.decode(i)[0]
+            positions, offs = c.positions(i)
+            for j in np.flatnonzero(np.isin(docs, cand)).tolist():
+                pos_map[int(docs[j])] = positions[offs[j] : offs[j + 1]]
 
     out: list[tuple[int, float]] = []
-    for d in cand.tolist():
+    for d, score in zip(cand.tolist(), scores.tolist()):
+        # adjusted positions: raw − phrase offset (a match shares one)
+        lists = [doc_pos[t][d] - j for j, t in enumerate(phrase)]
         if slop == 0:
-            starts = per_doc_pos[phrase[0]].get(d)
-            if starts is None:
-                continue
-            ok = starts
-            for j, t in enumerate(phrase[1:], start=1):
-                nxt = per_doc_pos[t].get(d)
-                if nxt is None:
-                    ok = np.zeros(0, dtype=np.int64)
-                    break
-                ok = np.intersect1d(ok, nxt - j, assume_unique=True)
-                if not len(ok):
-                    break
+            ok = lists[0]
+            for adj in lists[1:]:
+                ok = np.intersect1d(ok, adj, assume_unique=True)
             if not len(ok):
                 continue
-        else:
-            lists = []
-            for j, t in enumerate(phrase):
-                ps = per_doc_pos[t].get(d)
-                if ps is None:
-                    lists = None
-                    break
-                lists.append(ps - j)  # adjusted positions
-            if lists is None or not _slop_window_match(lists, slop):
-                continue
-        dl = doc_dl[d]
-        score = 0.0
-        for t in uniq_terms:  # ascending-term summation (bit contract)
-            tf = per_doc_tf[t][d]
-            score += idfs[t] * (
-                (tf * (K1 + 1.0)) / (tf + K1 * (1.0 - B + B * (dl / avgdl)))
-            )
+        elif not _slop_window_match(lists, slop):
+            continue
         out.append((d, score))
     return out
 
@@ -381,13 +204,9 @@ def phrase_topk(
 
     def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         query_id = key[0]
-        res = _phrase_one_group(
+        return _cand_frame(query_id, _phrase_one_group(
             pdf, phrases[query_id], idfs, avgdl, slop=slops[query_id]
-        )
-        return pd.DataFrame(
-            {"query_id": query_id, "doc_id": [d for d, _ in res],
-             "score": [s for _, s in res]}
-        )
+        ))
 
     cand = hit.groupBy("query_id", "shard").applyInPandas(run, schema=_CAND_SCHEMA)
     return topk(cand, ks)

@@ -59,7 +59,7 @@ from spcht_spark.index.build import (
     build_stats,
     build_tokens,
 )
-from spcht_spark.index.compress import BLOCK_SIZE, varbyte_decode
+from spcht_spark.index.compress import varbyte_decode
 from spcht_spark.oracle import B, K1
 
 
@@ -137,7 +137,6 @@ def update_index(
     deleted: DataFrame | None = None,
     tokenizer: str = "arrow",
     shard_span: int = DEFAULT_SHARD_SPAN,
-    block_size: int = BLOCK_SIZE,
 ) -> IndexTables:
     """Merge a delta into ``idx``: ``changed`` (doc_id, content) upserts
     docs (new or re-written ids), ``deleted`` (doc_id) removes them.
@@ -228,9 +227,7 @@ def update_index(
         touched_tokens = old_group.select(*cols).unionByName(
             added_tokens.select(*cols)
         )
-    rebuilt = build_blocks(
-        touched_tokens, new_avgdl, shard_span=shard_span, block_size=block_size,
-    )
+    rebuilt = build_blocks(touched_tokens, new_avgdl, shard_span=shard_span)
     untouched = idx.blocks.join(touched_keys, ["term", "shard"], "anti")
     if new_avgdl != old_avgdl:
         untouched = refresh_max_part(untouched, new_avgdl)
@@ -325,7 +322,6 @@ def delete_by_query(
     attrs: DataFrame | None = None,
     tokenizer: str = "arrow",
     shard_span: int = DEFAULT_SHARD_SPAN,
-    block_size: int = BLOCK_SIZE,
 ) -> IndexTables:
     """Solr ``<delete><query>q</query></delete>`` — resolve the boolean
     ``q`` (full engine language: terms, AND/OR/NOT, ``field:value`` /
@@ -351,5 +347,5 @@ def delete_by_query(
     empty = spark.createDataFrame([], schema="doc_id long, content string")
     return update_index(
         spark, idx, empty, deleted=matched, tokenizer=tokenizer,
-        shard_span=shard_span, block_size=block_size,
+        shard_span=shard_span,
     )

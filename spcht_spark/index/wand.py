@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from spcht_spark.index.compress import BLOCK_SIZE as _BLOCK_SIZE
-from spcht_spark.index.compress import varbyte_decode
+from spcht_spark.index.compress import segmented_positions, varbyte_decode
 from spcht_spark.index.query import (
     TOPK_SCHEMA,
     apply_cogrouped_cached,
@@ -108,8 +108,11 @@ def _pinned_scan(
 
 
 class _TermCursor:
+    """Decoded-on-demand postings of one term in one (query, shard)
+    group, shared by WAND, AND and phrase (spcht_spark.index.phrase)."""
+
     __slots__ = ("term", "idf", "firsts", "lasts", "bounds", "docs_bins",
-                 "tfs_bins", "dls_bins", "pos", "cache", "_avgdl")
+                 "tfs_bins", "dls_bins", "pos_bins", "pos", "cache", "_avgdl")
 
     def __init__(self, term: str, idf: float, grp: pd.DataFrame, avgdl: float):
         grp = grp.sort_values("block_seq")
@@ -121,6 +124,8 @@ class _TermCursor:
         self.docs_bins = grp["docs_bin"].tolist()
         self.tfs_bins = grp["tfs_bin"].tolist()
         self.dls_bins = grp["dls_bin"].tolist()
+        # positional layout only; read by positions(), never by decode()
+        self.pos_bins = grp["pos_bin"].tolist() if "pos_bin" in grp else None
         self.pos = 0
         self.cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
         self._avgdl = avgdl
@@ -143,6 +148,32 @@ class _TermCursor:
         )
         self.cache[i] = (docs, scores)
         return docs, scores
+
+    def positions(self, i: int) -> tuple[np.ndarray, np.ndarray]:
+        """(positions, offsets) of block i on the positional layout:
+        posting j's positions are positions[offsets[j] : offsets[j + 1]].
+        Each posting's tf is the length prefix of its position list, so
+        the block's tfs frame its pos_bin."""
+        tfs = varbyte_decode(self.tfs_bins[i]).astype(np.int64)
+        positions = segmented_positions(varbyte_decode(self.pos_bins[i]), tfs)
+        return positions, np.concatenate(([0], np.cumsum(tfs)))
+
+    def overlapping(self, cand: np.ndarray) -> np.ndarray:
+        """Indices of the blocks whose [first_doc, last_doc] range holds
+        a doc of the sorted ``cand``; the others stay undecoded (the
+        skip)."""
+        lo = np.searchsorted(cand, self.firsts, side="left")
+        hit = lo < len(cand)
+        hit[hit] = cand[lo[hit]] <= self.lasts[hit]
+        return np.flatnonzero(hit)
+
+    def gather(self, cand: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """Decoded (docs, scores) of the blocks overlapping ``cand``."""
+        parts = [self.decode(i) for i in self.overlapping(cand)]
+        if not parts:
+            return np.array([], dtype=np.int64), np.array([], dtype=np.float64)
+        return (np.concatenate([d for d, _ in parts]),
+                np.concatenate([sc for _, sc in parts]))
 
 
 def _wand_one_group(
@@ -262,36 +293,26 @@ def _wand_one_group(
 
 def _and_one_group(
     pdf: pd.DataFrame, idfs: dict[str, float], avgdl: float, n_terms: int
-) -> list[tuple[int, float]]:
-    """Exact conjunctive (MUST) scoring of one (query, shard) group with
-    block skipping: docs are candidates only while present in EVERY
+) -> tuple[np.ndarray, np.ndarray, list[_TermCursor]]:
+    """Exact conjunctive (MUST) intersection of one (query, shard) group
+    with block skipping: docs are candidates only while present in EVERY
     term's postings, so the rarest term drives and other terms decode
     only blocks overlapping the shrinking candidate set. Doc-range
     sharding keeps a doc's postings for all terms in one shard, so
-    per-shard intersection is globally correct."""
+    per-shard intersection is globally correct.
+
+    Returns (candidate docs ascending, their AND scores, the
+    term-ordered cursors with every overlapping block already decoded).
+    The phrase path gates these candidates by position and keeps the
+    scores."""
     cursors = [
         _TermCursor(term, idfs[term], grp, avgdl)
         for term, grp in pdf.groupby("term")
         if term in idfs
     ]
-    if len(cursors) < n_terms:
-        return []  # a required term has no postings in this shard
+    if len(cursors) < n_terms:  # a required term has no postings here
+        return np.array([], dtype=np.int64), np.array([], dtype=np.float64), []
     cursors.sort(key=lambda c: c.term)  # summation order: term asc
-
-    def overlapping(c: _TermCursor, cand: np.ndarray):
-        """Decoded (docs, scores) of blocks overlapping the candidate
-        set; non-overlapping blocks stay undecoded (the skip)."""
-        doc_arrays, score_arrays = [], []
-        for i in range(len(c.firsts)):
-            lo = np.searchsorted(cand, c.firsts[i], side="left")
-            if lo >= len(cand) or cand[lo] > c.lasts[i]:
-                continue
-            docs, scores = c.decode(i)
-            doc_arrays.append(docs)
-            score_arrays.append(scores)
-        if not doc_arrays:
-            return np.array([], dtype=np.int64), np.array([], dtype=np.float64)
-        return np.concatenate(doc_arrays), np.concatenate(score_arrays)
 
     # Pass 1 — intersect: drive with the fewest-blocks term, shrink the
     # candidate set through every other term with block skipping.
@@ -305,20 +326,20 @@ def _and_one_group(
     for ci, c in enumerate(cursors):
         if ci == drive or not len(cand):
             continue
-        docs, _ = overlapping(c, cand)
+        docs, _ = c.gather(cand)
         cand = cand[np.isin(cand, docs)]
     if not len(cand):
-        return []
+        return cand, np.array([], dtype=np.float64), cursors
 
     # Pass 2 — sum contributions in ascending-term order (the oracle's
     # bit-identity contract); decodes hit the pass-1 cache.
     total = np.zeros(len(cand), dtype=np.float64)
     for c in cursors:
-        docs, scores = overlapping(c, cand)
+        docs, scores = c.gather(cand)
         mask = np.isin(docs, cand)
         # docs[mask] is doc-ordered and equals cand element-wise
         total = total + scores[mask]
-    return list(zip(cand.tolist(), total.tolist()))
+    return cand, total, cursors
 
 
 def _cand_frame(query_id: str, res: list[tuple[int, float]]) -> pd.DataFrame:
@@ -363,7 +384,8 @@ def _and_run_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
     n_terms = int(pdf["n_terms"].iloc[0])
     avgdl = float(pdf["avgdl"].iloc[0])
     idfs = dict(zip(pdf["term"], (float(x) for x in pdf["idf"])))
-    return _cand_frame(query_id, _and_one_group(pdf, idfs, avgdl, n_terms))
+    cand, total, _ = _and_one_group(pdf, idfs, avgdl, n_terms)
+    return _cand_frame(query_id, list(zip(cand.tolist(), total.tolist())))
 
 
 def and_topk(

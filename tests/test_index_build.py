@@ -7,10 +7,10 @@ from pyspark.sql import functions as F
 
 from spcht_spark.index.build import build_index
 from spcht_spark.index.compress import (
-    decode_postings_block,
-    encode_postings_block,
+    segmented_positions,
     varbyte_decode,
     varbyte_encode,
+    varbyte_encode_segments,
 )
 from spcht_spark.index.query import decode_blocks
 from spcht_spark.index.tokenize import tokens
@@ -29,12 +29,23 @@ def test_varbyte_roundtrip():
 
 
 def test_postings_block_roundtrip():
+    """The build's encode (delta gaps reset per segment, one varbyte
+    pass sliced by varbyte_encode_segments) against the decode the
+    query and phrase paths run (varbyte_decode + segmented_positions),
+    as one block and split into two."""
     docs = np.array([3, 17, 18, 900, 12345], dtype=np.int64)
     tfs = np.array([1, 5, 2, 1, 9], dtype=np.int64)
-    db, tb = encode_postings_block(docs, tfs)
-    d2, t2 = decode_postings_block(db, tb)
-    assert np.array_equal(d2.astype(np.int64), docs)
-    assert np.array_equal(t2.astype(np.int64), tfs)
+    for seg_starts in (np.array([0]), np.array([0, 2])):
+        seg_lens = np.diff(np.append(seg_starts, len(docs)))
+        gaps = np.diff(docs.astype(np.uint64), prepend=np.uint64(0))
+        gaps[seg_starts] = docs[seg_starts]  # delta chain resets per segment
+        db = varbyte_encode_segments(gaps, seg_starts)
+        tb = varbyte_encode_segments(tfs.astype(np.uint64), seg_starts)
+        assert len(db) == len(tb) == len(seg_starts)
+        d2 = segmented_positions(varbyte_decode(b"".join(db)), seg_lens)
+        t2 = np.concatenate([varbyte_decode(b) for b in tb])
+        assert np.array_equal(d2, docs)
+        assert np.array_equal(t2.astype(np.int64), tfs)
 
 
 def test_tokenizers_agree(spark, small_corpus):

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from spcht_spark.index.build import build_index
+from spcht_spark.oracle import tokenize_py
 
 SPAN = 64
 
@@ -183,3 +184,63 @@ def test_percolate_analyzer_folds_both_sides(spark):
     }
     assert (1, "a") in got and (1, "b") in got
     assert all(q != "c" for _, q in got)  # stopword clause matches nothing
+
+
+def _levenshtein(a: str, b: str) -> int:
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1]
+
+
+def test_percolate_fuzzy_and_wildcard_match_doc_terms(spark, small_corpus, small_corpus_pd):
+    """Fuzzy (``retrn~1``) and wildcard (``ret*``) clauses match
+    against the doc's own terms: a doc satisfies ``base~d`` iff one of
+    its terms is within edit distance d of base, and a wildcard iff one
+    of its terms matches the whole pattern. Reference: the doc's
+    tokenize_py term set (equal to the percolator's whitespace split on
+    this corpus, asserted below)."""
+    from fnmatch import fnmatchcase
+
+    from spcht_spark.index.boolean import parse_query
+    from spcht_spark.index.percolate import percolate
+
+    qs = [
+        ("f_ret", "retrn~1"),
+        ("f_swap", "retrun~2"),  # plain Levenshtein: a swap costs 2
+        ("f_idx", "idx99~1"),
+        ("w_ret", "ret*"),
+        ("w_buf", "buf?9"),
+        ("w_infix", "h*r3?"),
+        ("mix", "(retrn~1 OR buf?9) AND NOT h*r3?"),
+        ("w_suffix", "*n39"),
+        ("neg_fuzzy", "NOT tokn39~1"),
+    ]
+
+    def ref(ast, terms) -> bool:
+        kind = ast[0]
+        if kind == "term":
+            return ast[1] in terms
+        if kind == "fuzzy":
+            return any(_levenshtein(t, ast[1]) <= ast[2] for t in terms)
+        if kind == "wild":
+            return any(fnmatchcase(t, ast[1]) for t in terms)
+        if kind == "not":
+            return not ref(ast[1], terms)
+        return (all if kind == "and" else any)(ref(a, terms) for a in ast[1])
+
+    sub = small_corpus_pd[small_corpus_pd["doc_id"] < 120]
+    parsed = [(qid, parse_query(q, require_positive=False)) for qid, q in qs]
+    want = set()
+    for d, content in zip(sub["doc_id"], sub["content"]):
+        terms = set(tokenize_py(content))
+        assert terms == set(content.split()), d
+        want |= {(int(d), qid) for qid, ast in parsed if ref(ast, terms)}
+    docs = small_corpus.filter(F.col("doc_id") < 120).select("doc_id", "content")
+    got = {(r["doc_id"], r["query_id"]) for r in percolate(docs, qs).collect()}
+    assert got == want
+    for qid, _ in qs:  # every clause shape matches some docs, not all
+        assert 0 < sum(q == qid for _, q in want) < len(sub), qid

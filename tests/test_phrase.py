@@ -75,6 +75,51 @@ def test_positional_tokens_roundtrip(spark, small_corpus, small_corpus_pd):
         assert int(r["dl"]) == len(toks)
 
 
+@pytest.mark.parametrize("span", [64, 1024])
+def test_positional_blocks_are_default_blocks_plus_pos_bin(
+    spark, small_corpus, small_corpus_pd, span
+):
+    """Minus ``pos_bin`` the positional blocks equal build_blocks over
+    the default tokens row for row, ``max_part`` bits included, and
+    each block's ``pos_bin`` decodes to the oracle positions of its
+    postings. Span 64 splits every term over many shards; span 1024
+    keeps the 400 docs in one shard, so hot terms span several blocks."""
+    from spcht_spark.index.build import build_blocks, build_tokens
+    from spcht_spark.index.compress import segmented_positions, varbyte_decode
+    from spcht_spark.index.phrase import build_positional_index
+
+    idx = build_positional_index(spark, small_corpus, mode="arrow", shard_span=span)
+    assert idx.tokenizer == "arrow"
+    avgdl = float(idx.stats.collect()[0]["avgdl"])
+    keys = ["term", "shard", "block_seq"]
+    pos = idx.blocks.toPandas().sort_values(keys).reset_index(drop=True)
+    ref = (
+        build_blocks(build_tokens(small_corpus), avgdl, shard_span=span)
+        .toPandas().sort_values(keys).reset_index(drop=True)
+    )
+    assert pos.columns.tolist() == ref.columns.tolist() + ["pos_bin"]
+    assert pos.drop(columns="pos_bin").equals(ref)
+    assert np.array_equal(
+        pos["max_part"].to_numpy().view(np.int64),
+        ref["max_part"].to_numpy().view(np.int64),
+    )
+    if span == 1024:
+        assert (pos["block_seq"] > 0).any()
+
+    want = {}
+    for d, content in zip(small_corpus_pd["doc_id"], small_corpus_pd["content"]):
+        for i, t in enumerate(tokenize_py(content)):
+            want.setdefault((t, int(d)), []).append(i)
+    for r in pos.itertuples():
+        docs = np.cumsum(varbyte_decode(r.docs_bin)).astype(np.int64)
+        tfs = varbyte_decode(r.tfs_bin).astype(np.int64)
+        positions = segmented_positions(varbyte_decode(r.pos_bin), tfs)
+        offs = np.concatenate(([0], np.cumsum(tfs)))
+        for j, d in enumerate(docs.tolist()):
+            got = positions[offs[j] : offs[j + 1]].tolist()
+            assert got == want[(r.term, d)], (r.term, d)
+
+
 def test_phrase_matches_oracle(spark, pos_index, small_corpus_pd):
     from spcht_spark.index.phrase import phrase_topk
 
