@@ -1866,7 +1866,7 @@ WITH {_TOK_SQL},
   m AS (SELECT DISTINCT q.query_id, tf.doc_id FROM q JOIN tf USING (term)),
   j AS (SELECT m.query_id, d.source::VARCHAR AS v
         FROM m LEFT JOIN documents d USING (doc_id))
-SELECT query_id, count(*)::BIGINT AS n,
+SELECT query_id, count(v)::BIGINT AS n,
        min(v) AS min_v, max(v) AS max_v,
        sum(CASE WHEN v IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_missing,
        count(DISTINCT v)::BIGINT AS n_distinct

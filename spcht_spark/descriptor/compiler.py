@@ -742,9 +742,6 @@ def saveas_table(descriptor: dict, df: DataFrame, dedup: bool = False) -> DataFr
 
 # ----------------------------------------- static analysis / validation
 
-_NODE_STR_KEYS = ("field", "source", "predicate")
-
-
 def descriptor_fields(descriptor: dict) -> list[str]:
     """P2 projection pushdown (get_node_fields, SpchtCore.py:1231-1255 +
     recursion :1283-1327): the exact set of input fields the descriptor

@@ -294,10 +294,6 @@ def simhash(
     return summed.select("id", acc.alias("simhash"))
 
 
-def hamming64(a: Column, b: Column) -> Column:
-    return F.bit_count(a.bitwiseXOR(b))
-
-
 def near_dup_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     """(id, component) via min-label propagation WITH star rewiring —
     pure joins, no driver-side union-find.

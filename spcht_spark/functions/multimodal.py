@@ -18,7 +18,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType(
@@ -75,14 +74,6 @@ def decode_and_featurize(media: DataFrame, dim: int = 16) -> DataFrame:
             )
 
     return media.mapInPandas(run, schema=FEATURES_SCHEMA)
-
-
-def real_decode(payload: bytes, media_type: str):
-    """The genuine decode hook — intentionally unimplemented here."""
-    raise NotImplementedError(
-        "media decoding requires image/audio libraries not present in this "
-        "container; production wires Pillow/ffmpeg into decode_and_featurize"
-    )
 
 
 def synth_media(spark, n: int = 64, seed: int = 5) -> DataFrame:

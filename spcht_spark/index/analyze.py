@@ -16,14 +16,17 @@ engine's chain is a comma-separated spec over three filters:
 * ``sstem`` — Harman's S-stemmer (the conservative plural stemmer:
   -ies→-y, -es→-e, -s→∅ with the classic exception suffixes). Chosen
   over Porter because it is exactly expressible in EVERY execution
-  substrate this engine runs in — Catalyst CASE/rlike, vectorized
-  pandas str ops, pure Python, and the DuckDB oracle — so one
-  definition stays provably identical across all four.
+  substrate this engine runs in — SQL CASE/LIKE, vectorized pandas str
+  ops and pure Python — so one definition stays provably identical
+  across all of them.
 
-Every filter has four twins (pure Python / Catalyst Column / pandas
-Series / DuckDB SQL) pinned equal in tests/test_analyze.py; build
-pipelines pick the substrate-matching twin, the query parser uses the
-Python one, the driver oracle the SQL one.
+The chain has three forms, pinned equal in tests/test_analyze.py:
+
+* pure Python (:func:`fold_token_py`) — the query parser;
+* pandas (:func:`fold_tokens_pd`) — the build's Arrow tokenizer batches;
+* SQL text (:func:`fold_token_sql`) — evaluated by Spark (the
+  percolator's ``transform(terms, t -> ...)``) and by the DuckDB
+  oracle alike.
 
 The default analyzer (``None``) is the identity: case-preserving, no
 removal — the right call for the north-rule source-code corpus where
@@ -33,8 +36,6 @@ removal — the right call for the north-rule source-code corpus where
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 # Common core of Lucene's classic English stop set (deterministic,
 # version-pinned here rather than imported).
@@ -97,28 +98,6 @@ def _sstem_py(t: str) -> str:
     return t
 
 
-def _sstem_col(c: Column) -> Column:
-    head3 = F.concat(F.substring(c, F.lit(1), F.length(c) - F.lit(3)), F.lit("y"))
-    head1 = F.substring(c, F.lit(1), F.length(c) - F.lit(1))
-    return (
-        F.when(
-            c.endswith("ies"),
-            F.when(c.endswith("eies") | c.endswith("aies"), c).otherwise(head3),
-        )
-        .when(
-            c.endswith("es"),
-            F.when(
-                c.endswith("aes") | c.endswith("ees") | c.endswith("oes"), c
-            ).otherwise(head1),
-        )
-        .when(
-            c.endswith("s"),
-            F.when(c.endswith("us") | c.endswith("ss"), c).otherwise(head1),
-        )
-        .otherwise(c)
-    )
-
-
 def _sstem_pd(s: pd.Series) -> pd.Series:
     suf_ies = s.str.endswith("ies")
     suf_es = s.str.endswith("es") & ~suf_ies
@@ -150,11 +129,11 @@ def _sstem_sql(expr: str) -> str:
     )
 
 
-# -------------------------------------------------------- the four twins
+# ---------------------------------------------------- the three forms
 
 def fold_token_py(term: str, spec: str | None) -> str | None:
-    """Pure-Python token filter chain: the query-parse twin (and the
-    reference for the other three). None = token removed (stopword)."""
+    """Pure-Python token filter chain: the query-parse form (and the
+    reference for the other two). None = token removed (stopword)."""
     for step in token_steps(spec):
         if step == "stop":
             if term in _STOPSET:
@@ -164,19 +143,8 @@ def fold_token_py(term: str, spec: str | None) -> str | None:
     return term
 
 
-def fold_tokens_col(c: Column, spec: str | None) -> Column:
-    """Catalyst twin over a ``term`` column: NULL for removed tokens
-    (callers filter isNotNull). Used by the percolator."""
-    for step in token_steps(spec):
-        if step == "stop":
-            c = F.when(c.isin(*STOPWORDS), F.lit(None)).otherwise(c)
-        elif step == "sstem":
-            c = F.when(c.isNull(), F.lit(None)).otherwise(_sstem_col(c))
-    return c
-
-
 def fold_tokens_pd(s: pd.Series, spec: str | None) -> pd.Series:
-    """pandas twin (vectorized str ops, no per-row Python): NaN for
+    """pandas form (vectorized str ops, no per-row Python): NaN for
     removed tokens. Used inside the Arrow tokenizer batches."""
     for step in token_steps(spec):
         if step == "stop":
@@ -189,7 +157,8 @@ def fold_tokens_pd(s: pd.Series, spec: str | None) -> pd.Series:
 
 
 def fold_token_sql(expr: str, spec: str | None) -> str:
-    """DuckDB twin: expression yielding the folded token or NULL."""
+    """SQL form, valid in Spark and DuckDB: expression yielding the
+    folded token or NULL."""
     out = expr
     for step in token_steps(spec):
         if step == "stop":

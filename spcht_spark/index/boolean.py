@@ -24,8 +24,9 @@ parses that surface and answers it from the posting blocks:
   doc inadmissible), one groupBy (query, doc) building the doc's
   term-set + its BM25 score over the POSITIVE terms (Lucene semantics:
   MUST/SHOULD clauses score, MUST_NOT never does), then the AST
-  evaluated as a pure Catalyst predicate over the term-set and the
-  shared salted top-k. No corpus scan, no per-row Python.
+  rendered as one Spark SQL predicate over the term-set
+  (:func:`ast_to_spark_sql`, the engine's only Spark form of an AST)
+  and the shared salted top-k. No corpus scan, no per-row Python.
 
 Pure-negative queries (any clause satisfiable by a doc containing NONE
 of the query terms, e.g. ``NOT x`` or ``a OR NOT b``) are rejected:
@@ -38,17 +39,23 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spcht_spark.index.query import (
+    SALT_MIN_DOCS,
+    bm25_part_sql,
     decode_blocks,
+    sql_double,
+    sql_esc,
+    sql_ident,
     sql_in,
+    sql_map,
+    sql_str,
     stats_and_idfs,
     topk,
     values_df,
 )
-from spcht_spark.oracle import B, K1
 from spcht_spark.session import shuffle_parallelism
 
 Ast = tuple
@@ -536,11 +543,25 @@ def _eval_attr(ast: Ast, attrs: dict | None) -> bool:
     v = attrs.get(fld)
     if v is None:
         return False
+    if lo is None and hi is None:  # [* TO *]: the field has a value
+        return True
     if _range_is_str(lo, hi):
         s = str(v)
         return (lo is None or s >= lo) and (hi is None or s <= hi)
     x = float(v)
     return (lo is None or x >= lo) and (hi is None or x <= hi)
+
+
+def _levenshtein(a: str, b: str) -> int:
+    """Edit distance (insert, delete, substitute), the JVM
+    ``levenshtein``'s definition."""
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1]
 
 
 def eval_ast(
@@ -551,16 +572,23 @@ def eval_ast(
 ) -> bool:
     """Reference evaluator. ``attrs`` maps attribute field → value for
     the doc under test (missing field → clause False); ``_attr`` is an
-    internal hook used by the satisfiability check."""
+    internal hook used by the satisfiability check.
+
+    A fuzzy or wildcard node matches against ``present`` itself, the
+    per-document reading the percolator executes: ``base~d`` holds iff
+    some term is within Levenshtein distance d of ``base``, a wildcard
+    iff some term matches the whole pattern. Retrieval paths expand
+    both against the dictionary first (:func:`expand_fuzzy_asts`)."""
     kind = ast[0]
     if kind == "term":
         return ast[1] in present
-    if kind in ("fuzzy", "wild"):
-        # pre-expansion node: satisfied only via term presence (its
-        # base / pattern) — what the pure-negative check needs;
-        # execution paths always expand first (expand_fuzzy_asts), so
-        # scoring never evaluates a fuzzy/wild node.
-        return ast[1] in present
+    if kind == "fuzzy":
+        return any(_levenshtein(t, ast[1]) <= ast[2] for t in present)
+    if kind == "wild":
+        from spcht_spark.index.prefix import wildcard_regex
+
+        rx = re.compile(wildcard_regex(ast[1]))
+        return any(rx.match(t) for t in present)
     if kind in ("eq", "range"):
         return _attr(ast) if _attr is not None else _eval_attr(ast, attrs)
     if kind == "not":
@@ -570,69 +598,46 @@ def eval_ast(
     return any(eval_ast(a, present, attrs, _attr) for a in ast[1])
 
 
-def ast_predicate(ast: Ast, terms_col: Column) -> Column:
-    """AST → Catalyst boolean over an array-of-terms column plus (for
-    eq/range clauses) the joined attribute columns. Attribute clauses
-    are coalesced to FALSE on NULL (a doc missing from the attrs table,
-    or with a NULL field, satisfies no attribute clause) — so
-    ``NOT field:v`` MATCHES such docs, Solr ``-field:v`` absence
-    semantics, and all three evaluators (this, :func:`eval_ast`,
-    :func:`ast_to_duckdb`) agree instead of SQL three-valued logic
-    silently dropping the doc under negation."""
-    kind = ast[0]
-    if kind == "term":
-        return F.array_contains(terms_col, ast[1])
-    if kind == "fuzzy":
-        # per-doc evaluation (the percolator) matches against the doc's
-        # own terms: no dictionary, so no maxExpansions cap
-        _, base, dist = ast
-        return F.exists(terms_col, lambda t: F.levenshtein(t, F.lit(base)) <= dist)
-    if kind == "wild":
-        from spcht_spark.index.prefix import wildcard_regex
-
-        rx = F.lit(wildcard_regex(ast[1]))
-        return F.exists(terms_col, lambda t: F.regexp_like(t, rx))
-    if kind == "eq":
-        return F.coalesce(F.col(ast[1]).cast("string") == ast[2], F.lit(False))
-    if kind == "range":
-        _, fld, lo, hi = ast
-        if _range_is_str(lo, hi):
-            c = F.col(fld).cast("string")
-        else:
-            c = F.col(fld).cast("double")
-        out = F.lit(True)
-        if lo is not None:
-            out = out & (c >= F.lit(lo))
-        if hi is not None:
-            out = out & (c <= F.lit(hi))
-        return F.coalesce(out, F.lit(False))
-    if kind == "not":
-        return ~ast_predicate(ast[1], terms_col)
-    parts = [ast_predicate(a, terms_col) for a in ast[1]]
-    out = parts[0]
-    for p in parts[1:]:
-        out = (out & p) if kind == "and" else (out | p)
-    return out
-
-
 def ast_to_spark_sql(ast: Ast, terms_expr: str = "present") -> str:
-    """AST → Spark SQL predicate string, semantics-identical to
-    :func:`ast_predicate` (same coalesce-to-FALSE on NULL attr clauses,
-    same operator tree). Built so a routed batch's per-query predicate
-    dispatch is ONE parsed expression instead of a per-Column py4j
-    construction (~2.5 ms per Column op in classic mode — the plan
-    build, not the plan, was the cost)."""
-    from spcht_spark.index.query import sql_double, sql_str
+    """AST → Spark SQL predicate over an array-of-terms expression plus
+    (for eq/range clauses) the attribute columns — the engine's one
+    Spark form of an AST. SQL text, not a Column tree: one parsed
+    expression instead of a per-Column py4j construction (~2.5 ms per
+    Column op in classic mode — the plan build, not the plan, was the
+    cost).
 
+    Attribute clauses are coalesced to FALSE on NULL (a doc missing
+    from the attrs table, or with a NULL field, satisfies no attribute
+    clause) — so ``NOT field:v`` MATCHES such docs, Solr ``-field:v``
+    absence semantics, and the evaluators (this, :func:`eval_ast`,
+    :func:`ast_to_duckdb`) agree instead of SQL three-valued logic
+    silently dropping the doc under negation. A field name is one
+    backquoted column (``meta.lang`` is flat, as in Solr). Fuzzy and
+    wildcard nodes match the terms themselves (per-document
+    evaluation: no dictionary, so no maxExpansions cap) through the
+    JVM ``levenshtein`` the fuzzy expansion also uses and a whole-term
+    ``regexp_like``."""
     kind = ast[0]
     if kind == "term":
         return f"array_contains({terms_expr}, {sql_str(ast[1])})"
+    if kind == "fuzzy":
+        return (
+            f"exists({terms_expr}, t -> levenshtein(t, {sql_str(ast[1])}) "
+            f"<= {int(ast[2])})"
+        )
+    if kind == "wild":
+        from spcht_spark.index.prefix import wildcard_regex
+
+        return (
+            f"exists({terms_expr}, t -> "
+            f"regexp_like(t, {sql_str(wildcard_regex(ast[1]))}))"
+        )
     if kind == "eq":
-        f = "`" + str(ast[1]).replace("`", "``") + "`"
+        f = sql_ident(ast[1])
         return f"coalesce(CAST({f} AS STRING) = {sql_str(ast[2])}, false)"
     if kind == "range":
         _, fld, lo, hi = ast
-        f = "`" + str(fld).replace("`", "``") + "`"
+        f = sql_ident(fld)
         if _range_is_str(lo, hi):
             c = f"CAST({f} AS STRING)"
             lit = sql_str
@@ -644,6 +649,8 @@ def ast_to_spark_sql(ast: Ast, terms_expr: str = "present") -> str:
             out = f"({out} AND ({c} >= {lit(lo)}))"
         if hi is not None:
             out = f"({out} AND ({c} <= {lit(hi)}))"
+        if lo is None and hi is None:  # [* TO *]: the field has a value
+            out = f"({f} IS NOT NULL)"
         return f"coalesce({out}, false)"
     if kind == "not":
         return f"(NOT {ast_to_spark_sql(ast[1], terms_expr)})"
@@ -659,7 +666,7 @@ def ast_to_duckdb(
     ast: Ast, terms_expr: str = "terms", attr_prefix: str = "d."
 ) -> str:
     """AST → DuckDB SQL predicate over a LIST(VARCHAR) column (oracle
-    twin of ast_predicate); eq/range clauses reference
+    twin of ast_to_spark_sql); eq/range clauses reference
     ``{attr_prefix}<field>``."""
     kind = ast[0]
     if kind == "term":
@@ -685,7 +692,8 @@ def ast_to_duckdb(
                 parts.append(f"{attr_prefix}{fld}::DOUBLE >= {lo}")
             if hi is not None:
                 parts.append(f"{attr_prefix}{fld}::DOUBLE <= {hi}")
-        return "COALESCE(" + (" AND ".join(parts) or "TRUE") + ", FALSE)"
+        every = f"{attr_prefix}{fld} IS NOT NULL"  # [* TO *]
+        return "COALESCE(" + (" AND ".join(parts) or every) + ", FALSE)"
     if kind == "not":
         return f"(NOT {ast_to_duckdb(ast[1], terms_expr, attr_prefix)})"
     op = " AND " if kind == "and" else " OR "
@@ -716,7 +724,7 @@ def boolean_matches(
     collecting the term-set and
     the term-ordered BM25 sum over positive terms (negated terms ride
     along with contribution 0.0 — they exist only to prove/disprove the
-    predicate) → AST predicate (pure Catalyst, dispatched per query).
+    predicate) → AST predicate (one SQL CASE, dispatched per query).
     Scoring stats stay corpus-wide, like fq.
 
     ``doclens`` is accepted for API symmetry but no longer joined —
@@ -788,20 +796,14 @@ def boolean_matches_ast(
     query_terms = values_df(
         spark, qrows, ["query_id", "term", "is_pos", "boost"]
     )
-    from spcht_spark.index.query import sql_double, sql_map
-
     postings = decode_blocks(blocks.where(f"term IN ({sql_in(sorted(idfs))})"))
     # single-expr contrib (idf map + BM25 + boost gate) and fold — one
     # py4j call each instead of ~100 per-Column round-trips (see
     # index.query.score_postings); doubles via repr()+CAST, bit-exact
-    from spcht_spark.index.query import SALT_MIN_DOCS, sql_esc, sql_str
-
     idf_map = sql_map(sorted(idfs.items()), sql_double)
     # Lucene per-term boost (term^2.5); 1.0 default
     contrib_expr = (
-        f"CASE WHEN is_pos THEN boost * {idf_map}[term] * "
-        f"((tf * {sql_double(K1 + 1.0)}) / (tf + {sql_double(K1)} * "
-        f"({sql_double(1.0 - B)} + {sql_double(B)} * (dl / {sql_double(avgdl)})))) "
+        f"CASE WHEN is_pos THEN boost * {idf_map}[term] * {bm25_part_sql(avgdl)} "
         "ELSE CAST(0.0 AS DOUBLE) END"
     )
     inner = (
@@ -837,7 +839,9 @@ def boolean_matches_ast(
         # attr-clause queries join candidate rows against the attrs
         # projection before the predicate — the rare path keeps ops
         g = spark_s.sql(g_sql, postings=postings, qt=query_terms)
-        g = g.join(attrs.selectExpr("doc_id", *need_fields), "doc_id", "left")
+        g = g.join(
+            attrs.selectExpr("doc_id", *map(sql_ident, need_fields)), "doc_id", "left"
+        )
         admissible = g.where(pred_sql).selectExpr("query_id", "doc_id", "score")
     else:
         # hot path: scoring agg + predicate + projection in the SAME
@@ -878,11 +882,11 @@ def parse_filter_query(fq: str) -> Ast:
 def fq_filter(doc_store: DataFrame, fq: str, id_col: str = "doc_id") -> DataFrame:
     """``fq`` string → one-column (doc_id) admissible-docs frame, the
     shape every *_topk doc_filter parameter takes. Evaluates the
-    attribute predicate as pure Catalyst over the doc store — at scale
-    this is the metadata-table scan Solr's filterCache fronts."""
-    ast = parse_filter_query(fq)
-    pred = ast_predicate(ast, F.array().cast("array<string>"))
-    return doc_store.filter(pred).select(F.col(id_col).alias("doc_id"))
+    attribute predicate (:func:`ast_to_spark_sql`; an fq has no terms)
+    over the doc store — at scale this is the metadata-table scan
+    Solr's filterCache fronts."""
+    pred = ast_to_spark_sql(parse_filter_query(fq))
+    return doc_store.where(pred).select(F.col(id_col).alias("doc_id"))
 
 
 def _flat_plain_terms(ast: Ast, op: str) -> list[str] | None:

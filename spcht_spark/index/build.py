@@ -137,6 +137,13 @@ def build_tokens(
     return tokens(apply_analyzer(corpus, analyzer), tokenizer, analyzer)
 
 
+def bm25_part(tfs: np.ndarray, dls: np.ndarray, avgdl: float) -> np.ndarray:
+    """Per-posting BM25 part tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl)) in
+    float64: oracle.term_score without its idf factor, the expression
+    behind ``max_part`` and every WAND/AND score (bit-exact contract)."""
+    return (tfs * (K1 + 1.0)) / (tfs + K1 * (1.0 - B + B * (dls / avgdl)))
+
+
 def build_doclens(tokens: DataFrame) -> DataFrame:
     # tokens already carry dl (computed in the tokenize pass); dedup to
     # one row per doc. max == the single distinct value, deterministic.
@@ -186,7 +193,6 @@ def build_blocks(
         "shard", (F.col("doc_id") / F.lit(shard_span)).cast("long")
     )
 
-    k1, b = K1, B
     bs = BLOCK_SIZE
     positional = "pos_bin" in tokens.columns
 
@@ -220,7 +226,7 @@ def build_blocks(
         )
         blk_ends = np.minimum(blk_starts + bs, g_ends[blk_group])
 
-        parts = (tfs * (k1 + 1.0)) / (tfs + k1 * (1.0 - b + b * (dls / avgdl)))
+        parts = bm25_part(tfs, dls, avgdl)
         gaps = np.diff(docs.astype(np.uint64), prepend=np.uint64(0))
         gaps[blk_starts] = docs[blk_starts]  # delta chain resets per block
         docs_bins = varbyte_encode_segments(gaps, blk_starts)

@@ -56,9 +56,6 @@ def page_schema(sort_type: str = "long") -> T.StructType:
     )
 
 
-PAGE_SCHEMA = page_schema("long")
-
-
 def _page_head(matched: DataFrame, page_size: int) -> DataFrame:
     """Per-query first ``page_size`` rows in (sort_value, doc_id) asc
     order — two-stage so the global window sees ≤ 64·page_size rows."""

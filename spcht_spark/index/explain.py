@@ -19,8 +19,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from spcht_spark.index.query import decode_blocks, sql_in, sql_in_pred, stats_and_idfs
-from spcht_spark.oracle import B, K1
+from spcht_spark.index.query import (
+    bm25_part_sql,
+    decode_blocks,
+    sql_double,
+    sql_in,
+    sql_in_pred,
+    sql_map,
+    stats_and_idfs,
+)
 
 
 def explain_scores(
@@ -55,25 +62,11 @@ def explain_scores(
     postings = decode_blocks(hit).where(
         sql_in_pred("doc_id", (str(i) for i in ids))
     )
-    idf_map = F.create_map(
-        *[x for t, v in sorted(idfs.items()) for x in (F.lit(t), F.lit(v))]
-    )
+    idf_map = sql_map(sorted(idfs.items()), sql_double)
     return (
         postings.join(F.broadcast(dictionary.select("term", "df")), "term")
-        .withColumn("idf", idf_map[F.col("term")])
-        .withColumn(
-            "contrib",
-            F.col("idf")
-            * (
-                (F.col("tf") * F.lit(K1 + 1.0))
-                / (
-                    F.col("tf")
-                    + F.lit(K1)
-                    * (F.lit(1.0 - B) + F.lit(B) * (F.col("dl") / F.lit(avgdl)))
-                )
-            ),
-        )
-        .select("doc_id", "term", "tf", "dl", "df", "idf", "contrib")
+        .selectExpr("doc_id", "term", "tf", "dl", "df", f"{idf_map}[term] AS idf")
+        .selectExpr("*", f"idf * {bm25_part_sql(avgdl)} AS contrib")
     )
 
 

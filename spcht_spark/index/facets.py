@@ -27,19 +27,8 @@ import re
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from spcht_spark.index.query import decode_blocks, sql_in, values_df
-
-FACET_SCHEMA = T.StructType(
-    [
-        T.StructField("query_id", T.StringType(), False),
-        T.StructField("field", T.StringType(), False),
-        T.StructField("value", T.StringType(), True),
-        T.StructField("n", T.LongType(), False),
-    ]
-)
-
 
 def matching_docs(
     spark: SparkSession,
@@ -331,8 +320,9 @@ def field_stats_string(
 ) -> DataFrame:
     """Solr stats component over a STRING field — min/max are
     lexicographic, sum/mean do not exist; instead Solr reports
-    ``missing`` (matched docs with a NULL value) and ``countDistinct``
-    (stats.calcdistinct). Returns (query_id[, bucket], n, min_v,
+    ``missing`` (matched docs with a NULL value or no attrs row) and
+    ``countDistinct`` (stats.calcdistinct); ``count`` is the non-NULL
+    values only, as in Solr. Returns (query_id[, bucket], n, min_v,
     max_v, n_missing, n_distinct) from the same matching-doc machinery
     and ONE aggregation pass (count-distinct partial-aggregates like
     everything else; at web scale swap approx_count_distinct in the
@@ -355,7 +345,7 @@ def field_stats_string(
         keys.append("bucket")
     v = F.col(field).cast("string")
     return j.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("n"),
+        F.count(v).alias("n"),
         F.min(v).alias("min_v"),
         F.max(v).alias("max_v"),
         F.sum(v.isNull().cast("long")).alias("n_missing"),

@@ -41,6 +41,7 @@ from spcht_spark.index.facets import matching_docs
 from spcht_spark.index.query import (
     decode_blocks,
     exact_scores,
+    sql_ident,
     sql_in,
     stats_and_idfs,
     values_df,
@@ -297,13 +298,14 @@ def facet_query_counts(
     ``NOT term``) count correctly: the facet terms present in each
     base doc come from one pruned block scan semi-joined to the base
     ids, docs containing none get an empty set, and each AST evaluates
-    as a Catalyst predicate over (present terms, attrs). Cost is
+    as its SQL predicate (``ast_to_spark_sql``) over (present terms,
+    attrs). Cost is
     O(|base match| + |facet-term postings ∩ base|), never a corpus
     scan."""
     from spcht_spark.index.boolean import (
         ast_attr_fields,
-        ast_predicate,
         ast_terms,
+        ast_to_spark_sql,
         expand_fuzzy_ast,
         parse_query,
     )
@@ -356,7 +358,7 @@ def facet_query_counts(
         base = base.withColumn("present", F.array().cast("array<string>"))
     if need_fields:
         base = base.join(
-            attrs.select("doc_id", *[F.col(c) for c in need_fields]),
+            attrs.selectExpr("doc_id", *map(sql_ident, need_fields)),
             "doc_id",
             "left",
         )
@@ -364,11 +366,10 @@ def facet_query_counts(
     # a query whose base set is empty has no rows here — zero-filled
     # below like Solr
     aggs = [
-        F.sum(
-            F.when(ast_predicate(parsed[name], F.col("present")), 1).otherwise(0)
+        F.expr(
+            f"CAST(sum(CASE WHEN {ast_to_spark_sql(parsed[name])} THEN 1 "
+            f"ELSE 0 END) AS BIGINT) AS __fq_{i}"
         )
-        .cast("long")
-        .alias(f"__fq_{i}")
         for i, name in enumerate(sorted(parsed))
     ]
     wide = base.groupBy("query_id").agg(*aggs)

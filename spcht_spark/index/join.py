@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from spcht_spark.index.boolean import ast_predicate, parse_filter_query
+from spcht_spark.index.boolean import ast_to_spark_sql, parse_filter_query
 
 __all__ = ["child_topk", "join_docs", "parent_topk"]
 
@@ -45,9 +45,8 @@ def join_docs(
     NOT).  ``to``: the doc attribute table carrying ``to_col`` and
     ``id_col``.
     """
-    ast = parse_filter_query(child_fq)
     values = (
-        child.filter(ast_predicate(ast, F.array().cast("array<string>")))
+        child.where(ast_to_spark_sql(parse_filter_query(child_fq)))
         .select(F.col(from_col).alias("_jv"))
         .distinct()
     )

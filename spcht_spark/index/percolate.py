@@ -16,9 +16,11 @@ Spark-first shape — NO index, NO shuffle, NO per-row Python:
   identical — terms, AND/OR/NOT, ``+``/``-`` markers, attr clauses
   against the doc's own columns);
 * the document's distinct token set is built in-row
-  (``array_distinct(split(...))``) and each AST compiles to a Catalyst
-  boolean over it via :func:`~spcht_spark.index.boolean.ast_predicate`
-  — the WHOLE query set is one codegen'd projection per doc batch;
+  (``array_distinct(split(...))``, folded by the analyzer chain's SQL
+  form :func:`~spcht_spark.index.analyze.fold_token_sql`) and each AST
+  renders to a SQL predicate over it via
+  :func:`~spcht_spark.index.boolean.ast_to_spark_sql` — the WHOLE query
+  set is one codegen'd projection per doc batch;
 * matches emit as (doc_id, query_id) through one array build +
   ``explode`` — a doc matching nothing costs one skipped row.
 
@@ -45,22 +47,26 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spcht_spark.functions.dedup import tokens_col
-from spcht_spark.index.analyze import content_steps, fold_tokens_col
-from spcht_spark.index.boolean import ast_predicate, parse_query
+from spcht_spark.index.analyze import content_steps, fold_token_sql
+from spcht_spark.index.boolean import ast_to_spark_sql, parse_query
+from spcht_spark.index.query import sql_str
 
 __all__ = ["percolate", "percolate_stream"]
 
+_TERMS = "__percolate_terms"
 
-def _doc_terms(text_col: str, analyzer: str | None):
-    toks = tokens_col(text_col)
+
+def _with_doc_terms(docs: DataFrame, text_col: str, analyzer: str | None):
+    """``docs`` plus the distinct analyzed token array as ``_TERMS``."""
+    docs = docs.withColumn(_TERMS, tokens_col(text_col))
+    terms = _TERMS
     if analyzer is not None:
-        if "lowercase" in content_steps(analyzer):  # validates the spec
-            toks = F.transform(toks, F.lower)
-        toks = F.filter(
-            F.transform(toks, lambda t: fold_tokens_col(t, analyzer)),
-            lambda t: t.isNotNull(),
+        t = "lower(t)" if "lowercase" in content_steps(analyzer) else "t"
+        terms = (
+            f"filter(transform({_TERMS}, t -> {fold_token_sql(t, analyzer)}), "
+            "t -> t IS NOT NULL)"
         )
-    return F.array_distinct(toks)
+    return docs.withColumn(_TERMS, F.expr(f"array_distinct({terms})"))
 
 
 def percolate(
@@ -80,17 +86,12 @@ def percolate(
         (qid, parse_query(qs, analyzer, require_positive=False))
         for qid, qs in queries
     ]
-    terms = _doc_terms(text_col, analyzer)
-    hits = F.array_compact(
-        F.array(
-            *[
-                F.when(ast_predicate(ast, terms), F.lit(qid))
-                for qid, ast in parsed
-            ]
-        )
-    )
-    return docs.select(
-        F.col(id_col).alias("doc_id"), F.explode(hits).alias("query_id")
+    hits = "array_compact(array(" + ", ".join(
+        f"CASE WHEN {ast_to_spark_sql(ast, _TERMS)} THEN {sql_str(qid)} END"
+        for qid, ast in parsed
+    ) + "))"
+    return _with_doc_terms(docs, text_col, analyzer).select(
+        F.col(id_col).alias("doc_id"), F.explode(F.expr(hits)).alias("query_id")
     )
 
 

@@ -295,6 +295,22 @@ def sql_double(v: float) -> str:
     return f"CAST({sql_str(repr(float(v)))} AS DOUBLE)"
 
 
+def sql_ident(name: str) -> str:
+    """Backquoted Spark SQL identifier: the whole name is ONE column, so
+    ``meta.lang`` names a flat column, never a struct path."""
+    return "`" + str(name).replace("`", "``") + "`"
+
+
+def bm25_part_sql(avgdl: float) -> str:
+    """The BM25 part tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl)) over the
+    ``tf`` and ``dl`` columns — oracle.term_score without its idf
+    factor, with bit-exact double literals (:func:`sql_double`)."""
+    return (
+        f"((tf * {sql_double(K1 + 1.0)}) / (tf + {sql_double(K1)} * "
+        f"({sql_double(1.0 - B)} + {sql_double(B)} * (dl / {sql_double(avgdl)}))))"
+    )
+
+
 def sql_map(items, val) -> str:
     """``map('k', v, ...)`` literal from sorted (key, value) pairs."""
     return "map(" + ", ".join(
@@ -323,11 +339,7 @@ def score_postings(
     if not idfs:
         raise ValueError("score_postings requires at least one known term")
     idf_map = sql_map(sorted(idfs.items()), sql_double)
-    contrib_expr = (
-        f"{idf_map}[term] * ((tf * {sql_double(K1 + 1.0)}) / "
-        f"(tf + {sql_double(K1)} * ({sql_double(1.0 - B)} + "
-        f"{sql_double(B)} * (dl / {sql_double(avgdl)}))))"
-    )
+    contrib_expr = f"{idf_map}[term] * {bm25_part_sql(avgdl)}"
     # join + contrib projection + (optional) repartition + aggregation
     # as ONE df-parametrized sql statement — one JVM plan analysis
     # instead of four (each DataFrame op re-analyzes the whole tree,

@@ -46,7 +46,6 @@ varbyte binaries and the float64 max_part values.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -54,13 +53,13 @@ from spcht_spark.index.build import (
     BLOCKS_SCHEMA,
     DEFAULT_SHARD_SPAN,
     IndexTables,
+    bm25_part,
     build_blocks,
     build_doclens,
     build_stats,
     build_tokens,
 )
 from spcht_spark.index.compress import varbyte_decode
-from spcht_spark.oracle import B, K1
 
 
 def _shard(col, shard_span: int):
@@ -80,7 +79,6 @@ def refresh_max_part(blocks: DataFrame, avgdl: float) -> DataFrame:
     build_blocks would compute — same int64 decode, same float64
     expression, and max is exact — so a refreshed untouched block
     equals its full-rebuild twin exactly."""
-    k1, b = K1, B
 
     def refresh(batches):
         for pdf in batches:
@@ -89,7 +87,7 @@ def refresh_max_part(blocks: DataFrame, avgdl: float) -> DataFrame:
                 continue
             tfs = varbyte_decode(b"".join(pdf["tfs_bin"])).astype(np.int64)
             dls = varbyte_decode(b"".join(pdf["dls_bin"])).astype(np.int64)
-            parts = (tfs * (k1 + 1.0)) / (tfs + k1 * (1.0 - b + b * (dls / avgdl)))
+            parts = bm25_part(tfs, dls, avgdl)
             ends = np.cumsum(pdf["n_docs"].to_numpy(np.int64))
             starts = np.concatenate(([0], ends[:-1]))
             pdf = pdf.copy()

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from spcht_spark.index.build import bm25_part
 from spcht_spark.index.compress import BLOCK_SIZE as _BLOCK_SIZE
 from spcht_spark.index.compress import segmented_positions, varbyte_decode
 from spcht_spark.index.query import (
@@ -45,7 +46,6 @@ from spcht_spark.index.query import (
     topk,
     values_df,
 )
-from spcht_spark.oracle import B, K1
 from spcht_spark.session import shuffle_parallelism
 
 # θ-cascade pays its two extra driver barriers only when the batch
@@ -142,10 +142,7 @@ class _TermCursor:
         docs = np.cumsum(gaps, dtype=np.uint64).astype(np.int64)
         tfs = varbyte_decode(self.tfs_bins[i]).astype(np.int64)
         dls = varbyte_decode(self.dls_bins[i]).astype(np.int64)
-        # Verbatim mirror of oracle.term_score (IEEE-exact contract).
-        scores = self.idf * (
-            (tfs * (K1 + 1.0)) / (tfs + K1 * (1.0 - B + B * (dls / self._avgdl)))
-        )
+        scores = self.idf * bm25_part(tfs, dls, self._avgdl)
         self.cache[i] = (docs, scores)
         return docs, scores
 

@@ -3,8 +3,8 @@ inversion (spcht_spark.index.tokenize.tokens).
 
 Pure JVM expressions, no Python stage: ``regexp_extract_all`` over
 TOKEN_REGEX (rule ``"arrow"``) or ``split(content, ' ')`` (rule ``"ws"``)
-→ explode → drop empties → token steps via the Catalyst analyzer twin
-(``fold_tokens_col``) → groupBy count → dl as a per-doc window sum.
+→ explode → drop empties → token steps via the analyzer chain's SQL
+form (``fold_token_sql``) → groupBy count → dl as a per-doc window sum.
 """
 
 from __future__ import annotations
@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from spcht_spark.index.analyze import fold_tokens_col, token_steps
+from spcht_spark.index.analyze import fold_token_sql, token_steps
 from spcht_spark.index.tokenize import TOKEN_REGEX
 
 
@@ -31,7 +31,7 @@ def tokens_catalyst(
     )
     if token_steps(analyzer):
         toks = toks.withColumn(
-            "term", fold_tokens_col(F.col("term"), analyzer)
+            "term", F.expr(fold_token_sql("term", analyzer))
         ).filter(F.col("term").isNotNull())
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     return tf.withColumn("dl", F.sum("tf").over(Window.partitionBy("doc_id")))

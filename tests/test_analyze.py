@@ -1,6 +1,7 @@
-"""Analyzer chain (lowercase / stop / sstem): the four filter twins
-(pure Python, Catalyst, pandas, DuckDB SQL) must be identical, and the
-chain must apply the same way at index build and query parse.
+"""Analyzer chain (lowercase / stop / sstem): the three forms (pure
+Python, pandas, SQL text — the last evaluated by both Spark and DuckDB)
+must be identical, and the chain must apply the same way at index build
+and query parse.
 """
 
 from __future__ import annotations
@@ -14,7 +15,6 @@ from spcht_spark.index.analyze import (
     STOPWORDS,
     fold_token_py,
     fold_token_sql,
-    fold_tokens_col,
     fold_tokens_pd,
     parse_analyzer,
 )
@@ -61,10 +61,17 @@ def test_pandas_twin_matches_python():
 
 
 def test_catalyst_twin_matches_python(spark):
-    df = spark.createDataFrame([(t,) for t in VOCAB], ["term"])
-    rows = df.withColumn("folded", fold_tokens_col(F.col("term"), SPEC)).collect()
+    """The SQL form evaluated by Spark, over the stemmer's edge cases
+    (``s`` stems to the empty string; the empty token stays empty)."""
+    vocab = [*VOCAB, "s", "toes", ""]
+    expect = {**EXPECT, "s": "", "toes": "toes", "": ""}
+    df = spark.createDataFrame([(t,) for t in vocab], ["term"])
+    rows = df.selectExpr(
+        "term", f"{fold_token_sql('term', SPEC)} AS folded"
+    ).collect()
     got = {r["term"]: r["folded"] for r in rows}
-    assert got == EXPECT
+    assert got == expect
+    assert {t: fold_token_py(t, SPEC) for t in vocab} == expect
 
 
 def test_duckdb_twin_matches_python():

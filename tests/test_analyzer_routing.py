@@ -10,8 +10,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from spcht_spark.index.boolean import (
-    ast_predicate,
     ast_to_duckdb,
+    ast_to_spark_sql,
     boolean_topk,
     eval_ast,
     parse_query,
@@ -135,7 +135,7 @@ ATTR_DOCS = [
 def test_not_missing_attr_all_evaluators_agree(spark):
     """`hash AND NOT lang:zh` must MATCH a doc whose lang is NULL or
     missing (Solr `-lang:zh` absence semantics) — in the Python
-    reference evaluator, the Catalyst predicate, and the DuckDB twin
+    reference evaluator, the Spark SQL predicate, and the DuckDB twin
     (ADVICE r3, medium)."""
     ast = parse_query("hash AND NOT lang:zh")
 
@@ -145,14 +145,14 @@ def test_not_missing_attr_all_evaluators_agree(spark):
     assert eval_ast(ast, frozenset({"hash"}), {})          # missing field
     assert eval_ast(ast, frozenset({"hash"}), {"lang": None})
 
-    # 2. Catalyst: build candidates with a NULL-lang row
+    # 2. Spark SQL: build candidates with a NULL-lang row
     cand = spark.createDataFrame(
         [(d, ["hash"], lang) for d, _c, lang in ATTR_DOCS],
         "doc_id long, present array<string>, lang string",
     )
     got = {
         r["doc_id"]
-        for r in cand.filter(ast_predicate(ast, F.col("present"))).collect()
+        for r in cand.where(ast_to_spark_sql(ast, "present")).collect()
     }
     assert got == {0, 2}
 
@@ -166,6 +166,16 @@ def test_not_missing_attr_all_evaluators_agree(spark):
     sql = ast_to_duckdb(ast, terms_expr="terms", attr_prefix="d.")
     want = {r[0] for r in con.execute(f"SELECT doc_id FROM d WHERE {sql}").fetchall()}
     assert want == {0, 2}
+
+    # `lang:[* TO *]` (Solr: the field has a value) skips the NULL row
+    every = parse_query("hash AND lang:[* TO *]")
+    assert [
+        eval_ast(every, frozenset({"hash"}), {"lang": lang}) for _, _, lang in ATTR_DOCS
+    ] == [True, True, False]
+    got = {r["doc_id"] for r in cand.where(ast_to_spark_sql(every)).collect()}
+    sql = ast_to_duckdb(every, terms_expr="terms", attr_prefix="d.")
+    want = {r[0] for r in con.execute(f"SELECT doc_id FROM d WHERE {sql}").fetchall()}
+    assert got == want == {0, 1}
 
 
 def test_not_missing_attr_engine_end_to_end(spark):

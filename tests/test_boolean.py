@@ -12,6 +12,7 @@ from spcht_spark.index.boolean import (
     ast_to_duckdb,
     boolean_topk,
     eval_ast,
+    parse_filter_query,
     parse_query,
     positive_terms,
 )
@@ -522,3 +523,64 @@ def test_qop_and_execution_equals_explicit_and(spark, small_index):
     or_docs = {r["doc_id"] for r in got_or}
     and_docs = {r["doc_id"] for r in got_and_all}
     assert and_docs < or_docs  # OR admits a strict superset
+
+
+# ------------------------------------------------- dotted attribute fields
+
+def test_dotted_attr_field_is_one_flat_column(spark):
+    """``meta.lang`` names ONE attrs column (Solr field names may carry
+    dots), never a struct path — through fq, a boolean attr clause, a
+    facet query and the percolator, each against eval_ast. Covers a
+    NULL value (doc 2) and a doc with no attrs row (doc 3)."""
+    from spcht_spark.index.boolean import fq_filter
+    from spcht_spark.index.build import build_index
+    from spcht_spark.index.grouping import facet_query_counts
+    from spcht_spark.index.percolate import percolate
+
+    texts = {0: "alpha beta", 1: "alpha gamma", 2: "alpha", 3: "alpha beta gamma",
+             4: "beta"}
+    langs = {0: "en", 1: "de", 2: None, 4: "en"}
+    attrs_of = {d: ({"meta.lang": langs[d]} if d in langs else None) for d in texts}
+    present = {d: frozenset(t.split()) for d, t in texts.items()}
+    corpus = spark.createDataFrame(sorted(texts.items()), "doc_id long, content string")
+    attrs = spark.createDataFrame(
+        sorted(langs.items()), ["doc_id", "meta.lang"]
+    )
+    idx = build_index(spark, corpus, tokenizer="ws", shard_span=8)
+
+    def expect(q, docs, require_positive=True):
+        ast = parse_query(q, require_positive=require_positive)
+        return {d for d in docs if eval_ast(ast, present[d], attrs_of[d])}
+
+    fq = "meta.lang:en OR NOT meta.lang:[a TO e]"
+    got = {r["doc_id"] for r in fq_filter(attrs, fq).collect()}
+    fq_ast = parse_filter_query(fq)
+    assert got == {d for d in langs if eval_ast(fq_ast, frozenset(), attrs_of[d])}
+    assert got == {0, 2, 4}
+
+    qs = ["alpha AND meta.lang:en", "alpha AND NOT meta.lang:en"]
+    got = boolean_topk(
+        spark, idx.blocks, idx.doclens, idx.dictionary, idx.stats,
+        [(q, q, 10) for q in qs], attrs=attrs,
+    ).collect()
+    for q in qs:
+        assert {r["doc_id"] for r in got if r["query_id"] == q} == expect(q, texts)
+
+    facets = {"en": "meta.lang:en", "not_de": "NOT meta.lang:de"}
+    got = facet_query_counts(
+        spark, idx.blocks, idx.doclens, idx.dictionary, idx.stats,
+        [("q", ["alpha"])], facets, attrs=attrs,
+    ).collect()
+    base = [d for d in texts if "alpha" in present[d]]
+    assert {r["facet"]: r["n"] for r in got} == {
+        name: len(expect(fq, base, require_positive=False))
+        for name, fq in facets.items()
+    }
+
+    docs = corpus.join(attrs, "doc_id", "left")
+    standing = [("p_en", "alpha AND meta.lang:en"), ("p_not", "NOT meta.lang:en")]
+    got = percolate(docs, standing).collect()
+    for qid, q in standing:
+        assert {r["doc_id"] for r in got if r["query_id"] == qid} == expect(
+            q, texts, require_positive=False
+        )

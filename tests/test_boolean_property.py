@@ -1,15 +1,18 @@
 """Property tests (hypothesis) for the boolean query language and the
-varbyte codec — pure-Python paths, no SparkSession."""
+varbyte codec: pure-Python paths, plus the Spark SQL renderer of the
+AST checked row for row against the Python reference evaluator."""
 
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from spcht_spark.index.boolean import (
     QueryParseError,
     ast_terms,
+    ast_to_spark_sql,
     eval_ast,
     parse_query,
 )
@@ -142,3 +145,79 @@ def test_qop_and_adjacency_is_conjunction(ts):
     for mask in range(1 << len(ts)):
         present = frozenset(t for i, t in enumerate(ts) if mask >> i & 1)
         assert eval_ast(adj, present) == eval_ast(conj, present), (ts, present)
+
+
+# ------------------------------------------- Spark SQL renderer vs eval_ast
+
+# (doc_id, terms, attrs row or None when the doc has no attrs row)
+RENDER_DOCS = [
+    (0, ["alpha", "beta"], ("en", 1)),
+    (1, ["alpah", "gamma"], ("de", 3)),
+    (2, ["beta", "delta", "eps"], (None, 2)),
+    (3, ["gamm"], None),
+    (4, [], ("fr", None)),
+    (5, ["deltas", "epsilon", "x"], ("en", 5)),
+    (6, ["alpha", "gamma", "delta", "eps", "bta"], None),
+    (7, ["eps"], (None, None)),
+]
+LANG = "meta.lang"  # a dotted name: one flat column
+BOUNDS_N = [None, 1.0, 2.0, 3.5, 5.0]
+BOUNDS_S = [None, "d", "e", "en", "f"]
+
+
+def full_ast_st(depth: int = 3):
+    leaf = st.one_of(
+        st.builds(lambda t: ("term", t), terms_st),
+        st.builds(lambda t, d: ("fuzzy", t, d), terms_st, st.sampled_from([1, 2])),
+        st.builds(lambda p: ("wild", p), st.sampled_from(
+            ["al*", "*ta", "?eta", "g*a", "e?s", "*l*", "gam?", "d*s"])),
+        st.builds(lambda v: ("eq", LANG, v), st.sampled_from(["en", "de", "fr"])),
+        st.builds(lambda v: ("eq", "n", v), st.sampled_from(["1", "3", "5"])),
+        st.builds(lambda lo, hi: ("range", "n", lo, hi),
+                  st.sampled_from(BOUNDS_N), st.sampled_from(BOUNDS_N)),
+        st.builds(lambda lo, hi: ("range", LANG, lo, hi),
+                  st.sampled_from(BOUNDS_S), st.sampled_from(BOUNDS_S)),
+    )
+    if depth == 0:
+        return leaf
+    sub = full_ast_st(depth - 1)
+    return st.one_of(
+        leaf,
+        st.builds(lambda x: ("not", x), sub),
+        st.builds(lambda xs: ("and", xs), st.lists(sub, min_size=2, max_size=3)),
+        st.builds(lambda xs: ("or", xs), st.lists(sub, min_size=2, max_size=3)),
+    )
+
+
+@pytest.fixture(scope="module")
+def render_frame(spark):
+    """Docs left-joined to their attrs rows (absent rows → NULLs)."""
+    docs = spark.createDataFrame(
+        [(d, ts) for d, ts, _ in RENDER_DOCS], "doc_id long, terms array<string>"
+    )
+    attrs = spark.createDataFrame(
+        [(d, *a) for d, _, a in RENDER_DOCS if a is not None],
+        "doc_id long, `meta.lang` string, n long",
+    )
+    frame = docs.join(attrs, "doc_id", "left").cache()
+    yield frame
+    frame.unpersist()
+
+
+@given(st.lists(full_ast_st(), min_size=12, max_size=12))
+@settings(max_examples=30, deadline=None)
+def test_spark_sql_renderer_equals_eval_ast(render_frame, asts):
+    """Over ASTs mixing terms, NOT, AND/OR, eq/range on fields with NULLs
+    and absent rows, fuzzy and wildcard nodes, the Spark-evaluated
+    ast_to_spark_sql equals eval_ast on every row — one Spark job per
+    batch of ASTs."""
+    rows = render_frame.selectExpr(
+        "doc_id", *[f"{ast_to_spark_sql(a, 'terms')} AS p{i}" for i, a in enumerate(asts)]
+    ).collect()
+    by_doc = {d: (frozenset(ts), a) for d, ts, a in RENDER_DOCS}
+    assert sorted(r["doc_id"] for r in rows) == sorted(by_doc)
+    for r in rows:
+        present, a = by_doc[r["doc_id"]]
+        attrs = None if a is None else {LANG: a[0], "n": a[1]}
+        for i, ast in enumerate(asts):
+            assert r[f"p{i}"] is eval_ast(ast, present, attrs), (r["doc_id"], ast)

@@ -294,3 +294,28 @@ def test_range_facets_float_gap_has_no_drift(spark, small_corpus, small_index):
     buckets = sorted({r["bucket"] for r in rows}, key=float)
     assert len(buckets) == 10
     assert buckets[0] == "0" and float(buckets[-1]) == pytest.approx(0.9)
+
+
+def test_string_stats_count_excludes_null_and_absent_values(spark):
+    """Solr's stats ``count`` is the matched docs with a value: a doc
+    whose value is NULL and a doc with no attrs row both count under
+    ``missing`` only."""
+    from spcht_spark.index.build import build_index
+    from spcht_spark.index.facets import field_stats_string
+
+    corpus = spark.createDataFrame(
+        [(0, "alpha"), (1, "alpha"), (2, "alpha"), (3, "alpha beta"), (4, "beta")],
+        "doc_id long, content string",
+    )
+    idx = build_index(spark, corpus, tokenizer="ws", shard_span=8)
+    attrs = spark.createDataFrame(
+        [(0, "x"), (1, None), (3, "y"), (4, "z")],  # doc 2: no attrs row
+        "doc_id long, source string",
+    )
+    got = field_stats_string(
+        spark, idx.blocks, [("q", ["alpha"])], attrs, "source"
+    ).collect()
+    assert [r.asDict() for r in got] == [
+        {"query_id": "q", "n": 2, "min_v": "x", "max_v": "y",
+         "n_missing": 2, "n_distinct": 2}
+    ]

@@ -7,13 +7,15 @@ and the private pyspark calls the memoized pandas-UDF paths rely on.
 UDF once per session and then call the same JVM entry points pyspark's
 own mixins call (``_jdf.mapInPandas(col, bool, profile)``,
 ``_build_java_profile`` and ``_jgd.flatMapGroupsInPandas``). Those are
-private API, written against pyspark 4.1.2; if an upgrade renames or
-re-signs them, these tests say so by name instead of letting a query
-fail deep inside py4j."""
+private API, written against the pyspark version ``pyproject.toml``
+pins; if an upgrade renames or re-signs them, these tests say so by
+name instead of letting a query fail deep inside py4j."""
 
 from __future__ import annotations
 
 import inspect
+import tomllib
+from pathlib import Path
 from types import SimpleNamespace
 
 import pyspark
@@ -22,7 +24,15 @@ import pytest
 from spcht_spark.index import query, wand
 from spcht_spark.session import default_driver_memory, shuffle_parallelism
 
-PINNED = "4.1.2"
+
+def _pinned_pyspark() -> str:
+    """The ``pyspark==X`` pin of the project metadata."""
+    meta = tomllib.loads((Path(__file__).parents[1] / "pyproject.toml").read_text())
+    (pin,) = [d for d in meta["project"]["dependencies"] if d.startswith("pyspark==")]
+    return pin.split("==", 1)[1]
+
+
+PINNED = _pinned_pyspark()
 
 
 def _drift(what: str) -> str:
