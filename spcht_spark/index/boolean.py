@@ -320,28 +320,35 @@ def _parse_tokens(
     return ast
 
 
-def _attr_clauses(ast: Ast) -> list[Ast]:
+_TERM_KINDS = ("term", "fuzzy", "wild")
+
+
+def _leaves(ast: Ast, neg: bool = False):
+    """Every leaf clause (term, fuzzy, wild, eq, range) of ``ast``,
+    depth-first, as ``(node, negated)`` — negated when it sits under an
+    odd number of NOTs."""
     kind = ast[0]
-    if kind in ("eq", "range"):
-        return [ast]
-    if kind in ("term", "fuzzy", "wild"):
-        return []
     if kind == "not":
-        return _attr_clauses(ast[1])
-    out: list[Ast] = []
-    for a in ast[1]:
-        out.extend(_attr_clauses(a))
-    return out
-
-
-def _collect_fuzzy_specs(ast: Ast, specs: set[tuple[str, int]]) -> None:
-    if ast[0] == "fuzzy":
-        specs.add((ast[1], ast[2]))
-    elif ast[0] == "not":
-        _collect_fuzzy_specs(ast[1], specs)
-    elif ast[0] in ("and", "or"):
+        yield from _leaves(ast[1], not neg)
+    elif kind in ("and", "or"):
         for c in ast[1]:
-            _collect_fuzzy_specs(c, specs)
+            yield from _leaves(c, neg)
+    else:
+        yield ast, neg
+
+
+def _map_leaves(ast: Ast, fn) -> Ast:
+    """``ast`` with every leaf clause replaced by ``fn(leaf)``."""
+    kind = ast[0]
+    if kind == "not":
+        return ("not", _map_leaves(ast[1], fn))
+    if kind in ("and", "or"):
+        return (kind, [_map_leaves(c, fn) for c in ast[1]])
+    return fn(ast)
+
+
+def _attr_clauses(ast: Ast) -> list[Ast]:
+    return [a for a, _ in _leaves(ast) if a[0] in ("eq", "range")]
 
 
 def expand_fuzzy_asts(
@@ -368,11 +375,9 @@ def expand_fuzzy_asts(
     from spcht_spark.index.fuzzy import expand_fuzzy
     from spcht_spark.index.prefix import expand_wildcards
 
-    specs: set[tuple[str, int]] = set()
-    wild: set[str] = set()
-    for ast in asts:
-        _collect_fuzzy_specs(ast, specs)
-        _collect_wild_patterns(ast, wild)
+    leaves = [a for ast in asts for a, _ in _leaves(ast)]
+    specs = {(a[1], a[2]) for a in leaves if a[0] == "fuzzy"}
+    wild = {a[1] for a in leaves if a[0] == "wild"}
     if not specs and not wild:
         return list(asts)
     exp = (
@@ -394,23 +399,9 @@ def expand_fuzzy_asts(
             return flat_or(exp.get(f"{a[1]}~{a[2]}") or [a[1]])
         if a[0] == "wild":
             return flat_or(wexp.get(a[1]) or [a[1]])
-        if a[0] == "not":
-            return ("not", rewrite(a[1]))
-        if a[0] in ("and", "or"):
-            return (a[0], [rewrite(c) for c in a[1]])
         return a
 
-    return [rewrite(ast) for ast in asts]
-
-
-def _collect_wild_patterns(ast: Ast, out: set[str]) -> None:
-    if ast[0] == "wild":
-        out.add(ast[1])
-    elif ast[0] == "not":
-        _collect_wild_patterns(ast[1], out)
-    elif ast[0] in ("and", "or"):
-        for c in ast[1]:
-            _collect_wild_patterns(c, out)
+    return [_map_leaves(ast, rewrite) for ast in asts]
 
 
 def expand_fuzzy_ast(
@@ -437,24 +428,16 @@ def expand_synonyms_ast(ast: Ast, synonyms: dict[str, list[str]]) -> Ast:
     postings, which ride the same pruned block scan."""
 
     def rewrite(a: Ast) -> Ast:
-        kind = a[0]
-        if kind == "term":
-            alts = synonyms.get(a[1])
-            if not alts:
-                return a
-            boost = a[2:] if len(a) > 2 else ()
-            seen: list[str] = [a[1]]
-            for s in alts:
-                if s not in seen:
-                    seen.append(s)
-            return ("or", [("term", t, *boost) for t in seen])
-        if kind == "not":
-            return ("not", rewrite(a[1]))
-        if kind in ("and", "or"):
-            return (kind, [rewrite(c) for c in a[1]])
-        return a
+        alts = synonyms.get(a[1]) if a[0] == "term" else None
+        if not alts:
+            return a
+        seen: list[str] = [a[1]]
+        for s in alts:
+            if s not in seen:
+                seen.append(s)
+        return ("or", [("term", t, *a[2:]) for t in seen])
 
-    return rewrite(ast)
+    return _map_leaves(ast, rewrite)
 
 
 def _satisfiable_without_terms(ast: Ast) -> bool:
@@ -472,14 +455,9 @@ def _satisfiable_without_terms(ast: Ast) -> bool:
 
 
 def ast_terms(ast: Ast) -> set[str]:
-    kind = ast[0]
-    if kind in ("term", "fuzzy", "wild"):  # pre-expansion: the base /
-        return {ast[1]}                    # pattern stands for the clause
-    if kind in ("eq", "range"):
-        return set()
-    if kind == "not":
-        return ast_terms(ast[1])
-    return set().union(*(ast_terms(a) for a in ast[1]))
+    """Every term of the query, negated ones too; before expansion a
+    fuzzy base or wildcard pattern stands for its clause."""
+    return {a[1] for a, _ in _leaves(ast) if a[0] in _TERM_KINDS}
 
 
 def ast_attr_fields(ast: Ast) -> set[str]:
@@ -492,41 +470,23 @@ def term_boosts(ast: Ast) -> dict[str, float]:
     different boosts in one query is rejected — Lucene would score the
     clauses separately; here a term scores once."""
     out: dict[str, float] = {}
-
-    def walk(a: Ast, neg: bool) -> None:
-        kind = a[0]
-        if kind in ("fuzzy", "wild"):
-            return  # expands to unboosted terms
-        if kind == "term":
-            if neg:
-                return
-            b = float(a[2]) if len(a) > 2 else 1.0
-            if a[1] in out and out[a[1]] != b:
-                raise QueryParseError(
-                    f"term {a[1]!r} appears with conflicting boosts "
-                    f"({out[a[1]]} vs {b})"
-                )
-            out[a[1]] = b
-        elif kind == "not":
-            walk(a[1], not neg)
-        elif kind in ("and", "or"):
-            for c in a[1]:
-                walk(c, neg)
-
-    walk(ast, False)
+    # fuzzy and wildcard clauses expand to unboosted terms
+    for a, neg in _leaves(ast):
+        if a[0] != "term" or neg:
+            continue
+        b = float(a[2]) if len(a) > 2 else 1.0
+        if a[1] in out and out[a[1]] != b:
+            raise QueryParseError(
+                f"term {a[1]!r} appears with conflicting boosts "
+                f"({out[a[1]]} vs {b})"
+            )
+        out[a[1]] = b
     return out
 
 
-def positive_terms(ast: Ast, neg: bool = False) -> set[str]:
+def positive_terms(ast: Ast) -> set[str]:
     """Terms occurring in scoring (non-negated) position."""
-    kind = ast[0]
-    if kind in ("term", "fuzzy", "wild"):
-        return set() if neg else {ast[1]}
-    if kind in ("eq", "range"):
-        return set()
-    if kind == "not":
-        return positive_terms(ast[1], not neg)
-    return set().union(*(positive_terms(a, neg) for a in ast[1]))
+    return {a[1] for a, neg in _leaves(ast) if a[0] in _TERM_KINDS and not neg}
 
 
 def _range_is_str(lo, hi) -> bool:

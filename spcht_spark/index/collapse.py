@@ -9,8 +9,8 @@ key → per-(query, key) head selection → per-query top-k of the heads.
 
 Scale shape: the head-selection window partitions by (query, key) —
 group-sized partitions, millions of them, no hot reducer. The final
-top-k over group heads uses the same two-stage salted pattern as the
-plain score top-k. Both windows order by (round(score, 6) desc,
+top-k over group heads is :func:`spcht_spark.index.query.topn` salted
+on the group key. Both windows order by (round(score, 6) desc,
 doc_id asc) — the cross-engine determinism contract used everywhere
 else (float sums agree to well beyond 6 decimals; the rounding pins
 boundary ties identically in Spark and the SQL oracle).
@@ -18,10 +18,10 @@ boundary ties identically in Spark and the SQL oracle).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spcht_spark.index.query import exact_scores, stats_and_idfs
+from spcht_spark.index.query import exact_scores, stats_and_idfs, topn
 
 
 def collapse_topk(
@@ -47,29 +47,10 @@ def collapse_topk(
         attrs.select("doc_id", F.col(group_col).cast("string").alias("grp")),
         "doc_id",
     )
-    order = (F.desc(F.round("score", 6)), F.asc("doc_id"))
-    w_grp = Window.partitionBy("query_id", "grp").orderBy(*order)
-    heads = (
-        j.withColumn("g_rn", F.row_number().over(w_grp))
-        .filter(F.col("g_rn") == 1)
-        .drop("g_rn", "n_matched")
-    )
-    ks = {qid: k for qid, _, k in queries}
-    k_map = F.create_map(
-        *[x for q, k in sorted(ks.items()) for x in (F.lit(q), F.lit(k))]
-    )
-    w_salt = Window.partitionBy("query_id", "salt").orderBy(*order)
-    pre = (
-        heads.withColumn("salt", F.pmod(F.xxhash64("grp"), F.lit(64)))
-        .withColumn("r1", F.row_number().over(w_salt))
-        .filter(F.col("r1") <= k_map[F.col("query_id")])
-        .drop("salt", "r1")
-    )
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        pre.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_map[F.col("query_id")])
-        .select(
-            "query_id", "rank", "doc_id", F.round("score", 4).alias("score"), "grp"
-        )
-    )
+    order = "round(score, 6) DESC, doc_id ASC"
+    heads = topn(j, ["query_id", "grp"], order, 1, rank="g_rn",
+                 cols=["query_id", "doc_id", "score", "grp"])
+    return topn(
+        heads, ["query_id"], order, {qid: k for qid, _, k in queries},
+        salt="grp", cols=["query_id", "rank", "doc_id", "score", "grp"],
+    ).withColumn("score", F.round("score", 4))

@@ -11,11 +11,12 @@ argument).
 
 Spark-first shape (100 TB lens):
 
-* The keyset predicate is a pure Catalyst filter — on a corpus sorted
-  or range-partitioned by the sort column it prunes at the scan
-  (min/max row-group stats), so page N never rescans pages 1..N-1.
-* Each page's top-``page_size`` uses the same two-stage salted pattern
-  as the score top-k: per-(query, salt) partial heads first, so no
+* The keyset predicate is one SQL filter — on a corpus sorted or
+  range-partitioned by the sort column it prunes at the scan (min/max
+  row-group stats), so page N never rescans pages 1..N-1. Missing sort
+  values page last (Solr sortMissingLast, as :func:`export_matches`).
+* Each page's top-``page_size`` is :func:`spcht_spark.index.query.topn`
+  salted on doc_id: per-(query, salt) partial heads first, so no
   single reducer sees every matching doc of one query.
 * The driver-side loop materializes ``page_size × |queries|`` rows per
   page — exactly the bounded collect the reference's Solr client
@@ -24,11 +25,12 @@ Spark-first shape (100 TB lens):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from spcht_spark.index.facets import matching_docs
+from spcht_spark.index.query import sql_double, sql_str, topn
 
 # Typed cursorMark: Solr cursors encode the sort values of the last row
 # served in the sort field's own docValues type — integral, float and
@@ -51,27 +53,50 @@ def page_schema(sort_type: str = "long") -> T.StructType:
             T.StructField("page", T.IntegerType(), False),
             T.StructField("pos", T.IntegerType(), False),
             T.StructField("doc_id", T.LongType(), False),
-            T.StructField("sort_value", _SORT_TYPES[sort_type], False),
+            T.StructField("sort_value", _SORT_TYPES[sort_type], True),
         ]
     )
 
 
 def _page_head(matched: DataFrame, page_size: int) -> DataFrame:
-    """Per-query first ``page_size`` rows in (sort_value, doc_id) asc
-    order — two-stage so the global window sees ≤ 64·page_size rows."""
-    order = (F.asc("sort_value"), F.asc("doc_id"))
-    w_salt = Window.partitionBy("query_id", "salt").orderBy(*order)
-    pre = (
-        matched.withColumn("salt", F.pmod(F.xxhash64("doc_id"), F.lit(64)))
-        .withColumn("r1", F.row_number().over(w_salt))
-        .filter(F.col("r1") <= page_size)
-        .drop("salt", "r1")
+    """Per-query first ``page_size`` rows in (sort_value asc NULLS LAST,
+    doc_id asc) order: :func:`spcht_spark.index.query.topn` salted on
+    doc_id, so the global window sees ≤ 64·page_size rows."""
+    return topn(
+        matched, ["query_id"], "sort_value ASC NULLS LAST, doc_id ASC",
+        page_size, salt="doc_id", rank="pos",
     )
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        pre.withColumn("pos", F.row_number().over(w))
-        .filter(F.col("pos") <= page_size)
-    )
+
+
+def _after_cursors(cursors: dict[str, tuple | None]) -> str:
+    """Keyset predicate over (query_id, sort_value, doc_id): per live
+    query, the rows strictly after its cursor in the page order. NULL
+    sort values sort last (Solr sortMissingLast), so rows with a NULL
+    follow every non-NULL cursor, and after a NULL cursor only NULL
+    rows with a larger doc_id remain. Other queries match nothing."""
+    arms = []
+    for qid, cur in cursors.items():
+        if cur is None:
+            cond = "TRUE"
+        elif cur[0] is None:
+            cond = f"sort_value IS NULL AND doc_id > {int(cur[1])}"
+        else:
+            sv, d = _sort_lit(cur[0]), int(cur[1])
+            cond = (
+                f"sort_value > {sv} OR sort_value IS NULL "
+                f"OR (sort_value = {sv} AND doc_id > {d})"
+            )
+        arms.append(f"WHEN {sql_str(qid)} THEN {cond}")
+    return f"CASE query_id {' '.join(arms)} ELSE FALSE END"
+
+
+def _sort_lit(v) -> str:
+    """SQL literal of a typed cursor value (long, double or string)."""
+    if isinstance(v, str):
+        return sql_str(v)
+    if isinstance(v, float):
+        return sql_double(v)
+    return str(int(v))
 
 
 def paged_scan(
@@ -85,8 +110,8 @@ def paged_scan(
     sort_type: str = "long",
 ) -> DataFrame:
     """First ``n_pages`` of each query's matching docs sorted by
-    (``sort_col`` asc, doc_id asc), fetched page-by-page through
-    keyset cursors — (query_id, page, pos, doc_id, sort_value).
+    (``sort_col`` asc NULLS LAST, doc_id asc), fetched page-by-page
+    through keyset cursors — (query_id, page, pos, doc_id, sort_value).
 
     ``attrs`` must carry (doc_id, sort_col); the sort column is cast
     to ``sort_type`` ('long' | 'double' | 'string' — the typed
@@ -113,18 +138,8 @@ def paged_scan(
         live = [q for q in cursors if q not in exhausted]
         if not live:
             break
-        pred = F.lit(False)
-        for qid in live:
-            cur = cursors[qid]
-            if cur is None:
-                cond = F.lit(True)
-            else:
-                sv, d = cur
-                cond = (F.col("sort_value") > F.lit(sv)) | (
-                    (F.col("sort_value") == F.lit(sv)) & (F.col("doc_id") > d)
-                )
-            pred = F.when(F.col("query_id") == qid, cond).otherwise(pred)
-        rows = _page_head(match.filter(pred), page_size).collect()
+        pred = _after_cursors({q: cursors[q] for q in live})
+        rows = _page_head(match.where(pred), page_size).collect()
         seen_per_q: dict[str, int] = {}
         for r in sorted(rows, key=lambda r: (r["query_id"], r["pos"])):
             qid = r["query_id"]

@@ -16,7 +16,7 @@ Two small Solr/Lucene request-surface pieces:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spcht_spark.index.query import (
@@ -27,6 +27,7 @@ from spcht_spark.index.query import (
     sql_in_pred,
     sql_map,
     stats_and_idfs,
+    topn,
 )
 
 
@@ -77,12 +78,12 @@ def terms_component(
 ) -> DataFrame:
     """(rank, term, df, cf) — the dictionary under ``prefix`` ordered
     (df desc, term asc), Solr TermsComponent semantics."""
-    d = dictionary
+    # a projection, never the caller's frame itself: spark.sql drops the
+    # temp view it registers for a frame argument, and dropping a view
+    # uncaches a cached frame with the same plan (the dictionary often is)
+    d = dictionary.select("term", "df", "cf")
     if prefix:
         d = d.filter(F.col("term").startswith(prefix))
-    w = Window.orderBy(F.desc("df"), F.asc("term"))
-    return (
-        d.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= limit)
-        .select("rank", "term", "df", "cf")
+    return topn(
+        d, [], "df DESC, term ASC", limit, cols=["rank", "term", "df", "cf"]
     )

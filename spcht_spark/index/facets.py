@@ -28,7 +28,7 @@ import re
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spcht_spark.index.query import decode_blocks, sql_in, values_df
+from spcht_spark.index.query import decode_blocks, sql_in, topn, values_df
 
 def matching_docs(
     spark: SparkSession,
@@ -77,10 +77,11 @@ def facet_counts(
     (query, facet) survive, ordered by ``sort`` — ``"count"`` (n desc,
     value asc — Solr's default) or ``"index"`` (value asc). At web
     scale a facet over a high-cardinality field (URLs, hosts) has
-    billions of buckets; the limit applies via the same two-stage
-    salted window as every ranked surface, so no reducer ever holds
-    one (query, facet)'s full bucket list. ``limit=None`` returns all
-    buckets (the unlimited legacy shape).
+    billions of buckets; the limit applies through
+    :func:`spcht_spark.index.query.topn` salted on the bucket value, as
+    every ranked surface, so no reducer ever holds one (query, facet)'s
+    full bucket list. ``limit=None`` returns all buckets (the unlimited
+    legacy shape).
 
     ``prefix`` is Solr ``facet.prefix``: only buckets whose string
     value starts with it survive (applied BEFORE mincount/limit, Solr
@@ -153,44 +154,19 @@ def facet_counts(
     if mincount > 0:
         res = res.filter(F.col("n") >= mincount)
     if limit is not None:
-        order = (
-            (F.desc("n"), F.asc("value"))
-            if sort == "count"
-            else (F.asc("value"),)
-        )
+        order = "n DESC, value ASC" if sort == "count" else "value ASC"
         # facet.missing's NULL bucket is appended OUTSIDE the limit in
         # Solr's response; exempt it from the window the same way.
         nullb = res.filter(F.col("value").isNull()) if missing else None
         if missing:
             res = res.filter(F.col("value").isNotNull())
-        res = _bucket_limit(res, ["query_id", "field"], order, limit)
+        res = topn(
+            res, ["query_id", "field"], order, limit, salt="value",
+            cols=res.columns,
+        )
         if nullb is not None:
             res = res.unionByName(nullb)
     return res
-
-
-def _bucket_limit(
-    res: DataFrame, part_cols: list[str], order: tuple, limit: int
-) -> DataFrame:
-    """Per-partition top-``limit`` rows via the two-stage salted window
-    (shared by facet_counts and json_subfacets): a per-salt partial
-    top-limit first, so no reducer ever holds one partition's full
-    bucket list, then the exact window over ≤ 64·limit rows."""
-    from pyspark.sql import Window
-
-    w_salt = Window.partitionBy(*part_cols, "salt").orderBy(*order)
-    res = (
-        res.withColumn("salt", F.pmod(F.xxhash64("value"), F.lit(64)))
-        .withColumn("r1", F.row_number().over(w_salt))
-        .filter(F.col("r1") <= limit)
-        .drop("salt", "r1")
-    )
-    w = Window.partitionBy(*part_cols).orderBy(*order)
-    return (
-        res.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= limit)
-        .drop("r")
-    )
 
 
 def json_subfacets(
@@ -223,9 +199,9 @@ def json_subfacets(
 
     Scale shape: one groupBy to the leaf level (query, v1, v2) — the
     only pass over the matching set — then bucket-level (not doc-level)
-    rollup to level 1; both per-level limits run through the two-stage
-    salted window (no reducer holds a full bucket list of a
-    high-cardinality field). The level-1 survivors semi-join the leaf
+    rollup to level 1; both per-level limits run through
+    :func:`spcht_spark.index.query.topn` salted on the bucket value (no
+    reducer holds a full bucket list of a high-cardinality field). The level-1 survivors semi-join the leaf
     table on (query_id, value1): broadcastable (≤ |queries|·limit1
     rows)."""
     if match is None:
@@ -246,18 +222,17 @@ def json_subfacets(
         F.col(field2).cast("string").alias("value2"),
     ).agg(*aggs)
 
-    order = (F.desc("n"), F.asc("value"))
-    top1 = _bucket_limit(
-        leaves.groupBy("query_id", F.col("value1").alias("value"))
-        .agg(F.sum("n2").alias("n")),
-        ["query_id"], order, limit1,
-    ).select("query_id", F.col("value").alias("value1"), F.col("n").alias("n1"))
+    top1 = topn(
+        leaves.groupBy("query_id", "value1").agg(F.sum("n2").alias("n1")),
+        ["query_id"], "n1 DESC, value1 ASC", limit1, salt="value1",
+        cols=["query_id", "value1", "n1"],
+    )
 
     nested = leaves.join(F.broadcast(top1), ["query_id", "value1"])
-    nested = _bucket_limit(
-        nested.withColumn("n", F.col("n2")).withColumn("value", F.col("value2")),
-        ["query_id", "value1"], order, limit2,
-    ).drop("n", "value")
+    nested = topn(
+        nested, ["query_id", "value1"], "n2 DESC, value2 ASC", limit2,
+        salt="value2", cols=nested.columns,
+    )
     out_cols = ["query_id", "value1", "n1", "value2", "n2"]
     if metric:
         out_cols.append("m2")

@@ -30,6 +30,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from spcht_spark.index.query import topn
+
 
 class FuncParseError(ValueError):
     pass
@@ -218,6 +220,35 @@ def compile_func(src: str) -> tuple[Column, list[str]]:
     return func_column(node), func_fields(node)
 
 
+def function_sorted(
+    matches,
+    attrs,
+    sort_src: str,
+    descending: bool,
+    k: int,
+    keep: tuple[str, ...] = (),
+):
+    """(query_id, rank, doc_id, *keep, sort_v): each query's first
+    ``k`` rows of ``matches`` (query_id, doc_id, *keep) ordered by
+    ``sort_v`` = round(f, 6) of the function query ``sort_src`` over
+    ``attrs`` (the determinism contract every ranked surface uses),
+    NULL values last in both directions (Solr sortMissingLast, the
+    DuckDB default), ties by doc_id asc.
+
+    Plan: a narrow attrs join restricted to the columns the function
+    reads → :func:`spcht_spark.index.query.topn` salted on doc_id. The
+    function evaluates JVM-side in whole-stage codegen."""
+    col, fields = compile_func(sort_src)
+    j = matches.select("query_id", "doc_id", *keep).join(
+        attrs.select("doc_id", *fields), "doc_id"
+    ).select("query_id", "doc_id", *keep, F.round(col, 6).alias("sort_v"))
+    return topn(
+        j, ["query_id"],
+        f"sort_v {'DESC' if descending else 'ASC'} NULLS LAST, doc_id ASC",
+        k, salt="doc_id", cols=["query_id", "rank", "doc_id", *keep, "sort_v"],
+    )
+
+
 def function_sort_topk(
     spark,
     blocks,
@@ -229,41 +260,10 @@ def function_sort_topk(
 ):
     """Solr ``sort=<func()> desc``: the top-k docs matching each query
     (≥1 term — Solr's default OR admissibility for sort-only requests)
-    ordered by a function of their attributes, ties by doc_id asc.
-
-    Plan: term-pruned block scan → distinct (query, doc) matches →
-    narrow attrs join restricted to the columns the function reads →
-    two-stage salted top-k (the engine-wide straggler-safe window).
-    The function evaluates JVM-side in whole-stage codegen; sort values
-    round to 6dp before ranking (the determinism contract every ranked
-    surface uses) and 4dp in the output."""
-    from pyspark.sql import Window
+    through :func:`function_sorted`; ``sort_v`` rounds to 4dp in the
+    output."""
     from spcht_spark.index.facets import matching_docs
 
-    node = parse_func(sort_src)
-    col, fields = func_column(node), func_fields(node)
-    match = matching_docs(spark, blocks, queries)
-    j = match.join(attrs.select("doc_id", *fields), "doc_id").select(
-        "query_id", "doc_id", F.round(col, 6).alias("sort_v")
-    )
-    # NULLS LAST both ways: Spark's bare asc() puts NULLs FIRST, while
-    # DuckDB (the oracle) and Solr sortMissingLast put them last — pin
-    # the Solr/oracle order explicitly (ADVICE r4).
-    direction = F.desc_nulls_last("sort_v") if descending else F.asc_nulls_last("sort_v")
-    order = (direction, F.asc("doc_id"))
-    w_salt = Window.partitionBy("query_id", "salt").orderBy(*order)
-    pre = (
-        j.withColumn("salt", F.pmod(F.xxhash64("doc_id"), F.lit(64)))
-        .withColumn("r1", F.row_number().over(w_salt))
-        .filter(F.col("r1") <= k)
-        .drop("salt", "r1")
-    )
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        pre.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "rank", "doc_id",
-            F.round("sort_v", 4).alias("sort_v"),
-        )
-    )
+    return function_sorted(
+        matching_docs(spark, blocks, queries), attrs, sort_src, descending, k
+    ).withColumn("sort_v", F.round("sort_v", 4))

@@ -25,10 +25,10 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spcht_spark.index.query import exact_topk, values_df
+from spcht_spark.index.query import exact_topk, topn, values_df
 
 _FUZZY_RE = re.compile(r"^(.+?)~([012])$")
 
@@ -74,15 +74,10 @@ def expand_fuzzy(
         .withColumn("distance", F.levenshtein("term", "base"))
         .filter(F.col("distance") <= F.col("dist"))
     )
-    w = Window.partitionBy("qterm").orderBy(
-        F.asc("distance"), F.desc("df"), F.asc("term")
-    )
-    rows = (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= max_expansions)
-        .select("qterm", "term", "rn")
-        .collect()
-    )
+    rows = topn(
+        cand, ["qterm"], "distance ASC, df DESC, term ASC", max_expansions,
+        rank="rn",
+    ).select("qterm", "term", "rn").collect()
     for qt in fuzzy:
         out[qt] = []
     for r in sorted(rows, key=lambda r: (r["qterm"], r["rn"])):

@@ -21,8 +21,8 @@ Spark-first shapes (100 TB lens):
   Arrow decode (dl rides along — no doclens join) → score → ONE narrow
   equi-join on doc_id for the group key → per-(query, group) window
   (group-sized partitions, millions of them, no hot reducer) → the
-  group heads go through the same two-stage salted top-k as every
-  other ranked surface.
+  group heads go through :func:`spcht_spark.index.query.topn`, salted
+  on the group key like every other ranked surface.
 * Pivot facets are ONE ``ROLLUP`` aggregation over match⋈attrs —
   Catalyst computes the leaf and the per-f1 subtotal in a single
   partial-aggregating pass instead of two groupBys over the join.
@@ -44,6 +44,7 @@ from spcht_spark.index.query import (
     sql_ident,
     sql_in,
     stats_and_idfs,
+    topn,
     values_df,
 )
 
@@ -173,23 +174,10 @@ def group_scored(
             F.col("_best.s").alias("h_score"),
             (-F.col("_best.nd")).alias("h_doc"),
         )
-    k_map = F.create_map(
-        *[x for q, k in sorted(ks.items()) for x in (F.lit(q), F.lit(k))]
-    )
-    h_order = (F.desc("h_score"), F.asc("h_doc"))
-    w_salt = Window.partitionBy("query_id", "salt").orderBy(*h_order)
-    pre = (
-        heads.withColumn("salt", F.pmod(F.xxhash64("grp"), F.lit(64)))
-        .withColumn("r1", F.row_number().over(w_salt))
-        .filter(F.col("r1") <= k_map[F.col("query_id")])
-        .drop("salt", "r1")
-    )
-    w = Window.partitionBy("query_id").orderBy(*h_order)
-    top_groups = (
-        pre.withColumn("grp_rank", F.row_number().over(w))
-        .filter(F.col("grp_rank") <= k_map[F.col("query_id")])
-        .select("query_id", "grp", "grp_rank")
-    )
+    top_groups = topn(
+        heads, ["query_id"], "h_score DESC, h_doc ASC", ks, salt="grp",
+        rank="grp_rank",
+    ).select("query_id", "grp", "grp_rank")
     out = members.join(F.broadcast(top_groups), ["query_id", "grp"]).select(
         "query_id",
         "grp_rank",

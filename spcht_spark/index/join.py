@@ -21,10 +21,11 @@ shard-span bitmap path).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spcht_spark.index.boolean import ast_to_spark_sql, parse_filter_query
+from spcht_spark.index.query import topn
 
 __all__ = ["child_topk", "join_docs", "parent_topk"]
 
@@ -82,7 +83,8 @@ def parent_topk(
     ``scored_children``: (query_id, doc_id, score) from any ranked
     path (exact/WAND/boolean — composes with the full q language).
     Returns (query_id, rank, parent, score, n_children) with the
-    engine-wide determinism contract (round(score,6) desc, parent asc).
+    engine-wide determinism contract (round(score,6) desc, parent asc),
+    ranked by :func:`spcht_spark.index.query.topn` salted on parent.
     """
     j = scored_children.select("query_id", "doc_id", "score").join(
         attrs.select(
@@ -94,24 +96,9 @@ def parent_topk(
         F.max("score").alias("score"),
         F.count(F.lit(1)).alias("n_children"),
     )
-    k_map = F.create_map(
-        *[x for q, k in sorted(ks.items()) for x in (F.lit(q), F.lit(k))]
-    )
-    order = (F.desc(F.round("score", 6)), F.asc("parent"))
-    w_salt = Window.partitionBy("query_id", "salt").orderBy(*order)
-    pre = (
-        per_parent.withColumn(
-            "salt", F.pmod(F.xxhash64("parent"), F.lit(64))
-        )
-        .withColumn("r1", F.row_number().over(w_salt))
-        .filter(F.col("r1") <= k_map[F.col("query_id")])
-        .drop("salt", "r1")
-    )
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        pre.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_map[F.col("query_id")])
-        .select("query_id", "rank", "parent", "score", "n_children")
+    return topn(
+        per_parent, ["query_id"], "round(score, 6) DESC, parent ASC", ks,
+        salt="parent", cols=["query_id", "rank", "parent", "score", "n_children"],
     )
 
 
@@ -134,8 +121,9 @@ def child_topk(
     shape: the ranked-parents frame is k-sized, so the expansion is a
     broadcast join against the doc-attribute table — one narrow scan,
     no shuffle of the attrs side, no per-parent driver loop.  Children
-    rank by (parent score desc, parent asc, doc_id asc); ``ks`` caps
-    the page per query.
+    rank by (parent score desc, parent asc, doc_id asc) through
+    :func:`spcht_spark.index.query.topn`; ``ks`` caps the page per
+    query.
 
     Reference capability: the Solr block-join surface behind the
     reference's raw `q`/`fq` strings (WorkOrder.py:702-707); Lucene
@@ -147,25 +135,10 @@ def child_topk(
     kids = attrs.select(
         "doc_id", F.col(parent_col).cast("string").alias("parent")
     ).join(F.broadcast(parents), "parent")
-    k_map = F.create_map(
-        *[x for q, k in sorted(ks.items()) for x in (F.lit(q), F.lit(k))]
-    )
-    order = (
-        F.desc(F.round("score", 6)), F.asc("parent"), F.asc("doc_id"),
-    )
-    # salted two-stage (engine-wide top-k discipline): a single parent
+    # salted on doc_id (engine-wide top-k discipline): a single parent
     # may hold billions of children — the global window only ever sees
     # ≤ 64·k pre-ranked rows per query, never the full expansion
-    w_salt = Window.partitionBy("query_id", "salt").orderBy(*order)
-    pre = (
-        kids.withColumn("salt", F.pmod(F.xxhash64("doc_id"), F.lit(64)))
-        .withColumn("r1", F.row_number().over(w_salt))
-        .filter(F.col("r1") <= k_map[F.col("query_id")])
-        .drop("salt", "r1")
-    )
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        pre.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_map[F.col("query_id")])
-        .select("query_id", "rank", "doc_id", "parent", "score")
+    return topn(
+        kids, ["query_id"], "round(score, 6) DESC, parent ASC, doc_id ASC",
+        ks, salt="doc_id", cols=["query_id", "rank", "doc_id", "parent", "score"],
     )

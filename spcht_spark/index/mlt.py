@@ -26,10 +26,10 @@ from __future__ import annotations
 
 from collections import Counter
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spcht_spark.index.query import exact_topk, sql_in, sql_in_pred
+from spcht_spark.index.query import exact_topk, sql_in, sql_in_pred, topn
 from spcht_spark.oracle import idf as idf_py
 from spcht_spark.oracle import tokenize_py
 
@@ -171,10 +171,7 @@ def mlt_topk(
             (F.col("query_id") == f"mlt_{int(seed)}")
             & (F.col("doc_id") == int(seed))
         )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        out.filter(~seed_pred)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
+    return topn(
+        out.filter(~seed_pred), ["query_id"], "score DESC, doc_id ASC", k,
+        cols=["query_id", "rank", "doc_id", "score"],
     )

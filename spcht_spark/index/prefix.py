@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spcht_spark.index.query import exact_topk, values_df
+from spcht_spark.index.query import exact_topk, topn, values_df
 
 
 def expand_prefix(
@@ -97,8 +97,6 @@ def expand_wildcards(
     on the same set. A pure-prefix pattern (``te*``) should use
     :func:`expand_prefix` instead — startswith prunes row groups where
     a leading-wildcard regex cannot."""
-    from pyspark.sql import Window
-
     spark = dictionary.sparkSession
     if not patterns:
         return {}
@@ -112,13 +110,9 @@ def expand_wildcards(
         .crossJoin(F.broadcast(pats))
         .filter(F.regexp_like(F.col("term"), F.col("rx")))
     )
-    w = Window.partitionBy("pattern").orderBy(F.desc("df"), F.asc("term"))
-    rows = (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= max_expansions)
-        .select("pattern", "term", "rn")
-        .collect()
-    )
+    rows = topn(
+        cand, ["pattern"], "df DESC, term ASC", max_expansions, rank="rn"
+    ).select("pattern", "term", "rn").collect()
     out: dict[str, list[str]] = {p: [] for p in patterns}
     for r in sorted(rows, key=lambda r: (r["pattern"], r["rn"])):
         out[r["pattern"]].append(r["term"])

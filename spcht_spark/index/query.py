@@ -405,41 +405,84 @@ def exact_scores(
 SALT_MIN_DOCS = 1 << 20
 
 
+def topn(
+    df: DataFrame,
+    part: list[str],
+    order: str,
+    limit: int | dict[str, int],
+    *,
+    salt: str | None = None,
+    rank: str = "rank",
+    cols: list[str] | None = None,
+) -> DataFrame:
+    """The first ``limit`` rows of each ``part`` partition under the
+    total order ``order`` (SQL ORDER BY text), numbered from 1 in
+    ``rank`` — the engine's one per-partition top-n. ``part=[]`` ranks
+    the whole frame.
+
+    ``limit`` is an int or a ``{query_id: k}`` map. An int renders as a
+    literal, so Spark's inferred WindowGroupLimit trims each partition
+    before the exchange; a map renders as ``map(...)[query_id]``, which
+    it cannot.
+
+    ``salt`` names the column hashed into ``pmod(xxhash64(salt), 64)``
+    for a first per-(partition, salt) top-n: no reducer then receives a
+    hot partition's whole candidate list, and the union of per-salt
+    heads is a superset of the partition's head, so the final window
+    over ≤ 64·limit rows per partition is exact (*Cache-Efficient Top-k
+    Aggregation over High Cardinality Large Datasets*, VLDB 2023).
+    ``None`` runs the one-stage window.
+
+    ``cols`` is the output column list, the rank column wherever it
+    names it (default: ``df``'s columns, then ``rank``). The windows
+    carry its other columns, so ``part`` and ``order`` read only those.
+
+    ONE df-parametrized ``spark.sql`` statement: every DataFrame op
+    re-analyzes its whole (deep) tree JVM-side — ~8-12 ms per op on a
+    4-core host — so a 6-op window chain paid more in plan analysis
+    than in py4j traffic. Identifiers and literals go through
+    :func:`sql_esc` (the arg templating is a string.Formatter)."""
+    out = list(cols or [*df.columns, rank])
+    keep = ", ".join(sql_esc(sql_ident(c)) for c in out if c != rank)
+    if isinstance(limit, dict):
+        k_map = sql_map(sorted(limit.items()), lambda k: str(int(k)))
+        lim = f"{sql_esc(k_map)}[query_id]"
+    else:
+        lim = str(int(limit))
+    order = sql_esc(order)
+    by = [sql_esc(sql_ident(c)) for c in part]
+    src = "{df}"
+    if salt is not None:
+        over = ", ".join([*by, f"pmod(xxhash64({sql_esc(sql_ident(salt))}), 64)"])
+        src = (
+            f"(SELECT {keep} FROM (SELECT *, row_number() OVER (PARTITION BY "
+            f"{over} ORDER BY {order}) AS r1 FROM {{df}}) WHERE r1 <= {lim})"
+        )
+    over = (f"PARTITION BY {', '.join(by)} " if by else "") + f"ORDER BY {order}"
+    r = sql_esc(sql_ident(rank))
+    return df.sparkSession.sql(
+        f"SELECT {', '.join(sql_esc(sql_ident(c)) for c in out)} FROM ("
+        f"SELECT {keep}, row_number() OVER ({over}) AS {r} FROM {src}) "
+        f"WHERE {r} <= {lim}",
+        df=df,
+    )
+
+
 def topk(
     scores: DataFrame, ks: dict[str, int], n_docs: int | None = None
 ) -> DataFrame:
-    """Per-query top-k with deterministic tie-break (score desc, doc asc).
-
-    Two-stage: a per-(query, doc-hash-salt) partial top-k runs first so
-    no single reducer ever receives every candidate of one query (the
-    plain per-query window is ≤|queries| tasks — a straggler/OOM shape
-    when the exact path scores a hot term over 10^12 docs). The union of
-    per-salt top-k is a superset of the global top-k, so the final
-    narrow window over ≤ 64·k rows/query is exact. The pre-stage is
-    semantically a no-op, so it is SKIPPED when the caller proves the
-    corpus is small (``n_docs`` < SALT_MIN_DOCS) — same rows out.
-
-    Built as ONE df-parametrized ``spark.sql`` statement: every
-    DataFrame op re-analyzes its whole (deep) tree JVM-side — measured
-    ~8-12 ms per op on this host — so a 6-op window chain paid more in
-    plan analysis than in py4j traffic. One statement = one analysis."""
-    # spark.sql's arg templating is a string.Formatter: literal braces
-    # (possible inside query-id strings) must be doubled to survive
-    k_map = sql_esc(sql_map(sorted(ks.items()), lambda k: str(int(k))))
-    src = "{scores}"
-    if n_docs is None or n_docs >= SALT_MIN_DOCS:
-        src = (
-            "(SELECT query_id, doc_id, score FROM ("
-            "SELECT *, row_number() OVER (PARTITION BY query_id, "
-            "pmod(xxhash64(doc_id), 64) ORDER BY score DESC, doc_id ASC)"
-            f" AS r1 FROM {{scores}}) WHERE r1 <= {k_map}[query_id])"
-        )
-    return scores.sparkSession.sql(
-        "SELECT query_id, rank, doc_id, score FROM ("
-        "SELECT query_id, doc_id, score, row_number() OVER ("
-        "PARTITION BY query_id ORDER BY score DESC, doc_id ASC) AS rank "
-        f"FROM {src}) WHERE rank <= {k_map}[query_id]",
-        scores=scores,
+    """Per-query top-k with deterministic tie-break (score desc, doc
+    asc): :func:`topn` salted on doc_id, so the plain per-query window
+    (≤|queries| tasks — a straggler/OOM shape when the exact path
+    scores a hot term over 10^12 docs) only ever sees ≤ 64·k rows per
+    query. The salt stage is semantically a no-op, so it is SKIPPED
+    when the caller proves the corpus is small (``n_docs`` <
+    SALT_MIN_DOCS) — same rows out."""
+    salted = n_docs is None or n_docs >= SALT_MIN_DOCS
+    return topn(
+        scores, ["query_id"], "score DESC, doc_id ASC", ks,
+        salt="doc_id" if salted else None,
+        cols=["query_id", "rank", "doc_id", "score"],
     )
 
 

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spcht_spark.index.boolean import (
@@ -413,36 +413,15 @@ def _sorted_page(
     """Solr ``sort=<field|func()> asc|desc`` over the request's
     admissible set: the page is ordered by a docValues field or
     function query instead of relevance (score stays in the row, Solr
-    returns it when fl asks). Ties totalize by doc_id asc; the rank
-    window is the engine-wide two-stage salted shape."""
-    from spcht_spark.index.funcquery import compile_func
+    returns it when fl asks) —
+    :func:`spcht_spark.index.funcquery.function_sorted`, whose
+    rank window is :func:`spcht_spark.index.query.topn`."""
+    from spcht_spark.index.funcquery import function_sorted
 
     src, descending = sort
-    col, fields = compile_func(src)
-    j = matches.select("query_id", "doc_id", "score").join(
-        attrs.select("doc_id", *fields), "doc_id"
-    ).select(
-        "query_id", "doc_id", "score", F.round(col, 6).alias("_sort_v")
-    )
-    # NULLS LAST in both directions (Solr sortMissingLast / DuckDB
-    # default — Spark's bare asc() is NULLS FIRST; ADVICE r4)
-    direction = (
-        F.desc_nulls_last("_sort_v") if descending else F.asc_nulls_last("_sort_v")
-    )
-    order = (direction, F.asc("doc_id"))
-    w_salt = Window.partitionBy("query_id", "salt").orderBy(*order)
-    pre = (
-        j.withColumn("salt", F.pmod(F.xxhash64("doc_id"), F.lit(64)))
-        .withColumn("r1", F.row_number().over(w_salt))
-        .filter(F.col("r1") <= n_fetch)
-        .drop("salt", "r1")
-    )
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        pre.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= n_fetch)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return function_sorted(
+        matches, attrs, src, descending, n_fetch, keep=("score",)
+    ).select("query_id", "rank", "doc_id", "score")
 
 
 def realtime_get(

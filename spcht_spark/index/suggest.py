@@ -19,10 +19,10 @@ scan of the dictionary table:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spcht_spark.index.query import decode_blocks, sql_in, values_df
+from spcht_spark.index.query import decode_blocks, sql_in, topn, values_df
 
 
 def suggest(
@@ -46,16 +46,10 @@ def suggest(
         .withColumn("distance", F.levenshtein("term", "qterm"))
         .filter((F.col("distance") <= max_distance) & (F.col("distance") > 0))
     )
-    w = Window.partitionBy("qterm").orderBy(
-        F.asc("distance"), F.desc("df"), F.asc("term")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_n)
-        .select(
-            "qterm", "rank", F.col("term").alias("suggestion"), "distance", "df"
-        )
-    )
+    return topn(
+        cand, ["qterm"], "distance ASC, df DESC, term ASC", top_n,
+        cols=["qterm", "rank", "term", "distance", "df"],
+    ).withColumnRenamed("term", "suggestion")
 
 
 def spellcheck_collate(
@@ -286,14 +280,7 @@ def complete(
         .filter(pushed)
         .join(F.broadcast(pdf), F.col("term").startswith(F.col("prefix")))
     )
-    w = Window.partitionBy("prefix").orderBy(
-        F.desc("df"), F.asc("term")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_n)
-        .select(
-            "prefix", "rank", F.col("term").alias("suggestion"),
-            F.col("df").alias("weight"),
-        )
-    )
+    return topn(
+        cand, ["prefix"], "df DESC, term ASC", top_n,
+        cols=["prefix", "rank", "term", "df"],
+    ).withColumnsRenamed({"term": "suggestion", "df": "weight"})

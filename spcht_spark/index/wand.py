@@ -44,6 +44,7 @@ from spcht_spark.index.query import (
     sql_in,
     stats_and_idfs,
     topk,
+    topn,
     values_df,
 )
 from spcht_spark.session import shuffle_parallelism
@@ -587,18 +588,10 @@ def wand_topk(
     hit = make_hit().localCheckpoint(eager=False)
 
     # Phase 1 — seed: hottest shard per query (ties: lowest shard).
-    from pyspark.sql import Window
-
-    w_hot = Window.partitionBy("query_id").orderBy(
-        F.desc("n_blocks"), F.asc("shard")
-    )
-    seeds = (
-        hit.groupBy("query_id", "shard")
-        .agg(F.count(F.lit(1)).alias("n_blocks"))
-        .withColumn("rn", F.row_number().over(w_hot))
-        .filter(F.col("rn") == 1)
-        .select("query_id", "shard")
-    )
+    seeds = topn(
+        hit.groupBy("query_id", "shard").agg(F.count(F.lit(1)).alias("n_blocks")),
+        ["query_id"], "n_blocks DESC, shard ASC", 1, rank="rn",
+    ).select("query_id", "shard")
     seed_cand = apply_grouped_cached(
         _pin_groups(
             hit.join(F.broadcast(seeds), ["query_id", "shard"])

@@ -102,3 +102,38 @@ def test_paged_scan_string_sort_key(spark, small_corpus_pd, small_corpus, small_
         small_corpus_pd, queries, 9, 3, lambda r: r.path,
     )
     assert got_t == want
+
+
+def test_paged_scan_missing_sort_values_page_last(spark, small_corpus_pd, small_corpus, small_index):
+    """Docs without a sort value page last (Solr sortMissingLast, the
+    DuckDB default), ordered by doc_id, and the cursor walks through
+    them: a NULL cursor resumes at the next NULL row by doc_id."""
+    queries = [("cn_hot", ["return", "if"]), ("cn_tail", ["handler7", "handler8"])]
+    attrs = small_corpus.select(
+        "doc_id",
+        F.when(F.col("doc_id") % 5 != 0, F.length("content")).alias("n_chars"),
+    )
+    toks = {int(r.doc_id): set(tokenize_py(r.content)) for r in small_corpus_pd.itertuples()}
+    lens = {
+        int(r.doc_id): None if int(r.doc_id) % 5 == 0 else len(r.content)
+        for r in small_corpus_pd.itertuples()
+    }
+    n_tail = sum(1 for s in toks.values() if s & {"handler7", "handler8"})
+    n_pages = n_tail // 7 + 2
+    want = []
+    for qid, terms in queries:
+        m = sorted(
+            ((lens[d] is None, lens[d] or 0, d) for d, s in toks.items() if s & set(terms)),
+        )
+        for i, (_, _, d) in enumerate(m[: 7 * n_pages]):
+            want.append((qid, i // 7, i % 7 + 1, d, lens[d]))
+    # the tail query pages past its last value into more than a page of NULLs
+    assert sum(1 for w in want if w[0] == "cn_tail" and w[4] is None) > 7
+    got = paged_scan(
+        spark, small_index.blocks, queries, attrs, "n_chars",
+        page_size=7, n_pages=n_pages,
+    ).collect()
+    got_t = sorted(
+        (r["query_id"], r["page"], r["pos"], r["doc_id"], r["sort_value"]) for r in got
+    )
+    assert got_t == sorted(want)

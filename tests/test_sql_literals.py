@@ -196,3 +196,137 @@ def test_empty_mlt_terms_and_collations(spark, small_index, small_corpus):
         spark, small_index.dictionary, small_index.blocks, [("q", [])]
     ).collect()
     assert [tuple(r) for r in rows] == [("q", "", 0)]
+
+
+# Query ids and attribute values carrying every character the SQL text
+# renderers must escape: quote, backslash and the arg-templating braces.
+SPECIAL_QIDS = ["q'{a}\\", "q}\\'"]
+SPECIAL_VALS = ["g{0}", "it's", "C:\\d\\", "}{'\\"]
+
+
+@pytest.fixture(scope="module")
+def special_setup(spark, small_corpus_pd):
+    docs = [(int(r.doc_id), r.content) for r in small_corpus_pd.itertuples()]
+    attrs = spark.createDataFrame(
+        [(d, f"{SPECIAL_VALS[d % 4]}{d % 7}", len(c)) for d, c in docs],
+        "doc_id long, grp string, n_chars long",
+    ).cache()
+    grp = {d: f"{SPECIAL_VALS[d % 4]}{d % 7}" for d, _ in docs}
+    n_chars = {d: len(c) for d, c in docs}
+    oracle = Bm25Oracle(small_corpus_pd)
+    queries = [(SPECIAL_QIDS[0], ["return", "import"], 5), (SPECIAL_QIDS[1], ["def"], 3)]
+    cand = {q: dict(oracle.query(ts, 10_000)) for q, ts, _ in queries}
+    yield attrs, grp, n_chars, queries, cand
+    attrs.unpersist()
+
+
+def _heads(scores: dict[int, float], key_of) -> dict[str, tuple[int, float]]:
+    """Per group key, its best (round(score, 6) desc, doc_id asc) doc."""
+    out: dict[str, tuple[int, float]] = {}
+    for d, s in sorted(scores.items(), key=lambda x: (-round(x[1], 6), x[0])):
+        out.setdefault(key_of[d], (d, s))
+    return out
+
+
+def test_special_chars_through_ranked_sites(spark, small_index, special_setup):
+    """Query ids, group, parent and facet values with ``{``, ``}``,
+    ``'`` and ``\\`` round-trip through every per-partition top-n site
+    and equal a Python reference: collapse, grouping, parent/child
+    block join, limited facets, the keyset pager and function sort."""
+    from spcht_spark.index.collapse import collapse_topk
+    from spcht_spark.index.cursor import paged_scan
+    from spcht_spark.index.facets import facet_counts
+    from spcht_spark.index.funcquery import function_sort_topk
+    from spcht_spark.index.grouping import group_topk
+    from spcht_spark.index.join import child_topk, parent_topk
+    from pyspark.sql import functions as F
+
+    attrs, grp, n_chars, queries, cand = special_setup
+    idx = small_index
+    args = (spark, idx.blocks, idx.doclens, idx.dictionary, idx.stats)
+    ks = {q: k for q, _, k in queries}
+    plain = [(q, ts) for q, ts, _ in queries]
+
+    def by_heads(q):
+        h = _heads(cand[q], grp)
+        return sorted(h.items(), key=lambda x: (-round(x[1][1], 6), x[1][0]))
+
+    got = collapse_topk(*args, attrs, "grp", queries).collect()
+    assert sorted((r["query_id"], r["rank"], r["doc_id"], r["grp"]) for r in got) == sorted(
+        (q, i + 1, d, g) for q in ks for i, (g, (d, _)) in enumerate(by_heads(q)[: ks[q]])
+    )
+
+    got = group_topk(*args, attrs, "grp", queries, group_limit=2).collect()
+    want = []
+    for q in ks:
+        for i, (g, _) in enumerate(by_heads(q)[: ks[q]]):
+            members = sorted(
+                (x for x in cand[q].items() if grp[x[0]] == g),
+                key=lambda x: (-round(x[1], 6), x[0]),
+            )
+            want += [(q, i + 1, g, len(members), j + 1, d) for j, (d, _) in enumerate(members[:2])]
+    assert sorted(
+        (r["query_id"], r["grp_rank"], r["grp"], r["grp_n"], r["doc_rank"], r["doc_id"])
+        for r in got
+    ) == sorted(want)
+
+    scored = spark.createDataFrame(
+        [(q, d, s) for q in cand for d, s in cand[q].items()],
+        "query_id string, doc_id long, score double",
+    )
+    parents = {}
+    for q in ks:
+        best: dict[str, list] = {}
+        for d, s in cand[q].items():
+            best.setdefault(grp[d], []).append(s)
+        parents[q] = sorted(
+            ((p, max(v), len(v)) for p, v in best.items()),
+            key=lambda x: (-round(x[1], 6), x[0]),
+        )[: ks[q]]
+    got = parent_topk(scored, attrs, "grp", ks).collect()
+    assert sorted((r["query_id"], r["rank"], r["parent"], r["n_children"]) for r in got) == sorted(
+        (q, i + 1, p, n) for q in ks for i, (p, _, n) in enumerate(parents[q])
+    )
+    got = child_topk(scored, attrs, "grp", {q: 6 for q in ks}, ks).collect()
+    want = []
+    for q in ks:
+        kids = sorted(
+            ((s, p, d) for p, s, _ in parents[q] for d in grp if grp[d] == p),
+            key=lambda x: (-round(x[0], 6), x[1], x[2]),
+        )
+        want += [(q, i + 1, d, p) for i, (_, p, d) in enumerate(kids[:6])]
+    assert sorted((r["query_id"], r["rank"], r["doc_id"], r["parent"]) for r in got) == sorted(want)
+
+    name = "f'{x}\\"
+    got = facet_counts(
+        spark, idx.blocks, plain, attrs, {name: (F.col("grp"), ["grp"])}, limit=3,
+    ).collect()
+    want = []
+    for q in ks:
+        counts: dict[str, int] = {}
+        for d in cand[q]:
+            counts[grp[d]] = counts.get(grp[d], 0) + 1
+        top = sorted(counts.items(), key=lambda x: (-x[1], x[0]))[:3]
+        want += [(q, name, v, n) for v, n in top]
+    assert sorted(tuple(r) for r in got) == sorted(want)
+
+    got = paged_scan(
+        spark, idx.blocks, plain, attrs, "grp", page_size=4, n_pages=3,
+        sort_type="string",
+    ).collect()
+    want = []
+    for q in ks:
+        m = sorted((grp[d], d) for d in cand[q])[:12]
+        want += [(q, i // 4, i % 4 + 1, d, g) for i, (g, d) in enumerate(m)]
+    assert sorted(
+        (r["query_id"], r["page"], r["pos"], r["doc_id"], r["sort_value"]) for r in got
+    ) == sorted(want)
+
+    got = function_sort_topk(
+        spark, idx.blocks, plain, attrs, "div(n_chars,10)", k=5, descending=False,
+    ).collect()
+    want = []
+    for q in ks:
+        m = sorted((round(n_chars[d] / 10, 6), d) for d in cand[q])[:5]
+        want += [(q, i + 1, d, round(v, 4)) for i, (v, d) in enumerate(m)]
+    assert sorted((r["query_id"], r["rank"], r["doc_id"], r["sort_v"]) for r in got) == sorted(want)
