@@ -48,6 +48,7 @@ from spcht_spark.index.query import (
     decode_blocks,
     sql_double,
     sql_esc,
+    sql_frames,
     sql_ident,
     sql_in,
     sql_map,
@@ -798,7 +799,7 @@ def boolean_matches_ast(
     if need_fields:
         # attr-clause queries join candidate rows against the attrs
         # projection before the predicate — the rare path keeps ops
-        g = spark_s.sql(g_sql, postings=postings, qt=query_terms)
+        g = sql_frames(spark_s, g_sql, postings=postings, qt=query_terms)
         g = g.join(
             attrs.selectExpr("doc_id", *map(sql_ident, need_fields)), "doc_id", "left"
         )
@@ -806,7 +807,8 @@ def boolean_matches_ast(
     else:
         # hot path: scoring agg + predicate + projection in the SAME
         # statement — one plan analysis end to end
-        admissible = spark_s.sql(
+        admissible = sql_frames(
+            spark_s,
             "SELECT query_id, doc_id, score FROM "
             f"({g_sql}) WHERE {sql_esc(pred_sql)}",
             postings=postings,

@@ -78,10 +78,7 @@ def terms_component(
 ) -> DataFrame:
     """(rank, term, df, cf) — the dictionary under ``prefix`` ordered
     (df desc, term asc), Solr TermsComponent semantics."""
-    # a projection, never the caller's frame itself: spark.sql drops the
-    # temp view it registers for a frame argument, and dropping a view
-    # uncaches a cached frame with the same plan (the dictionary often is)
-    d = dictionary.select("term", "df", "cf")
+    d = dictionary
     if prefix:
         d = d.filter(F.col("term").startswith(prefix))
     return topn(

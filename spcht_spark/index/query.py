@@ -258,6 +258,26 @@ def stats_and_idfs(
     return stats_row, {t: idf_py(n_docs, dfs[t]) for t in terms if t in dfs}
 
 
+def sql_frames(spark: SparkSession, text: str, **frames: DataFrame) -> DataFrame:
+    """``spark.sql(text, **frames)`` that leaves a cached frame cached.
+
+    pyspark's formatter registers each frame as a temp view and drops it
+    with ``catalog.dropTempView``, which uncaches the cache entry whose
+    plan equals the view's. A cached frame therefore goes in under a
+    ``WHERE true``: its rows are still read from the cache and the
+    optimizer drops the filter, but the view's plan is no longer the
+    cached one. (A projection of the same columns would not do: cache
+    lookups see through it.) An uncached frame goes in as it is; the
+    check is one ``storageLevel`` lookup, no DataFrame op."""
+    return spark.sql(
+        text,
+        **{
+            k: df.where("true") if df._jdf.storageLevel().isValid() else df
+            for k, df in frames.items()
+        },
+    )
+
+
 def sql_str(s: str) -> str:
     """Spark SQL string literal. Spark's parser reads ``\\`` as an
     escape character inside literals, so backslashes are doubled before
@@ -362,7 +382,8 @@ def score_postings(
         # avoid — so large corpora keep the standard shape.
         n = shuffle_parallelism(postings.sparkSession)
         inner = f"SELECT /*+ REPARTITION({n}, query_id) */ * FROM ({inner})"
-    return postings.sparkSession.sql(
+    return sql_frames(
+        postings.sparkSession,
         "SELECT query_id, doc_id, "
         "aggregate(array_sort(collect_list(struct(term, contrib))), "
         "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.contrib) AS score, "
@@ -460,7 +481,8 @@ def topn(
         )
     over = (f"PARTITION BY {', '.join(by)} " if by else "") + f"ORDER BY {order}"
     r = sql_esc(sql_ident(rank))
-    return df.sparkSession.sql(
+    return sql_frames(
+        df.sparkSession,
         f"SELECT {', '.join(sql_esc(sql_ident(c)) for c in out)} FROM ("
         f"SELECT {keep}, row_number() OVER ({over}) AS {r} FROM {src}) "
         f"WHERE {r} <= {lim}",

@@ -41,6 +41,7 @@ from spcht_spark.index.query import (
     apply_cogrouped_cached,
     apply_grouped_cached,
     sql_esc,
+    sql_frames,
     sql_in,
     stats_and_idfs,
     topk,
@@ -97,7 +98,8 @@ def _pinned_scan(
     REPARTITION hint is the same AQE-honored REPARTITION_BY_NUM shape
     ``_pin_groups`` produces."""
     n_shuffle = shuffle_parallelism(spark)
-    return spark.sql(
+    return sql_frames(
+        spark,
         f"SELECT /*+ REPARTITION({n_shuffle}, query_id, shard), BROADCAST(q) */ "
         "term, shard, block_seq, first_doc, last_doc, docs_bin, tfs_bin, "
         f"dls_bin, max_part, query_id, idf, {param}, avgdl "

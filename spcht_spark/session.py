@@ -4,13 +4,32 @@ Local-mode sandbox (single JVM, N threads), but every config here is
 chosen to survive a multi-executor cluster: AQE on (runtime skew-join +
 partition coalescing), Arrow on (all Python UDFs are vectorized), shuffle
 partitions sized to parallelism rather than the 200 default.
+
+The JVM talks to its Python workers over a Unix domain socket, not TCP
+loopback. On loopback a worker waited ~40 ms for its first Arrow batch
+of every task — the delayed-ACK stall of a small write followed by a
+read — and every pandas/Arrow UDF task paid it whatever its input. UDS
+mode skips pyspark's per-connection secret handshake and relies on file
+permissions instead. A socket file takes its mode from the process
+umask, so in the shared default ``/tmp`` a permissive umask would let
+any local user connect and drive a worker; the sockets live in a
+private (0700) directory made per SparkContext instead.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+# pyspark's daemon binds ``<dir>/.<uuid4>.sock``: 43 bytes after the
+# directory, and a socket path has at most 107 bytes (sun_path less NUL).
+_UDS_NAME_BYTES = 43
+_UDS_PATH_MAX = 107
 
 
 def shuffle_parallelism(spark: SparkSession) -> int:
@@ -42,6 +61,19 @@ def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
     except OSError:
         pass
     return "1g"
+
+
+def private_socket_dir() -> str:
+    """A fresh 0700 directory for the worker sockets, removed at exit.
+
+    ``mkdtemp`` creates it 0700 whatever the umask. Under a temp root
+    too long for the socket path limit it falls back to ``/tmp``."""
+    root = tempfile.gettempdir()
+    if len(os.path.join(root, "spcht-uds-xxxxxxxx")) + _UDS_NAME_BYTES > _UDS_PATH_MAX:
+        root = "/tmp"
+    path = tempfile.mkdtemp(prefix="spcht-uds-", dir=root)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def get_spark(
@@ -124,6 +156,13 @@ def get_spark(
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         .config("spark.ui.enabled", "false")
     )
+    # Static confs: they only take effect with a new context, so an
+    # existing one gets no new socket dir (see the module docstring for
+    # why the dir is private).
+    if SparkContext._active_spark_context is None:
+        builder = builder.config("spark.python.unix.domain.socket.enabled", "true").config(
+            "spark.python.unix.domain.socket.dir", private_socket_dir()
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

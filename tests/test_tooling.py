@@ -9,11 +9,18 @@ own mixins call (``_jdf.mapInPandas(col, bool, profile)``,
 ``_build_java_profile`` and ``_jgd.flatMapGroupsInPandas``). Those are
 private API, written against the pyspark version ``pyproject.toml``
 pins; if an upgrade renames or re-signs them, these tests say so by
-name instead of letting a query fail deep inside py4j."""
+name instead of letting a query fail deep inside py4j.
+
+Also here: the session's Python workers talk to the JVM over a Unix
+socket in a private directory, and the pyspark worker still makes the
+per-task ``importlib.invalidate_caches()`` call that the package's zip
+invalidation gate exists for."""
 
 from __future__ import annotations
 
 import inspect
+import os
+import stat
 import tomllib
 from pathlib import Path
 from types import SimpleNamespace
@@ -21,8 +28,9 @@ from types import SimpleNamespace
 import pyspark
 import pytest
 
+from spcht_spark import session
 from spcht_spark.index import query, wand
-from spcht_spark.session import default_driver_memory, shuffle_parallelism
+from spcht_spark.session import default_driver_memory, get_spark, shuffle_parallelism
 
 
 def _pinned_pyspark() -> str:
@@ -86,6 +94,55 @@ def test_jvm_entry_points_match_pinned_pyspark(spark):
     assert df._build_java_profile(None) is None, _drift(
         "_build_java_profile(None) no longer returns None"
     )
+
+
+def test_worker_setup_still_invalidates_import_caches_per_task():
+    """``spcht_spark._install_zip_invalidation_gate`` exists because the
+    worker calls ``importlib.invalidate_caches()`` in
+    ``setup_spark_files`` at the start of every task."""
+    from pyspark import worker_util
+
+    src = inspect.getsource(worker_util.setup_spark_files)
+    assert "importlib.invalidate_caches()" in src, (
+        f"pyspark {pyspark.__version__}'s setup_spark_files no longer calls "
+        f"importlib.invalidate_caches() (pyspark {PINNED} did, at every "
+        "task): spcht_spark._install_zip_invalidation_gate is dead code, "
+        "delete it"
+    )
+
+
+def test_python_workers_use_a_private_unix_socket(spark, monkeypatch):
+    # defined here so cloudpickle ships it by value: the workers cannot
+    # import this test module
+    def worker_env(batches):
+        import os
+
+        import pandas as pd
+
+        for _ in batches:
+            yield pd.DataFrame({
+                "uds": [os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED", "")],
+                "sock_dir": [os.environ.get("PYTHON_WORKER_FACTORY_SOCK_DIR", "")],
+            })
+
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.python.unix.domain.socket.enabled") == "true"
+    sock_dir = conf.get("spark.python.unix.domain.socket.dir")
+    rows = spark.range(2, numPartitions=2).mapInPandas(
+        worker_env, "uds string, sock_dir string"
+    ).collect()
+    assert {(r["uds"].lower(), r["sock_dir"]) for r in rows} == {("true", sock_dir)}
+    # UDS mode skips pyspark's secret handshake: the dir's mode is the auth
+    assert stat.S_IMODE(os.stat(sock_dir).st_mode) == 0o700
+    # pyspark binds <dir>/.<uuid4>.sock; sun_path holds 107 bytes + NUL
+    assert len(os.fsencode(sock_dir)) + len("/.00000000-0000-0000-0000-000000000000.sock") <= 107
+
+    def no_new_dir():
+        raise AssertionError("get_spark made a socket dir for an existing context")
+
+    monkeypatch.setattr(session, "private_socket_dir", no_new_dir)
+    again = get_spark("spcht_spark_tests", cores=8, shuffle_partitions=8)
+    assert again.sparkContext.getConf().get("spark.python.unix.domain.socket.dir") == sock_dir
 
 
 def test_mixins_still_make_the_mirrored_calls():
