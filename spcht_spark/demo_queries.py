@@ -392,10 +392,7 @@ def q_index_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % 5 == 0) | (F.col("doc_id") % 20 == 3)
     )
     base_idx = build_index(spark, base, tokenizer="ws", shard_span=_INDEX_SHARD_SPAN)
-    idx = update_index(
-        spark, base_idx, changed, doomed.select("doc_id"),
-        tokenizer="ws", shard_span=_INDEX_SHARD_SPAN,
-    )
+    idx = update_index(spark, base_idx, changed, doomed.select("doc_id"))
     qs = [(qid, ts, DOC_K + 5) for qid, ts in DOC_QUERIES]
     out = exact_topk(spark, idx.blocks, idx.doclens, idx.dictionary, idx.stats, qs)
     return _rerank_rounded(out)
@@ -4335,10 +4332,7 @@ def q_index_delete_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spcht_spark.index.update import delete_by_query
 
     idx = _persisted_index(spark, sf_dir)
-    idx2 = delete_by_query(
-        spark, idx, _DELETE_Q, tokenizer="ws",
-        shard_span=_INDEX_SHARD_SPAN,
-    )
+    idx2 = delete_by_query(spark, idx, _DELETE_Q)
     qs = [(qid, ts, DOC_K) for qid, ts in _DELETE_PROBES]
     out = exact_topk(
         spark, idx2.blocks, idx2.doclens, idx2.dictionary, idx2.stats, qs

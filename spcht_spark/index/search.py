@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from spcht_spark.index.boolean import (
     ast_terms,
     boolean_matches,
+    boolean_matches_ast,
     boolean_topk,
     expand_fuzzy_ast,
     expand_synonyms_ast,
@@ -37,7 +38,7 @@ from spcht_spark.index.boolean import (
 from spcht_spark.index.build import IndexTables
 from spcht_spark.index.facets import facet_counts, field_stats
 from spcht_spark.index.highlight import highlight
-from spcht_spark.index.query import topk
+from spcht_spark.index.query import stats_and_idfs, topk
 
 
 @dataclass
@@ -197,25 +198,20 @@ def search(
             default_op=request.q_op,
         )
     else:
-        matches = boolean_matches(
-            spark,
-            index.blocks,
-            index.doclens,
-            index.dictionary,
-            index.stats,
-            [(query_id, request.q, request.k)],
-            doc_filter=fq,
-            attrs=attrs,
-            analyzer=index.analyzer,
-            synonyms=request.synonyms,
-            default_op=request.q_op,
+        # the AST parsed and expanded above, and one stats/idf job whose
+        # n_docs also proves a small corpus to topk (no salt stage)
+        stats_row, idfs = stats_and_idfs(index.dictionary, index.stats, terms)
+        matches = boolean_matches_ast(
+            spark, index.blocks, index.dictionary, index.stats,
+            [(query_id, ast, request.k)], doc_filter=fq, attrs=attrs,
+            stats_row=stats_row, idfs=idfs,
         )
         # one match pass feeds hits + facets + stats (Solr's shared DocSet)
         matches = matches.localCheckpoint(eager=False)
         if request.sort:
             hits = _sorted_page(matches, attrs, request.sort, n_fetch)
         else:
-            hits = topk(matches, {query_id: n_fetch})
+            hits = topk(matches, {query_id: n_fetch}, n_docs=stats_row["n_docs"])
     if request.rerank:
         from spcht_spark.index.rerank import rerank_topk
 

@@ -25,6 +25,10 @@ doc), so a replayed micro-batch after a crash re-converges to the same
 bytes; the batch id recorded per merge in the work-order manifest makes
 replays observable.
 
+The sink takes no build parameters: every merge reads the shard span,
+tokenizer and analyzer from the committed index's manifest, so a stream
+can never shard or tokenize a batch unlike the index it feeds.
+
 Delta feed contract (the poll-diff CDC output shape,
 spcht_spark.streaming.incremental): rows ``(doc_id long, content
 string, op string)`` with op ∈ {'upsert', 'delete'}.
@@ -35,18 +39,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from spcht_spark.index.build import DEFAULT_SHARD_SPAN
 
-
-def apply_delta_batch(
-    workdir: str,
-    batch: DataFrame,
-    batch_id: int,
-    tokenizer: str = "arrow",
-    shard_span: int = DEFAULT_SHARD_SPAN,
-) -> None:
+def apply_delta_batch(workdir: str, batch: DataFrame, batch_id: int) -> None:
     """Merge one micro-batch of (doc_id, content, op) rows into the
-    committed index at ``workdir`` — the foreachBatch body.
+    committed index at ``workdir`` — the foreachBatch body; the build
+    parameters come from the index (:func:`apply_update`).
 
     Within one batch an upsert wins over a delete for the same doc
     (apply_update deletes old postings before re-inserting anyway);
@@ -70,23 +67,13 @@ def apply_delta_batch(
     )
     from spcht_spark.index.update import apply_update
 
-    apply_update(
-        spark,
-        workdir,
-        changed,
-        deleted,
-        tokenizer=tokenizer,
-        shard_span=shard_span,
-        run_id=f"stream-batch-{batch_id}",
-    )
+    apply_update(spark, workdir, changed, deleted, run_id=f"stream-batch-{batch_id}")
 
 
 def stream_index_updates(
     deltas: DataFrame,
     workdir: str,
     checkpoint_dir: str,
-    tokenizer: str = "arrow",
-    shard_span: int = DEFAULT_SHARD_SPAN,
     trigger_once: bool = True,
 ):
     """Attach the index-merge sink to a streaming deltas DataFrame
@@ -96,9 +83,7 @@ def stream_index_updates(
     pass False for a continuously-running maintainer."""
     writer = (
         deltas.writeStream.foreachBatch(
-            lambda b, bid: apply_delta_batch(
-                workdir, b, bid, tokenizer=tokenizer, shard_span=shard_span
-            )
+            lambda b, bid: apply_delta_batch(workdir, b, bid)
         )
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")

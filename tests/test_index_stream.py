@@ -100,9 +100,7 @@ def test_stream_index_updates_equals_full_rebuild(spark, small_corpus, tmp_path)
         .option("maxFilesPerTrigger", 1)
         .json(str(feed))
     )
-    q = stream_index_updates(
-        deltas, workdir, str(tmp_path / "ckpt"), shard_span=SPAN,
-    )
+    q = stream_index_updates(deltas, workdir, str(tmp_path / "ckpt"))
     q.awaitTermination(300)
 
     got = load_index(spark, workdir)

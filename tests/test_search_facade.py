@@ -107,6 +107,40 @@ def test_grouping_components_share_the_match_set(
         assert r["grp_n"] == exp_repo[r["grp"]]
 
 
+def test_facet_request_ranks_unsalted_below_the_salt_gate(
+    spark, small_corpus, small_index
+):
+    """A facet request ranks its shared match set with the corpus size
+    its one stats/idf job proved: below SALT_MIN_DOCS the hits plan has
+    no salt pre-window, and the page equals the salted ranking of the
+    same match set (boolean_matches + topk without n_docs)."""
+    from spcht_spark.index.boolean import boolean_matches
+    from spcht_spark.index.query import SALT_MIN_DOCS, topk
+
+    q, k = "return OR import", 10
+    assert small_index.stats.collect()[0]["n_docs"] < SALT_MIN_DOCS
+    resp = search(
+        spark, small_index, small_corpus,
+        SearchRequest(q=q, k=k, facets={"lang": F.col("lang")}),
+    )
+    plan = resp.hits._jdf.queryExecution().analyzed().toString()
+    assert "pmod(xxhash64(" not in plan
+    salted = topk(
+        boolean_matches(
+            spark, small_index.blocks, small_index.doclens,
+            small_index.dictionary, small_index.stats, [("q0", q, k)],
+        ),
+        {"q0": k},
+    ).where(f"rank <= {k}")
+    assert "pmod(xxhash64(" in salted._jdf.queryExecution().analyzed().toString()
+    rows = lambda df: sorted(
+        tuple(r) for r in df.select("query_id", "rank", "doc_id", "score").collect()
+    )
+    assert len(rows(resp.hits)) == k
+    assert rows(resp.hits) == rows(salted)
+    assert resp.facets.collect()
+
+
 def test_cli_search_verb(spark, tmp_path):
     from spcht_spark.cli import main as cli_main
     from spcht_spark.corpus import generate_corpus
