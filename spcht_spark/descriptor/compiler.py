@@ -1,10 +1,14 @@
-"""Spcht descriptor → Column-expression compiler.
+"""Spcht descriptor → SQL-expression compiler.
 
 Semantics ported 1:1 from the reference's per-record interpreter
-(file:line cites inline); execution is columnar: every node becomes an
-``array<struct<s,p,o,u,tag>>`` expression; all node arrays of a record
-are concatenated and exploded in ONE pass over the scan (no per-node
-re-scan, no per-row Python except the uuid5 Arrow UDF).
+(file:line cites inline); execution is columnar: every node renders to
+ONE Spark SQL expression of type
+``array<struct<s,p,o,u,lang,datatype>>`` over the record schema; all
+node arrays of a record are concatenated and exploded in ONE pass over
+the scan (no per-node re-scan, no per-row Python — the uuid5 is a pure
+expression, and the MARC parse, when a node reads MARC, is the only
+Python stage). The driver cost is a fixed number of DataFrame calls per
+descriptor, whatever its node count: the text is parsed by Spark once.
 
 Pipeline order per node — _recursion_node, SpchtCore.py:498-600:
 extract → static_field → alternatives → match → if → cut/replace/
@@ -15,28 +19,31 @@ exits (extract empty / match empty / if false / mapping empty).
 Falsiness parity: the reference's ``if final_value:`` treats scalar 0 /
 "" as missing (extract_dictmarc_value, SpchtCore.py:1218-1229) — lists
 keep falsy *elements* but an empty list is missing.
+
+Every descriptor literal enters the text through ``index.query``'s
+``sql_str``/``sql_map``/``sql_double``/``sql_ident``, so it evaluates to
+exactly the descriptor's value.
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import re
 from typing import Any
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-TRIPLE_ELEM = "struct<s:string,p:string,o:string,u:boolean,tag:string>"
+from spcht_spark.index.query import sql_double, sql_ident, sql_map, sql_str
 
-
-def _empty_triples() -> Column:
-    return F.array().cast(f"array<{TRIPLE_ELEM}>")
-
-
-def _empty_str_arr() -> Column:
-    return F.array().cast("array<string>")
+TRIPLE_ELEM = (
+    "struct<s:string,p:string,o:string,u:boolean,lang:string,datatype:string>"
+)
+_EMPTY_TRIPLES = f"CAST(array() AS array<{TRIPLE_ELEM}>)"
+_EMPTY_STR_ARR = "CAST(array() AS array<string>)"
+_NULL_STR = "CAST(NULL AS STRING)"
 
 TRIPLES_SCHEMA = T.StructType(
     [
@@ -57,31 +64,44 @@ _BOOL_OPS = {
     "<": "<", ">": ">", "<=": "<=", ">=": ">=", "!=": "!=", "exi": "exi",
 }
 
+# Lambda variables: a lambda variable shadows any column (and any outer
+# lambda variable) of the same name, case-insensitively, so every lambda
+# gets a fresh name that a nested body cannot capture.
+_VAR_IDS = itertools.count()
+
+
+def _var() -> str:
+    return f"_v{next(_VAR_IDS)}"
+
+
+def _lit(v) -> str:
+    """String literal, or a typed NULL for ``None``."""
+    return _NULL_STR if v is None else sql_str(str(v))
+
+
+def _case(cond: str, then: str, other: str) -> str:
+    return f"CASE WHEN {cond} THEN {then} ELSE {other} END"
+
 
 # NAMESPACE_URL bytes (RFC 4122): 6ba7b811-9dad-11d1-80b4-00c04fd430c8
 _NS_URL_HEX = "6ba7b8119dad11d180b400c04fd430c8"
 
 
-def _uuid5_expr(name: Column) -> Column:
-    """RFC-4122 v5 uuid as a PURE Column expression (uuid_generator
-    parity, SpchtCore.py:1136-1145): sha1(namespace ‖ name) with the
-    version nibble forced to 5 and the variant nibble to 10xx. Staying
+def _uuid5_expr(name: str) -> str:
+    """RFC-4122 v5 uuid as a PURE expression (uuid_generator parity,
+    SpchtCore.py:1136-1145): sha1(namespace ‖ name) with the version
+    nibble forced to 5 and the variant nibble to 10xx. Staying
     expression-side lets it nest inside higher-order lambdas and keeps
     the whole descriptor pipeline JVM-only."""
-    h = F.sha1(
-        F.concat(F.to_binary(F.lit(_NS_URL_HEX), F.lit("hex")), F.encode(name, "UTF-8"))
+    h = f"sha1(concat(to_binary('{_NS_URL_HEX}', 'hex'), encode({name}, 'UTF-8')))"
+    variant = (
+        f"element_at(array('8', '9', 'a', 'b'), "
+        f"(CAST(conv(substring({h}, 17, 1), 16, 10) AS INT) % 4) + 1)"
     )
-    variant = F.element_at(
-        F.array(F.lit("8"), F.lit("9"), F.lit("a"), F.lit("b")),
-        (F.conv(F.substring(h, 17, 1), 16, 10).cast("int") % 4) + 1,
-    )
-    return F.concat_ws(
-        "-",
-        F.substring(h, 1, 8),
-        F.substring(h, 9, 4),
-        F.concat(F.lit("5"), F.substring(h, 14, 3)),
-        F.concat(variant, F.substring(h, 18, 3)),
-        F.substring(h, 21, 12),
+    return (
+        f"concat_ws('-', substring({h}, 1, 8), substring({h}, 9, 4), "
+        f"concat('5', substring({h}, 14, 3)), concat({variant}, substring({h}, 18, 3)), "
+        f"substring({h}, 21, 12))"
     )
 
 
@@ -133,24 +153,29 @@ def _resolve_refs(node: dict, base: str) -> dict:
 
 class Ctx:
     """Field access abstraction: row columns (main record) or struct
-    elements (sub_data recursion). Missing fields are a compile-time
-    fact (schema known) → empty array, mirroring SpchtCore.py:1171-1174."""
+    elements (sub_data recursion), each rendered as SQL text. Missing
+    fields are a compile-time fact (schema known) → empty array,
+    mirroring SpchtCore.py:1171-1174."""
 
-    def __init__(self, fields: dict[str, T.DataType], get, marc: Column | None = None):
+    def __init__(self, fields: dict[str, T.DataType], get, marc: str | None = None):
         self.fields = fields
-        self.get = get  # name -> Column
-        self.marc = marc  # parsed MARC array (sources.marc), optional
+        self.get = get  # name -> SQL text
+        self.marc = marc  # parsed MARC array (sources.marc) as SQL text, optional
 
     @classmethod
-    def for_row(cls, schema: T.StructType, marc: Column | None = None) -> "Ctx":
-        return cls({f.name: f.dataType for f in schema.fields}, F.col, marc)
+    def for_row(cls, schema: T.StructType, marc: str | None = None) -> "Ctx":
+        return cls({f.name: f.dataType for f in schema.fields}, sql_ident, marc)
 
     @classmethod
-    def for_struct(cls, stype: T.StructType, expr: Column) -> "Ctx":
-        return cls({f.name: f.dataType for f in stype.fields}, lambda n: expr[n])
+    def for_struct(cls, stype: T.StructType, var: str) -> "Ctx":
+        """Fields of the struct bound to lambda variable ``var``."""
+        return cls(
+            {f.name: f.dataType for f in stype.fields},
+            lambda n: f"{var}.{sql_ident(n)}",
+        )
 
     def _resolve(self, source: str, field: str):
-        """→ (Column, DataType) or None if statically absent."""
+        """→ (SQL text, DataType) or None if statically absent."""
         if source == "tree":
             keys = [k.strip() for k in field.split(">")]
             dt: Any = T.StructType(
@@ -160,7 +185,7 @@ class Ctx:
             for k in keys:
                 if not isinstance(dt, T.StructType) or k not in dt.fieldNames():
                     return None
-                col = self.get(k) if col is None else col[k]
+                col = self.get(k) if col is None else f"{col}.{sql_ident(k)}"
                 dt = dt[k].dataType
             return col, dt
         # source == "dict" (marc handled separately by the marc module)
@@ -168,20 +193,19 @@ class Ctx:
             return None
         return self.get(field), self.fields[field]
 
-    def raw(self, source: str, field: str) -> Column:
+    def raw(self, source: str, field: str) -> str:
         """Normalized value list: array<string>, empty = missing.
         Scalar falsiness (0/""/null → missing) per SpchtCore.py:1218."""
         if source == "marc":
             if self.marc is None:
-                return _empty_str_arr()
+                return _EMPTY_STR_ARR
             from spcht_spark.sources.marc import marc_values
 
-            return F.coalesce(marc_values(self.marc, field), _empty_str_arr())
+            return f"coalesce({marc_values(self.marc, field)}, {_EMPTY_STR_ARR})"
         hit = self._resolve(source, field)
         if hit is None:
-            return _empty_str_arr()
-        col, dt = hit
-        return _leaf_to_str_arr(col, dt)
+            return _EMPTY_STR_ARR
+        return _leaf_to_str_arr(*hit)
 
     def raw_struct_arr(self, source: str, field: str):
         """array<struct> for sub_data, or None if absent/not array-of-struct."""
@@ -194,237 +218,203 @@ class Ctx:
         return None
 
 
-def _leaf_to_str_arr(col: Column, dt: T.DataType) -> Column:
+def _leaf_to_str_arr(col: str, dt: T.DataType) -> str:
     if isinstance(dt, T.ArrayType):
         inner = dt.elementType
+        if isinstance(inner, (T.StructType, T.MapType, T.ArrayType)):
+            return _EMPTY_STR_ARR  # nested non-scalar: not a value list
+        v = _var()
         if isinstance(inner, T.BooleanType):
-            arr = F.transform(col, lambda x: F.when(x, "True").otherwise("False"))
-        elif isinstance(inner, (T.StructType, T.MapType, T.ArrayType)):
-            return _empty_str_arr()  # nested non-scalar: not a value list
+            each = _case(v, "'True'", "'False'")
         else:
-            arr = F.transform(col, lambda x: x.cast("string"))
-        return F.coalesce(arr, _empty_str_arr())
+            each = f"CAST({v} AS STRING)"
+        return f"coalesce(transform({col}, {v} -> {each}), {_EMPTY_STR_ARR})"
+    if isinstance(dt, (T.StructType, T.MapType)):
+        return _EMPTY_STR_ARR
     if isinstance(dt, T.BooleanType):
         # Python str(True) == "True"; False is falsy → missing
-        return F.when(col.isNull() | ~col, _empty_str_arr()).otherwise(
-            F.array(F.lit("True"))
-        )
+        return _case(f"{col} IS NULL OR NOT {col}", _EMPTY_STR_ARR, "array('True')")
     if isinstance(dt, T.NumericType):
-        return F.when(col.isNull() | (col == 0), _empty_str_arr()).otherwise(
-            F.array(col.cast("string"))
-        )
-    if isinstance(dt, T.StringType):
-        return F.when(col.isNull() | (col == ""), _empty_str_arr()).otherwise(F.array(col))
-    if isinstance(dt, (T.StructType, T.MapType)):
-        return _empty_str_arr()
-    return F.when(col.isNull(), _empty_str_arr()).otherwise(F.array(col.cast("string")))
+        missing, value = f"{col} IS NULL OR {col} = 0", f"CAST({col} AS STRING)"
+    elif isinstance(dt, T.StringType):
+        missing, value = f"{col} IS NULL OR {col} = ''", col
+    else:
+        missing, value = f"{col} IS NULL", f"CAST({col} AS STRING)"
+    return _case(missing, _EMPTY_STR_ARR, f"array({value})")
 
 
 # ------------------------------------------------------ pipeline pieces
 
-def _apply_match(arr: Column, pattern: str | None) -> Column:
+def _apply_match(arr: str, pattern: str | None) -> str:
     """P5 `match` (re.search semantics = unanchored rlike), SpchtCore.py:645-683."""
     if pattern is None:
         return arr
-    return F.filter(arr, lambda x: x.rlike(pattern))
+    v = _var()
+    return f"filter({arr}, {v} -> {v} RLIKE {sql_str(pattern)})"
 
 
-def _post_one(x: Column, node: dict, prefix: str = "") -> Column:
+def _post_one(x: str, node: dict, prefix: str = "") -> str:
     """P6/P7 cut/replace + prepend/append on one element (SpchtCore.py:685-721)."""
     cut = node.get(f"{prefix}cut")
     rep = node.get(f"{prefix}replace", "")
     pre = node.get(f"{prefix}prepend", "")
     app = node.get(f"{prefix}append", "")
-    y = F.regexp_replace(x, cut, rep) if cut else x
+    y = f"regexp_replace({x}, {sql_str(cut)}, {sql_str(rep)})" if cut else x
     if pre or app:
-        y = F.concat(F.lit(pre), y, F.lit(app))
+        y = f"concat({sql_str(pre)}, {y}, {sql_str(app)})"
     return y
 
 
-def _apply_post(arr: Column, node: dict, prefix: str = "") -> Column:
+def _apply_post(arr: str, node: dict, prefix: str = "") -> str:
     if any(f"{prefix}{k}" in node for k in ("cut", "prepend", "append")):
-        return F.transform(arr, lambda x: _post_one(x, node, prefix))
+        v = _var()
+        return f"transform({arr}, {v} -> {_post_one(v, node, prefix)})"
     return arr
 
 
-def _map_one(x: Column, mapping: dict, settings: dict) -> Column:
+def _map_one(x: str, mapping: dict, settings: dict) -> str:
     """Mapped value for one element or NULL if unmatched (pre-inherit)."""
-    casesens = settings.get("$casesens", True)
+    if not mapping:
+        return _NULL_STR
     if settings.get("$regex", False):
-        expr = F.lit(None).cast("string")
         # first pattern wins in insertion order (SpchtCore.py:765-776)
-        for k, v in reversed(list(mapping.items())):
-            expr = F.when(x.rlike(str(k)), F.lit(str(v))).otherwise(expr)
-        return expr
-    items = {(str(k).lower() if not casesens else str(k)): str(v) for k, v in mapping.items()}
-    if not items:
-        return F.lit(None).cast("string")
-    map_lit = F.create_map(*[F.lit(s) for kv in items.items() for s in kv])
-    key = F.lower(x) if not casesens else x
-    return F.element_at(map_lit, key)
+        arms = " ".join(
+            f"WHEN {x} RLIKE {sql_str(k)} THEN {sql_str(v)}" for k, v in mapping.items()
+        )
+        return f"CASE {arms} ELSE {_NULL_STR} END"
+    casesens = settings.get("$casesens", True)
+    items = {(str(k) if casesens else str(k).lower()): str(v) for k, v in mapping.items()}
+    key = x if casesens else f"lower({x})"
+    return f"element_at({sql_map(items.items(), sql_str)}, {key})"
 
 
-def _apply_mapping(arr: Column, mapping: dict | None, settings: dict | None) -> Column:
+def _apply_mapping(arr: str, mapping: dict | None, settings: dict | None) -> str:
     """P10 `mapping` with $default/$inherit/$casesens/$regex
     (SpchtCore.py:723-792). $default fires only when NOTHING matched."""
-    if not isinstance(mapping, dict) or mapping is None:
+    if not isinstance(mapping, dict):
         return arr
     settings = settings or {}
-    inherit = bool(settings.get("$inherit", False))
-    mapped = F.transform(
-        arr,
-        (lambda x: F.coalesce(_map_one(x, mapping, settings), x))
-        if inherit
-        else (lambda x: _map_one(x, mapping, settings)),
-    )
-    result = F.filter(mapped, lambda x: x.isNotNull())
+    v, w = _var(), _var()
+    one = _map_one(v, mapping, settings)
+    if settings.get("$inherit", False):
+        one = f"coalesce({one}, {v})"
+    result = f"filter(transform({arr}, {v} -> {one}), {w} -> {w} IS NOT NULL)"
     if "$default" in settings:
-        default = str(settings["$default"])
-        result = F.when(F.size(result) == 0, F.array(F.lit(default))).otherwise(result)
+        result = _case(
+            f"size({result}) = 0", f"array({sql_str(settings['$default'])})", result
+        )
     return result
 
 
-def _compile_if(node: dict, ctx: Ctx) -> Column:
+def _num(v):
+    try:
+        return int(v)
+    except (TypeError, ValueError):
+        try:
+            return float(v)
+        except (TypeError, ValueError):
+            return None
+
+
+def _compile_if(node: dict, ctx: Ctx) -> str:
     """P12 `if_` gate (_handle_if, SpchtCore.py:941-1056), incl. the
-    infinite-negativity rule for missing fields (:981-987)."""
+    infinite-negativity rule for missing fields (:981-987). A value
+    that reads as a number compares numerically: the element is
+    ``try_cast`` to DOUBLE (NULL → no match)."""
     cond = _BOOL_OPS.get(node["if_condition"])
     if cond is None:
-        return F.lit(False)  # "if your comparator is false nothing can be true"
+        return "false"  # "if your comparator is false nothing can be true"
     raw = ctx.raw(node.get("source", "dict"), node["if_field"])
-    raw_empty = F.size(raw) == 0
+    raw_empty = f"size({raw}) = 0"
     if cond == "exi":
-        return ~raw_empty
+        return f"NOT ({raw_empty})"
 
     arr = _apply_post(_apply_match(raw, node.get("if_match")), node, "if_")
     if_value = node["if_value"]
+    x = _var()
 
-    def _num(v):
-        try:
-            return int(v)
-        except (TypeError, ValueError):
-            try:
-                return float(v)
-            except (TypeError, ValueError):
-                return None
+    def cmp(v, op: str) -> str:
+        n = _num(v)
+        if n is None:
+            return f"{x} {op} {sql_str(str(v))}"
+        return f"try_cast({x} AS DOUBLE) {op} {sql_double(float(n))}"
+
+    def exists(pred: str) -> str:
+        return f"coalesce(exists({arr}, {x} -> {pred}), false)"
 
     if isinstance(if_value, list):
         # == any-of / != none-of (SpchtCore.py:998-1019); ordering ops raise
         if cond not in ("==", "!="):
             raise TypeError("Cannot do greater/lesser than with a list of Values")
-        def eq_any(x):
-            e = F.lit(False)
-            for v in if_value:
-                n = _num(v)
-                if n is not None and not isinstance(v, str):
-                    e = e | (x.try_cast("double") == F.lit(float(n)))
-                elif _num(v) is not None:  # numeric-looking string → coerced
-                    e = e | (x.try_cast("double") == F.lit(float(_num(v))))
-                else:
-                    e = e | (x == F.lit(str(v)))
-            return F.coalesce(e, F.lit(False))
-        hit = F.exists(arr, eq_any)
-        if cond == "==":
-            # Missing if_field → True, mirroring the upstream quirk: the
-            # reference's missing-field gate tests the NORMALIZED condition
-            # against ("=", ">", ">=") (SpchtCore.py:983), but
-            # SPCHT_BOOL_OPS normalizes "=" to "==" (SpchtConstants.py:25),
-            # so "==" never matches the tuple and falls into the
-            # return-True branch. Pinned in test_descriptor_parity.
-            return F.when(raw_empty, F.lit(True)).otherwise(F.coalesce(hit, F.lit(False)))
-        return F.when(raw_empty, F.lit(True)).otherwise(~F.coalesce(hit, F.lit(False)))
+        any_eq = " OR ".join(f"({cmp(v, '=')})" for v in if_value) or "false"
+        hit = exists(f"coalesce({any_eq}, false)")
+        # Missing if_field → True, mirroring the upstream quirk: the
+        # reference's missing-field gate tests the NORMALIZED condition
+        # against ("=", ">", ">=") (SpchtCore.py:983), but
+        # SPCHT_BOOL_OPS normalizes "=" to "==" (SpchtConstants.py:25),
+        # so "==" never matches the tuple and falls into the
+        # return-True branch. Pinned in test_descriptor_parity.
+        return _case(raw_empty, "true", hit if cond == "==" else f"NOT {hit}")
 
-    num = _num(if_value)
     if cond in (">", "<", ">=", "<="):
-        if num is None:
+        if _num(if_value) is None:
             raise TypeError("Cannot compared with non-numbers")
-        op = {
-            ">": lambda a, b: a > b, "<": lambda a, b: a < b,
-            ">=": lambda a, b: a >= b, "<=": lambda a, b: a <= b,
-        }[cond]
-        hit = F.exists(arr, lambda x: F.coalesce(op(x.try_cast("double"), F.lit(float(num))), F.lit(False)))
+        hit = exists(f"coalesce({cmp(if_value, cond)}, false)")
         # missing field: < and <= are vacuously true (infinite negativity)
-        return F.when(raw_empty, F.lit(cond in ("<", "<="))).otherwise(
-            F.coalesce(hit, F.lit(False))
-        )
-    if num is not None:
-        pred = lambda x: F.coalesce(x.try_cast("double") == F.lit(float(num)), F.lit(False))
-    else:
-        pred = lambda x: F.coalesce(x == F.lit(str(if_value)), F.lit(False))
-    hit = F.coalesce(F.exists(arr, pred), F.lit(False))
+        return _case(raw_empty, str(cond in ("<", "<=")).lower(), hit)
     if cond == "==":
         # Missing field → True (upstream quirk, see the list branch above).
-        return F.when(raw_empty, F.lit(True)).otherwise(hit)
+        return _case(raw_empty, "true", exists(f"coalesce({cmp(if_value, '=')}, false)"))
     # "!=": any element unequal → True; empty field → True; all equal → False
-    if num is not None:
-        ne = lambda x: F.coalesce(x.try_cast("double") != F.lit(float(num)), F.lit(True))
-    else:
-        ne = lambda x: F.coalesce(x != F.lit(str(if_value)), F.lit(True))
-    return F.when(raw_empty, F.lit(True)).otherwise(
-        F.coalesce(F.exists(arr, ne), F.lit(False))
-    )
+    return _case(raw_empty, "true", exists(f"coalesce({cmp(if_value, '!=')}, true)"))
 
 
-def _apply_insert_into(arr: Column, node: dict, ctx: Ctx) -> Column:
+def _apply_insert_into(arr: str, node: dict, ctx: Ctx) -> str:
     """P9 `insert_into` (+insert_add_fields): cartesian of value lists ×
     `{}` placeholders, strict (SpchtCore.py:898-939; all_variants
     SpchtUtility.py:96-106; insert_list_into_str SpchtUtility.py:125-165)."""
     template = node["insert_into"]
     n_slots = len(re.findall(r"\{\}", template))
     add_fields = node.get("insert_add_fields", [])
-    n_values = 1 + len(add_fields)
-    if n_values != n_slots:
+    if 1 + len(add_fields) != n_slots:
         # strict mode: every combination returns None → empty result
-        return _empty_str_arr()
+        return _EMPTY_STR_ARR
 
     add_arrs = []
     for spec in add_fields:
         sub = ctx.raw(spec.get("source", node.get("source", "dict")), spec["field"])
         sub = _apply_post(_apply_match(sub, spec.get("match")), spec)
         # empty add-field → [""] (SpchtCore.py:931-933)
-        add_arrs.append(F.when(F.size(sub) == 0, F.array(F.lit(""))).otherwise(sub))
+        add_arrs.append(_case(f"size({sub}) = 0", "array('')", sub))
 
-    fmt = template.replace("%", "%%").replace("{}", "%s")
+    fmt = sql_str(template.replace("%", "%%").replace("{}", "%s"))
 
-    def build(vals: list[Column], remaining: list[Column]) -> Column:
+    def build(vals: list[str], remaining: list[str]) -> str:
         if not remaining:
-            line = F.format_string(fmt, *vals)
             # strict: an empty inserted string kills the combination
-            dead = F.lit(False)
-            for v in vals:
-                dead = dead | (F.length(v) == 0)
-            return F.when(dead, F.array().cast("array<string>")).otherwise(F.array(line))
-        head, *tail = remaining
-        return F.flatten(F.transform(head, lambda v: build(vals + [v], tail)))
+            dead = " OR ".join(f"length({v}) = 0" for v in vals)
+            line = f"format_string({fmt}, {', '.join(vals)})"
+            return _case(dead, _EMPTY_STR_ARR, f"array({line})")
+        v = _var()
+        return f"flatten(transform({remaining[0]}, {v} -> {build(vals + [v], remaining[1:])}))"
 
     return build([], [arr] + add_arrs)
 
 
 def _uuid_name_expr(
     node: dict, ctx: Ctx, key: str = "append_uuid_object_fields"
-) -> tuple[Column, Column]:
+) -> tuple[str, str]:
     """(name string, all-fields-present bool) for append_uuid_*_fields.
     Reproduces str(list-of-SpchtThird) concatenation (SpchtCore.py:1136-1145,
     repr at :1403-1412) — golden vector fbe44eac-… (tests/test_spcht_internals.py:492)."""
-    parts, ok = [], F.lit(True)
+    parts, oks = [], []
     for fieldname in node[key]:
         raw = ctx.raw(node.get("source", "dict"), fieldname)
-        ok = ok & (F.size(raw) > 0)
-        rendered = F.concat(
-            F.lit("["),
-            F.array_join(
-                F.transform(
-                    raw,
-                    lambda x: F.concat(
-                        F.lit('SpchtThird("'), x,
-                        F.lit('",uri=False,language=None,annotation=None)'),
-                    ),
-                ),
-                ", ",
-            ),
-            F.lit("]"),
-        )
-        parts.append(rendered)
-    return F.concat(*parts), ok
+        oks.append(f"size({raw}) > 0")
+        v = _var()
+        third = f"concat('SpchtThird(\"', {v}, '\",uri=False,language=None,annotation=None)')"
+        parts.append(f"concat('[', array_join(transform({raw}, {v} -> {third}), ', '), ']')")
+    return f"concat({', '.join(parts)})", " AND ".join(oks) or "true"
 
 
 def _parse_tag(tag: str | None) -> tuple[str | None, str | None]:
@@ -435,45 +425,41 @@ def _parse_tag(tag: str | None) -> tuple[str | None, str | None]:
     if tag.startswith("@"):
         return tag[1:], None
     if tag.startswith("^^"):
-        return None, tag[2:]
+        return None, tag[2:] or None  # a bare "^^" carries no datatype
     return None, None
 
 
 # ------------------------------------------------------- node compiler
 
-def _mk_triples(objs: Column, predicate: Column, node: dict, subject: Column) -> Column:
-    is_uri = str(node.get("type", "")).lower() == "uri"
+def _mk_triples(objs: str, predicate: str, node: dict, subject: str = _NULL_STR) -> str:
+    """One triple per object; the node's type and tag are literals."""
     lang, dtype = _parse_tag(node.get("tag"))
-    tag = node.get("tag") if (lang or dtype) else None
-    return F.transform(
-        objs,
-        lambda o: F.struct(
-            subject.alias("s"),
-            predicate.alias("p"),
-            o.alias("o"),
-            F.lit(is_uri).alias("u"),
-            F.lit(tag).cast("string").alias("tag"),
-        ),
+    is_uri = str(node.get("type", "")).lower() == "uri"
+    o = _var()
+    return (
+        f"transform({objs}, {o} -> named_struct('s', {subject}, 'p', {predicate}, "
+        f"'o', {o}, 'u', {str(is_uri).lower()}, 'lang', {_lit(lang)}, "
+        f"'datatype', {_lit(dtype)}))"
     )
 
 
-def _alts_raw(node: dict, ctx: Ctx) -> Column:
+def _alts_raw(node: dict, ctx: Ctx) -> str:
     """Main-field extraction with `alternatives` (first non-empty wins,
     SpchtCore.py:549-560)."""
     source = node.get("source", "dict")
     field = ctx.raw(source, node["field"])
-    if "alternatives" in node:
-        cands = [field] + [ctx.raw(source, alt) for alt in node["alternatives"]]
-        picked = _empty_str_arr()
-        for cand in reversed(cands):
-            picked = F.when(F.size(cand) > 0, cand).otherwise(picked)
-        field = picked
-    return field
+    if "alternatives" not in node:
+        return field
+    cands = [field] + [ctx.raw(source, alt) for alt in node["alternatives"]]
+    arms = " ".join(f"WHEN size({c}) > 0 THEN {c}" for c in cands)
+    return f"CASE {arms} ELSE {_EMPTY_STR_ARR} END"
 
 
-def _main_stages(
-    node: dict, ctx: Ctx
-) -> tuple[Column, Column, Column, Column, Column, Column]:
+def _if_ok(node: dict, ctx: Ctx) -> str:
+    return f"({_compile_if(node, ctx)})" if "if_field" in node else "true"
+
+
+def _main_stages(node: dict, ctx: Ctx) -> tuple[str, str, str, str, str, str]:
     """The plain-node main-value pipeline (_recursion_node,
     SpchtCore.py:545-600): (raw, after_match, if_ok, mapped, vals,
     uuid_ok). Shared by compile_node and saveas_table (the latter needs
@@ -481,47 +467,53 @@ def _main_stages(
     if "static_field" in node:
         # static_field replaces extraction entirely (SpchtCore.py:546-547)
         # — `field` may legitimately be absent, so don't resolve it.
-        raw = F.array(F.lit(str(node["static_field"])))
+        raw = f"array({sql_str(node['static_field'])})"
     else:
         raw = _alts_raw(node, ctx)
 
     after_match = _apply_match(raw, node.get("match"))
-    if_ok = _compile_if(node, ctx) if "if_field" in node else F.lit(True)
+    if_ok = _if_ok(node, ctx)
     post = _apply_post(after_match, node)
     mapped = _apply_mapping(post, node.get("mapping"), node.get("mapping_settings"))
 
     vals = mapped
     if "insert_into" in node:
         vals = _apply_insert_into(vals, node, ctx)
-    uuid_ok = F.lit(True)
+    uuid_ok = "true"
     if "append_uuid_object_fields" in node:
         name, uuid_ok = _uuid_name_expr(node, ctx)
-        u = _uuid5_expr(name)
-        vals = F.transform(vals, lambda x: F.concat(x, u))
+        v = _var()
+        vals = f"transform({vals}, {v} -> concat({v}, {_uuid5_expr(name)}))"
     return raw, after_match, if_ok, mapped, vals, uuid_ok
 
 
-def compile_node(node: dict, ctx: Ctx, predicate: str | None = None) -> Column:
-    """One node → array<struct<s,p,o,u,tag>> (s NULL = record subject)."""
+def _main_failed(raw: str, after_match: str, if_ok: str, mapped: str) -> str:
+    """The reference's fallback exits for a plain node."""
+    return (
+        f"size({raw}) = 0 OR size({after_match}) = 0 OR NOT {if_ok} "
+        f"OR size({mapped}) = 0"
+    )
+
+
+def compile_node(node: dict, ctx: Ctx, predicate: str | None = None) -> str:
+    """One node → SQL text of an array<struct<s,p,o,u,lang,datatype>>
+    (s NULL = record subject)."""
     predicate = node.get("predicate", predicate)
-    pred_col = F.lit(predicate)
 
     fallback = node.get("fallback")
-    fb = (
-        compile_node(fallback, ctx, predicate)  # fallback inherits predicate
-        if fallback
-        else _empty_triples()
-    )
+    # fallback inherits predicate
+    fb = compile_node(fallback, ctx, predicate) if fallback else _EMPTY_TRIPLES
 
     if "joined_value" in node or "joined_field" in node:
         main = _compile_joined(node, ctx, predicate)
-        return F.when(F.size(main) == 0, fb).otherwise(main)
+        return _case(f"size({main}) = 0", fb, main)
 
     if "sub_data" in node:
         return _compile_sub_data(node, ctx, fb)
 
     raw, after_match, if_ok, mapped, vals, uuid_ok = _main_stages(node, ctx)
 
+    pred = _lit(predicate)
     if "append_uuid_predicate_fields" in node:
         # Documented descriptor key (SpchtSchema.json:193: "adds to the
         # end of the predicate value", all fields required) — the
@@ -529,111 +521,75 @@ def compile_node(node: dict, ctx: Ctx, predicate: str | None = None) -> Column:
         # (SpchtCore.py:1311) and we apply it symmetrically to
         # append_uuid_object_fields (:579-580).
         pname, p_ok = _uuid_name_expr(node, ctx, "append_uuid_predicate_fields")
-        pred_col = F.concat(pred_col, _uuid5_expr(pname))
-        uuid_ok = uuid_ok & p_ok
+        pred = f"concat({pred}, {_uuid5_expr(pname)})"
+        uuid_ok = f"({uuid_ok}) AND ({p_ok})"
 
-    own = _mk_triples(vals, pred_col, node, F.lit(None).cast("string"))
+    own = _mk_triples(vals, pred, node)
 
     if "sub_nodes" in node:
         # parent value must be singular; children's subject = parent value
         # AFTER insert_into/append_uuid — the reference hands
         # _handle_sub_node the fully post-processed main_value
         # (SpchtCore.py:578-600), so `vals`, not `mapped`.
-        parent_ok = F.size(vals) == 1
-        sub_subject = F.element_at(vals, 1)
-        subs = [
-            F.transform(
-                compile_node(child, ctx),
-                lambda t: F.struct(
-                    F.coalesce(t["s"], sub_subject).alias("s"),
-                    t["p"].alias("p"), t["o"].alias("o"),
-                    t["u"].alias("u"), t["tag"].alias("tag"),
-                ),
+        sub_subject = f"element_at({vals}, 1)"
+        subs = []
+        for child in node["sub_nodes"]:
+            t = _var()
+            subs.append(
+                f"transform({compile_node(child, ctx)}, {t} -> named_struct("
+                f"'s', coalesce({t}.s, {sub_subject}), 'p', {t}.p, 'o', {t}.o, "
+                f"'u', {t}.u, 'lang', {t}.lang, 'datatype', {t}.datatype))"
             )
-            for child in node["sub_nodes"]
-        ]
-        own = F.when(parent_ok, F.concat(F.concat(*subs), own)).otherwise(_empty_triples())
+        own = _case(f"size({vals}) = 1", f"concat({', '.join(subs + [own])})", _EMPTY_TRIPLES)
 
-    trigger_fb = (
-        (F.size(raw) == 0)
-        | (F.size(after_match) == 0)
-        | ~if_ok
-        | (F.size(mapped) == 0)
-    )
-    return F.when(trigger_fb, fb).otherwise(F.when(uuid_ok, own).otherwise(_empty_triples()))
+    failed = _main_failed(raw, after_match, if_ok, mapped)
+    return f"CASE WHEN {failed} THEN {fb} WHEN {uuid_ok} THEN {own} ELSE {_EMPTY_TRIPLES} END"
 
 
-def _compile_joined(node: dict, ctx: Ctx, predicate: str | None) -> Column:
+def _compile_joined(node: dict, ctx: Ctx, predicate: str | None) -> str:
     """J1 `joined_map` (SpchtCore.py:794-896): positional zip of field ×
     joined_field; per-position object pipeline + predicate mapping with
     the static predicate as $default; n=1 joined value broadcasts."""
-    source = node.get("source", "dict")
     field = _alts_raw(node, ctx)
-    if_ok = _compile_if(node, ctx) if "if_field" in node else F.lit(True)
-    joined = ctx.raw(source, node["joined_field"])
-
-    n, m = F.size(field), F.size(joined)
-    joined_eff = F.when(
-        (m == 1) & (n != 1), F.array_repeat(F.element_at(joined, 1), n)
-    ).otherwise(joined)
-    ok = if_ok & (n > 0) & (m > 0) & (F.size(joined_eff) == n)
+    joined = ctx.raw(node.get("source", "dict"), node["joined_field"])
+    n, m = f"size({field})", f"size({joined})"
+    joined_eff = _case(
+        f"{m} = 1 AND {n} != 1", f"array_repeat(element_at({joined}, 1), {n})", joined
+    )
+    ok = f"{_if_ok(node, ctx)} AND {n} > 0 AND {m} > 0 AND size({joined_eff}) = {n}"
 
     jm = {str(k): str(v) for k, v in node.get("joined_map", {}).items()}
-    jm_settings: dict = {}
-    is_uri = str(node.get("type", "")).lower() == "uri"
-    lang, dtype = _parse_tag(node.get("tag"))
-    tag = node.get("tag") if (lang or dtype) else None
-    match = node.get("match")
-    mapping = node.get("mapping")
-    msettings = node.get("mapping_settings")
-
-    def per_pair(pair: Column) -> Column:
-        obj0 = pair["f"]
-        keep = obj0.rlike(match) if match else F.lit(True)
-        one = F.array(obj0)
-        if mapping:
-            one = _apply_mapping(one, mapping, msettings)
-        one = _apply_post(one, node)
-        sobj = F.element_at(one, 1)
-        pred = (
-            F.coalesce(_map_one(pair["j"], jm, jm_settings), F.lit(predicate))
-            if jm
-            else F.lit(predicate)
-        )
-        return F.when(
-            keep & (F.size(one) == 1),
-            F.array(
-                F.struct(
-                    F.lit(None).cast("string").alias("s"),
-                    pred.alias("p"), sobj.alias("o"),
-                    F.lit(is_uri).alias("u"), F.lit(tag).cast("string").alias("tag"),
-                )
-            ),
-        ).otherwise(_empty_triples())
-
-    zipped = F.arrays_zip(field.alias("f"), joined_eff.alias("j"))
-    result = F.flatten(F.transform(zipped, per_pair))
-    return F.when(ok, result).otherwise(_empty_triples())
+    f, j = _var(), _var()
+    # per position: the value's mapping/post pipeline (≤1 object); a value
+    # failing `match` yields nothing, before `$default` could fill it in
+    one = f"array({f})"
+    if node.get("mapping"):
+        one = _apply_mapping(one, node["mapping"], node.get("mapping_settings"))
+    one = _apply_post(one, node)
+    pred = f"coalesce({_map_one(j, jm, {})}, {_lit(predicate)})" if jm else _lit(predicate)
+    triples = _mk_triples(one, pred, node)
+    if node.get("match"):
+        triples = _case(f"{f} RLIKE {sql_str(node['match'])}", triples, _EMPTY_TRIPLES)
+    return _case(ok, f"flatten(zip_with({field}, {joined_eff}, ({f}, {j}) -> {triples}))",
+                 _EMPTY_TRIPLES)
 
 
-def _compile_sub_data(node: dict, ctx: Ctx, fb: Column) -> Column:
+def _compile_sub_data(node: dict, ctx: Ctx, fb: str) -> str:
     """sub_data (_handle_sub_data, SpchtCore.py:1092-1126): field is a
     list of records; child nodes run per element, subject unchanged."""
-    if_ok = _compile_if(node, ctx) if "if_field" in node else F.lit(True)
+    if_failed = f"NOT {_if_ok(node, ctx)}"
     hit = ctx.raw_struct_arr(node.get("source", "dict"), node["field"])
     if hit is None:
-        return F.when(~if_ok, fb).otherwise(_empty_triples())
+        return _case(if_failed, fb, _EMPTY_TRIPLES)
     arr, elem_type = hit
-
-    def per_elem(x: Column) -> Column:
-        ectx = Ctx.for_struct(elem_type, x)
-        parts = [compile_node(child, ectx) for child in node["sub_data"]]
-        return F.concat(*parts) if parts else _empty_triples()
-
-    result = F.when(
-        arr.isNotNull(), F.flatten(F.transform(arr, per_elem))
-    ).otherwise(_empty_triples())
-    return F.when(~if_ok, fb).otherwise(result)
+    x = _var()
+    ectx = Ctx.for_struct(elem_type, x)
+    parts = [compile_node(child, ectx) for child in node["sub_data"]]
+    per_elem = f"concat({', '.join(parts)})" if parts else _EMPTY_TRIPLES
+    result = _case(
+        f"{arr} IS NOT NULL", f"flatten(transform({arr}, {x} -> {per_elem}))", _EMPTY_TRIPLES
+    )
+    return _case(if_failed, fb, result)
 
 
 # ------------------------------------------------------ saveas (P8)
@@ -666,77 +622,53 @@ def saveas_table(descriptor: dict, df: DataFrame, dedup: bool = False) -> DataFr
     ctx = Ctx.for_row(df.schema)
     pieces = []
 
-    def capture_arr(node) -> Column:
-        arr = _apply_match(
-            ctx.raw(node.get("source", "dict"), node["if_field"]),
-            node.get("if_match"),
-        )
-        cut = node.get("if_cut")
-        if cut:
-            rep = node.get("if_replace", "")
-            arr = F.transform(arr, lambda x: F.regexp_replace(x, cut, rep))
-        return arr
-
-    def walk(node, prior: Column):
+    def walk(node, prior: str):
         if not node:
             return
         src = node.get("source", "dict")
-        is_joined = "joined_value" in node or "joined_field" in node
-        is_sub_data = "sub_data" in node
-
-        if_ok = _compile_if(node, ctx) if "if_field" in node else F.lit(True)
-        if is_joined:
+        if "joined_value" in node or "joined_field" in node:
             main = _compile_joined(node, ctx, node.get("predicate", "p"))
-            failed = F.size(main) == 0
-            reached_if = F.size(_alts_raw(node, ctx)) > 0
-            child_prior = F.lit(False)  # joined has no sub_nodes/sub_data
-        elif is_sub_data:
-            failed = ~if_ok
-            reached_if = F.lit(True)
-            child_prior = prior & if_ok
+            failed = f"size({main}) = 0"
+            reached_if = f"size({_alts_raw(node, ctx)}) > 0"
+            child_prior = "false"  # joined has no sub_nodes/sub_data
+        elif "sub_data" in node:
+            if_ok = _if_ok(node, ctx)
+            failed = f"NOT {if_ok}"
+            reached_if = "true"
+            child_prior = f"{prior} AND {if_ok}"
         else:
             raw, after_match, if_ok, mapped, vals, _uuid_ok = _main_stages(node, ctx)
-            failed = (
-                (F.size(raw) == 0)
-                | (F.size(after_match) == 0)
-                | ~if_ok
-                | (F.size(mapped) == 0)
-            )
-            reached_if = (F.size(raw) > 0) & (F.size(after_match) > 0)
-            child_prior = prior & ~failed & (F.size(vals) == 1)
+            failed = _main_failed(raw, after_match, if_ok, mapped)
+            reached_if = f"size({raw}) > 0 AND size({after_match}) > 0"
+            child_prior = f"{prior} AND NOT ({failed}) AND size({vals}) = 1"
 
         if "saveas" in node and "if_field" in node:
             cond = _BOOL_OPS.get(node["if_condition"])
             if cond is not None and cond != "exi":
-                if_raw_nonempty = F.size(ctx.raw(src, node["if_field"])) > 0
-                gate = prior & reached_if & if_raw_nonempty
-                pieces.append(
-                    (
-                        node["saveas"],
-                        F.when(gate, capture_arr(node)).otherwise(_empty_str_arr()),
-                    )
-                )
-        walk(node.get("fallback"), prior & failed)
-        for child in node.get("sub_nodes") or []:
-            walk(child, child_prior)
-        for child in node.get("sub_data") or []:
-            walk(child, child_prior)
+                if_raw = ctx.raw(src, node["if_field"])
+                # captured after if_cut/if_replace, before prepend/append
+                cut = {k: node[k] for k in ("if_cut", "if_replace") if k in node}
+                arr = _apply_post(_apply_match(if_raw, node.get("if_match")), cut, "if_")
+                gate = f"{prior} AND ({reached_if}) AND size({if_raw}) > 0"
+                v = _var()
+                pieces.append(_case(
+                    gate,
+                    f"transform({arr}, {v} -> named_struct('key', {sql_str(node['saveas'])}, "
+                    f"'value', {v}))",
+                    "CAST(array() AS array<struct<key:string,value:string>>)",
+                ))
+        walk(node.get("fallback"), f"({prior}) AND ({failed})")
+        for child in (node.get("sub_nodes") or []) + (node.get("sub_data") or []):
+            walk(child, f"({child_prior})")
 
     for n in descriptor.get("nodes", []):
-        walk(n, F.lit(True))
+        walk(n, "true")
     if not pieces:
         return df.sparkSession.createDataFrame(
             [], schema=T.StructType([T.StructField("key", T.StringType()),
                                      T.StructField("value", T.StringType())])
         )
-    def tag_with(key: str, arr: Column) -> Column:
-        # nb: a two-arg lambda in F.transform would receive (elem, index)
-        return F.transform(
-            arr, lambda v: F.struct(F.lit(key).alias("key"), v.alias("value"))
-        )
-
-    all_arr = F.concat(*[tag_with(key, arr) for key, arr in pieces])
-    out = df.select(F.explode(all_arr).alias("kv")).select("kv.key", "kv.value")
+    out = df.selectExpr(f"inline(concat({', '.join(pieces)}))")
     return out.distinct() if dedup else out
 
 
@@ -855,13 +787,17 @@ def compile_descriptor(
     from the id header node; records with no/ambiguous id dropped;
     `required: mandatory` node producing nothing drops the record.
     If any node reads source 'marc' and ``marc_col`` exists, the MARC
-    blob is parsed ONCE (Arrow UDF) before compilation."""
+    blob is parsed ONCE (Arrow UDF) before compilation.
+
+    Three DataFrame calls whatever the node count: one ``selectExpr``
+    for the id and node arrays, one ``where`` for the exactly-one-id
+    and mandatory checks, one ``selectExpr`` that explodes the triples."""
     marc = None
     if _uses_marc(descriptor) and marc_col in df.columns:
         from spcht_spark.sources.marc import with_parsed_marc
 
         df = with_parsed_marc(df, marc_col, "_marc")
-        marc = F.col("_marc")
+        marc = sql_ident("_marc")
     ctx = Ctx.for_row(df.schema, marc)
 
     id_node = {
@@ -874,48 +810,26 @@ def compile_descriptor(
         id_node["alternatives"] = descriptor["id_alternatives"]
     if descriptor.get("id_fallback"):
         id_node["fallback"] = descriptor["id_fallback"]
-    id_triples = compile_node(id_node, ctx)
 
-    node_arrays = []
-    mandatory_flags = []
-    for node in descriptor["nodes"]:
-        arr = compile_node(node, ctx)
-        node_arrays.append(arr)
-        if node.get("required") == "mandatory":
-            mandatory_flags.append(F.size(arr) > 0)
-
-    out = df.withColumn("_id_triples", id_triples)
-    out = out.filter(F.size(F.col("_id_triples")) == 1)  # exactly one id
-    out = out.withColumn(
-        "_subject",
-        F.concat(F.lit(subject_prefix), F.element_at(F.col("_id_triples"), 1)["o"]),
+    nodes = descriptor["nodes"]
+    arrays = ", ".join(compile_node(node, ctx) for node in nodes)
+    keep = ["size(_id) = 1"] + [  # exactly one id; mandatory nodes non-empty
+        f"size(_nodes[{i}]) > 0"
+        for i, node in enumerate(nodes)
+        if node.get("required") == "mandatory"
+    ]
+    t = _var()
+    subject = f"coalesce({t}.s, concat({sql_str(subject_prefix)}, _id[0].o))"
+    return (
+        df.selectExpr(
+            f"{compile_node(id_node, ctx)} AS _id",
+            f"array({arrays}) AS _nodes" if nodes
+            else f"CAST(array() AS array<array<{TRIPLE_ELEM}>>) AS _nodes",
+        )
+        .where(" AND ".join(keep))
+        .selectExpr(
+            f"inline(transform(flatten(_nodes), {t} -> named_struct('subject', {subject}, "
+            f"'predicate', {t}.p, 'object', {t}.o, 'object_is_uri', {t}.u, "
+            f"'lang', {t}.lang, 'datatype', {t}.datatype)))"
+        )
     )
-    for flag in mandatory_flags:
-        out = out.filter(flag)
-
-    all_triples = F.concat(*node_arrays) if node_arrays else _empty_triples()
-    exploded = out.select(
-        F.col("_subject"), F.explode(all_triples).alias("t")
-    )
-    return exploded.select(
-        F.coalesce(F.col("t.s"), F.col("_subject")).alias("subject"),
-        F.col("t.p").alias("predicate"),
-        F.col("t.o").alias("object"),
-        F.col("t.u").alias("object_is_uri"),
-        F.when(
-            F.col("t.tag").startswith("@"), F.expr("substring(t.tag, 2)")
-        ).alias("lang"),
-        F.when(
-            F.col("t.tag").startswith("^^"), F.expr("substring(t.tag, 3)")
-        ).alias("datatype"),
-    )
-
-
-def triples_to_ntriples(triples: DataFrame) -> DataFrame:
-    """S6 sink (process2RDF, SpchtUtility.py:506-535) — canonical
-    implementation (with literal escaping and the ttl/nquads/xml
-    siblings) lives in spcht_spark.descriptor.rdf; re-exported here for
-    back-compat."""
-    from spcht_spark.descriptor.rdf import triples_to_ntriples as _impl
-
-    return _impl(triples)

@@ -147,6 +147,13 @@ def search(
     decoding the full matching set; components that genuinely need the
     whole DocSet (facets, stats) keep the full match pass and share it
     (one parsed query, one match pass — Solr's shared DocSet)."""
+    if request.tv and index.tokenizer is None:
+        # term vectors re-tokenize stored content: a guessed tokenizer's
+        # tf would diverge from the postings
+        raise ValueError(
+            "index records no tokenizer: term vectors need an index "
+            "opened with load_index or returned by build_index"
+        )
     raw_ast = parse_query(request.q, index.analyzer, default_op=request.q_op)
     ast = expand_fuzzy_ast(
         expand_synonyms_ast(raw_ast, request.synonyms or {}),
@@ -339,24 +346,9 @@ def search(
             store = store.withColumnRenamed(id_col, "doc_id")
         if content_col != "content":
             store = store.withColumnRenamed(content_col, "content")
-        tokenizer = getattr(index, "tokenizer", None)
-        if tokenizer is None:
-            # Pre-round-4 index manifests lack the tokenizer key; a
-            # silent 'arrow' guess re-analyzes a ws-built index
-            # with the wrong tokenizer and tf diverges from the
-            # postings (ADVICE r4) — be loud about the assumption.
-            import warnings
-
-            tokenizer = "arrow"
-            warnings.warn(
-                "index manifest has no tokenizer; term vectors assume "
-                "'arrow' — rebuild or backfill manifest params if the "
-                "index was built with --tokenizer ws",
-                stacklevel=2,
-            )
         tv_df = _term_vectors(
             spark, store, index.dictionary, ids,
-            tokenizer=tokenizer,
+            tokenizer=index.tokenizer,
             analyzer=index.analyzer,
         )
     collate_df = None

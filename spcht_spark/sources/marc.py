@@ -5,7 +5,8 @@ The reference parses `fullrecord` via pymarc into a nested dict
 control-char repair marc21_fixRecord :277-319). Here a from-scratch
 parser of the public ISO 2709 / MARC21 layout runs as an Arrow-batched
 UDF ONCE per record; everything downstream is pure column ops over the
-flattened ``array<struct<tag,ind1,ind2,subfield,value>>``.
+flattened ``array<struct<tag,ind1,ind2,subfield,value>>`` (SQL text
+rendered by :func:`marc_values`).
 
 Layout (public MARC21 spec): 24-byte leader (record length in [0:5],
 base address in [12:17]) · directory of 12-byte entries (tag 3, field
@@ -23,9 +24,10 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from spcht_spark.index.query import sql_str
 
 RS = "\x1d"  # record terminator
 FS = "\x1e"  # field terminator
@@ -153,14 +155,15 @@ def slice_shorthand(field: str) -> tuple[int, str] | None:
         return None
 
 
-def marc_values(marc_arr: Column, field: str) -> Column:
-    """Values for a 'tag:subfield' shorthand as array<string> (empty when
-    absent) — pure column ops over the parsed array."""
+def marc_values(marc_arr: str, field: str) -> str:
+    """Values for a 'tag:subfield' shorthand as SQL text of an
+    array<string> (empty when absent) over ``marc_arr``, the SQL text of
+    the parsed array — pure expressions, no Python at runtime."""
     sliced = slice_shorthand(field)
     if sliced is None:
-        return F.array().cast("array<string>")
+        return "CAST(array() AS array<string>)"
     tag, sub = sliced
-    hits = F.filter(
-        marc_arr, lambda x: (x["tag"] == tag) & (x["subfield"] == sub)
+    return (
+        f"transform(filter({marc_arr}, m -> m.tag = {tag} AND m.subfield = {sql_str(sub)}), "
+        f"m -> m.value)"
     )
-    return F.transform(hits, lambda x: x["value"])

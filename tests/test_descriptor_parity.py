@@ -8,6 +8,7 @@ Every test mirrors a case from /root/reference/tests/test_spcht_internals.py
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from spcht_spark.descriptor.compiler import (
@@ -15,8 +16,8 @@ from spcht_spark.descriptor.compiler import (
     _compile_if,
     compile_descriptor,
     compile_node,
-    triples_to_ntriples,
 )
+from spcht_spark.descriptor.rdf import triples_to_ntriples
 
 SCHEMA = T.StructType(
     [
@@ -114,7 +115,7 @@ def row_df(spark):
 
 def run_node(row_df, node):
     ctx = Ctx.for_row(row_df.schema)
-    arr = compile_node(node, ctx)
+    arr = F.expr(compile_node(node, ctx))
     rows = row_df.select(arr.alias("t")).collect()[0]["t"]
     return [(r["p"], r["o"], r["u"], r["s"]) for r in rows]
 
@@ -125,7 +126,7 @@ def objs(row_df, node):
 
 def run_if(row_df, node):
     ctx = Ctx.for_row(row_df.schema)
-    return bool(row_df.select(_compile_if(node, ctx).alias("b")).collect()[0]["b"])
+    return bool(row_df.select(F.expr(_compile_if(node, ctx)).alias("b")).collect()[0]["b"])
 
 
 # --- match pre-filter (ref :101-137) -----------------------------------

@@ -2,13 +2,16 @@
 
 from __future__ import annotations
 
+import json
 from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from spcht_spark.index.boolean import eval_ast, parse_query
 from spcht_spark.index.search import SearchRequest, search
 from spcht_spark.oracle import tokenize_py
+from spcht_spark.plans.indexer import load_index
 
 Q = "(return AND if) OR -import AND while"
 
@@ -279,3 +282,19 @@ def test_group_sort_and_interval_facets(
     }
     got = {r["interval"]: r["n"] for r in resp.intervals.collect()}
     assert got == want
+
+
+def test_term_vectors_refuse_a_manifest_without_tokenizer(spark, small_index, tmp_path):
+    """Term vectors re-tokenize stored content, so an index whose
+    manifest records no tokenizer is refused before any work, as the
+    delta path refuses it; no tokenizer is guessed."""
+    for name in ("doclens", "dictionary", "stats", "blocks"):
+        getattr(small_index, name).write.parquet(str(tmp_path / name))
+    (tmp_path / "manifest.json").write_text(
+        json.dumps({"params": {"shard_span": small_index.shard_span}})
+    )
+    idx = load_index(spark, str(tmp_path))
+    assert idx.tokenizer is None
+    store = spark.createDataFrame([(1, "return x")], ["doc_id", "content"])
+    with pytest.raises(ValueError, match="tokenizer"):
+        search(spark, idx, store, SearchRequest(q="return", k=3, tv=True))
