@@ -152,10 +152,10 @@ def main() -> None:
         t0 = time.perf_counter()
         doclens = build_doclens(tokens)
         stats = build_stats(doclens)
-        srow = stats.collect()[0]
+        stats.collect()
         phases["stats_collect"] = time.perf_counter() - t0
         t0 = time.perf_counter()
-        blocks = build_blocks(tokens, float(srow["avgdl"])).localCheckpoint()
+        blocks = build_blocks(tokens).localCheckpoint()
         phases["blocks_ckpt"] = time.perf_counter() - t0
         t0 = time.perf_counter()
         dictionary_from_blocks(blocks).write.format("noop").mode("overwrite").save()

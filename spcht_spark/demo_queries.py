@@ -224,7 +224,7 @@ def _index_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Driver index layout: bump to invalidate cached on-disk builds.
-_INDEX_LAYOUT_VERSION = 5  # v5: blocks carry a cf lane (dictionary source)
+_INDEX_LAYOUT_VERSION = 6  # v6: blocks carry impacts lanes, no avgdl bound
 _INDEX_SHARD_SPAN = 1024
 _INDEX_CACHE_ROOT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".index_cache"

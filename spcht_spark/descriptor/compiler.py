@@ -92,16 +92,20 @@ def _uuid5_expr(name: str) -> str:
     SpchtCore.py:1136-1145): sha1(namespace ‖ name) with the version
     nibble forced to 5 and the variant nibble to 10xx. Staying
     expression-side lets it nest inside higher-order lambdas and keeps
-    the whole descriptor pipeline JVM-only."""
-    h = f"sha1(concat(to_binary('{_NS_URL_HEX}', 'hex'), encode({name}, 'UTF-8')))"
+    the whole descriptor pipeline JVM-only. The hex digest is bound
+    once, as the variable of a one-element ``transform``, so sha1 and
+    the name expression run once per uuid, not once per piece."""
+    sha = f"sha1(concat(to_binary('{_NS_URL_HEX}', 'hex'), encode({name}, 'UTF-8')))"
+    h = _var()
     variant = (
         f"element_at(array('8', '9', 'a', 'b'), "
         f"(CAST(conv(substring({h}, 17, 1), 16, 10) AS INT) % 4) + 1)"
     )
     return (
-        f"concat_ws('-', substring({h}, 1, 8), substring({h}, 9, 4), "
+        f"element_at(transform(array({sha}), {h} -> concat_ws('-', "
+        f"substring({h}, 1, 8), substring({h}, 9, 4), "
         f"concat('5', substring({h}, 14, 3)), concat({variant}, substring({h}, 18, 3)), "
-        f"substring({h}, 21, 12))"
+        f"substring({h}, 21, 12))), 1)"
     )
 
 

@@ -10,7 +10,7 @@ Stages (each a checkpointable parquet table, see spcht_spark.plans):
   dictionary  (term, term_hash, df, cf)— groupBy(term)         [shuffle on term]
   stats       (n_docs, avgdl, total_tokens) — global agg
   blocks      (term, term_hash, shard, block_seq, first_doc, last_doc,
-               n_docs, docs_bin, tfs_bin, dls_bin, max_part, cf
+               n_docs, docs_bin, tfs_bin, dls_bin, imp_tf, imp_dl, cf
                [, pos_bin on the positional layout])
 
 Skew strategy — doc-range sharding. Zipfian code tokens ('{', 'return',
@@ -31,9 +31,12 @@ document range. Properties:
 
 Blocks additionally carry varbyte doc lengths (``dls_bin``) so the WAND
 scorer computes exact BM25 inside the UDF without a doclens join, and
-``max_part`` — the idf-free upper bound
-max(tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl))) over the block; multiplied by
-query-time idf it is the block-max score that WAND prunes with.
+their competitive impacts (``imp_tf``, ``imp_dl``; Lucene's ``Impacts``,
+Ding & Suel SIGIR 2011): the (tf, dl) pairs no other posting of the
+block dominates. The BM25 part tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl)) is
+monotone in tf and in dl, so its max over the impacts equals the block
+max at ANY avgdl: queries take the block-max bound at their own avgdl,
+and no block depends on corpus statistics.
 """
 
 from __future__ import annotations
@@ -68,7 +71,8 @@ BLOCKS_SCHEMA = T.StructType(
         T.StructField("docs_bin", T.BinaryType(), False),
         T.StructField("tfs_bin", T.BinaryType(), False),
         T.StructField("dls_bin", T.BinaryType(), False),
-        T.StructField("max_part", T.DoubleType(), False),
+        T.StructField("imp_tf", T.ArrayType(T.IntegerType(), False), False),
+        T.StructField("imp_dl", T.ArrayType(T.IntegerType(), False), False),
         # per-block Σtf — lets the dictionary (df = Σ n_docs, cf = Σ cf)
         # aggregate the tiny blocks table instead of re-shuffling every
         # token row a second time (SPIMI: the posting write pass already
@@ -140,8 +144,40 @@ def build_tokens(
 def bm25_part(tfs: np.ndarray, dls: np.ndarray, avgdl: float) -> np.ndarray:
     """Per-posting BM25 part tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl)) in
     float64: oracle.term_score without its idf factor, the expression
-    behind ``max_part`` and every WAND/AND score (bit-exact contract)."""
+    behind every block-max bound and every WAND/AND score (bit-exact
+    contract)."""
     return (tfs * (K1 + 1.0)) / (tfs + K1 * (1.0 - B + B * (dls / avgdl)))
+
+
+def block_impacts(
+    tfs: np.ndarray, dls: np.ndarray, blk_starts: np.ndarray
+) -> tuple[list[np.ndarray], list[np.ndarray]]:
+    """Per block (postings ``blk_starts[i]`` up to the next start), the
+    (tf, dl) pairs no other posting dominates (tf′ ≥ tf and dl′ ≤ dl),
+    as int32 (imp_tf, imp_dl) arrays in tf-ascending order — a pure
+    function of the block's postings.
+
+    No per-block loop: one argsort of the int64 key (block, maxtf − tf,
+    dl), then a posting is kept when its dl is below every dl before it
+    in its block — one ``np.minimum.accumulate`` over dls offset below
+    the previous block's. Blocks are keyed in reverse, so reversing the
+    kept rows gives block order with tf ascending."""
+    n, nb = len(tfs), len(blk_starts)
+    rblk = np.repeat(np.arange(nb - 1, -1, -1, dtype=np.int64),
+                     np.diff(np.append(blk_starts, n)))
+    tspan, dspan = int(tfs.max()) + 1, int(dls.max()) + 1
+    if nb * tspan * dspan < 1 << 63:
+        order = np.argsort((rblk * tspan + (tspan - 1 - tfs)) * dspan + dls,
+                           kind="stable")
+    else:  # the single key would overflow int64: same order, three keys
+        order = np.lexsort((dls, -tfs, rblk))
+    shifted = dls[order] - rblk[order] * dspan
+    keep = np.ones(n, dtype=bool)
+    keep[1:] = shifted[1:] < np.minimum.accumulate(shifted)[:-1]
+    kept = order[keep][::-1]
+    cuts = np.cumsum(np.bincount(nb - 1 - rblk[kept], minlength=nb))[:-1]
+    return (np.split(tfs[kept].astype(np.int32), cuts),
+            np.split(dls[kept].astype(np.int32), cuts))
 
 
 def build_doclens(tokens: DataFrame) -> DataFrame:
@@ -175,7 +211,7 @@ def build_stats(doclens: DataFrame) -> DataFrame:
 
 def build_blocks(
     tokens: DataFrame,
-    avgdl: float,
+    _avgdl: object = None,  # ignored; perfbench's _build_layers still passes one
     shard_span: int = DEFAULT_SHARD_SPAN,
 ) -> DataFrame:
     """Compressed posting blocks keyed by (term, doc-range shard).
@@ -226,7 +262,7 @@ def build_blocks(
         )
         blk_ends = np.minimum(blk_starts + bs, g_ends[blk_group])
 
-        parts = bm25_part(tfs, dls, avgdl)
+        imp_tf, imp_dl = block_impacts(tfs, dls, blk_starts)
         gaps = np.diff(docs.astype(np.uint64), prepend=np.uint64(0))
         gaps[blk_starts] = docs[blk_starts]  # delta chain resets per block
         docs_bins = varbyte_encode_segments(gaps, blk_starts)
@@ -246,7 +282,8 @@ def build_blocks(
                 "docs_bin": docs_bins,
                 "tfs_bin": tfs_bins,
                 "dls_bin": dls_bins,
-                "max_part": np.maximum.reduceat(parts, blk_starts),
+                "imp_tf": imp_tf,
+                "imp_dl": imp_dl,
                 "cf": np.add.reduceat(tfs, blk_starts),
             }
         )
@@ -343,44 +380,38 @@ def build_index(
 
     Tokens are materialized once (localCheckpoint): doclens, dictionary
     and blocks all branch from them, and without materialization each
-    branch would re-run the tokenizer over the full corpus.
-
-    All three checkpoints are LAZY (``eager=False``): an eager
-    localCheckpoint is its own driver barrier (a job + scheduling gap,
-    ~0.1-0.2 s each at bench scale), while a lazy one materializes as
-    part of the FIRST action that needs it — the ``stats.collect()``
-    below runs tokenize + doclens + checkpoint-store + the stats agg as
-    one job chain, and the blocks checkpoint rides the caller's first
-    blocks action. Same passes, same materialized tables, three fewer
-    serial barriers per build (event-log audit, OPTIMIZATION_r06.md)."""
+    branch would re-run the tokenizer over the full corpus. The
+    checkpoint is LAZY (``eager=False``): an eager localCheckpoint is
+    its own driver barrier (a job + scheduling gap, ~0.1-0.2 s each at
+    bench scale), while a lazy one materializes as part of the FIRST
+    action that needs it."""
     tokens = build_tokens(corpus, tokenizer, analyzer=analyzer).localCheckpoint(
         eager=False
     )
-    # doclens is read twice on every build (stats here, and the caller
+    return index_from_tokens(tokens, shard_span, analyzer, tokenizer)
+
+
+def index_from_tokens(
+    tokens: DataFrame, shard_span: int, analyzer: str | None, tokenizer: str
+) -> IndexTables:
+    """doclens, stats, blocks and dictionary over materialized tokens
+    (default or positional), all lazy: no block depends on avgdl, so
+    nothing waits for the stats and the build runs no job of its own."""
+    # doclens is read twice on every build (stats, and the caller
     # materializes/queries it) — each read otherwise re-aggregates the
     # full token table (a corpus-wide pass, measured ~0.6 s at bench
     # scale). Materialize the narrow (doc_id, dl) table once.
     doclens = build_doclens(tokens).localCheckpoint(eager=False)
-    # stats stays a lazy agg over the CHECKPOINTED doclens: every later
-    # stats.collect()/count() (each query path does one) is then a tiny
-    # agg over the materialized (doc_id, dl) table, not a corpus-wide
-    # token re-aggregation. (A createDataFrame([row]) local relation
-    # was tried here and measurably REGRESSED the build ~2x on this VM
-    # — the per-call python->JVM parallelize path is storm-amplified —
-    # interleaved A/B in OPTIMIZATION_r06.md.)
-    stats = build_stats(doclens)
-    srow = stats.collect()[0]
     # blocks materialize once too: they ARE the index (compressed
     # postings), every query decodes them, and without materialization
     # each downstream action re-runs the whole encode shuffle. The
     # dictionary then aggregates the tiny blocks table (its df/cf ride
     # the cf lane) instead of re-shuffling every token row a second
     # time — one full token pass per build, SPIMI-style.
-    blocks = build_blocks(
-        tokens, float(srow["avgdl"]), shard_span=shard_span
-    ).localCheckpoint(eager=False)
-    dictionary = dictionary_from_blocks(blocks)
+    blocks = build_blocks(tokens, shard_span=shard_span).localCheckpoint(
+        eager=False
+    )
     return IndexTables(
-        tokens, doclens, dictionary, stats, blocks,
-        shard_span=shard_span, analyzer=analyzer, tokenizer=tokenizer,
+        tokens, doclens, dictionary_from_blocks(blocks), build_stats(doclens),
+        blocks, shard_span=shard_span, analyzer=analyzer, tokenizer=tokenizer,
     )

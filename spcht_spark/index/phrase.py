@@ -43,10 +43,7 @@ from pyspark.sql import functions as F
 from spcht_spark.index.build import (
     DEFAULT_SHARD_SPAN,
     IndexTables,
-    build_blocks,
-    build_doclens,
-    build_stats,
-    dictionary_from_blocks,
+    index_from_tokens,
 )
 from spcht_spark.index.query import (
     TOPK_SCHEMA,
@@ -66,10 +63,9 @@ def build_positional_index(
     shard_span: int = DEFAULT_SHARD_SPAN,
     analyzer: str | None = None,
 ) -> IndexTables:
-    """In-memory positional build (tokens → stats → positional blocks):
-    :func:`~spcht_spark.index.build.build_blocks` over tokens that carry
-    ``pos_bin``. Dictionary/doclens are derived exactly as the default
-    build."""
+    """In-memory positional build: the default build's
+    :func:`~spcht_spark.index.build.index_from_tokens` over tokens that
+    carry ``pos_bin``, so the blocks gain a ``pos_bin`` lane."""
     from spcht_spark.index.analyze import token_steps
     from spcht_spark.index.build import apply_analyzer
 
@@ -80,19 +76,7 @@ def build_positional_index(
         )
     corpus = apply_analyzer(corpus, analyzer)
     tokens = tokens_positional(corpus, mode).localCheckpoint()
-    doclens = build_doclens(tokens)
-    stats = build_stats(doclens)
-    avgdl = float(stats.collect()[0]["avgdl"])
-    # materialized once, as in build_index: the dictionary aggregates the
-    # blocks instead of re-running the encode shuffle
-    blocks = build_blocks(
-        tokens, avgdl, shard_span=shard_span
-    ).localCheckpoint(eager=False)
-    dictionary = dictionary_from_blocks(blocks)
-    return IndexTables(
-        tokens, doclens, dictionary, stats, blocks,
-        shard_span=shard_span, analyzer=analyzer, tokenizer=mode,
-    )
+    return index_from_tokens(tokens, shard_span, analyzer, mode)
 
 
 def _slop_window_match(lists: list[np.ndarray], slop: int) -> bool:

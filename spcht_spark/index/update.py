@@ -28,81 +28,43 @@ One delta path; its only inputs are the index and the delta:
   tokens — for a 10k-doc delta that is ≈ 10k × avg-unique-terms groups
   out of billions, and rebuilding a group costs one bounded
   applyInPandas task (group ≤ shard_span docs).
-* Untouched groups keep their compressed postings byte-for-byte; only
-  the ``max_part`` block-max column is refreshed, because BM25's
-  length normalization depends on the corpus-wide avgdl, which the
-  delta shifts. The refresh is a map-only pass (decode tf/dl varbyte
-  once per Arrow batch, take each block's max with one reduceat — no
-  shuffle, no docs_bin work) and is skipped entirely when avgdl is
-  unchanged.
+* Untouched groups flow into the new blocks unchanged, every column
+  byte for byte: a block stores its competitive impacts, not a bound
+  at the corpus avgdl, so the avgdl the delta shifts touches no block
+  (queries compute the bound from their own avgdl). Nothing decodes,
+  re-encodes or even reads the untouched blocks' lanes.
 * The commit (:func:`apply_update`) computes the new blocks ONCE: the
   ``blocks.new`` write runs the lazy plan (touched-group decode, encode
-  shuffle, max_part refresh) and the ``skew`` histogram is aggregated
+  shuffle) and the ``skew`` histogram is aggregated
   from the written ``blocks.new`` parquet — the same column-pruned
   aggregate the build ladder's skew stage runs over its committed
   blocks — instead of evaluating that plan a second time.
 * The dictionary merges df/cf deltas (exact integer arithmetic) instead
   of re-aggregating the full token table; stats re-aggregate doclens
-  (one narrow map-side-partial agg).
+  (one narrow map-side-partial agg, lazy: the update collects nothing).
 
 Equivalence contract (pinned in tests/test_index_update.py): for any
 delta, ``update_index(build_index(base), delta)`` equals
 ``build_index(final)`` bit-for-bit on doclens, dictionary, stats and
-blocks — including the varbyte binaries and the float64 max_part
-values.
+blocks — including the varbyte binaries and the impacts lanes.
 """
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spcht_spark.index.build import (
-    BLOCKS_SCHEMA,
     IndexTables,
-    bm25_part,
     build_blocks,
     build_doclens,
     build_stats,
     build_tokens,
 )
-from spcht_spark.index.compress import varbyte_decode
 
 
 def _shard(col, shard_span: int):
     return (col / F.lit(int(shard_span))).cast("long")
-
-
-def refresh_max_part(blocks: DataFrame, avgdl: float) -> DataFrame:
-    """Recompute the block-max upper bound for a new corpus avgdl.
-
-    Map-only (no shuffle), one numpy pass per Arrow batch: the batch's
-    tf and dl lanes are each decoded with ONE varbyte call over the
-    concatenated buffers (varbyte values self-terminate, so the joined
-    decode is the concatenation of the per-block decodes), the
-    per-posting part tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl)) is evaluated
-    over the whole batch, and ``np.maximum.reduceat`` at the ``n_docs``
-    offsets takes each block's max. Bit-identical to the value
-    build_blocks would compute — same int64 decode, same float64
-    expression, and max is exact — so a refreshed untouched block
-    equals its full-rebuild twin exactly."""
-
-    def refresh(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pdf
-                continue
-            tfs = varbyte_decode(b"".join(pdf["tfs_bin"])).astype(np.int64)
-            dls = varbyte_decode(b"".join(pdf["dls_bin"])).astype(np.int64)
-            parts = bm25_part(tfs, dls, avgdl)
-            ends = np.cumsum(pdf["n_docs"].to_numpy(np.int64))
-            starts = np.concatenate(([0], ends[:-1]))
-            pdf = pdf.copy()
-            pdf["max_part"] = np.maximum.reduceat(parts, starts)
-            yield pdf
-
-    return blocks.mapInPandas(refresh, schema=BLOCKS_SCHEMA)
 
 
 def dictionary_delta(
@@ -205,9 +167,6 @@ def update_index(
     )
     new_dictionary = dictionary_delta(idx.dictionary, removed_tokens, added_tokens)
     new_stats = build_stats(new_doclens)
-    srow = new_stats.collect()[0]
-    new_avgdl = float(srow["avgdl"])
-    old_avgdl = float(idx.stats.collect()[0]["avgdl"])
 
     touched_keys = (
         removed_tokens.select("term", _shard(F.col("doc_id"), shard_span).alias("shard"))
@@ -225,10 +184,8 @@ def update_index(
     group_blocks = idx.blocks.join(touched_keys, ["term", "shard"], "semi")
     old_group = decode_blocks(group_blocks).join(touched_ids, "doc_id", "anti")
     touched_tokens = old_group.select(*cols).unionByName(added_tokens.select(*cols))
-    rebuilt = build_blocks(touched_tokens, new_avgdl, shard_span=shard_span)
+    rebuilt = build_blocks(touched_tokens, shard_span=shard_span)
     untouched = idx.blocks.join(touched_keys, ["term", "shard"], "anti")
-    if new_avgdl != old_avgdl:
-        untouched = refresh_max_part(untouched, new_avgdl)
     new_blocks = untouched.unionByName(rebuilt)
 
     return IndexTables(
@@ -293,7 +250,7 @@ def apply_update(
     for name, df in stages.items():
         df.write.mode("overwrite").parquet(os.path.join(workdir, f"{name}.new"))
     # skew from the WRITTEN blocks, not a second run of the lazy
-    # new-blocks plan (decode, encode shuffle, max_part refresh)
+    # new-blocks plan (decode, encode shuffle)
     skew = skew_table(spark.read.parquet(os.path.join(workdir, "blocks.new")))
     skew.repartition(1).write.mode("overwrite").parquet(
         os.path.join(workdir, "skew.new")

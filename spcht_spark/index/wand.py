@@ -4,7 +4,10 @@ Rank-safe pruned scoring at block granularity, parallelized per
 (query_id, doc-range shard):
 
 * Each (term, shard) posting list is a sequence of doc-ordered blocks
-  with an exact per-block upper bound ``idf · max_part``.
+  with an exact per-block upper bound ``idf · max(bm25_part)`` over the
+  block's competitive impacts (``imp_tf``, ``imp_dl``), computed at the
+  request's avgdl — equal bit for bit to the max over every posting of
+  the block (see spcht_spark.index.build).
 * Per group, a WAND loop either (a) proves every doc in the current
   frontier range is below the running kth score θ and skips the blocks
   undecoded, or (b) decodes the covering blocks and scores the range
@@ -102,7 +105,7 @@ def _pinned_scan(
         spark,
         f"SELECT /*+ REPARTITION({n_shuffle}, query_id, shard), BROADCAST(q) */ "
         "term, shard, block_seq, first_doc, last_doc, docs_bin, tfs_bin, "
-        f"dls_bin, max_part, query_id, idf, {param}, avgdl "
+        f"dls_bin, imp_tf, imp_dl, query_id, idf, {param}, avgdl "
         "FROM {blocks} AS p JOIN {qt} AS q USING (term) "
         f"WHERE term IN ({sql_esc(sql_in(sorted(idfs)))})",
         blocks=blocks,
@@ -123,7 +126,13 @@ class _TermCursor:
         self.idf = idf
         self.firsts = grp["first_doc"].to_numpy(np.int64)
         self.lasts = grp["last_doc"].to_numpy(np.int64)
-        self.bounds = idf * grp["max_part"].to_numpy(np.float64)
+        # block-max bounds at this request's avgdl, from the impacts
+        imp_tf = grp["imp_tf"].tolist()
+        starts = np.cumsum([0] + [len(a) for a in imp_tf[:-1]])
+        parts = bm25_part(np.concatenate(imp_tf).astype(np.int64),
+                          np.concatenate(grp["imp_dl"].tolist()).astype(np.int64),
+                          avgdl)
+        self.bounds = idf * np.maximum.reduceat(parts, starts)
         self.docs_bins = grp["docs_bin"].tolist()
         self.tfs_bins = grp["tfs_bin"].tolist()
         self.dls_bins = grp["dls_bin"].tolist()
@@ -351,16 +360,19 @@ def _cand_frame(query_id: str, res: list[tuple[int, float]]) -> pd.DataFrame:
 
 
 def _wand_run_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
-    """Single-phase WAND group runner — module-level and closure-free
-    (per-query k / per-term idf / avgdl ride the joined query_terms
-    columns) so apply_grouped_cached can register its UDF once per
-    session. θ0 is -inf by construction: the cascade path, which needs
-    per-query floors, keeps the closure-based runner."""
+    """WAND group runner — module-level and closure-free (per-query k /
+    per-term idf / avgdl ride the joined query_terms columns) so
+    apply_grouped_cached can register its UDF once per session. The
+    cascade's second phase joins a ``theta0`` column (the query's
+    floor); without it, or where it is NULL, θ0 is -inf."""
     query_id = key[0]
     k = int(pdf["k"].iloc[0])
     avgdl = float(pdf["avgdl"].iloc[0])
     idfs = dict(zip(pdf["term"], (float(x) for x in pdf["idf"])))
-    return _cand_frame(query_id, _wand_one_group(pdf, k, idfs, avgdl))
+    theta0 = float(pdf["theta0"].iloc[0]) if "theta0" in pdf else math.nan
+    return _cand_frame(query_id, _wand_one_group(
+        pdf, k, idfs, avgdl, theta0=-math.inf if math.isnan(theta0) else theta0
+    ))
 
 
 def _wand_run_filtered(key, blocks_pdf: pd.DataFrame, allowed_pdf: pd.DataFrame) -> pd.DataFrame:
@@ -501,24 +513,12 @@ def wand_topk(
     )
 
     def make_hit():
-        # full-width hit frame for the cascade/filtered paths; the
-        # single-phase path below builds its pruned+pinned variant as
-        # one statement instead and never constructs this
+        # hit frame for the cascade/filtered paths, without the columns
+        # the runners never read; the single-phase path below builds its
+        # pruned+pinned variant as one statement and never constructs this
         return blocks.where(f"term IN ({sql_in(sorted(idfs))})").join(
             F.broadcast(query_terms), "term"
-        )
-
-    def runner(theta0s: dict[str, float]):
-        def run(
-            key: tuple[str, int], pdf: pd.DataFrame
-        ) -> pd.DataFrame:
-            query_id = key[0]
-            return _cand_frame(query_id, _wand_one_group(
-                pdf, ks[query_id], idfs, avgdl,
-                theta0=theta0s.get(query_id, -math.inf),
-            ))
-
-        return run
+        ).drop("term_hash", "n_docs", "cf")
 
     if doc_filter is not None:
         if shard_span is None:
@@ -537,7 +537,7 @@ def wand_topk(
         ga = allowed_by_shard.crossJoin(F.broadcast(qdf))
 
         cand = apply_cogrouped_cached(
-            make_hit().drop("term_hash", "n_docs", "cf"), ga,
+            make_hit(), ga,
             ["query_id", "shard"], _wand_run_filtered, _CAND_SCHEMA,
         )
         return topk(cand, ks, n_docs=int(stats_row["n_docs"]))
@@ -595,10 +595,7 @@ def wand_topk(
         ["query_id"], "n_blocks DESC, shard ASC", 1, rank="rn",
     ).select("query_id", "shard")
     seed_cand = apply_grouped_cached(
-        _pin_groups(
-            hit.join(F.broadcast(seeds), ["query_id", "shard"])
-            .drop("term_hash", "n_docs", "cf")
-        ),
+        _pin_groups(hit.join(F.broadcast(seeds), ["query_id", "shard"])),
         ["query_id", "shard"], _wand_run_group, _CAND_SCHEMA,
     ).localCheckpoint()  # collected once for θ, reused in the union
     theta0s: dict[str, float] = {}
@@ -608,9 +605,15 @@ def wand_topk(
         if int(r["n"]) >= ks[r["query_id"]]:  # floor only if heap filled
             theta0s[r["query_id"]] = float(r["kth"])
 
-    # Phase 2 — remaining shards start at the broadcast θ floor.
+    # Phase 2 — remaining shards start at the broadcast θ floor, which
+    # rides the data as a theta0 column (NULL: the seed heap never
+    # filled), so the cached runner serves this phase too.
     rest = hit.join(F.broadcast(seeds), ["query_id", "shard"], "left_anti")
-    rest_cand = _pin_groups(rest).groupBy("query_id", "shard").applyInPandas(
-        runner(theta0s), schema=_CAND_SCHEMA
+    if theta0s:
+        floors = values_df(spark, sorted(theta0s.items()), ["query_id", "theta0"])
+        rest = rest.join(F.broadcast(floors), "query_id", "left")
+    rest_cand = apply_grouped_cached(
+        _pin_groups(rest),
+        ["query_id", "shard"], _wand_run_group, _CAND_SCHEMA,
     )
     return topk(seed_cand.unionByName(rest_cand), ks, n_docs=int(stats_row["n_docs"]))

@@ -89,8 +89,7 @@ def index_order(
         return build_stats(outs["doclens"])
 
     def blocks(spark, outs):
-        avgdl = float(outs["stats"].collect()[0]["avgdl"])
-        return build_blocks(outs["tokens"], avgdl, shard_span=shard_span)
+        return build_blocks(outs["tokens"], shard_span=shard_span)
 
     def skew(spark, outs):
         return skew_table(outs["blocks"])
@@ -140,7 +139,10 @@ def run_index_order(spark: SparkSession, order: WorkOrder) -> IndexTables:
 def load_index(spark: SparkSession, workdir: str) -> IndexTables:
     """Open a committed index (resume-free read path). Build params
     (shard_span, analyzer) come from the manifest so the query side
-    folds and shards exactly as the build did."""
+    folds and shards exactly as the build did. Blocks of the old layout,
+    which stored each block's bound at the build's avgdl instead of the
+    ``imp_tf``/``imp_dl`` impacts lanes, raise ``ValueError``: rebuild
+    the index."""
     import json
     import os
 
@@ -150,6 +152,13 @@ def load_index(spark: SparkSession, workdir: str) -> IndexTables:
     if os.path.exists(mpath):
         with open(mpath) as fh:
             params = json.load(fh).get("params", {})
+    blocks = rd("blocks")
+    if "tfs_bin" in blocks.columns and "imp_tf" not in blocks.columns:
+        raise ValueError(
+            f"{workdir}: blocks have no imp_tf/imp_dl impacts lanes (the old "
+            "layout stored each block's bound at the build's avgdl); rebuild "
+            "the index"
+        )
     tokens_dir = os.path.join(workdir, "tokens")
     # 'jvm' named the Catalyst twin of 'arrow' (row-identical), now a
     # test oracle only: manifests that record it read as 'arrow'
@@ -159,7 +168,7 @@ def load_index(spark: SparkSession, workdir: str) -> IndexTables:
         doclens=rd("doclens"),
         dictionary=rd("dictionary"),
         stats=rd("stats"),
-        blocks=rd("blocks"),
+        blocks=blocks,
         shard_span=params.get("shard_span"),
         analyzer=params.get("analyzer"),
         tokenizer="arrow" if tokenizer == "jvm" else tokenizer,

@@ -405,6 +405,24 @@ def test_append_uuid_missing_field_kills_node(row_df):
     assert objs(row_df, node) == []
 
 
+def test_uuid_hashes_once(row_df):
+    """Each uuid renders one sha1 (its hex digest bound once), not one
+    per substring piece — and still yields the golden uuid."""
+    node = {
+        "field": "salmon", "source": "dict", "predicate": "p/",
+        "static_field": "https://test.whargable/",
+        "append_uuid_object_fields": ["salmon", "perch", "trout"],
+    }
+    ctx = Ctx.for_row(row_df.schema)
+    assert compile_node(node, ctx).count("sha1(") == 1
+    node["append_uuid_predicate_fields"] = ["salmon", "perch", "trout"]
+    assert compile_node(node, ctx).count("sha1(") == 2
+    uuid = "fbe44eac-4162-5ee5-bf36-88ea7914eb6d"
+    assert run_node(row_df, node) == [
+        (f"p/{uuid}", f"https://test.whargable/{uuid}", False, None)
+    ]
+
+
 # --- sub_nodes (ref :508-540) ------------------------------------------
 
 def test_sub_nodes(row_df):

@@ -5,7 +5,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
-from spcht_spark.index.build import build_index
+from spcht_spark.index.build import block_impacts, build_index
 from spcht_spark.index.compress import (
     segmented_positions,
     varbyte_decode,
@@ -46,6 +46,37 @@ def test_postings_block_roundtrip():
         t2 = np.concatenate([varbyte_decode(b) for b in tb])
         assert np.array_equal(d2, docs)
         assert np.array_equal(t2.astype(np.int64), tfs)
+
+
+def test_block_impacts_are_the_pareto_frontier():
+    """Per block, block_impacts keeps exactly the (tf, dl) pairs no
+    other posting of the block dominates (tf' >= tf and dl' <= dl),
+    once each, tf ascending — against a brute-force frontier, on
+    random blocks with duplicate and dominated pairs, and with values
+    large enough that the single int64 sort key would overflow."""
+    rng = np.random.default_rng(11)
+
+    def frontier(tfs, dls):
+        pairs = set(zip(tfs.tolist(), dls.tolist()))
+        return sorted(
+            p for p in pairs
+            if not any(q != p and q[0] >= p[0] and q[1] <= p[1] for q in pairs)
+        )
+
+    for trial in range(60):
+        big = trial % 4 == 0
+        n = int(rng.integers(4 if big else 1, 400))
+        tfs = rng.integers(1, 2**30 if big else 40, n)
+        dls = np.minimum(tfs + rng.integers(0, 2**31 if big else 300, n), 2**31 - 1)
+        starts = np.unique(np.append(rng.integers(0, n, int(rng.integers(0, 12))), 0))
+        if big:  # single key would need >= 2^63: the three-key sort runs
+            tfs[0], dls[0], starts = 2**30, 2**31 - 1, np.arange(4)
+        imp_tf, imp_dl = block_impacts(tfs, dls, starts)
+        ends = np.append(starts[1:], n)
+        assert len(imp_tf) == len(imp_dl) == len(starts)
+        for s, e, it, idl in zip(starts, ends, imp_tf, imp_dl):
+            assert it.dtype == idl.dtype == np.int32
+            assert list(zip(it.tolist(), idl.tolist())) == frontier(tfs[s:e], dls[s:e])
 
 
 def test_tokenizers_agree(spark, small_corpus):

@@ -2,12 +2,15 @@
 rebuild: on a planted delta (inserts + modifications + deletes),
 ``update_index(build_index(base), delta)`` equals ``build_index(final)``
 on doclens, dictionary, stats and blocks — including the varbyte
-binaries and bit-exact max_part (the avgdl-refresh path). The update
-keeps no tokens table. Reference flow: delta fetch → delete →
-re-insert (/root/reference/Spcht/Core/WorkOrder.py:702-707, 875-942)."""
+binaries and the impacts lanes. Blocks store no avgdl-dependent value,
+so a delta leaves every untouched block byte for byte, and the bound a
+query derives from a block's impacts equals the max over its postings
+at any avgdl. The update keeps no tokens table. Reference flow: delta
+fetch → delete → re-insert (Spcht/Core/WorkOrder.py:702-707, 875-942)."""
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -21,6 +24,10 @@ SPAN = 64
 def _canon(df, keys):
     pdf = df.toPandas()
     return pdf.sort_values(keys).reset_index(drop=True)[sorted(pdf.columns)]
+
+
+def _lists(lane) -> list[list[int]]:
+    return [list(map(int, v)) for v in lane]
 
 
 def _assert_tables_equal(full, incr, skip=()):
@@ -41,6 +48,8 @@ def _assert_tables_equal(full, incr, skip=()):
             if av.dtype.kind == "f":
                 # bit-exact contract (same int64 decode, same float expr)
                 assert (av.to_numpy() == bv.to_numpy()).all(), f"{name}.{col}"
+            elif col.startswith("imp_"):  # array lanes, element-wise
+                assert _lists(av) == _lists(bv), f"{name}.{col}"
             else:
                 assert av.equals(bv), f"{name}.{col}"
 
@@ -210,9 +219,10 @@ def test_update_is_idempotent(spark, small_corpus, delta_setup):
 
 
 def test_untouched_groups_not_rebuilt(spark, small_corpus, delta_setup):
-    """The efficiency contract: posting binaries of (term, shard) groups
-    the delta never touches are carried over unchanged (same object
-    bytes), not re-encoded — only max_part may move with avgdl."""
+    """The efficiency contract: blocks of (term, shard) groups the delta
+    never touches are carried over unchanged — every column, the posting
+    binaries and the impacts lanes included — although the delta moves
+    avgdl."""
     base, changed, deleted = delta_setup
     base_idx = build_index(spark, base, shard_span=SPAN)
     touched_ids = changed.select("doc_id").unionByName(deleted).distinct()
@@ -238,8 +248,16 @@ def test_untouched_groups_not_rebuilt(spark, small_corpus, delta_setup):
         new, on=["term", "shard", "block_seq"], suffixes=("_o", "_n")
     )
     assert len(merged) == len(untouched_old)
-    assert (merged["docs_bin_o"] == merged["docs_bin_n"]).all()
-    assert (merged["tfs_bin_o"] == merged["tfs_bin_n"]).all()
+    stats = [float(i.stats.collect()[0]["avgdl"]) for i in (base_idx, incr)]
+    assert stats[0] != stats[1]
+    for col in old.columns:
+        if col in ("term", "shard", "block_seq"):
+            continue
+        o, n = merged[f"{col}_o"], merged[f"{col}_n"]
+        if col.startswith("imp_"):
+            assert _lists(o) == _lists(n), col
+        else:
+            assert (o == n).all(), col
 
 
 def test_apply_update_persisted(
@@ -298,42 +316,61 @@ def test_apply_update_skew_equals_rebuild(
     assert skew_report(spark, workdir, SPAN)["bounded"]
 
 
-def test_refresh_max_part_bit_identical_to_per_block(spark, small_index):
-    """The batched refresh (one varbyte decode per lane per Arrow batch,
-    reduceat at the n_docs offsets) equals a per-block decode + max,
-    bit for bit. Tiny Arrow batches put several blocks — 1-posting
-    blocks among them — into every batch and many batches into every
-    partition."""
-    import numpy as np
+@pytest.mark.parametrize("span", [SPAN, 1024])
+def test_impact_bounds_equal_block_max(spark, small_corpus, delta_setup, span):
+    """The bound ``_TermCursor`` derives from a block's impacts equals
+    max(bm25_part) over the block's decoded postings, bit for bit, at
+    the committed avgdl, at ×0.97 and ×1.03, and at the avgdl after a
+    delta — on the base index and on the updated one. Span 64 spreads
+    every term over many shards; span 1024 gives hot terms full
+    128-posting blocks."""
+    from spcht_spark.index.build import bm25_part
+    from spcht_spark.index.compress import BLOCK_SIZE, varbyte_decode
+    from spcht_spark.index.wand import _TermCursor
 
-    from spcht_spark.index.compress import varbyte_decode
-    from spcht_spark.index.update import refresh_max_part
-    from spcht_spark.oracle import B, K1
+    base, changed, deleted = delta_setup
+    base_idx = build_index(spark, base, shard_span=span)
+    incr = update_index(spark, base_idx, changed, deleted)
+    avgdl, after = (float(i.stats.collect()[0]["avgdl"]) for i in (base_idx, incr))
+    assert avgdl != after
+    for idx in (base_idx, incr):
+        pdf = idx.blocks.toPandas()
+        assert (pdf["n_docs"] == 1).any()
+        assert (pdf["n_docs"] == BLOCK_SIZE).any() == (span > BLOCK_SIZE)
+        # one cursor over every block: unique block_seq keeps row order
+        pdf["block_seq"] = np.arange(len(pdf))
+        tfs = [varbyte_decode(b).astype(np.int64) for b in pdf["tfs_bin"]]
+        dls = [varbyte_decode(b).astype(np.int64) for b in pdf["dls_bin"]]
+        starts = np.cumsum([0] + [len(t) for t in tfs[:-1]])
+        for a in (avgdl, avgdl * 0.97, avgdl * 1.03, after):
+            want = np.maximum.reduceat(
+                bm25_part(np.concatenate(tfs), np.concatenate(dls), a), starts
+            )
+            for idf in (1.0, 1.7):
+                got = _TermCursor("t", idf, pdf, a).bounds
+                assert np.array_equal(
+                    got.view(np.int64), (idf * want).view(np.int64)
+                ), (span, a, idf)
 
-    avgdl = float(small_index.stats.collect()[0]["avgdl"]) * 1.37
-    keys = ["term", "shard", "block_seq"]
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "3")
-    try:
-        got = _canon(refresh_max_part(small_index.blocks, avgdl), keys)
-        empty = refresh_max_part(small_index.blocks.filter("false"), avgdl).toPandas()
-    finally:
-        spark.conf.set(key, prev)
-    old = _canon(small_index.blocks, keys)
-    assert (old["n_docs"] == 1).any() and (old["n_docs"] > 1).any()
-    want = np.empty(len(old), dtype=np.float64)
-    for i, (tbin, dbin) in enumerate(zip(old["tfs_bin"], old["dls_bin"])):
-        tfs = varbyte_decode(tbin).astype(np.int64)
-        dls = varbyte_decode(dbin).astype(np.int64)
-        want[i] = ((tfs * (K1 + 1.0)) / (tfs + K1 * (1.0 - B + B * (dls / avgdl)))).max()
-    assert len(got) == len(old)
-    assert (got["max_part"].to_numpy().view(np.int64) == want.view(np.int64)).all()
-    assert not (got["max_part"] == old["max_part"]).all()  # avgdl moved it
-    for col in old.columns:
-        if col != "max_part":
-            assert got[col].equals(old[col]), col
-    assert len(empty) == 0
+
+def test_load_index_refuses_pre_impacts_layout(spark, committed_base, tmp_path):
+    """A committed index whose blocks store a ``max_part`` bound instead
+    of impacts lanes is refused by name, not read with wrong bounds."""
+    import shutil
+
+    from spcht_spark.plans.indexer import load_index
+
+    workdir = _copy_committed(committed_base, tmp_path, "idx_old_layout")
+    old = (
+        spark.read.parquet(f"{workdir}/blocks")
+        .drop("imp_tf", "imp_dl")
+        .withColumn("max_part", F.lit(1.0))
+    )
+    old.write.parquet(f"{workdir}/blocks.old")
+    shutil.rmtree(f"{workdir}/blocks")
+    shutil.move(f"{workdir}/blocks.old", f"{workdir}/blocks")
+    with pytest.raises(ValueError, match="imp_tf.*rebuild"):
+        load_index(spark, workdir)
 
 
 def test_delete_by_query_equals_rebuild(spark, small_corpus, small_index):

@@ -80,7 +80,7 @@ def test_positional_blocks_are_default_blocks_plus_pos_bin(
     spark, small_corpus, small_corpus_pd, span
 ):
     """Minus ``pos_bin`` the positional blocks equal build_blocks over
-    the default tokens row for row, ``max_part`` bits included, and
+    the default tokens row for row, impacts lanes included, and
     each block's ``pos_bin`` decodes to the oracle positions of its
     postings. Span 64 splits every term over many shards; span 1024
     keeps the 400 docs in one shard, so hot terms span several blocks."""
@@ -90,19 +90,17 @@ def test_positional_blocks_are_default_blocks_plus_pos_bin(
 
     idx = build_positional_index(spark, small_corpus, mode="arrow", shard_span=span)
     assert idx.tokenizer == "arrow"
-    avgdl = float(idx.stats.collect()[0]["avgdl"])
     keys = ["term", "shard", "block_seq"]
     pos = idx.blocks.toPandas().sort_values(keys).reset_index(drop=True)
     ref = (
-        build_blocks(build_tokens(small_corpus), avgdl, shard_span=span)
+        build_blocks(build_tokens(small_corpus), shard_span=span)
         .toPandas().sort_values(keys).reset_index(drop=True)
     )
     assert pos.columns.tolist() == ref.columns.tolist() + ["pos_bin"]
-    assert pos.drop(columns="pos_bin").equals(ref)
-    assert np.array_equal(
-        pos["max_part"].to_numpy().view(np.int64),
-        ref["max_part"].to_numpy().view(np.int64),
-    )
+    lanes = ["imp_tf", "imp_dl"]
+    assert pos.drop(columns=["pos_bin", *lanes]).equals(ref.drop(columns=lanes))
+    for lane in lanes:
+        assert [list(v) for v in pos[lane]] == [list(v) for v in ref[lane]], lane
     if span == 1024:
         assert (pos["block_seq"] > 0).any()
 
