@@ -21,6 +21,9 @@ One delta path; its only inputs are the index and the delta:
   first_doc/last_doc prune on block metadata) decode to the removed
   postings. No tokens table is read or kept; :func:`apply_update`
   deletes a retained ``tokens`` stage, which would otherwise go stale.
+* One barrier per delta: the tagged ids and the removed and added
+  postings are one checkpointed frame; all after it, the delta counts
+  :func:`apply_update` records included, are lazy projections of it.
 * Only (term, shard) posting groups touched by the delta are rebuilt
   (the 100 TB case: a full rebuild per delta is not viable). With
   doc-range sharding a changed doc lives in exactly one shard, so
@@ -39,8 +42,9 @@ One delta path; its only inputs are the index and the delta:
   from the written ``blocks.new`` parquet — the same column-pruned
   aggregate the build ladder's skew stage runs over its committed
   blocks — instead of evaluating that plan a second time.
-* The dictionary merges df/cf deltas (exact integer arithmetic) instead
-  of re-aggregating the full token table; stats re-aggregate doclens
+* The dictionary merges one signed aggregate of the removed (−1) and
+  added (+1) postings (exact integer arithmetic) instead of
+  re-aggregating the full token table; stats re-aggregate doclens
   (one narrow map-side-partial agg, lazy: the update collects nothing).
 
 Equivalence contract (pinned in tests/test_index_update.py): for any
@@ -67,25 +71,17 @@ def _shard(col, shard_span: int):
     return (col / F.lit(int(shard_span))).cast("long")
 
 
-def dictionary_delta(
-    old_dictionary: DataFrame, removed_tokens: DataFrame, added_tokens: DataFrame
-) -> DataFrame:
-    """Merge per-term df/cf deltas into the dictionary (exact ints).
+def dictionary_delta(old_dictionary: DataFrame, postings: DataFrame) -> DataFrame:
+    """Merge the delta's signed postings (``term``, ``tf``, ``sign``: −1
+    removed, +1 added) into the dictionary: one ``groupBy("term")``
+    gives d_df = Σ sign and d_cf = Σ sign·tf (exact ints).
 
     Terms whose df drops to 0 vanish (as in a rebuild); brand-new terms
     appear. One narrow shuffle over the DELTA terms, never the corpus."""
-    rm = removed_tokens.groupBy("term").agg(
-        F.count(F.lit(1)).alias("df_rm"), F.sum("tf").alias("cf_rm")
+    delta = postings.groupBy("term").agg(
+        F.sum("sign").alias("d_df"), F.sum(F.col("sign") * F.col("tf")).alias("d_cf")
     )
-    ad = added_tokens.groupBy("term").agg(
-        F.count(F.lit(1)).alias("df_ad"), F.sum("tf").alias("cf_ad")
-    )
-    delta = rm.join(ad, "term", "full").select(
-        "term",
-        (F.coalesce("df_ad", F.lit(0)) - F.coalesce("df_rm", F.lit(0))).alias("d_df"),
-        (F.coalesce("cf_ad", F.lit(0)) - F.coalesce("cf_rm", F.lit(0))).alias("d_cf"),
-    )
-    merged = (
+    return (
         old_dictionary.select("term", "df", "cf")
         .join(delta, "term", "full")
         .select(
@@ -94,8 +90,8 @@ def dictionary_delta(
             (F.coalesce("cf", F.lit(0)) + F.coalesce("d_cf", F.lit(0))).alias("cf"),
         )
         .filter(F.col("df") > 0)
+        .withColumn("term_hash", F.xxhash64("term"))
     )
-    return merged.withColumn("term_hash", F.xxhash64("term"))
 
 
 def _build_params(idx: IndexTables) -> tuple[int, str]:
@@ -132,72 +128,73 @@ def update_index(
     idempotent. The removed postings are decoded from the touched ids'
     covering blocks, and the rebuilt (term, shard) groups from their
     own blocks — same rows a from-scratch tokenize would give."""
+    return _update(idx, changed, deleted)[0]
+
+
+def _update(
+    idx: IndexTables, changed: DataFrame, deleted: DataFrame | None
+) -> tuple[IndexTables, DataFrame]:
+    """(updated tables, the checkpointed delta frame whose ``part``
+    column tags each row changed/deleted id or removed/added posting)."""
     from spcht_spark.index.query import decode_blocks
 
     shard_span, tokenizer = _build_params(idx)
     changed = changed.select("doc_id", "content")
-    touched_ids = changed.select("doc_id")
+    ids = changed.selectExpr("'changed' AS part", "doc_id")
     if deleted is not None:
-        touched_ids = touched_ids.unionByName(deleted.select("doc_id")).distinct()
-    else:
-        touched_ids = touched_ids.distinct()
-    touched_ids = touched_ids.localCheckpoint()
+        ids = ids.unionByName(deleted.selectExpr("'deleted' AS part", "doc_id"))
 
     # Old postings of every touched doc — these leave the index (and
     # their (term, shard) groups must be rebuilt).
-    spans = touched_ids.groupBy(
+    spans = ids.groupBy(
         _shard(F.col("doc_id"), shard_span).alias("shard")
     ).agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"))
     covering = (
         idx.blocks.join(F.broadcast(spans), "shard")
         .filter((F.col("last_doc") >= F.col("lo")) & (F.col("first_doc") <= F.col("hi")))
     )
-    removed_tokens = (
-        decode_blocks(covering)
-        .join(touched_ids, "doc_id", "semi")
+    cols = ["doc_id", "term", "tf", "dl"]
+    removed = decode_blocks(covering).join(ids, "doc_id", "semi")
+    added = build_tokens(changed, tokenizer, analyzer=idx.analyzer)
+    delta = (
+        ids.unionByName(
+            removed.selectExpr("'removed' AS part", *cols), allowMissingColumns=True
+        )
+        .unionByName(added.selectExpr("'added' AS part", *cols))
         .localCheckpoint()
     )
-    added_tokens = build_tokens(
-        changed, tokenizer, analyzer=idx.analyzer
-    ).localCheckpoint()
 
+    part = F.col("part")
+    touched_ids = delta.where(part.isin("changed", "deleted")).select("doc_id")
+    added_tokens = delta.where(part == "added").select(*cols)
+    postings = delta.where(part.isin("removed", "added"))
     new_doclens = (
         idx.doclens.join(touched_ids, "doc_id", "anti")
         .unionByName(build_doclens(added_tokens))
     )
-    new_dictionary = dictionary_delta(idx.dictionary, removed_tokens, added_tokens)
-    new_stats = build_stats(new_doclens)
-
-    touched_keys = (
-        removed_tokens.select("term", _shard(F.col("doc_id"), shard_span).alias("shard"))
-        .unionByName(
-            added_tokens.select("term", _shard(F.col("doc_id"), shard_span).alias("shard"))
-        )
-        .distinct()
-        .localCheckpoint()
-    )
+    sign = F.when(part == "added", 1).otherwise(-1).alias("sign")
+    new_dictionary = dictionary_delta(idx.dictionary, postings.select("term", "tf", sign))
 
     # Rebuild ONLY the touched groups, from the full updated postings of
     # those groups (untouched docs' postings for a touched term+shard
     # included — they re-block with the new docs interleaved).
-    cols = ["doc_id", "term", "tf", "dl"]
+    touched_keys = postings.select("term", _shard(F.col("doc_id"), shard_span).alias("shard"))
     group_blocks = idx.blocks.join(touched_keys, ["term", "shard"], "semi")
     old_group = decode_blocks(group_blocks).join(touched_ids, "doc_id", "anti")
-    touched_tokens = old_group.select(*cols).unionByName(added_tokens.select(*cols))
+    touched_tokens = old_group.select(*cols).unionByName(added_tokens)
     rebuilt = build_blocks(touched_tokens, shard_span=shard_span)
     untouched = idx.blocks.join(touched_keys, ["term", "shard"], "anti")
-    new_blocks = untouched.unionByName(rebuilt)
 
     return IndexTables(
         tokens=None,
         doclens=new_doclens,
         dictionary=new_dictionary,
-        stats=new_stats,
-        blocks=new_blocks,
+        stats=build_stats(new_doclens),
+        blocks=untouched.unionByName(rebuilt),
         shard_span=shard_span,
         analyzer=idx.analyzer,
         tokenizer=tokenizer,
-    )
+    ), delta
 
 
 def apply_update(
@@ -230,6 +227,7 @@ def apply_update(
     import time
 
     from spcht_spark.plans.indexer import load_index, skew_table
+    from spcht_spark.plans.workorder import read_committed
 
     idx = load_index(spark, workdir)
     if shard_span is not None and shard_span != idx.shard_span:
@@ -237,9 +235,9 @@ def apply_update(
             f"shard_span={shard_span} does not match the index's recorded "
             f"shard_span={idx.shard_span}"
         )
-    new = update_index(spark, idx, changed, deleted)
-    n_changed = changed.count()
-    n_deleted = deleted.count() if deleted is not None else 0
+    new, delta = _update(idx, changed, deleted)
+    ids = delta.where(F.col("part").isin("changed", "deleted"))
+    sizes = dict(ids.groupBy("part").count().collect())
 
     stages = {
         "doclens": new.doclens,
@@ -251,7 +249,7 @@ def apply_update(
         df.write.mode("overwrite").parquet(os.path.join(workdir, f"{name}.new"))
     # skew from the WRITTEN blocks, not a second run of the lazy
     # new-blocks plan (decode, encode shuffle)
-    skew = skew_table(spark.read.parquet(os.path.join(workdir, "blocks.new")))
+    skew = skew_table(read_committed(spark, os.path.join(workdir, "blocks.new")))
     skew.repartition(1).write.mode("overwrite").parquet(
         os.path.join(workdir, "skew.new")
     )
@@ -267,8 +265,8 @@ def apply_update(
         with open(manifest_path) as fh:
             m = json.load(fh)
         m.setdefault("updates", []).append(
-            {"run_id": run_id, "changed": int(n_changed), "deleted": int(n_deleted),
-             "at": time.time()}
+            {"run_id": run_id, "changed": sizes.get("changed", 0),
+             "deleted": sizes.get("deleted", 0), "at": time.time()}
         )
         tmp = manifest_path + ".tmp"
         with open(tmp, "w") as fh:

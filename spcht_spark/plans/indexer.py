@@ -1,7 +1,7 @@
-"""The index-build work order: ingest → tokens → doclens → dictionary →
-stats → blocks, each a checkpointed parquet stage with lineage/metrics
-(the rebuild of the reference's --FullOrder ladder, SURVEY.md §3.1, over
-the new engine's stages §3.4)."""
+"""The index-build work order: ingest → tokens → doclens → stats →
+blocks → dictionary → skew, each a checkpointed parquet stage with
+lineage/metrics (the rebuild of the reference's --FullOrder ladder,
+SURVEY.md §3.1, over the new engine's stages §3.4)."""
 
 from __future__ import annotations
 
@@ -21,7 +21,13 @@ from spcht_spark.index.build import (
     build_tokens,
     dictionary_from_blocks,
 )
-from spcht_spark.plans.workorder import Stage, WorkOrder, create_order, run_order
+from spcht_spark.plans.workorder import (
+    Stage,
+    WorkOrder,
+    create_order,
+    read_committed,
+    run_order,
+)
 
 FINAL_STAGES = {"doclens", "dictionary", "stats", "blocks", "skew"}
 
@@ -43,7 +49,7 @@ def skew_table(blocks: DataFrame) -> DataFrame:
 
 def skew_report(spark: SparkSession, workdir: str, shard_span: int) -> dict:
     """Driver-side rollup of the persisted skew stage."""
-    skew = spark.read.parquet(f"{workdir}/skew")
+    skew = read_committed(spark, f"{workdir}/skew")
     rows = sorted(skew.collect(), key=lambda r: r["log2_bucket"])
     max_group = max((int(r["max_postings"]) for r in rows), default=0)
     return {
@@ -146,7 +152,7 @@ def load_index(spark: SparkSession, workdir: str) -> IndexTables:
     import json
     import os
 
-    rd = lambda s: spark.read.parquet(f"{workdir}/{s}")
+    rd = lambda s: read_committed(spark, f"{workdir}/{s}")
     params = {}
     mpath = os.path.join(workdir, "manifest.json")
     if os.path.exists(mpath):

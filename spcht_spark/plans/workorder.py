@@ -146,6 +146,14 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
+def _part_files(sdir: str) -> list[str]:
+    """The stage's data files, in part-file (write partition) order."""
+    return sorted(
+        f for f in os.listdir(sdir)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
+
+
 def _partition_rows(sdir: str) -> tuple[list[tuple[int, int]], int]:
     """Per-output-partition row counts + total, read DRIVER-SIDE from
     the committed parquet footers (pyarrow) — no Spark job. The previous
@@ -157,15 +165,32 @@ def _partition_rows(sdir: str) -> tuple[list[tuple[int, int]], int]:
     where the re-scan reported read-split ids."""
     import pyarrow.parquet as pq
 
-    files = sorted(
-        f for f in os.listdir(sdir)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    )
     per = [
         (pid, pq.ParquetFile(os.path.join(sdir, f)).metadata.num_rows)
-        for pid, f in enumerate(files)
+        for pid, f in enumerate(_part_files(sdir))
     ]
     return per, sum(n for _, n in per)
+
+
+def read_committed(spark: SparkSession, sdir: str) -> DataFrame:
+    """Open a parquet directory Spark committed, without a Spark job.
+
+    ``spark.read.parquet`` infers the schema in a one-task job that
+    reads a footer on an executor; the Spark row schema Spark wrote
+    into every part file's footer
+    (``org.apache.spark.sql.parquet.row.metadata``) is read here
+    driver-side instead (pyarrow, as :func:`_partition_rows` does) and
+    passed to ``spark.read.schema``. A directory with no part file
+    carrying that key was not written by Spark and is refused."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    files = _part_files(sdir)
+    meta = pq.read_metadata(os.path.join(sdir, files[0])).metadata if files else None
+    raw = (meta or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+    if raw is None:
+        raise ValueError(f"{sdir}: no Spark-written parquet part file")
+    return spark.read.schema(StructType.fromJson(json.loads(raw))).parquet(sdir)
 
 
 _METRICS_ARROW_SCHEMA = None
@@ -225,7 +250,7 @@ def run_order(
     for stage in order.stages:
         sdir = order.stage_dir(stage.name)
         if _stage_complete(order, stage.name):
-            outputs[stage.name] = spark.read.parquet(sdir)
+            outputs[stage.name] = read_committed(spark, sdir)
             continue
         if max_new_stages is not None and ran >= max_new_stages:
             return outputs
@@ -248,7 +273,7 @@ def run_order(
         if stage.sort_cols:
             df = df.sortWithinPartitions(*stage.sort_cols)
         df.write.mode("overwrite").parquet(sdir)
-        out = spark.read.parquet(sdir)
+        out = read_committed(spark, sdir)
         # Per-partition lineage (file_list parity): rows per output
         # partition, from the parquet footers — no re-scan job.
         per_part, total = _partition_rows(sdir)

@@ -123,6 +123,45 @@ def test_update_tokenizer_from_index(spark, small_corpus, delta_setup):
     _assert_tables_equal(full, incr, skip=("tokens",))
 
 
+def test_update_index_checkpoints_once(spark, small_index, delta_setup, monkeypatch):
+    """The delta's eager work is one barrier: ``update_index`` builds one
+    frame of tagged ids and removed and added postings, and checkpoints
+    it once; every other input of the new tables is a lazy projection
+    of that frame."""
+    _, changed, deleted = delta_setup
+    frame = type(changed)  # the session's concrete DataFrame class
+    calls = []
+    checkpoint = frame.localCheckpoint
+
+    def counted(self, *args, **kwargs):
+        calls.append(self)
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame, "localCheckpoint", counted)
+    update_index(spark, small_index, changed, deleted)
+    assert len(calls) == 1
+
+
+def test_dictionary_delta_signed_postings(spark, small_corpus, delta_setup):
+    """One signed aggregate: the base dictionary merged with the delta's
+    removed (−1) and added (+1) postings equals the rebuild's dictionary
+    (exact ints; terms whose df drops to 0 vanish)."""
+    from spcht_spark.index.build import build_tokens
+    from spcht_spark.index.update import dictionary_delta
+
+    base, changed, deleted = delta_setup
+    base_idx = build_index(spark, base, shard_span=SPAN)
+    touched = changed.select("doc_id").unionByName(deleted)
+    removed = base_idx.tokens.join(touched, "doc_id", "semi")
+    added = build_tokens(changed)
+    postings = removed.select("term", "tf", F.lit(-1).alias("sign")).unionByName(
+        added.select("term", "tf", F.lit(1).alias("sign"))
+    )
+    got = _canon(dictionary_delta(base_idx.dictionary, postings), ["term"])
+    want = _canon(build_index(spark, small_corpus, shard_span=SPAN).dictionary, ["term"])
+    pd.testing.assert_frame_equal(got, want)
+
+
 def test_update_refuses_missing_build_params(spark, small_index, delta_setup):
     import dataclasses
 

@@ -192,3 +192,40 @@ def test_load_index_reads_jvm_manifest_as_arrow(spark, tmp_path):
         json.dumps({"params": {"tokenizer": "jvm"}})
     )
     assert load_index(spark, str(tmp_path)).tokenizer == "arrow"
+
+
+def test_load_index_runs_no_spark_job(spark, tmp_path):
+    """A committed index opens without a Spark job: each table's schema
+    is read driver-side from its part files' footers, and equals the
+    schema ``spark.read.parquet`` infers in a one-task job."""
+    wd = str(tmp_path / "runl")
+    run_index_order(spark, index_order(wd, "rl", _source, shard_span=64, clock=FakeClock()))
+    sc = spark.sparkContext
+    sc.setJobGroup("load-index-jobs", "load_index")
+    try:
+        idx = load_index(spark, wd)
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("load-index-jobs") == []
+    for name in ("tokens", "doclens", "dictionary", "stats", "blocks"):
+        want = spark.read.parquet(os.path.join(wd, name)).schema
+        assert getattr(idx, name).schema == want, name
+
+
+def test_read_committed_refuses_non_spark_parquet(spark, tmp_path):
+    """The footer schema is Spark's own: an empty Spark frame still
+    opens (Spark writes one schema-only part file), a pyarrow-written
+    directory carries no Spark row schema and is refused."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    empty = spark.range(0).selectExpr("id AS doc_id", "'x' AS term")
+    empty.write.parquet(str(tmp_path / "empty"))
+    got = wo.read_committed(spark, str(tmp_path / "empty"))
+    assert got.schema == spark.read.parquet(str(tmp_path / "empty")).schema
+    assert got.count() == 0
+
+    (tmp_path / "arrow").mkdir()
+    pq.write_table(pa.table({"a": [1]}), str(tmp_path / "arrow" / "part-0.parquet"))
+    with pytest.raises(ValueError, match="no Spark-written parquet part file"):
+        wo.read_committed(spark, str(tmp_path / "arrow"))
