@@ -944,7 +944,8 @@ def boolean_topk(
             eager=False
         )
 
-    # ONE driver job for stats + dictionary idfs for the whole batch;
+    # ONE stats + dictionary idf lookup for the whole batch (no job on
+    # a committed index, one otherwise);
     # the sub-engines subset the map instead of re-collecting (round-4
     # regression: their serial driver jobs, not scoring, dominated;
     # round-6: the two remaining collects fused into one job)

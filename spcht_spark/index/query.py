@@ -19,6 +19,9 @@ aggregate-fold, tie-break (score desc, doc_id asc).
 
 from __future__ import annotations
 
+import os
+import re
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -214,21 +217,42 @@ def stats_and_idfs(
     stats_row=None,
     idfs: dict[str, float] | None = None,
 ) -> tuple[dict, dict[str, float]]:
-    """(stats_row, idfs) in ONE driver job.
+    """(stats_row, idfs) for a query batch, in at most ONE Spark job.
 
     Every query batch needs the corpus stats row and the query terms'
-    dfs; collecting them separately is two serial driver barriers per
-    batch (each a job + an AQE/py4j gap — at page-of-10 scale the
-    barriers, not the scoring, dominate). A union of the two tiny
-    projections collects both in one job. idf is math.log in Python
-    over exact ints, bit-identical to the oracle; the returned stats
-    row is a plain dict supporting ``row["n_docs"]`` subscripting.
+    dfs. On a committed index (both frames from
+    :func:`~spcht_spark.plans.workorder.read_committed`) whose
+    dictionary fits in one scan split (``spark.sql.files.
+    maxPartitionBytes``: Spark would read it in one task anyway), they
+    are read on the driver with pyarrow from the frames' part files, as
+    Solr's searcher reads its term dictionary in process: no Spark job.
+    Each call reads the stats row and, with the ``term`` filter pushed
+    down to row-group statistics, the terms' rows. The one-split gate
+    bounds what the driver reads; where the job wins near it was not
+    measured. Any other frame (built in memory, derived, or a larger
+    dictionary) takes one job: a union of the two tiny projections,
+    collected together rather than as two serial driver barriers.
+
+    idf is math.log in Python over exact ints, bit-identical to the
+    oracle on either route; the returned stats row is a plain dict
+    supporting ``row["n_docs"]`` subscripting.
 
     Batch callers (boolean_topk's router) pass the ``stats_row`` and
     ``idfs`` they already collected for a superset of ``terms``; then
-    no job runs and the idf map is subset to ``terms``."""
+    nothing is read and the idf map is subset to ``terms``."""
     if stats_row is not None:
         return stats_row, {t: idfs[t] for t in terms if t in idfs}
+    stats_row, dfs = _driver_stats_dfs(dictionary, stats, terms) or _job_stats_dfs(
+        dictionary, stats, terms
+    )
+    n_docs = stats_row["n_docs"]
+    return stats_row, {t: idf_py(n_docs, dfs[t]) for t in terms if t in dfs}
+
+
+def _job_stats_dfs(
+    dictionary: DataFrame, stats: DataFrame, terms: list[str]
+) -> tuple[dict, dict[str, int]]:
+    """The stats row and the terms' dfs in one Spark job."""
     # where/selectExpr SQL strings, not per-Column ops: the Column build
     # of this same plan was ~280 py4j round-trips per batch (isin alone
     # pays one trip per literal; measured via a send_command counter),
@@ -254,8 +278,51 @@ def stats_and_idfs(
             stats_row = {"n_docs": int(r["n_docs"]), "avgdl": float(r["avgdl"])}
         else:
             dfs[r["term"]] = int(r["df"])
-    n_docs = stats_row["n_docs"]
-    return stats_row, {t: idf_py(n_docs, dfs[t]) for t in terms if t in dfs}
+    return stats_row, dfs
+
+
+_BYTE_UNITS = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40, "p": 1 << 50}
+
+
+def _split_bytes(spark: SparkSession) -> int:
+    """``spark.sql.files.maxPartitionBytes``, one scan split's bytes,
+    parsed from the public conf's byte string (``134217728b``, ``16m``,
+    ``1gb``: binary units, as Spark reads them)."""
+    text = spark.conf.get("spark.sql.files.maxPartitionBytes").strip().lower()
+    m = re.fullmatch(r"(\d+)\s*([kmgtp]?)b?", text)
+    if m is None:
+        raise ValueError(f"spark.sql.files.maxPartitionBytes: {text!r}")
+    return int(m[1]) * _BYTE_UNITS[m[2]]
+
+
+def _driver_stats_dfs(
+    dictionary: DataFrame, stats: DataFrame, terms: list[str]
+) -> tuple[dict, dict[str, int]] | None:
+    """The stats row and the terms' dfs read with pyarrow from the
+    committed part files, or None where :func:`stats_and_idfs` runs
+    its job instead."""
+    # imported here, not at the top: the Python workers import this
+    # module for its UDFs and never take this route
+    import pyarrow.parquet as pq
+
+    from spcht_spark.plans.workorder import committed_files
+
+    dict_files = committed_files(dictionary)
+    stats_files = committed_files(stats)
+    if dict_files is None or stats_files is None:
+        return None
+    if sum(map(os.path.getsize, dict_files)) > _split_bytes(dictionary.sparkSession):
+        return None
+    s = pq.read_table(list(stats_files), columns=["n_docs", "avgdl"], partitioning=None)
+    stats_row = {"n_docs": int(s["n_docs"][0].as_py()), "avgdl": float(s["avgdl"][0].as_py())}
+    if not terms:
+        return stats_row, {}
+    # the term filter is pushed down to the row groups' min/max
+    t = pq.read_table(
+        list(dict_files), columns=["term", "df"], partitioning=None,
+        filters=[("term", "in", sorted(set(terms)))],
+    )
+    return stats_row, dict(zip(t["term"].to_pylist(), map(int, t["df"].to_pylist())))
 
 
 def sql_frames(spark: SparkSession, text: str, **frames: DataFrame) -> DataFrame:

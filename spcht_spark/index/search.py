@@ -205,7 +205,7 @@ def search(
             default_op=request.q_op,
         )
     else:
-        # the AST parsed and expanded above, and one stats/idf job whose
+        # the AST parsed and expanded above, and one stats/idf lookup whose
         # n_docs also proves a small corpus to topk (no salt stage)
         stats_row, idfs = stats_and_idfs(index.dictionary, index.stats, terms)
         matches = boolean_matches_ast(

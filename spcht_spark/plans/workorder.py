@@ -23,10 +23,12 @@ any failure without redoing finished shuffles.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
 import time
+import weakref
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -42,12 +44,6 @@ class Status:
     STAGE_DONE = 2     # per-stage terminal (stable)
     ALL_DONE = 8
     CLEANED = 9
-
-
-METRICS_COLS = [
-    "run_id", "stage", "partition_id", "status",
-    "rows_out", "bytes_out", "started_at", "finished_at",
-]
 
 
 @dataclass
@@ -172,6 +168,11 @@ def _partition_rows(sdir: str) -> tuple[list[tuple[int, int]], int]:
     return per, sum(n for _, n in per)
 
 
+# frame returned by read_committed → the part files it reads; an entry
+# lives as long as its frame (a derived frame is a new object: not here)
+_COMMITTED_FILES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
 def read_committed(spark: SparkSession, sdir: str) -> DataFrame:
     """Open a parquet directory Spark committed, without a Spark job.
 
@@ -181,7 +182,12 @@ def read_committed(spark: SparkSession, sdir: str) -> DataFrame:
     (``org.apache.spark.sql.parquet.row.metadata``) is read here
     driver-side instead (pyarrow, as :func:`_partition_rows` does) and
     passed to ``spark.read.schema``. A directory with no part file
-    carrying that key was not written by Spark and is refused."""
+    carrying that key was not written by Spark and is refused.
+
+    The returned frame's part files are recorded
+    (:func:`committed_files`), so a small table behind it can be read
+    on the driver with pyarrow instead of by a Spark job
+    (:func:`~spcht_spark.index.query.stats_and_idfs`)."""
     import pyarrow.parquet as pq
     from pyspark.sql.types import StructType
 
@@ -190,43 +196,53 @@ def read_committed(spark: SparkSession, sdir: str) -> DataFrame:
     raw = (meta or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
     if raw is None:
         raise ValueError(f"{sdir}: no Spark-written parquet part file")
-    return spark.read.schema(StructType.fromJson(json.loads(raw))).parquet(sdir)
+    out = spark.read.schema(StructType.fromJson(json.loads(raw))).parquet(sdir)
+    _COMMITTED_FILES[out] = tuple(os.path.join(sdir, f) for f in files)
+    return out
 
 
-_METRICS_ARROW_SCHEMA = None
+def committed_files(df: DataFrame) -> tuple[str, ...] | None:
+    """The part files a frame returned by :func:`read_committed` reads,
+    or None for any other frame (built in memory, or derived)."""
+    return _COMMITTED_FILES.get(df)
+
+
+@functools.cache
+def _metrics_schema():
+    """The metrics table's one schema (pyarrow): :func:`_append_metrics`
+    writes it and :func:`metrics` reads with it."""
+    import pyarrow as pa
+
+    return pa.schema(
+        [
+            pa.field("run_id", pa.string()),
+            pa.field("stage", pa.string()),
+            pa.field("partition_id", pa.int64()),
+            pa.field("status", pa.int64()),
+            pa.field("rows_out", pa.int64()),
+            pa.field("bytes_out", pa.int64()),
+            pa.field("started_at", pa.float64()),
+            pa.field("finished_at", pa.float64()),
+        ]
+    )
 
 
 def _append_metrics(order: WorkOrder, spark: SparkSession, rows: list[tuple]) -> None:
     """Append lineage rows to <workdir>/metrics driver-side (one small
-    pyarrow file per stage — schema matches what Spark's createDataFrame
-    used to write, so spark.read.parquet over the dir is unchanged).
-    Appending a file is atomic enough for resume: a torn metrics write
-    never gates stage completion (the manifest does)."""
+    pyarrow file per stage, in :func:`_metrics_schema`). Appending a
+    file is atomic enough for resume: a torn metrics write never gates
+    stage completion (the manifest does)."""
     import uuid
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    global _METRICS_ARROW_SCHEMA
-    if _METRICS_ARROW_SCHEMA is None:
-        _METRICS_ARROW_SCHEMA = pa.schema(
-            [
-                pa.field("run_id", pa.string()),
-                pa.field("stage", pa.string()),
-                pa.field("partition_id", pa.int64()),
-                pa.field("status", pa.int64()),
-                pa.field("rows_out", pa.int64()),
-                pa.field("bytes_out", pa.int64()),
-                pa.field("started_at", pa.float64()),
-                pa.field("finished_at", pa.float64()),
-            ]
-        )
     mdir = os.path.join(order.workdir, "metrics")
     os.makedirs(mdir, exist_ok=True)
-    cols = list(zip(*rows))
+    schema = _metrics_schema()
     table = pa.table(
-        {name: list(vals) for name, vals in zip(METRICS_COLS, cols)},
-        schema=_METRICS_ARROW_SCHEMA,
+        {name: list(vals) for name, vals in zip(schema.names, zip(*rows))},
+        schema=schema,
     )
     pq.write_table(table, os.path.join(mdir, f"part-{uuid.uuid4().hex}.parquet"))
 
@@ -300,7 +316,15 @@ def run_order(
 
 
 def metrics(order: WorkOrder, spark: SparkSession) -> DataFrame:
-    return spark.read.parquet(os.path.join(order.workdir, "metrics"))
+    """The lineage rows of every stage run. The directory is written by
+    pyarrow, so its footers carry no Spark row schema for
+    :func:`read_committed`; the fixed schema spares Spark's one-job
+    schema inference."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    return spark.read.schema(from_arrow_schema(_metrics_schema())).parquet(
+        os.path.join(order.workdir, "metrics")
+    )
 
 
 def check_order(order: WorkOrder, spark: SparkSession) -> dict:

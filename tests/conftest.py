@@ -38,3 +38,18 @@ def small_index(spark, small_corpus):
     idx.blocks = idx.blocks.cache()
     idx.blocks.count()
     return idx
+
+
+@pytest.fixture(scope="session")
+def committed_small_index(spark, small_corpus, tmp_path_factory):
+    """small_corpus committed through the work-order ladder at the same
+    span as small_index and reopened with load_index, so its stats and
+    dictionary answer term lookups on the driver."""
+    from spcht_spark.plans.indexer import index_order, load_index, run_index_order
+
+    workdir = str(tmp_path_factory.mktemp("committed_small") / "idx")
+    run_index_order(spark, index_order(
+        workdir, "small", lambda s: small_corpus, shard_span=64,
+        verify_sha256=False,
+    ))
+    return load_index(spark, workdir)

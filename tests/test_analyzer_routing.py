@@ -80,28 +80,42 @@ def test_lowercase_analyzer_build_and_parse_agree(spark, folded_index):
         assert _hits(b) == {0, 1, 2}, q
 
 
-def test_prune_routing_rank_identical(spark, small_index):
+def test_prune_routing_rank_identical(
+    spark, small_index, committed_small_index, monkeypatch
+):
     """Flat OR routes to WAND, flat AND to the skipping AND path — both
     must return the exact rows (score bit-identical) of the full
-    matching-set decode they replace."""
-    idx = small_index
+    matching-set decode they replace. The same corpus committed and
+    reopened with load_index takes its idfs from the driver-side lookup
+    on every route and returns the same rows as the in-memory index."""
+    from spcht_spark.index import query
+
     queries = [
         ("flat_or", "return while let", 12),
         ("flat_and", "return AND if", 12),
         ("single", "import", 12),
         ("mixed", "(def AND class) OR while", 12),  # stays on full path
     ]
-    pruned = boolean_topk(
-        spark, idx.blocks, idx.doclens, idx.dictionary, idx.stats, queries,
-    ).collect()
-    full = boolean_topk(
-        spark, idx.blocks, idx.doclens, idx.dictionary, idx.stats, queries,
-        prune=False,
-    ).collect()
     key = lambda rows: sorted(
         (r["query_id"], r["rank"], r["doc_id"], r["score"]) for r in rows
     )
-    assert key(pruned) == key(full)
+    got = []
+    for idx in (small_index, committed_small_index):
+        if idx is committed_small_index:
+            def no_job(*a):
+                raise AssertionError("committed index ran the stats/idf job")
+
+            monkeypatch.setattr(query, "_job_stats_dfs", no_job)
+        pruned = boolean_topk(
+            spark, idx.blocks, idx.doclens, idx.dictionary, idx.stats, queries,
+        ).collect()
+        full = boolean_topk(
+            spark, idx.blocks, idx.doclens, idx.dictionary, idx.stats, queries,
+            prune=False,
+        ).collect()
+        assert key(pruned) == key(full)
+        got.append(key(pruned))
+    assert got[0] == got[1]
 
 
 def test_prune_routing_with_doc_filter(spark, small_index, small_corpus):

@@ -331,6 +331,37 @@ def test_apply_update_persisted(
     assert not any(p.endswith(".new") for p in os.listdir(workdir))
 
 
+def test_reopened_index_stats_equal_rebuild(
+    spark, small_corpus, delta_setup, committed_base, tmp_path
+):
+    """After apply_update, a handle reopened with load_index answers N,
+    avgdl and every term's df (through its idf: for a fixed N, idf is
+    strictly decreasing in df) on the driver, with no Spark job, exactly
+    as a rebuild of the final corpus does through its one job."""
+    from spcht_spark.index.query import stats_and_idfs
+    from spcht_spark.index.update import apply_update
+    from spcht_spark.plans.indexer import load_index
+
+    _, changed, deleted = delta_setup
+    workdir = _copy_committed(committed_base, tmp_path, "idx_stats")
+    apply_update(spark, workdir, changed, deleted, run_id="t-delta")
+    full = build_index(spark, small_corpus, shard_span=SPAN)
+    terms = sorted(r["term"] for r in full.dictionary.select("term").collect())
+    terms += ["doomed3", "zzz_absent"]  # deleted by the delta; never indexed
+    want = stats_and_idfs(full.dictionary, full.stats, terms)
+
+    reopened = load_index(spark, workdir)
+    sc = spark.sparkContext
+    sc.setJobGroup("reopened-stats", "stats_and_idfs")
+    try:
+        got = stats_and_idfs(reopened.dictionary, reopened.stats, terms)
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("reopened-stats") == []
+    assert got == want
+    assert len(got[1]) == len(terms) - 2
+
+
 def test_apply_update_skew_equals_rebuild(
     spark, small_corpus, delta_setup, committed_base, tmp_path
 ):

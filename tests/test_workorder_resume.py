@@ -103,6 +103,21 @@ def test_check_order_rollup(spark, tmp_path):
     assert rep["stages"]["skew"]["rows_out"] > 0  # histogram persisted
 
 
+def test_check_order_runs_two_jobs(spark, tmp_path):
+    """The pyarrow-written metrics table opens with its fixed schema, so
+    check_order runs only its rollup (2 jobs), no schema inference."""
+    wd = str(tmp_path / "runj")
+    order = index_order(wd, "rj", _source, shard_span=64, clock=FakeClock())
+    run_index_order(spark, order)
+    sc = spark.sparkContext
+    sc.setJobGroup("check-order-jobs", "check_order")
+    try:
+        wo.check_order(order, spark)
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(sc.statusTracker().getJobIdsForGroup("check-order-jobs")) == 2
+
+
 def test_single_step_advance(spark, tmp_path):
     """HandleWorkOrder parity: max_new_stages=1 executes exactly one
     pending stage per call and never marks ALL_DONE early."""
