@@ -1241,8 +1241,9 @@ def q_index_minmatch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Minimum-should-match (Solr ``mm``): disjunctive BM25 where only
     docs containing ≥ mm distinct query terms are admissible — the
     middle ground between OR and AND that web search defaults to.
-    Admissibility reuses the scorer's n_matched column (no extra
-    pass); scoring stays pure BM25 over the matched terms."""
+    Admissibility counts the doc's distinct query terms inside the
+    scoring statement (no extra pass); scoring stays pure BM25 over the
+    matched terms."""
     from spcht_spark.index.query import exact_topk
 
     idx = _persisted_index(spark, sf_dir)

@@ -43,21 +43,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spcht_spark.index.query import (
-    SALT_MIN_DOCS,
-    bm25_part_sql,
-    decode_blocks,
+    exact_scores,
     sql_double,
-    sql_esc,
-    sql_frames,
     sql_ident,
     sql_in,
-    sql_map,
     sql_str,
     stats_and_idfs,
     topk,
-    values_df,
 )
-from spcht_spark.session import shuffle_parallelism
 
 Ast = tuple
 
@@ -441,6 +434,28 @@ def expand_synonyms_ast(ast: Ast, synonyms: dict[str, list[str]]) -> Ast:
     return _map_leaves(ast, rewrite)
 
 
+def parse_expanded(
+    query_strings: list[str],
+    dictionary: DataFrame,
+    analyzer: str | None = None,
+    synonyms: dict[str, list[str]] | None = None,
+    default_op: str = "OR",
+) -> list[Ast]:
+    """The executable ASTs of a batch of ``q`` strings: each parsed
+    (:func:`parse_query`), synonym-expanded, then every fuzzy and
+    wildcard node of the batch expanded in one dictionary pass
+    (:func:`expand_fuzzy_asts`)."""
+    return expand_fuzzy_asts(
+        [
+            expand_synonyms_ast(
+                parse_query(qs, analyzer, default_op=default_op), synonyms or {}
+            )
+            for qs in query_strings
+        ],
+        dictionary,
+    )
+
+
 def _satisfiable_without_terms(ast: Ast) -> bool:
     """True if SOME truth assignment of the attribute clauses makes the
     query match a doc containing none of its fulltext terms — such docs
@@ -680,13 +695,15 @@ def boolean_matches(
     boolean query strings — the full matching set, pre-top-k (what
     facet/stats components count over).
 
-    Plan: ``term IN (all terms)`` pruned block scan → Arrow decode (the
-    dl lane rides along — no doclens join) → per-(query, doc) groupBy
-    collecting the term-set and
-    the term-ordered BM25 sum over positive terms (negated terms ride
-    along with contribution 0.0 — they exist only to prove/disprove the
-    predicate) → AST predicate (one SQL CASE, dispatched per query).
-    Scoring stats stay corpus-wide, like fq.
+    Plan: one :func:`~spcht_spark.index.query.exact_scores` statement
+    over every term of the batch, negated ones too (``is_pos`` false:
+    contribution 0.0 — they exist only to prove/disprove the
+    predicate), with each term's boost: the ``term IN`` pruned block
+    scan and Arrow decode (the dl lane rides along — no doclens join),
+    then per (query, doc) the doc's term set and the term-ordered BM25
+    sum over positive terms, filtered by the AST predicate (one SQL
+    CASE, dispatched per query) in the same statement. Scoring stats
+    stay corpus-wide, like fq.
 
     ``doclens`` is accepted for API symmetry but no longer joined —
     decode_blocks surfaces the blocks' dl lane.
@@ -697,11 +714,8 @@ def boolean_matches(
     the clauses evaluate on the joined columns — in-``q`` metadata
     predicates, the reference's `last_indexed:[t TO *]` pattern
     (WorkOrder.py:702-707). Attr clauses never score."""
-    asts = expand_fuzzy_asts(
-        [expand_synonyms_ast(
-            parse_query(qs, analyzer, default_op=default_op), synonyms or {})
-         for _, qs, _ in queries],
-        dictionary,
+    asts = parse_expanded(
+        [qs for _, qs, _ in queries], dictionary, analyzer, synonyms, default_op
     )
     parsed = [(qid, ast, k) for (qid, _, k), ast in zip(queries, asts)]
     return boolean_matches_ast(
@@ -741,51 +755,17 @@ def boolean_matches_ast(
         )
     all_terms = sorted({t for _, ast, _ in parsed for t in ast_terms(ast)})
     stats_row, idfs = stats_and_idfs(dictionary, stats, all_terms, stats_row, idfs)
-    avgdl = float(stats_row["avgdl"])
     if not idfs:
         return spark.createDataFrame(
             [], schema="query_id string, doc_id long, score double"
         )
 
     boosts = {qid: term_boosts(ast) for qid, ast, _ in parsed}
-    qrows = [
+    rows = [
         (qid, t, t in positive_terms(ast), boosts[qid].get(t, 1.0))
         for qid, ast, _ in parsed
         for t in sorted(ast_terms(ast))
-        if t in idfs
     ]
-    query_terms = values_df(
-        spark, qrows, ["query_id", "term", "is_pos", "boost"]
-    )
-    postings = decode_blocks(blocks.where(f"term IN ({sql_in(sorted(idfs))})"))
-    # single-expr contrib (idf map + BM25 + boost gate) and fold — one
-    # py4j call each instead of ~100 per-Column round-trips (see
-    # index.query.score_postings); doubles via repr()+CAST, bit-exact
-    idf_map = sql_map(sorted(idfs.items()), sql_double)
-    # Lucene per-term boost (term^2.5); 1.0 default
-    contrib_expr = (
-        f"CASE WHEN is_pos THEN boost * {idf_map}[term] * {bm25_part_sql(avgdl)} "
-        "ELSE CAST(0.0 AS DOUBLE) END"
-    )
-    inner = (
-        f"SELECT /*+ BROADCAST(q) */ *, {sql_esc(contrib_expr)} AS contrib "
-        "FROM {postings} AS p JOIN {qt} AS q USING (term)"
-    )
-    if int(stats_row["n_docs"]) < SALT_MIN_DOCS:
-        # proven-small corpus: partition by query_id alone so the
-        # (query_id, doc_id) agg, the predicate filter and the caller's
-        # top-k window share ONE exchange (see index.query.score_postings
-        # — the same SALT_MIN_DOCS gate; large corpora keep the salted
-        # two-exchange shape that prevents hot-query stragglers)
-        n = shuffle_parallelism(postings.sparkSession)
-        inner = f"SELECT /*+ REPARTITION({n}, query_id) */ * FROM ({inner})"
-    g_sql = (
-        "SELECT query_id, doc_id, "
-        "aggregate(array_sort(collect_list(struct(term, contrib))), "
-        "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.contrib) AS score, "
-        f"collect_set(term) AS present FROM ({inner}) "
-        "GROUP BY query_id, doc_id"
-    )
     # one predicate for all queries (CASE WHEN query_id=... THEN ast_i),
     # rendered as a single SQL string — same nesting as the old
     # when/otherwise fold (later queries checked first)
@@ -795,25 +775,17 @@ def boolean_matches_ast(
             f"CASE WHEN query_id = {sql_str(qid)} THEN "
             f"({ast_to_spark_sql(ast)}) ELSE ({pred_sql}) END"
         )
-    spark_s = postings.sparkSession
     if need_fields:
         # attr-clause queries join candidate rows against the attrs
         # projection before the predicate — the rare path keeps ops
-        g = sql_frames(spark_s, g_sql, postings=postings, qt=query_terms)
+        g = exact_scores(spark, blocks, rows, stats_row, idfs)
         g = g.join(
             attrs.selectExpr("doc_id", *map(sql_ident, need_fields)), "doc_id", "left"
         )
         admissible = g.where(pred_sql).selectExpr("query_id", "doc_id", "score")
     else:
-        # hot path: scoring agg + predicate + projection in the SAME
-        # statement — one plan analysis end to end
-        admissible = sql_frames(
-            spark_s,
-            "SELECT query_id, doc_id, score FROM "
-            f"({g_sql}) WHERE {sql_esc(pred_sql)}",
-            postings=postings,
-            qt=query_terms,
-        )
+        # hot path: the predicate runs inside the scoring statement
+        admissible = exact_scores(spark, blocks, rows, stats_row, idfs, pred_sql)
     if doc_filter is not None:
         # Solr fq semantics: restrict candidates AFTER scoring — the
         # filter never changes idf/avgdl. Semi-join on candidate rows
@@ -906,11 +878,8 @@ def boolean_topk(
     whole batch expand in one dictionary pass (expand_fuzzy_asts)."""
     from spcht_spark.index.wand import and_topk, wand_topk
 
-    asts = expand_fuzzy_asts(
-        [expand_synonyms_ast(
-            parse_query(qs, analyzer, default_op=default_op), synonyms or {})
-         for _, qs, _ in queries],
-        dictionary,
+    asts = parse_expanded(
+        [qs for _, qs, _ in queries], dictionary, analyzer, synonyms, default_op
     )
     ors: list[tuple[str, list[str], int]] = []
     ands: list[tuple[str, list[str], int]] = []

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spcht_spark.index.query import exact_scores, stats_and_idfs, topn
+from spcht_spark.index.query import exact_scores, plain_rows, stats_and_idfs, topn
 
 
 def collapse_topk(
@@ -42,7 +42,7 @@ def collapse_topk(
     schema = "query_id string, rank int, doc_id long, score double, grp string"
     if not idfs:
         return spark.createDataFrame([], schema=schema)
-    scores = exact_scores(spark, blocks, queries, stats_row, idfs)
+    scores = exact_scores(spark, blocks, plain_rows(queries), stats_row, idfs)
     j = scores.join(
         attrs.select("doc_id", F.col(group_col).cast("string").alias("grp")),
         "doc_id",

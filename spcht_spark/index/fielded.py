@@ -24,7 +24,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spcht_spark.index.build import IndexTables, build_index
-from spcht_spark.index.query import TOPK_SCHEMA, exact_scores, stats_and_idfs, topk
+from spcht_spark.index.query import (
+    TOPK_SCHEMA,
+    exact_scores,
+    plain_rows,
+    stats_and_idfs,
+    topk,
+)
 
 
 def build_fielded_index(
@@ -67,13 +73,17 @@ def fielded_topk(
     own stats; the cross-field combine folds (field, weighted score)
     pairs in field-name order so the float sum is deterministic."""
     parts = []
+    # candidate docs number at most the fields' doc counts summed: the
+    # bound that lets topk skip its salt on small corpora
+    n_docs = 0
     for field in sorted(boosts):
         idx = indexes[field]
         all_terms = sorted({t for _, ts, _ in queries for t in ts})
         stats_row, idfs = stats_and_idfs(idx.dictionary, idx.stats, all_terms)
+        n_docs += int(stats_row["n_docs"])
         if not idfs:
             continue
-        scores = exact_scores(spark, idx.blocks, queries, stats_row, idfs)
+        scores = exact_scores(spark, idx.blocks, plain_rows(queries), stats_row, idfs)
         parts.append(
             scores.select(
                 "query_id",
@@ -109,4 +119,4 @@ def fielded_topk(
                 ).alias("score"),
             )
         )
-    return topk(combined, {qid: k for qid, _, k in queries})
+    return topk(combined, {qid: k for qid, _, k in queries}, n_docs=n_docs)

@@ -41,6 +41,7 @@ from spcht_spark.index.facets import matching_docs
 from spcht_spark.index.query import (
     decode_blocks,
     exact_scores,
+    plain_rows,
     sql_ident,
     sql_in,
     stats_and_idfs,
@@ -90,7 +91,7 @@ def group_topk(
     )
     if not idfs:
         return spark.createDataFrame([], schema=schema)
-    scores = exact_scores(spark, blocks, queries, stats_row, idfs)
+    scores = exact_scores(spark, blocks, plain_rows(queries), stats_row, idfs)
     return group_scored(
         scores, attrs, group_col, {qid: k for qid, _, k in queries},
         group_limit, ngroups=ngroups, group_sort=group_sort,

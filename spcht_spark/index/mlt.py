@@ -29,9 +29,57 @@ from collections import Counter
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spcht_spark.index.query import exact_topk, sql_in, sql_in_pred, topn
+from spcht_spark.index.query import exact_topk, sql_in, sql_in_pred, stats_and_idfs, topn
 from spcht_spark.oracle import idf as idf_py
 from spcht_spark.oracle import tokenize_py
+
+
+def _ranked_weights(
+    doc_store: DataFrame,
+    dictionary: DataFrame,
+    stats_row,
+    seed_ids: list[int],
+    max_terms: int,
+    mode: str,
+    id_col: str,
+    content_col: str,
+) -> dict[int, list[tuple[float, str]]]:
+    """Per found seed, its top ``max_terms`` (weight, term) pairs, weight
+    tf·idf rounded to 6 places, ordered (weight desc, term asc); a seed
+    with no indexed term gets an empty list."""
+    rows = (
+        doc_store.where(
+            sql_in_pred(f"`{id_col}`", (str(int(s)) for s in seed_ids))
+        )
+        .selectExpr(f"`{id_col}` AS doc_id", f"`{content_col}` AS content")
+        .collect()
+    )
+    n_docs = int(stats_row["n_docs"])
+    tfs: dict[int, Counter] = {}
+    for r in rows:
+        toks = (
+            [t for t in r["content"].split(" ") if t]
+            if mode == "ws"
+            else tokenize_py(r["content"])
+        )
+        tfs[int(r["doc_id"])] = Counter(toks)
+    all_terms = sorted({t for c in tfs.values() for t in c})
+    dfs = {
+        r["term"]: int(r["df"])
+        for r in dictionary.where(f"term IN ({sql_in(all_terms)})")
+        .select("term", "df")
+        .collect()
+    } if all_terms else {}
+    out: dict[int, list[tuple[float, str]]] = {}
+    for seed, c in tfs.items():
+        ws = [
+            (round(c[t] * idf_py(n_docs, dfs[t]), 6), t)
+            for t in c
+            if t in dfs and dfs[t] > 0
+        ]
+        ws.sort(key=lambda x: (-x[0], x[1]))
+        out[seed] = ws[:max_terms]
+    return out
 
 
 def interesting_terms(
@@ -48,39 +96,10 @@ def interesting_terms(
 
     Tokenization matches the index build (``mode='ws'`` single-space
     split / ``'arrow'`` code-token regex)."""
-    rows = (
-        doc_store.where(
-            sql_in_pred(f"`{id_col}`", (str(int(s)) for s in seed_ids))
-        )
-        .selectExpr(f"`{id_col}` AS doc_id", f"`{content_col}` AS content")
-        .collect()
+    ranked = _ranked_weights(
+        doc_store, dictionary, stats_row, seed_ids, max_terms, mode, id_col, content_col
     )
-    n_docs = int(stats_row["n_docs"])
-    tfs: dict[int, Counter] = {}
-    for r in rows:
-        toks = (
-            [t for t in r["content"].split(" ") if t]
-            if mode == "ws"
-            else tokenize_py(r["content"])
-        )
-        tfs[int(r["doc_id"])] = Counter(toks)
-    all_terms = sorted({t for c in tfs.values() for t in c})
-    dfs = {
-        r["term"]: int(r["df"])
-        for r in dictionary.where(f"term IN ({sql_in(all_terms)})")
-        .select("term", "df")
-        .collect()
-    } if all_terms else {}
-    out: dict[int, list[str]] = {}
-    for seed, c in tfs.items():
-        ws = [
-            (round(c[t] * idf_py(n_docs, dfs[t]), 6), t)
-            for t in c
-            if t in dfs and dfs[t] > 0
-        ]
-        ws.sort(key=lambda x: (-x[0], x[1]))
-        out[seed] = [t for _, t in ws[:max_terms]]
-    return out
+    return {seed: [t for _, t in ws] for seed, ws in ranked.items()}
 
 
 def interesting_terms_detail(
@@ -97,41 +116,14 @@ def interesting_terms_detail(
     weight) rows behind each seed's MLT rewrite — weight = tf·idf
     exactly as :func:`interesting_terms` ranks them (Solr returns the
     chosen terms with their boosts when details is requested)."""
-    rows = (
-        doc_store.where(
-            sql_in_pred(f"`{id_col}`", (str(int(s)) for s in seed_ids))
-        )
-        .selectExpr(f"`{id_col}` AS doc_id", f"`{content_col}` AS content")
-        .collect()
+    ranked = _ranked_weights(
+        doc_store, dictionary, stats_row, seed_ids, max_terms, mode, id_col, content_col
     )
-    n_docs = int(stats_row["n_docs"])
-    tfs: dict[int, Counter] = {}
-    for r in rows:
-        toks = (
-            [t for t in r["content"].split(" ") if t]
-            if mode == "ws"
-            else tokenize_py(r["content"])
-        )
-        tfs[int(r["doc_id"])] = Counter(toks)
-    all_terms = sorted({t for c in tfs.values() for t in c})
-    dfs = {
-        r["term"]: int(r["df"])
-        for r in dictionary.where(f"term IN ({sql_in(all_terms)})")
-        .select("term", "df")
-        .collect()
-    } if all_terms else {}
-    out: list[tuple[str, int, str, float]] = []
-    for seed in sorted(tfs):
-        c = tfs[seed]
-        ws = [
-            (round(c[t] * idf_py(n_docs, dfs[t]), 6), t)
-            for t in c
-            if t in dfs and dfs[t] > 0
-        ]
-        ws.sort(key=lambda x: (-x[0], x[1]))
-        for i, (wt, t) in enumerate(ws[:max_terms], 1):
-            out.append((f"mlt_{seed}", i, t, wt))
-    return out
+    return [
+        (f"mlt_{seed}", i, t, wt)
+        for seed in sorted(ranked)
+        for i, (wt, t) in enumerate(ranked[seed], 1)
+    ]
 
 
 def mlt_topk(
@@ -150,7 +142,7 @@ def mlt_topk(
 ) -> DataFrame:
     """(query_id='mlt_<seed>', rank, doc_id, score) — top-k docs most
     similar to each seed, seed excluded."""
-    stats_row = stats.collect()[0]
+    stats_row, _ = stats_and_idfs(dictionary, stats, [])
     terms = interesting_terms(
         doc_store, dictionary, stats_row, seed_ids,
         max_terms=max_terms, mode=mode, id_col=id_col, content_col=content_col,

@@ -193,4 +193,4 @@ def phrase_topk(
         ))
 
     cand = hit.groupBy("query_id", "shard").applyInPandas(run, schema=_CAND_SCHEMA)
-    return topk(cand, ks)
+    return topk(cand, ks, n_docs=int(stats_row["n_docs"]))

@@ -2,18 +2,23 @@
 
 Two paths, both rank-identical to the pure-Python oracle:
 
-* :func:`exact_topk` — decode every matching block, score everything.
-  Plan shape: dictionary lookup driver-side (the ≤ handful of query
-  terms; idf computed in Python so it is bit-identical to the oracle) →
-  block scan with ``term IN (...)`` pushed to parquet → Arrow decode UDF
-  (docs/tfs/dls lanes — dl rides the block, no doclens join) → per-term
-  contribution (pure Catalyst doubles) →
-  deterministic term-ordered summation → per-query top-k window.
+* :func:`exact_scores` — the engine's one full-decode scorer: decode
+  every matching block, score everything. :func:`exact_topk`, the
+  boolean full path (:func:`spcht_spark.index.boolean.boolean_matches`)
+  and every term-list surface (boosting, fielded, collapse, grouping,
+  MLT) score through it. Plan shape: dictionary lookup driver-side
+  (the ≤ handful of query terms; idf computed in Python so it is
+  bit-identical to the oracle) → block scan with ``term IN (...)``
+  pushed to parquet → Arrow decode UDF (docs/tfs/dls lanes — dl rides
+  the block, no doclens join) → broadcast join to the (query, term,
+  is_pos, boost) rows → per-term contribution (pure Catalyst doubles) →
+  deterministic term-ordered summation plus the doc's term set, with an
+  optional predicate over both → per-query top-k window.
 * :func:`wand_topk` (spcht_spark.index.wand) — block-max WAND: skips
   decoding blocks whose upper bound cannot reach the current kth score.
 
 Determinism contract (SURVEY.md §7 "rank identity"): contributions are
-summed in ascending-term order via sort_array(collect_list(struct)) +
+summed in ascending-term order via array_sort(collect_list(struct)) +
 aggregate-fold, tie-break (score desc, doc_id asc).
 """
 
@@ -405,84 +410,6 @@ def sql_map(items, val) -> str:
     ) + ")"
 
 
-def score_postings(
-    postings: DataFrame,
-    idfs: dict[str, float],
-    avgdl: float,
-    query_terms: DataFrame,
-    pre_partition: bool = False,
-) -> DataFrame:
-    """(query_id, doc_id, score): contribution expression mirrors
-    spcht_spark.oracle.term_score verbatim; summation is term-ordered.
-    ``postings`` must carry dl (decode_blocks does) — no doclens join.
-
-    The idf map, BM25 expression and term-ordered fold are built as ONE
-    SQL expression string each: the per-Column py4j construction of the
-    same plan cost ~0.2-0.5 s of driver round-trips per query batch
-    (measured via cProfile — ~2300 py4j calls for one boolean batch;
-    guide §1.2 "per-task work" applies to the driver too). Float
-    literals go through repr()+CAST so the doubles are bit-identical to
-    the F.lit path."""
-    if not idfs:
-        raise ValueError("score_postings requires at least one known term")
-    idf_map = sql_map(sorted(idfs.items()), sql_double)
-    contrib_expr = f"{idf_map}[term] * {bm25_part_sql(avgdl)}"
-    # join + contrib projection + (optional) repartition + aggregation
-    # as ONE df-parametrized sql statement — one JVM plan analysis
-    # instead of four (each DataFrame op re-analyzes the whole tree,
-    # ~8-12 ms/op on this host). sql_esc doubles literal braces (code
-    # tokens like '{' appear in the idf map) for the arg formatter.
-    inner = (
-        f"SELECT *, {sql_esc(contrib_expr)} AS contrib "
-        "FROM {postings} JOIN {qt} USING (term)"
-    )
-    if pre_partition:
-        # One exchange instead of two for PROVEN-SMALL corpora (the
-        # caller gates on n_docs < SALT_MIN_DOCS, the same proof that
-        # skips the salt stage): hash-partitioning by query_id alone
-        # satisfies the (query_id, doc_id) aggregation's clustering AND
-        # the top-k window's, so agg + sort + window fuse into the one
-        # post-exchange stage (plan: 2 Exchange → 1; A/B min 1.13 →
-        # 0.91 s on the 25-query reference batch). At scale this shape
-        # would funnel a hot query's candidates through one partition —
-        # exactly the straggler the salted two-stage top-k exists to
-        # avoid — so large corpora keep the standard shape.
-        n = shuffle_parallelism(postings.sparkSession)
-        inner = f"SELECT /*+ REPARTITION({n}, query_id) */ * FROM ({inner})"
-    return sql_frames(
-        postings.sparkSession,
-        "SELECT query_id, doc_id, "
-        "aggregate(array_sort(collect_list(struct(term, contrib))), "
-        "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.contrib) AS score, "
-        f"count(1) AS n_matched FROM ({inner}) GROUP BY query_id, doc_id",
-        postings=postings,
-        qt=query_terms,
-    )
-
-
-def exact_scores(
-    spark: SparkSession,
-    blocks: DataFrame,
-    queries: list[tuple[str, list[str], int]],
-    stats_row,
-    idfs: dict[str, float],
-    pre_partition: bool = False,
-) -> DataFrame:
-    """(query_id, doc_id, score, n_matched) of every doc matching a
-    query term — the exact path's front half: the query-term rows as a
-    VALUES table, the term-pruned block scan (``term IN (...)`` before
-    decode, so parquet row-group stats on the sorted term column prune
-    it), :func:`decode_blocks` and :func:`score_postings`. ``idfs``
-    must be non-empty; ``pre_partition`` is passed through."""
-    qrows = [(qid, t) for qid, ts, _ in queries for t in sorted(set(ts)) if t in idfs]
-    query_terms = values_df(spark, qrows, ["query_id", "term"])
-    postings = decode_blocks(blocks.where(f"term IN ({sql_in(sorted(idfs))})"))
-    return score_postings(
-        postings, idfs, float(stats_row["avgdl"]), query_terms,
-        pre_partition=pre_partition,
-    )
-
-
 # Candidate sets are bounded by the corpus: below this many docs a
 # query's full candidate list fits one reducer comfortably and the salt
 # pre-stage is a pure extra exchange (~0.15-0.2 s of stage overhead per
@@ -491,6 +418,72 @@ def exact_scores(
 # docs. The gate input is n_docs from the already-collected stats row —
 # no extra job, and the decision scales with the DATA, not the host.
 SALT_MIN_DOCS = 1 << 20
+
+
+def plain_rows(queries: list[tuple[str, list[str], int]]) -> list[tuple]:
+    """:func:`exact_scores` rows of term-list queries: every distinct
+    term scores, unboosted."""
+    return [(qid, t, True, 1.0) for qid, ts, _ in queries for t in sorted(set(ts))]
+
+
+def exact_scores(
+    spark: SparkSession,
+    blocks: DataFrame,
+    rows: list[tuple[str, str, bool, float]],
+    stats_row,
+    idfs: dict[str, float],
+    where: str | None = None,
+) -> DataFrame:
+    """(query_id, doc_id, score, present) of every doc holding a term
+    of a query — the engine's one full-decode scorer. ``rows`` are
+    (query_id, term, is_pos, boost); a negated term (``is_pos`` false)
+    scores 0.0 and only shows in ``present``, the doc's set of the
+    query's terms. Rows of terms outside ``idfs`` (non-empty) drop.
+    ``where`` is a SQL predicate over the four columns, applied in the
+    same statement; the result then drops ``present``.
+
+    ONE statement (each DataFrame op re-analyzes the whole tree, ~8-12
+    ms on a 4-core host): the ``term IN (...)`` pruned block scan
+    through :func:`decode_blocks`, broadcast-joined to the rows as a
+    VALUES table; the contribution ``boost * idf * part`` mirrors
+    spcht_spark.oracle.term_score (``1.0 * idf`` is exact) and sums in
+    ascending-term order, doubles bit-exact via :func:`sql_double`.
+
+    Below SALT_MIN_DOCS (the proof that lets :func:`topk` skip its
+    salt) the rows are hash partitioned by query_id alone, which
+    clusters both the (query_id, doc_id) aggregation and the top-k
+    window: one exchange instead of two (A/B min 1.13 → 0.91 s on the
+    25-query reference batch). At scale that would funnel a hot query
+    through one partition, so large corpora keep the standard shape."""
+    query_terms = values_df(
+        spark, [r for r in rows if r[1] in idfs], ["query_id", "term", "is_pos", "boost"]
+    )
+    postings = decode_blocks(blocks.where(f"term IN ({sql_in(sorted(idfs))})"))
+    idf_map = sql_map(sorted(idfs.items()), sql_double)
+    avgdl = float(stats_row["avgdl"])
+    contrib = (
+        f"CASE WHEN is_pos THEN boost * {idf_map}[term] * {bm25_part_sql(avgdl)} "
+        "ELSE CAST(0.0 AS DOUBLE) END"
+    )
+    # sql_esc doubles literal braces (code tokens like '{' appear in the
+    # idf map) for the arg formatter
+    inner = (
+        f"SELECT /*+ BROADCAST(q) */ *, {sql_esc(contrib)} AS contrib "
+        "FROM {postings} AS p JOIN {qt} AS q USING (term)"
+    )
+    if int(stats_row["n_docs"]) < SALT_MIN_DOCS:
+        n = shuffle_parallelism(spark)
+        inner = f"SELECT /*+ REPARTITION({n}, query_id) */ * FROM ({inner})"
+    text = (
+        "SELECT query_id, doc_id, "
+        "aggregate(array_sort(collect_list(struct(term, contrib))), "
+        "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.contrib) AS score, "
+        f"collect_set(term) AS present FROM ({inner}) "
+        "GROUP BY query_id, doc_id"
+    )
+    if where is not None:
+        text = f"SELECT query_id, doc_id, score FROM ({text}) WHERE {sql_esc(where)}"
+    return sql_frames(spark, text, postings=postings, qt=query_terms)
 
 
 def topn(
@@ -616,30 +609,26 @@ def exact_topk(
         # No query term occurs in the corpus → empty result, stable schema.
         return spark.createDataFrame([], schema=TOPK_SCHEMA)
 
+    # admissibility is a count of the doc's distinct query terms,
+    # checked inside the scoring statement
+    where = None
     if mode == "and":
         # drop queries containing any index-absent term (can't be satisfied)
         queries = [q for q in queries if all(t in idfs for t in q[1])]
         if not queries:
             return spark.createDataFrame([], schema=TOPK_SCHEMA)
-
-    scores = exact_scores(
-        spark, blocks, queries, stats_row, idfs,
-        pre_partition=int(stats_row["n_docs"]) < SALT_MIN_DOCS,
-    )
-    if doc_filter is not None:
-        scores = scores.join(doc_filter.select("doc_id"), "doc_id", "semi")
-    if mode == "and":
         n_terms = {qid: len(set(ts)) for qid, ts, _ in queries}
-        nt_map = sql_map(sorted(n_terms.items()), lambda n: str(int(n)))
-        scores = scores.where(f"n_matched = {nt_map}[query_id]")
+        where = f"size(present) = {sql_map(sorted(n_terms.items()), str)}[query_id]"
     elif min_match is not None:
         mm = (
             {qid: int(min_match) for qid, _, _ in queries}
             if isinstance(min_match, int)
             else {qid: int(min_match.get(qid, 1)) for qid, _, _ in queries}
         )
-        mm_map = sql_map(sorted(mm.items()), lambda n: str(int(n)))
-        scores = scores.where(f"n_matched >= {mm_map}[query_id]")
+        where = f"size(present) >= {sql_map(sorted(mm.items()), str)}[query_id]"
+    scores = exact_scores(spark, blocks, plain_rows(queries), stats_row, idfs, where)
+    if doc_filter is not None:
+        scores = scores.join(doc_filter.select("doc_id"), "doc_id", "semi")
     return topk(scores, {qid: k for qid, _, k in queries}, n_docs=int(stats_row["n_docs"]))
 
 
@@ -674,10 +663,7 @@ def boosted_topk(
     stats_row, idfs = stats_and_idfs(dictionary, stats, all_terms)
     if not idfs:
         return spark.createDataFrame([], schema=TOPK_SCHEMA)
-    scores = exact_scores(
-        spark, blocks, queries, stats_row, idfs,
-        pre_partition=int(stats_row["n_docs"]) < SALT_MIN_DOCS,
-    )
+    scores = exact_scores(spark, blocks, plain_rows(queries), stats_row, idfs)
     need = sorted(
         {c for spec in (bf, boost) if spec is not None for c in spec[1]}
     )

@@ -30,9 +30,7 @@ from spcht_spark.index.boolean import (
     boolean_matches,
     boolean_matches_ast,
     boolean_topk,
-    expand_fuzzy_ast,
-    expand_synonyms_ast,
-    parse_query,
+    parse_expanded,
     positive_terms,
 )
 from spcht_spark.index.build import IndexTables
@@ -154,11 +152,9 @@ def search(
             "index records no tokenizer: term vectors need an index "
             "opened with load_index or returned by build_index"
         )
-    raw_ast = parse_query(request.q, index.analyzer, default_op=request.q_op)
-    ast = expand_fuzzy_ast(
-        expand_synonyms_ast(raw_ast, request.synonyms or {}),
-        index.dictionary,
-    )
+    ast = parse_expanded(
+        [request.q], index.dictionary, index.analyzer, request.synonyms, request.q_op
+    )[0]
     terms = sorted(ast_terms(ast))
     attrs = (
         doc_store

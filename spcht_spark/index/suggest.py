@@ -193,7 +193,7 @@ def spellcheck_collate_q(
         _lex,
         ast_terms,
         boolean_matches_ast,
-        expand_fuzzy_asts,
+        parse_expanded,
         parse_query,
     )
 
@@ -222,9 +222,8 @@ def spellcheck_collate_q(
         [(qid, collations[qid]) for qid, _ in queries],
         ["query_id", "collation"],
     )
-    parsed_coll = expand_fuzzy_asts(
-        [parse_query(collations[qid], analyzer) for qid, _ in queries],
-        dictionary,
+    parsed_coll = parse_expanded(
+        [collations[qid] for qid, _ in queries], dictionary, analyzer
     )
     matches = boolean_matches_ast(
         spark, blocks, dictionary, stats,

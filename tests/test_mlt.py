@@ -85,3 +85,23 @@ def test_mlt_topk_matches_python(spark, small_corpus_pd, small_corpus, small_ind
     # seed never appears in its own result
     for seed in SEEDS:
         assert all(d != seed for d, _ in by_q[f"mlt_{seed}"])
+
+
+def test_mlt_topk_plan_build_jobs(spark, small_corpus, committed_small_index):
+    """Building the MLT plan over a committed index runs two Spark jobs:
+    the seeds' stored content and their terms' dfs. The stats row is
+    read on the driver, as for every other request."""
+    import uuid
+
+    idx = committed_small_index
+    sc = spark.sparkContext
+    group = f"mlt-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        mlt_topk(
+            spark, idx.blocks, idx.doclens, idx.dictionary, idx.stats,
+            small_corpus, SEEDS, k=K, max_terms=MAX_TERMS, mode="arrow",
+        )
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2

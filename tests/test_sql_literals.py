@@ -22,12 +22,13 @@ from spcht_spark.index.boolean import boolean_topk
 from spcht_spark.index.build import build_index
 from spcht_spark.index.query import (
     TOPK_SCHEMA,
+    exact_scores,
     exact_topk,
-    score_postings,
     sql_esc,
     sql_in,
     sql_map,
     sql_str,
+    stats_and_idfs,
     topn,
     values_df,
 )
@@ -142,7 +143,7 @@ def test_backslash_terms_score_bit_exact(spark, backslash_index):
 def test_formatter_sites_keep_a_cached_frame_cached(spark, backslash_index):
     """pyspark's ``spark.sql(text, df=frame)`` drops the temp view it
     registers for ``frame``, and dropping a view uncaches the cache entry
-    with the same plan. ``topn``, ``score_postings`` and the WAND runner's
+    with the same plan. ``topn``, ``exact_scores`` and the WAND runner's
     pinned block scan each take a caller's cached frame as an argument of
     such a statement: the frame stays cached and the rows equal those of
     the uncached frame."""
@@ -152,25 +153,24 @@ def test_formatter_sites_keep_a_cached_frame_cached(spark, backslash_index):
         spark, [(q, d, float(d % 3)) for q in ("q'", "q{") for d in range(8)],
         ["query_id", "doc_id", "score"],
     )
-    postings = values_df(
-        spark, [(t, d, 1 + d % 2, 5 + d) for t in (f, a) for d in range(6)],
-        ["term", "doc_id", "tf", "dl"],
-    )
-    qt = values_df(spark, [("q", f), ("q", a)], ["query_id", "term"])
     blocks = idx.blocks.where("shard >= 0")
     queries = [("q_fa", [f, a], 10), ("q_a", [a], 2)]
+    stats_row, idfs = stats_and_idfs(idx.dictionary, idx.stats, [f, a])
+    rows = [("q'", f, True, 1.0), ("q{", a, True, 2.5), ("q{", f, False, 1.0)]
 
     def run():
         return (
             sorted(topn(scores, ["query_id"], "score DESC, doc_id ASC", 3).collect()),
-            sorted(score_postings(postings, {f: 0.5, a: 1.25}, 6.0, qt).collect()),
+            sorted(exact_scores(
+                spark, blocks, rows, stats_row, idfs
+            ).select("query_id", "doc_id", "score").collect()),
             _ranked(wand_topk(
                 spark, blocks, idx.dictionary, idx.stats, queries, theta_cascade=False
             )),
         )
 
     want = run()
-    cached = [scores, postings, qt, blocks]
+    cached = [scores, blocks]
     for df in cached:
         df.cache().count()
     try:
